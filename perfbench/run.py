@@ -125,7 +125,7 @@ def main():
     ap.add_argument("--trace", choices=["0", "1"], default="0")
     ap.add_argument("--scale", type=float, default=1.0)
     ap.add_argument("--mutate", choices=["none", "drop", "dup"], default="none")
-    ap.add_argument("--setups", type=int, default=2)
+    ap.add_argument("--setups", type=int, default=3)
     ap.add_argument("--gen-only", choices=["0", "1"], default="0")
     ap.add_argument("--record-digests", choices=["0", "1"], default="0")
     a = ap.parse_args()

@@ -32,8 +32,9 @@ def result(workload, *extra):
 
 def main():
     spec = json.load(open("BENCHMARK.json"))
-    # graph_rounds is not in BENCHMARK.json (README.md) but is tested too
-    names = sys.argv[1:] or [w["name"] for w in spec["workloads"]] + ["graph_rounds"]
+    # split_gz and graph_rounds are not in BENCHMARK.json (README.md) but
+    # are tested too
+    names = sys.argv[1:] or [w["name"] for w in spec["workloads"]] + ["split_gz", "graph_rounds"]
     failures = []
 
     def test(label, fn):

@@ -25,7 +25,7 @@ object Args {
       workload = kv("workload"), seed = kv("seed").toLong,
       seconds = get("seconds", "10").toDouble, trace = get("trace", "0") == "1",
       work = Paths.get(kv("work")).toAbsolutePath, scale = get("scale", "1").toDouble,
-      mutate = get("mutate", "none"), setups = get("setups", "2").toInt,
+      mutate = get("mutate", "none"), setups = get("setups", "3").toInt,
       genOnly = get("gen-only", "0") == "1",
       recordDigests = get("record-digests", "0") == "1",
       commit = get("commit", "unknown"), sourceSha = get("source-sha", "unknown"),
@@ -227,10 +227,12 @@ object Main {
         f"session and warm-up ${(System.nanoTime() - t2) / 1e9}%.2f s")
     }
     val calibBefore = calibrate(ctx)
+    val (steal0, measured0) = (Host.stealNs(), System.nanoTime())
 
     val samples = mutable.LinkedHashMap.empty[String, Any]
-    // per-query metrics of the by-hand graph workload: printed and
-    // recorded, not part of the result line (see perfbench/README.md)
+    // layer metrics of the by-hand workloads (split_gz, graph_rounds):
+    // printed and recorded, not part of the result line (see
+    // perfbench/README.md)
     var extra = Seq.empty[(String, Double)]
     val (metrics, traced) =
       if (!args.trace) {
@@ -240,9 +242,12 @@ object Main {
       } else {
         val t = w.traced(ctx, args.seconds)
         samples ++= Seq("untraced_wall_s" -> t.untracedWall, "traced_wall_s" -> t.tracedWall)
-        extra = Metrics.graph.flatMap { case (k, _) => t.layers.get(k).map(k -> _) }
+        extra = Metrics.byHand.flatMap { case (k, _) => t.layers.get(k).map(k -> _) }
         (perLayer(ctx, t, Stats.median(genS.toSeq)), ctx.tracer)
       }
+    // share of the machine's CPU time the hypervisor took while the
+    // workload ran: like the calibration, a record of contention only
+    val stealFrac = (Host.stealNs() - steal0).toDouble / (System.nanoTime() - measured0) / nproc
     val calibAfter = calibrate(ctx)
     stop(ctx)
 
@@ -265,10 +270,11 @@ object Main {
       "seconds" -> args.seconds, "scale" -> args.scale,
       "commit" -> args.commit, "source_sha256" -> args.sourceSha,
       "calibration_s" -> mutable.LinkedHashMap("before" -> calibBefore, "after" -> calibAfter),
+      "steal_frac" -> stealFrac,
       "setup_s" -> setups.toSeq, "attempted" -> attempted, "failed" -> failed,
       "failed_frac" -> failed.toDouble / attempted,
       "failures" -> ctx.log.failures.toSeq, "samples" -> samples, "metrics" -> metricJson,
-      "graph_metrics" -> mutable.LinkedHashMap(extra: _*))
+      "by_hand_metrics" -> mutable.LinkedHashMap(extra: _*))
     val recDir = args.records.resolve("records")
     Files.createDirectories(recDir)
     Files.write(recDir.resolve(s"$key.json"), (Json.render(record) + "\n").getBytes("UTF-8"))
@@ -279,7 +285,7 @@ object Main {
       s"check=${if (correct) "ok" else "FAILED"} attempted=$attempted failed=$failed " +
       f"failed_frac=${failed.toDouble / attempted}%.4f")
     ctx.log.failures.foreach(f => println(s"  failed: $f"))
-    val allUnits = units ++ Metrics.graph
+    val allUnits = units ++ Metrics.byHand
     (metrics ++ extra).foreach { case (k, v) => println(f"  $k%-48s $v%14.6f ${allUnits(k)}") }
     println(Json.render(mutable.LinkedHashMap(
       "correct" -> correct, "attempted" -> attempted, "failed" -> failed,
@@ -332,13 +338,11 @@ object Metrics {
     "latency_p95_s" -> "s", "setup_s" -> "s", "peak_rss_mb" -> "MB")
 
   val perLayer: Seq[(String, String)] = Seq(
-    "sources.scan_s" -> "s", "sources.offset_scan_s" -> "s", "sources.generate_s" -> "s",
+    "sources.scan_s" -> "s", "sources.generate_s" -> "s",
     "functions.csv_column_at_s" -> "s", "functions.xor_fold_hash_s" -> "s",
     "operators.prepartition.exchange_s" -> "s", "operators.prepartition.write_s" -> "s",
     "operators.prepartition.output_files" -> "count",
     "operators.prepartition.pid_skew" -> "ratio",
-    "operators.split.write_s" -> "s", "operators.split.manifest_s" -> "s",
-    "operators.split.shards" -> "count", "operators.split.shard_fill" -> "ratio",
     "streaming.batches" -> "count", "streaming.files_per_batch" -> "count",
     "streaming.add_batch_s" -> "s", "streaming.latest_offset_s" -> "s",
     "streaming.query_planning_s" -> "s", "streaming.wal_commit_s" -> "s",
@@ -351,9 +355,16 @@ object Metrics {
     "spark.input_mb" -> "MB", "spark.output_mb" -> "MB", "spark.task_retry_frac" -> "ratio",
     "bench.trace_overhead_frac" -> "ratio", "bench.failed_frac" -> "ratio")
 
-  /** Reported by the by-hand `graph_rounds` workload only. */
-  val graph: Seq[(String, String)] = GraphRounds.queries.flatMap { q =>
-    Seq(s"operators.graph.$q.wall_s" -> "s", s"operators.graph.$q.jobs" -> "count",
-      s"operators.graph.$q.task_s" -> "s")
-  }
+  /** Reported by the by-hand workloads only, `split_gz` and
+    * `graph_rounds`: they would read 0 on every workload in
+    * `BENCHMARK.json`.
+    */
+  val byHand: Seq[(String, String)] = Seq(
+    "sources.offset_scan_s" -> "s",
+    "operators.split.write_s" -> "s", "operators.split.manifest_s" -> "s",
+    "operators.split.shards" -> "count", "operators.split.shard_fill" -> "ratio") ++
+    GraphRounds.queries.flatMap { q =>
+      Seq(s"operators.graph.$q.wall_s" -> "s", s"operators.graph.$q.jobs" -> "count",
+        s"operators.graph.$q.task_s" -> "s")
+    }
 }

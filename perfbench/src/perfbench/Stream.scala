@@ -14,16 +14,24 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
 /** Open loop: one generator thread lands fixed-size CSV files at a fixed
   * rate (tmp + rename, so no file is seen half-written); they feed
-  * `StreamingPrePartition.start` at every core with a zero-interval
+  * `StreamingPrePartition.start` at half the cores with a zero-interval
   * trigger. Key is column 3 (`Node`), 8 pids.
   */
 final class StreamPrePartition extends Workload {
   val name = "stream_prepartition"
+  // Half the cores: a batch of a few small files needs no more, and the
+  // driver, the generator and the JVM's own threads keep cores of their
+  // own, so a core the hypervisor takes delays one thread rather than a
+  // task every batch waits for.
+  override def cores(nproc: Int): Int = math.max(1, nproc / 2)
   val cfg = PartitionConfig(columnIndex = 3, maxPartitionCount = 8, seed = 17)
-  // files landed per second: about half of what the default 16 files per
-  // trigger can take at ~0.7 s batches, so the loop runs below saturation
-  val rate = 12.0
-  val warmFiles = 8
+  // files landed per second: 3-4 files a batch at ~0.6 s batches, so
+  // per-batch fixed costs dominate and the loop runs well below saturation
+  val rate = 6.0
+  // the warm-up session of each set-up: 5 s of files at the rate. Batches
+  // keep getting faster for the first 20-60 batches of a JVM; with 8
+  // files the measured batches still were.
+  val warmFiles = 30
 
   private var pool: IndexedSeq[Path] = IndexedSeq.empty
   private var perFile: IndexedSeq[Data.Digest] = IndexedSeq.empty

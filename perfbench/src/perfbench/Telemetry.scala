@@ -35,6 +35,17 @@ object Json {
   }
 }
 
+object Host {
+  /** Time the hypervisor took from this machine's CPUs, summed over
+    * CPUs: the eighth field of the `cpu` line of /proc/stat, in clock
+    * ticks of 10 ms. 0 where there is no such file.
+    */
+  def stealNs(): Long = try {
+    val f = new java.io.RandomAccessFile("/proc/stat", "r")
+    try f.readLine().trim.split("\\s+")(8).toLong * 10000000L finally f.close()
+  } catch { case _: Exception => 0L }
+}
+
 object Stats {
   def median(xs: Seq[Double]): Double = {
     require(xs.nonEmpty, "median of no samples")
