@@ -70,12 +70,16 @@ object GraftCli {
       println(s"[graft] wrote ${spark.read.text(outDir).count()} lines to $outDir")
       spark.stop()
 
-    case "prepartition" :: inGlob :: outDir :: colIdx :: n :: seed :: rest =>
+    // comma-separated roots spread the output (reference round-robins the
+    // staging containers, Transforms/PartitionedContentSink.cs:54-66):
+    // pid -> roots(pid % N)/pid=<pid>/; one root is the plain staging write
+    case "prepartition" :: inGlob :: roots :: colIdx :: n :: seed :: rest
+        if rest == Nil || rest == List("gzip") =>
       val spark = session()
-      val compression = rest.headOption // e.g. "gzip"
-      PrePartition.run(spark, inGlob, outDir,
-        PartitionConfig(colIdx.toInt, n.toInt, seed.toInt), compression)
-      println(s"[graft] prepartitioned $inGlob -> $outDir (col=$colIdx n=$n seed=$seed)")
+      PrePartition.runSpread(spark, inGlob, roots.split(',').toIndexedSeq,
+        PartitionConfig(colIdx.toInt, n.toInt, seed.toInt),
+        gzipOutput = rest.nonEmpty)
+      println(s"[graft] prepartitioned $inGlob -> $roots (col=$colIdx n=$n seed=$seed)")
       spark.stop()
 
     case "split" :: inGlob :: outDir :: maxBytes :: rest =>
@@ -86,18 +90,6 @@ object GraftCli {
         gzipOutput = rest.contains("gzip"))
       val manifest = operators.Split.run(spark, inGlob, outDir, cfg)
       operators.Split.shardCount(manifest).show(false)
-      spark.stop()
-
-    // multi-container output spread (reference round-robins staging
-    // containers, Transforms/PartitionedContentSink.cs:54-66): comma-
-    // separated base paths, pid -> basePaths(pid % N)/pid=<pid>/
-    case "prepartition-spread" :: inGlob :: basePaths :: colIdx :: n :: seed :: rest =>
-      val spark = session()
-      PrePartition.runSpread(spark, inGlob, basePaths.split(',').toIndexedSeq,
-        PartitionConfig(colIdx.toInt, n.toInt, seed.toInt),
-        gzipOutput = rest.contains("gzip"))
-      println(s"[graft] prepartitioned $inGlob -> spread over " +
-        s"${basePaths.split(',').length} roots (col=$colIdx n=$n seed=$seed)")
       spark.stop()
 
     case "validate" :: stagingDir :: Nil =>
@@ -1411,8 +1403,7 @@ object GraftCli {
         s"""Unknown arguments: ${other.mkString(" ")}
            |Usage: [--pool=<tenant>] <command> ...   (FAIR scheduler pool for shared sessions)
            |  generate <outDir> <nRows> [seed]
-           |  prepartition <inGlob> <outDir> <colIdx> <maxPartitions> <seed> [gzip]
-           |  prepartition-spread <inGlob> <basePath1,basePath2,...> <colIdx> <maxPartitions> <seed> [gzip]
+           |  prepartition <inGlob> <root[,root...]> <colIdx> <maxPartitions> <seed> [gzip]
            |  split <inGlob> <outDir> <maxBytesPerShard> [header] [gzip]
            |  validate <stagingDir>
            |  stream <landingDir> <stagingDir> <checkpointDir> <colIdx> <maxPartitions> <seed> [triggerSec] [runSec]

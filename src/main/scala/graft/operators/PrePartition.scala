@@ -22,7 +22,7 @@ case class PartitionConfig(columnIndex: Int, maxPartitionCount: Int, seed: Int)
   *   CsvParseTransform (A5)                   csv_column_at(value, idx)   [codegen]
   *   PartitioningHelper hash (A6)             xor_fold_hash(col, seed, n) [codegen]
   *   PartitioningTextTransform (A7)           repartition(n, $"pid")  — hash shuffle
-  *   PartitionedContentSink (A8)              write.partitionBy("pid").text(out)
+  *   PartitionedContentSink (A8)              ShardSink: one file per pid, first-wins rename
   *
   * Records pass through byte-for-byte: we read lines as raw text and never
   * reserialize (the reference copies records verbatim,
@@ -44,9 +44,9 @@ case class PartitionConfig(columnIndex: Int, maxPartitionCount: Int, seed: Int)
   * line-aligned splits in parallel (gzip inputs degrade to one task per file,
   * same as the reference's whole-blob download). The xor-fold hash has ≤256
   * distinct values — with maxPartitionCount > 256 or a skewed column the
-  * exchange is skewed (reference inherits the same skew, SURVEY.md §7.4); AQE
-  * skew-split mitigates on the write side since partitionBy files don't
-  * require one-task-per-pid.
+  * exchange is skewed (reference inherits the same skew, SURVEY.md §7.4), and
+  * nothing on the write side splits it: AQE never splits or coalesces a
+  * `repartition(n, col)` exchange, so each pid is one reduce task's file.
   */
 object PrePartition {
 
@@ -63,132 +63,78 @@ object PrePartition {
   }
 
   /** Full batch pipeline: read text (codec inferred per file) → pid →
-    * partitioned write. One shuffle, partition-pruned scan, verbatim bytes.
+    * partitioned write under one root. One shuffle, verbatim bytes; the
+    * one-root case of [[runSpread]].
     */
   def run(spark: SparkSession, inputGlob: String, outputDir: String,
-          cfg: PartitionConfig, outputCompression: Option[String] = None,
-          suffix: Option[String] = None): Unit = {
-    val lines = graft.sources.Readers.textLines(spark, inputGlob, suffix)
-    val partitioned = withPartitionId(lines, cfg)
-      .filter(col("pid").isNotNull)
-    val writer = partitioned
-      // co-locate each pid's records into one task's output before the write
-      .repartition(cfg.maxPartitionCount, col("pid"))
-      .write.mode("overwrite").partitionBy("pid")
-    outputCompression.fold(writer)(c => writer.option("compression", c))
-      .text(outputDir)
-  }
+          cfg: PartitionConfig, gzipOutput: Boolean = false,
+          suffix: Option[String] = None): Unit =
+    runSpread(spark, inputGlob, Seq(outputDir), cfg, gzipOutput, suffix)
 
   /** Multi-container output spread (reference: PartitionedContentSink
     * round-robins each flush-window×partition blob across the Kusto
     * staging containers, Transforms/PartitionedContentSink.cs:54-66, and
     * Text/TextKustoSink.cs:28-30): partition `pid` writes under
-    * `basePaths(pid % N)/pid=<pid>/`. Users with per-account throttling
-    * spread ingest load this way.
-    *
-    * Spark's DataFrameWriter targets ONE root, so this is a one-pass
-    * mapPartitions writer (the Split shard-writer pattern): sort the
-    * shuffled partition by pid, switch output files on pid change,
-    * temp-file + rename commit within each root. Single scan, single
-    * shuffle — identical data movement to the single-root path.
+    * `roots(pid % N)/pid=<pid>/`. Users with per-account throttling
+    * spread ingest load this way; one root is the plain staging write.
     */
   def runSpread(spark: SparkSession, inputGlob: String,
-                basePaths: Seq[String], cfg: PartitionConfig,
+                roots: Seq[String], cfg: PartitionConfig,
                 gzipOutput: Boolean = false,
                 suffix: Option[String] = None): Unit = {
-    require(basePaths.nonEmpty, "need at least one base path")
-    import spark.implicits._
-    val nPaths = basePaths.length
-    val paths = basePaths.toIndexedSeq
-    // overwrite semantics: clear prior pid dirs under every root
-    val hconf = spark.sparkContext.hadoopConfiguration
-    paths.foreach { base =>
-      val p = new org.apache.hadoop.fs.Path(base)
+    val lines = graft.sources.Readers.textLines(spark, inputGlob, suffix)
+    overwrite(withPartitionId(lines, cfg), roots, cfg, gzipOutput)
+  }
+
+  /** Job-level overwrite of the spread write: clear every root's `pid=`
+    * dirs, write, then mark each root with `_SUCCESS` (the file Spark's
+    * committer leaves after a completed job). Returns records written.
+    */
+  private[graft] def overwrite(withPid: DataFrame, roots: Seq[String],
+                               cfg: PartitionConfig, gzipOutput: Boolean): Long = {
+    require(roots.nonEmpty, "need at least one root")
+    val hconf = withPid.sparkSession.sparkContext.hadoopConfiguration
+    val paths = roots.map(new org.apache.hadoop.fs.Path(_))
+    paths.foreach { p =>
       val fs = p.getFileSystem(hconf)
       if (fs.exists(p))
-        fs.listStatus(p).filter(_.getPath.getName.startsWith("pid="))
-          .foreach(st => fs.delete(st.getPath, true))
+        fs.listStatus(p).map(_.getPath)
+          .filter(c => c.getName.startsWith("pid=") || c.getName == "_SUCCESS")
+          .foreach(fs.delete(_, true))
     }
-    val lines = graft.sources.Readers.textLines(spark, inputGlob, suffix)
-    writeSpread(withPartitionId(lines, cfg), paths, cfg.maxPartitionCount,
-      gzipOutput)
+    val n = writeSpread(withPid, roots.toIndexedSeq, cfg.maxPartitionCount, gzipOutput)
+    paths.foreach { p =>
+      p.getFileSystem(hconf).create(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), true).close()
+    }
+    n
   }
 
   /** The spread writer: rows annotated with `pid` land under
-    * `roots(pid % N)/pid=<pid>/part-*`. One shuffle on pid, per-root
-    * temp+rename commit, verbatim bytes. Returns records written.
-    *
-    * Exactly-once on retry: the DESTINATION name is deterministic
-    * (`part-<sparkPartitionId>`), only the tmp name is attempt-unique, and
-    * commit is a bare rename — FIRST attempt to rename wins (HDFS-contract
-    * rename fails when dest exists); a losing concurrent/speculative
-    * attempt deletes its own tmp and moves on. Attempts over the same
-    * shuffled partition produce identical bytes (deterministic sort), so
-    * first-wins IS exactly-once. No attempt ever deletes a committed
-    * file — a delete(dest)-then-rename discipline would let a zombie
-    * attempt delete another attempt's committed output and die before
-    * restoring it. Job-level OVERWRITE is the caller's dir-clear
-    * (runSpread / processBatchSpread), not this writer's concern.
+    * `roots(pid % N)/pid=<pid>/part-<sparkPartitionId>.txt[.gz]` through
+    * the first-wins [[ShardSink]] commit. One shuffle on pid; the pid sort
+    * makes each pid's lines one contiguous run, so one file per pid and
+    * reduce task. Lines travel as their raw bytes, never decoded. Returns
+    * records written.
     */
   private[graft] def writeSpread(withPid: DataFrame, roots: IndexedSeq[String],
                                  nPartitions: Int, gzipOutput: Boolean): Long = {
     val spark = withPid.sparkSession
     import spark.implicits._
-    val nPaths = roots.length
-    // carry the session's spark.hadoop.* settings to the executors —
-    // the roots may be remote blob containers needing credentials/fs impls
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.sql.graft.Shims.SerializableHadoopConf(
-        spark.sparkContext.hadoopConfiguration))
-    val written = withPid
+    val ext = if (gzipOutput) ".txt.gz" else ".txt"
+    val rows = withPid
       .filter(col("pid").isNotNull)
       .select(col("pid").cast("int").as("pid"), col("value"))
       .repartition(nPartitions, col("pid"))
       .sortWithinPartitions("pid")
-      .mapPartitions { iter =>
-        val conf = confB.value.value
-        var n = 0L
-        var cur = Int.MinValue
-        var writer: java.io.Writer = null
-        var tmp: org.apache.hadoop.fs.Path = null
-        var dest: org.apache.hadoop.fs.Path = null
-        val ctx = Option(org.apache.spark.TaskContext.get())
-        val partId = ctx.map(_.partitionId().toString).getOrElse("0")
-        val attempt = ctx.map(t => s"$partId-${t.taskAttemptId()}").getOrElse("0")
-        def close(): Unit = if (writer != null) {
-          writer.close()
-          val fs = dest.getFileSystem(conf)
-          if (!fs.rename(tmp, dest)) {
-            // lost the commit race (dest exists): drop our tmp; any other
-            // failure is a real error — surface it
-            if (fs.exists(dest)) fs.delete(tmp, false)
-            else throw new java.io.IOException(s"commit failed: $tmp -> $dest")
-          }
-          writer = null
-        }
-        iter.foreach { row =>
-          val pid = row.getInt(0)
-          if (pid != cur) {
-            close()
-            cur = pid
-            val base = roots(pid % nPaths) // the round-robin spread
-            val ext = if (gzipOutput) ".txt.gz" else ".txt"
-            dest = new org.apache.hadoop.fs.Path(s"$base/pid=$pid/part-$partId$ext")
-            tmp = new org.apache.hadoop.fs.Path(s"$base/pid=$pid/_tmp-$attempt$ext")
-            val fs = dest.getFileSystem(conf)
-            val raw: java.io.OutputStream = fs.create(tmp, true)
-            val stream =
-              if (gzipOutput) new java.util.zip.GZIPOutputStream(raw) else raw
-            writer = new java.io.OutputStreamWriter(stream, "UTF-8")
-          }
-          writer.write(row.getString(1)); writer.write("\n")
-          n += 1
-        }
-        close()
-        Iterator.single(n)
-      }
-    // one action materializes the writes; sum is the records written
-    written.agg(sum("value")).collect()(0).getLong(0)
+      .select(col("pid"), concat(col("value"), lit("\n")).cast("binary"))
+      .as[(Int, Array[Byte])]
+    ShardSink.write(rows, gzipOutput)(_._1)(
+      dest = pid =>
+        s"${roots(pid % roots.length)}/pid=$pid/part-${org.apache.spark.TaskContext.getPartitionId()}$ext",
+      bytes = _._2)
+      // per-file counts are a few longs a task; collect().sum (unlike
+      // reduce) survives an empty input, whose plan can have zero partitions
+      .map(_.records).collect().sum
   }
 
   /** A5's PartitionValueSamples: one witness value of the extracted column

@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   *     non-splittable — identical constraint in the reference, which
   *     streams the whole blob).
   *   - the write repartitions by (file, shard) — the one necessary
-  *     shuffle — and each task writes its shard with a temp-file + rename
-  *     commit; the manifest write is the commit point (idempotent replay:
-  *     shards already in the manifest are skipped).
+  *     shuffle — and each task writes its shards through the first-wins
+  *     [[ShardSink]] commit; the manifest write is the commit point
+  *     (idempotent replay: shards already in the manifest are skipped).
   */
 object Split {
 
@@ -36,6 +36,15 @@ object Split {
       maxBytesPerShard: Long = 200L * 1024 * 1024, // reference default 200 MB
       hasHeader: Boolean = false,
       gzipOutput: Boolean = false)
+
+  /** The first line of a text file (plain or .gz) — its header. */
+  private def headerOf(file: String, conf: org.apache.hadoop.conf.Configuration): String = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    val raw: java.io.InputStream = p.getFileSystem(conf).open(p)
+    val in = if (file.endsWith(".gz")) new java.util.zip.GZIPInputStream(raw) else raw
+    val br = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
+    try Option(br.readLine()).getOrElse("") finally br.close()
+  }
 
   /** Lines with provenance: (file, offset, shard, value). */
   def linesWithOffsets(spark: SparkSession, inputGlob: String,
@@ -66,11 +75,7 @@ object Split {
     import spark.implicits._
     val lines = linesWithOffsets(spark, inputGlob, cfg.maxBytesPerShard)
 
-    // header per file = the offset-0 line. Read lazily IN THE SHARD WRITER
-    // (first line of the source file, one tiny open per shard ≈ one per
-    // 200 MB) — no driver-side map keyed by file, so driver memory is
-    // independent of input-file count (100 TB of small headered CSVs is
-    // O(#files) under the old collect).
+    // header per file = the offset-0 line, re-read by the shard writer
     val data = if (cfg.hasHeader) lines.filter(col("offset") > 0) else lines
 
     // idempotency: skip shards already committed to the manifest
@@ -87,91 +92,32 @@ object Split {
       case None => data
     }
 
-    val gz = cfg.gzipOutput
-    val out = outDir
+    val ext = if (cfg.gzipOutput) ".txt.gz" else ".txt"
     val withHeader = cfg.hasHeader
-    // carry the session's spark.hadoop.* settings to the executors (remote
-    // blob roots need credentials/fs impls) — same discipline as
-    // PrePartition.writeSpread
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.sql.graft.Shims.SerializableHadoopConf(
-        spark.sparkContext.hadoopConfiguration))
     // one task per (file, shard): the only shuffle in the plan
-    val written = todo
+    val rows = todo
       .repartition(col("file"), col("shard"))
       .sortWithinPartitions("file", "shard", "offset")
-      .mapPartitions { iter =>
-        val conf = confB.value.value
-        val results = scala.collection.mutable.ArrayBuffer[(String, Int, String, Long, Long)]()
-        // per-file header cache, bounded by files seen in THIS partition
-        val headerCache = scala.collection.mutable.Map[String, String]()
-        def headerOf(file: String): String = headerCache.getOrElseUpdate(file, {
-          val p = new org.apache.hadoop.fs.Path(file)
-          val fs = p.getFileSystem(conf)
-          val raw: java.io.InputStream = fs.open(p)
-          val in = if (file.endsWith(".gz"))
-            new java.util.zip.GZIPInputStream(raw) else raw
-          val br = new java.io.BufferedReader(
-            new java.io.InputStreamReader(in, "UTF-8"))
-          try Option(br.readLine()).getOrElse("") finally br.close()
-        })
-        var cur: (String, Int) = null
-        var writer: java.io.Writer = null
-        var tmpPath: org.apache.hadoop.fs.Path = null
-        var finalPath: org.apache.hadoop.fs.Path = null
-        var nBytes = 0L
-        var nRecords = 0L
-        def close(): Unit = if (writer != null) {
-          writer.close()
-          val fs = finalPath.getFileSystem(conf)
-          // FIRST-WINS rename commit (never delete a committed dest): a
-          // zombie/speculative loser whose rename fails against an existing
-          // dest drops its own tmp — attempts over the same shuffled
-          // partition produce identical bytes, so first-wins is
-          // exactly-once (see PrePartition.writeSpread for the rationale)
-          if (!fs.rename(tmpPath, finalPath)) {
-            if (fs.exists(finalPath)) fs.delete(tmpPath, false)
-            else throw new java.io.IOException(
-              s"commit failed: $tmpPath -> $finalPath")
-          }
-          results += ((cur._1, cur._2, finalPath.toString, nBytes, nRecords))
-          writer = null
-        }
-        iter.foreach { row =>
-          val file = row.getString(row.fieldIndex("file"))
-          val shard = row.getInt(row.fieldIndex("shard"))
-          val value = row.getString(row.fieldIndex("value"))
-          if (cur == null || cur._1 != file || cur._2 != shard) {
-            close()
-            cur = (file, shard)
-            val base = new org.apache.hadoop.fs.Path(file).getName
-              .stripSuffix(".gz").stripSuffix(".txt")
-            val ext = if (gz) ".txt.gz" else ".txt"
-            finalPath = new org.apache.hadoop.fs.Path(out, f"$base-$shard%05d$ext")
-            // attempt-unique tmp name: concurrent attempts (speculation,
-            // stage retry) must never interleave writes into one file
-            val attempt = Option(org.apache.spark.TaskContext.get())
-              .map(_.taskAttemptId()).getOrElse(0L)
-            tmpPath = new org.apache.hadoop.fs.Path(
-              out, f"_tmp_${attempt}_$base-$shard%05d$ext")
-            val fs = finalPath.getFileSystem(conf)
-            val raw: java.io.OutputStream = fs.create(tmpPath, true)
-            val stream = if (gz) new java.util.zip.GZIPOutputStream(raw) else raw
-            writer = new java.io.OutputStreamWriter(stream, "UTF-8")
-            nBytes = 0L; nRecords = 0L
-            if (withHeader) {
-              val h = headerOf(file)
-              writer.write(h); writer.write("\n")
-              nBytes += h.getBytes("UTF-8").length + 1; nRecords += 1
-            }
-          }
-          writer.write(value); writer.write("\n")
-          nBytes += value.getBytes("UTF-8").length + 1
-          nRecords += 1
-        }
-        close()
-        results.iterator
-      }.toDF("source_file", "shard_id", "dest_file", "n_bytes", "n_records")
+      .select(col("file"), col("shard"), concat(col("value"), lit("\n")).cast("binary"))
+      .as[(String, Int, Array[Byte])]
+    val written = ShardSink.write(rows, cfg.gzipOutput)(r => (r._1, r._2))(
+      dest = { case (file, shard) =>
+        val base = new org.apache.hadoop.fs.Path(file).getName
+          .stripSuffix(".gz").stripSuffix(".txt")
+        f"$outDir/$base-$shard%05d$ext"
+      },
+      bytes = _._3,
+      // the header is the source file's first line, read IN THE WRITER
+      // (one tiny open per shard ≈ one per 200 MB) — no driver-side map
+      // keyed by file, so driver memory is independent of input-file
+      // count (100 TB of small headered CSVs is O(#files) under a collect)
+      lead = { case ((file, _), conf) =>
+        if (withHeader) (headerOf(file, conf) + "\n").getBytes("UTF-8")
+        else Array.emptyByteArray
+      })
+      .map(s => (s.key._1, s.key._2, s.dest, s.bytes,
+        s.records + (if (withHeader) 1 else 0)))
+      .toDF("source_file", "shard_id", "dest_file", "n_bytes", "n_records")
 
     // commit point: append the shard summaries as a new manifest SEGMENT.
     // This materializes the side-effecting mapPartitions exactly once, and

@@ -1377,9 +1377,9 @@ object WarcSource {
     *
     * 100 TB shape: one task per shard (the one repartition in the plan),
     * the writer streams record by record — O(record) memory, never the
-    * shard; commit is write-to-tmp + first-wins rename, the exactly-once
-    * discipline of `PrePartition.writeSpread` (a retried task cannot
-    * tear a shard). Returns docs written.
+    * shard; commit is write-to-tmp + first-wins rename through
+    * [[graft.operators.ShardSink]] (a retried task cannot tear a shard).
+    * Returns docs written.
     */
   def writeWet(docs: DataFrame, outDir: String, nShards: Int,
                gzip: Boolean = true,
@@ -1407,24 +1407,21 @@ object WarcSource {
       shard => { val i = wetInfoOf(shard, d); if (g) gzipOne(i) else i })
   }
 
-  /** The sharded-archive commit loop [[writeWet]] and [[writeWarc]]
-    * share: `rows` = (shard, sort key, record bytes ALREADY in on-disk
-    * form — pre-wrapped gzip members travel the one exchange
-    * compressed), one task per shard streams them out, commit is
-    * write-to-tmp + first-wins rename (the `PrePartition.writeSpread`
-    * exactly-once discipline — a retried task cannot tear a shard, a
-    * lost race deletes its tmp). `lead(shard)` opens each archive
-    * (the warcinfo record). Returns records written (leads excluded).
+  /** The sharded-archive layout [[writeWet]] and [[writeWarc]] share:
+    * `rows` = (shard, sort key, record bytes ALREADY in on-disk form —
+    * pre-wrapped gzip members travel the one exchange compressed), one
+    * task per shard streams them into `part-NNNNN<ext>` through the
+    * first-wins [[graft.operators.ShardSink]] commit (a retried task
+    * cannot tear a shard, a lost race deletes its tmp). `lead(shard)`
+    * opens each archive (the warcinfo record). Returns records written
+    * (leads excluded).
     */
   private def writeArchiveShards(
       rows: org.apache.spark.sql.Dataset[(Long, Long, Array[Byte])],
       outDir: String, ext: String, lead: Long => Array[Byte]): Long = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.sql.graft.Shims.SerializableHadoopConf(
-        spark.sparkContext.hadoopConfiguration))
-    rows.toDF("shard", "skey", "rec")
+    val sorted = rows.toDF("shard", "skey", "rec")
       .repartition(col("shard"))
       // the record bytes as the TERTIARY sort key: two rows whose skey
       // collides (uri.hashCode in writeWarc) would otherwise order
@@ -1433,47 +1430,14 @@ object WarcSource {
       // ordering makes shard bytes deterministic (r18 ADVICE)
       .sortWithinPartitions(col("shard"), col("skey"), col("rec"))
       .as[(Long, Long, Array[Byte])]
-      .mapPartitions { iter =>
-        val conf = confB.value.value
-        var n = 0L
-        var cur = Long.MinValue
-        var out: java.io.OutputStream = null
-        var tmp: org.apache.hadoop.fs.Path = null
-        var dest: org.apache.hadoop.fs.Path = null
-        val ctx = Option(org.apache.spark.TaskContext.get())
-        val attempt = ctx.map(t =>
-          s"${t.partitionId()}-${t.taskAttemptId()}").getOrElse("0")
-        def close(): Unit = if (out != null) {
-          out.close()
-          val fs = dest.getFileSystem(conf)
-          if (!fs.rename(tmp, dest)) {
-            if (fs.exists(dest)) fs.delete(tmp, false)
-            else throw new java.io.IOException(s"commit failed: $tmp -> $dest")
-          }
-          out = null
-        }
-        iter.foreach { case (shard, _, rec) =>
-          if (shard != cur) {
-            close()
-            cur = shard
-            dest = new org.apache.hadoop.fs.Path(
-              f"$outDir/part-$shard%05d$ext")
-            tmp = new org.apache.hadoop.fs.Path(
-              f"$outDir/_tmp-$attempt-$shard%05d$ext")
-            val fs = dest.getFileSystem(conf)
-            out = fs.create(tmp, true)
-            out.write(lead(shard))
-          }
-          out.write(rec)
-          n += 1
-        }
-        close()
-        Iterator.single(n)
-      }
-      // per-partition counts are a handful of longs; collect().sum
+    graft.operators.ShardSink.write(sorted, gzip = false)(_._1)(
+      dest = shard => f"$outDir/part-$shard%05d$ext",
+      bytes = _._3,
+      lead = (shard, _) => lead(shard))
+      // per-file counts are a handful of longs; collect().sum
       // (unlike reduce) survives an empty input relation, whose
       // optimized plan can have zero partitions
-      .collect().sum
+      .map(_.records).collect().sum
   }
 
   // --------------------------------------------------------- warc write

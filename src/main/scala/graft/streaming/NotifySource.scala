@@ -43,7 +43,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Emits the referenced blobs' LINES as a single `value STRING` column —
   * a drop-in replacement for `readStream.text`, so the existing
-  * `processBatch`/`processBatchSpread` exactly-once machinery plugs in
+  * `StreamingPrePartition.processBatch` exactly-once machinery plugs in
   * unchanged. Gzip blobs are decoded by suffix.
   *
   * Usage:

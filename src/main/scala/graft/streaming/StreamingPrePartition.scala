@@ -35,46 +35,49 @@ object StreamingPrePartition {
     val lines = spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .text(landingDir)
-
-    lines.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stagingDir, cfg)
-      }
-      .start()
+    eachBatch(lines, trigger, checkpointDir) { (batch, batchId) =>
+      processBatch(batch, batchId, Seq(stagingDir), stagingDir, cfg)
+    }
   }
 
+  /** The `foreachBatch` wiring every pipeline here shares. */
+  private def eachBatch(stream: DataFrame, trigger: Trigger, checkpointDir: String)
+                       (f: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .trigger(trigger)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(f)
+      .start()
+
   /** One micro-batch: partition + write, guarded by the batch manifest.
-    * Exactly-once under at-least-once replay needs BOTH halves: the data
-    * write goes to a per-batch directory in OVERWRITE mode (so a replay
-    * that re-runs the write after a crash mid-append replaces, never
-    * duplicates), and the manifest marker is written AFTER the data (so a
-    * marked batch is never re-run at all). Public so the replay path is
-    * directly testable.
+    * Partition `pid` lands under `roots(pid % N)/data/batch=<id>/pid=<pid>/`
+    * (reference: PartitionedContentSink.cs:54-66 round-robins flush blobs
+    * over the staging containers; one root is the plain staging write);
+    * the marker lives under `controlDir`. Exactly-once under at-least-once
+    * replay needs BOTH halves: the data write OVERWRITES each root's
+    * per-batch directory (so a replay that re-runs the write after a crash
+    * mid-write replaces, never duplicates), and the marker is written AFTER
+    * the data (so a marked batch is never re-run at all). Public so the
+    * replay path is directly testable.
     */
-  def processBatch(batch: DataFrame, batchId: Long, stagingDir: String,
-                   cfg: PartitionConfig): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, roots: Seq[String],
+                   controlDir: String, cfg: PartitionConfig): Unit = {
     val s = batch.sparkSession
     // Per-batch marker DIRECTORY probed with one fs.exists — O(1) per
     // trigger regardless of history (the r1 design re-read the full
     // manifest parquet every micro-batch and appended a 1-row file per
     // batch: O(batches) listing per trigger, unbounded small files).
     // The tree still reads as one partitioned parquet table:
-    //   spark.read.parquet(s"$stagingDir/_batch_manifest")
+    //   spark.read.parquet(s"$controlDir/_batch_manifest")
     val markerPath = new org.apache.hadoop.fs.Path(
-      s"$stagingDir/_batch_manifest/batch=$batchId")
+      s"$controlDir/_batch_manifest/batch=$batchId")
     val fs = markerPath.getFileSystem(s.sparkContext.hadoopConfiguration)
     // _SUCCESS appears only at job commit, so a crash mid-marker-write
     // leaves the batch unmarked and the replay re-runs it (overwrite).
     val already = fs.exists(new org.apache.hadoop.fs.Path(markerPath, "_SUCCESS"))
     if (!already) {
-      val partitioned = PrePartition
-        .withPartitionId(batch, cfg)
-        .filter(col("pid").isNotNull)
-        .repartition(cfg.maxPartitionCount, col("pid"))
-      partitioned.write.mode(SaveMode.Overwrite)
-        .partitionBy("pid").text(s"$stagingDir/data/batch=$batchId")
+      PrePartition.overwrite(PrePartition.withPartitionId(batch, cfg),
+        roots.map(r => s"$r/data/batch=$batchId"), cfg, gzipOutput = false)
       // commit marker AFTER the data write: replay-safe ordering
       s.range(1).select(
         lit(batchId).as("batch_id"),
@@ -103,13 +106,9 @@ object StreamingPrePartition {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .option("claimMode", claimMode)
       .load()
-    lines.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, stagingDir, cfg)
-      }
-      .start()
+    eachBatch(lines, trigger, checkpointDir) { (batch, batchId) =>
+      processBatch(batch, batchId, Seq(stagingDir), stagingDir, cfg)
+    }
   }
 
   /** Event-driven SPLIT — the reference's other EtlAction on the same
@@ -133,75 +132,17 @@ object StreamingPrePartition {
       .option("emit", "paths")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .load()
-    paths.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val blobs = batch.collect().map(_.getString(0))
-        // the Hadoop multi-path string is comma-separated: a comma INSIDE
-        // a blob path would silently split into garbage paths — refuse
-        require(blobs.forall(!_.contains(",")),
-          s"blob paths must not contain commas: ${blobs.filter(_.contains(",")).mkString("; ")}")
-        if (blobs.nonEmpty) {
-          graft.operators.Split.run(batch.sparkSession,
-            blobs.mkString(","), outDir, cfg)
-          ()
-        }
+    eachBatch(paths, trigger, checkpointDir) { (batch, _) =>
+      val blobs = batch.collect().map(_.getString(0))
+      // the Hadoop multi-path string is comma-separated: a comma INSIDE
+      // a blob path would silently split into garbage paths — refuse
+      require(blobs.forall(!_.contains(",")),
+        s"blob paths must not contain commas: ${blobs.filter(_.contains(",")).mkString("; ")}")
+      if (blobs.nonEmpty) {
+        graft.operators.Split.run(batch.sparkSession,
+          blobs.mkString(","), outDir, cfg)
+        ()
       }
-      .start()
-  }
-
-  /** Start the streaming pipeline with multi-container output spread:
-    * partition `pid` of every micro-batch lands under
-    * `spreadPaths(pid % N)/data/batch=<id>/pid=<pid>/` (reference:
-    * PartitionedContentSink.cs:54-66 round-robins flush blobs over the
-    * staging containers). Control plane (checkpoint + batch markers)
-    * stays under `controlDir`, so the idempotent-replay contract is
-    * identical to the single-root path.
-    */
-  def startSpread(spark: SparkSession, landingDir: String,
-                  spreadPaths: Seq[String], controlDir: String,
-                  checkpointDir: String, cfg: PartitionConfig,
-                  trigger: Trigger = Trigger.ProcessingTime("1 minute"),
-                  maxFilesPerTrigger: Int = 16): StreamingQuery = {
-    val lines = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(landingDir)
-    lines.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchSpread(batch, batchId, spreadPaths, controlDir, cfg)
-      }
-      .start()
-  }
-
-  /** One spread micro-batch: same marker protocol as `processBatch`, but
-    * the data write fans out across the N roots via the one-pass spread
-    * writer; a replay clears each root's per-batch dir first (overwrite).
-    */
-  def processBatchSpread(batch: DataFrame, batchId: Long,
-                         spreadPaths: Seq[String], controlDir: String,
-                         cfg: PartitionConfig): Unit = {
-    val s = batch.sparkSession
-    val markerPath = new org.apache.hadoop.fs.Path(
-      s"$controlDir/_batch_manifest/batch=$batchId")
-    val fs = markerPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val already = fs.exists(new org.apache.hadoop.fs.Path(markerPath, "_SUCCESS"))
-    if (!already) {
-      val roots = spreadPaths.toIndexedSeq.map(b => s"$b/data/batch=$batchId")
-      roots.foreach { r =>
-        val p = new org.apache.hadoop.fs.Path(r)
-        val rfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (rfs.exists(p)) rfs.delete(p, true)
-      }
-      PrePartition.writeSpread(
-        PrePartition.withPartitionId(batch, cfg), roots,
-        cfg.maxPartitionCount, gzipOutput = false)
-      s.range(1).select(
-        lit(batchId).as("batch_id"),
-        current_timestamp().as("committed_at"))
-        .write.mode(SaveMode.Overwrite).parquet(markerPath.toString)
     }
   }
 }

@@ -24,7 +24,7 @@ object Shims {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** A serializable carrier for the driver's Hadoop configuration, so
-    * executor-side writers (PrePartition.writeSpread) see the session's
+    * executor-side writers (`graft.operators.ShardSink`) see the session's
     * `spark.hadoop.*` settings (credentials, fs impls) exactly as Spark's
     * own writers do. Wraps `private[spark]` SerializableConfiguration.
     */
@@ -32,6 +32,17 @@ object Shims {
       extends Serializable {
     private val inner = new org.apache.spark.util.SerializableConfiguration(conf)
     def value: org.apache.hadoop.conf.Configuration = inner.value
+  }
+
+  /** Add a custom writer's bytes and records to the task's output
+    * metrics (the setters are `private[spark]`), so listeners and the UI
+    * see them as they see Spark's own file writers' output.
+    */
+  def addOutputMetrics(ctx: org.apache.spark.TaskContext, bytes: Long,
+                       records: Long): Unit = {
+    val m = ctx.taskMetrics().outputMetrics
+    m.setBytesWritten(m.bytesWritten + bytes)
+    m.setRecordsWritten(m.recordsWritten + records)
   }
 
   /** Blocking removal of every broadcast block still materialized in the

@@ -14,49 +14,57 @@ class Round2OpsSpec extends GraftSparkSpec {
 
   private lazy val tmp = Files.createTempDirectory("graft-r2").toString
 
-  test("runSpread round-robins pid dirs across N base paths, no row lost") {
-    val landing = s"$tmp/landing"
-    LogDataGenerator.toCsvLines(LogDataGenerator.generate(spark, 2000))
-      .coalesce(2).write.mode("overwrite").text(landing)
-    val bases = (0 until 3).map(i => s"$tmp/container$i")
+  // PrePartition.run is the one-root case of runSpread: the placement and
+  // rerun checks run at both widths
+  private def spreadTests(nRoots: Int, suffix: String): Unit = {
+    val landing = s"$tmp/landing$nRoots"
+    val bases = (0 until nRoots).map(i => s"$tmp/container$nRoots-$i")
     val cfg = PartitionConfig(columnIndex = 3, maxPartitionCount = 8, seed = 17)
 
-    PrePartition.runSpread(spark, s"$landing/*.txt", bases, cfg)
+    test(s"runSpread round-robins pid dirs across N base paths, no row lost$suffix") {
+      LogDataGenerator.toCsvLines(LogDataGenerator.generate(spark, 2000))
+        .coalesce(2).write.mode("overwrite").text(landing)
 
-    // every pid dir landed in exactly the base path pid % 3 selects
-    val placed = bases.zipWithIndex.flatMap { case (b, i) =>
-      Option(new java.io.File(b).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("pid="))
-        .map(f => (i, f.getName.stripPrefix("pid=").toInt))
+      PrePartition.runSpread(spark, s"$landing/*.txt", bases, cfg)
+
+      // every pid dir landed in exactly the base path pid % N selects
+      val placed = bases.zipWithIndex.flatMap { case (b, i) =>
+        Option(new java.io.File(b).listFiles()).getOrElse(Array.empty)
+          .filter(_.getName.startsWith("pid="))
+          .map(f => (i, f.getName.stripPrefix("pid=").toInt))
+      }
+      assert(placed.nonEmpty)
+      assert(placed.forall { case (container, pid) => pid % nRoots == container })
+      // all 8 pids present across the spread, each exactly once
+      assert(placed.map(_._2).sorted == (0 until 8))
+      // each root is marked complete, as Spark's committer marks its output
+      assert(bases.forall(b => new java.io.File(s"$b/_SUCCESS").isFile))
+
+      // byte-fidelity: concatenated spread output == input lines
+      val out = spark.read.text(bases.map(b => s"$b/pid=*/*.txt"): _*)
+      val in = spark.read.text(s"$landing/*.txt")
+      assert(out.count() == 2000)
+      assert(out.except(in).count() == 0 && in.except(out).count() == 0)
+
+      // partition placement honors the xor-fold contract
+      val b = bases(1 % nRoots)
+      val mismatches = spark.read
+        .option("basePath", b).text(s"$b/pid=*/*.txt")
+        .withColumn("node", graft.functions.GraftFunctions.csvColumnAt(col("value"), 3))
+        .withColumn("expected", graft.functions.GraftFunctions.xorFoldHash(col("node"), 17, 8))
+        .filter(col("pid") =!= col("expected")).count()
+      assert(mismatches == 0)
     }
-    assert(placed.nonEmpty)
-    assert(placed.forall { case (container, pid) => pid % 3 == container })
-    // all 8 pids present across the spread, each exactly once
-    assert(placed.map(_._2).sorted == (0 until 8))
 
-    // byte-fidelity: concatenated spread output == input lines
-    val out = spark.read.text(bases.map(b => s"$b/pid=*/*.txt"): _*)
-    val in = spark.read.text(s"$landing/*.txt")
-    assert(out.count() == 2000)
-    assert(out.except(in).count() == 0 && in.except(out).count() == 0)
-
-    // partition placement honors the xor-fold contract
-    val mismatches = spark.read
-      .option("basePath", bases(1)).text(s"${bases(1)}/pid=*/*.txt")
-      .withColumn("node", graft.functions.GraftFunctions.csvColumnAt(col("value"), 3))
-      .withColumn("expected", graft.functions.GraftFunctions.xorFoldHash(col("node"), 17, 8))
-      .filter(col("pid") =!= col("expected")).count()
-    assert(mismatches == 0)
+    test(s"runSpread overwrites prior pid dirs on rerun (no duplication)$suffix") {
+      PrePartition.runSpread(spark, s"$landing/*.txt", bases, cfg)
+      val out = spark.read.text(bases.map(b => s"$b/pid=*/*.txt"): _*)
+      assert(out.count() == 2000)
+    }
   }
 
-  test("runSpread overwrites prior pid dirs on rerun (no duplication)") {
-    val landing = s"$tmp/landing"
-    val bases = (0 until 3).map(i => s"$tmp/container$i")
-    val cfg = PartitionConfig(columnIndex = 3, maxPartitionCount = 8, seed = 17)
-    PrePartition.runSpread(spark, s"$landing/*.txt", bases, cfg)
-    val out = spark.read.text(bases.map(b => s"$b/pid=*/*.txt"): _*)
-    assert(out.count() == 2000)
-  }
+  spreadTests(3, "")
+  spreadTests(1, " (one root, as PrePartition.run)")
 
   test("async export completes, is polled via the operations frame") {
     val df = spark.range(500).select(col("id"), (col("id") * 2).as("dbl"))
@@ -109,7 +117,7 @@ class Round2OpsSpec extends GraftSparkSpec {
       LogDataGenerator.generate(spark, 300, seed = 11))
 
     graft.streaming.StreamingPrePartition
-      .processBatchSpread(batch, 7L, bases, control, cfg)
+      .processBatch(batch, 7L, bases, control, cfg)
     val glob = bases.map(b => s"$b/data/batch=7/pid=*/*.txt")
     assert(spark.read.text(glob: _*).count() == 300)
     // spread honors pid % N
@@ -122,7 +130,7 @@ class Round2OpsSpec extends GraftSparkSpec {
 
     // replay of the same batchId: marker short-circuits, nothing doubles
     graft.streaming.StreamingPrePartition
-      .processBatchSpread(batch, 7L, bases, control, cfg)
+      .processBatch(batch, 7L, bases, control, cfg)
     assert(spark.read.text(glob: _*).count() == 300)
   }
 

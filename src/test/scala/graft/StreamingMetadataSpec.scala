@@ -105,13 +105,13 @@ class StreamingMetadataSpec extends GraftSparkSpec {
     val batch = LogDataGenerator.toCsvLines(
       LogDataGenerator.generate(spark, 200, seed = 7))
 
-    StreamingPrePartition.processBatch(batch, batchId = 42L, staging, cfg)
+    StreamingPrePartition.processBatch(batch, batchId = 42L, Seq(staging), staging, cfg)
     assert(spark.read.text(s"$staging/data").count() == 200)
     // the replay: same batchId arrives again (at-least-once delivery)
-    StreamingPrePartition.processBatch(batch, batchId = 42L, staging, cfg)
+    StreamingPrePartition.processBatch(batch, batchId = 42L, Seq(staging), staging, cfg)
     assert(spark.read.text(s"$staging/data").count() == 200)
     // a NEW batchId appends
-    StreamingPrePartition.processBatch(batch, batchId = 43L, staging, cfg)
+    StreamingPrePartition.processBatch(batch, batchId = 43L, Seq(staging), staging, cfg)
     assert(spark.read.text(s"$staging/data").count() == 400)
   }
 }
