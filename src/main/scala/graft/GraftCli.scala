@@ -76,10 +76,15 @@ object GraftCli {
     case "prepartition" :: inGlob :: roots :: colIdx :: n :: seed :: rest
         if rest == Nil || rest == List("gzip") =>
       val spark = session()
-      PrePartition.runSpread(spark, inGlob, roots.split(',').toIndexedSeq,
+      val written = PrePartition.runSpread(spark, inGlob, roots.split(',').toIndexedSeq,
         PartitionConfig(colIdx.toInt, n.toInt, seed.toInt),
         gzipOutput = rest.nonEmpty)
-      println(s"[graft] prepartitioned $inGlob -> $roots (col=$colIdx n=$n seed=$seed)")
+      // records and bytes per partition, as the reference's perf counters
+      written.toSeq.sortBy(_._1).foreach { case (pid, w) =>
+        println(s"[graft] pid=$pid records=${w.records} bytes=${w.bytes}")
+      }
+      println(s"[graft] prepartitioned $inGlob -> $roots (col=$colIdx n=$n seed=$seed)" +
+        s" records=${written.values.map(_.records).sum}")
       spark.stop()
 
     case "split" :: inGlob :: outDir :: maxBytes :: rest =>

@@ -21,8 +21,8 @@ case class PartitionConfig(columnIndex: Int, maxPartitionCount: Int, seed: Int)
   *   GunzipContentTransform (A4)              codec-aware text read (.gz native)
   *   CsvParseTransform (A5)                   csv_column_at(value, idx)   [codegen]
   *   PartitioningHelper hash (A6)             xor_fold_hash(col, seed, n) [codegen]
-  *   PartitioningTextTransform (A7)           repartition(n, $"pid")  — hash shuffle
-  *   PartitionedContentSink (A8)              ShardSink: one file per pid, first-wins rename
+  *   PartitioningTextTransform (A7)           each scan task scatters its rows by pid
+  *   PartitionedContentSink (A8)              ShardSink: one file per (task, pid), first-wins rename
   *
   * Records pass through byte-for-byte: we read lines as raw text and never
   * reserialize (the reference copies records verbatim,
@@ -37,16 +37,22 @@ case class PartitionConfig(columnIndex: Int, maxPartitionCount: Int, seed: Int)
   * correctly within a record — only the line source differs, documented
   * here per FIXTURES.md §3.
   *
-  * Scale notes (100 TB): the only shuffle is the single hash exchange on
-  * `pid`, which is exactly the data movement the operation *means*. Filter +
-  * projection happen before the exchange; the text scan splits at
+  * Scale notes (100 TB): there is no shuffle. Each scan task writes its own
+  * rows straight to one file per pid it meets, in input order — the
+  * reference's copy into per-partition buffers inside one stream
+  * (Transforms/PartitioningTextTransform.cs:39-76) — so the output is
+  * input splits × pids present files of about split size / pids each, the
+  * analogue of the reference's one blob per flush window × partition
+  * (Transforms/PartitionedContentSink.cs:54-66). Filter + projection run
+  * in the same task; the text scan splits at
   * `spark.sql.files.maxPartitionBytes` so a 1000-executor cluster reads
   * line-aligned splits in parallel (gzip inputs degrade to one task per file,
   * same as the reference's whole-blob download). The xor-fold hash has ≤256
-  * distinct values — with maxPartitionCount > 256 or a skewed column the
-  * exchange is skewed (reference inherits the same skew, SURVEY.md §7.4), and
-  * nothing on the write side splits it: AQE never splits or coalesces a
-  * `repartition(n, col)` exchange, so each pid is one reduce task's file.
+  * distinct values, so a task holds at most 256 files open (a 64 KiB write
+  * buffer each, plus a deflater when gzipped). A skewed column
+  * (the reference inherits the same skew, SURVEY.md §7.4) makes one pid's
+  * files larger, but no longer funnels that pid through one reduce task:
+  * every split writes its share of the hot pid in parallel.
   */
 object PrePartition {
 
@@ -63,7 +69,7 @@ object PrePartition {
   }
 
   /** Full batch pipeline: read text (codec inferred per file) → pid →
-    * partitioned write under one root. One shuffle, verbatim bytes; the
+    * partitioned write under one root. No shuffle, verbatim bytes; the
     * one-root case of [[runSpread]].
     */
   def run(spark: SparkSession, inputGlob: String, outputDir: String,
@@ -77,21 +83,27 @@ object PrePartition {
     * Text/TextKustoSink.cs:28-30): partition `pid` writes under
     * `roots(pid % N)/pid=<pid>/`. Users with per-account throttling
     * spread ingest load this way; one root is the plain staging write.
+    * Returns the records and bytes written per pid.
     */
   def runSpread(spark: SparkSession, inputGlob: String,
                 roots: Seq[String], cfg: PartitionConfig,
                 gzipOutput: Boolean = false,
-                suffix: Option[String] = None): Unit = {
+                suffix: Option[String] = None): Map[Int, PidWritten] = {
     val lines = graft.sources.Readers.textLines(spark, inputGlob, suffix)
-    overwrite(withPartitionId(lines, cfg), roots, cfg, gzipOutput)
+    overwrite(withPartitionId(lines, cfg), roots, gzipOutput)
+  }
+
+  /** Records and payload bytes (before compression) written for one pid. */
+  final case class PidWritten(records: Long, bytes: Long) {
+    def +(o: PidWritten): PidWritten = PidWritten(records + o.records, bytes + o.bytes)
   }
 
   /** Job-level overwrite of the spread write: clear every root's `pid=`
     * dirs, write, then mark each root with `_SUCCESS` (the file Spark's
-    * committer leaves after a completed job). Returns records written.
+    * committer leaves after a completed job). Returns what each pid got.
     */
   private[graft] def overwrite(withPid: DataFrame, roots: Seq[String],
-                               cfg: PartitionConfig, gzipOutput: Boolean): Long = {
+                               gzipOutput: Boolean): Map[Int, PidWritten] = {
     require(roots.nonEmpty, "need at least one root")
     val hconf = withPid.sparkSession.sparkContext.hadoopConfiguration
     val paths = roots.map(new org.apache.hadoop.fs.Path(_))
@@ -102,40 +114,42 @@ object PrePartition {
           .filter(c => c.getName.startsWith("pid=") || c.getName == "_SUCCESS")
           .foreach(fs.delete(_, true))
     }
-    val n = writeSpread(withPid, roots.toIndexedSeq, cfg.maxPartitionCount, gzipOutput)
+    val written = writeSpread(withPid, roots.toIndexedSeq, gzipOutput)
     paths.foreach { p =>
       p.getFileSystem(hconf).create(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), true).close()
     }
-    n
+    written
   }
 
-  /** The spread writer: rows annotated with `pid` land under
-    * `roots(pid % N)/pid=<pid>/part-<sparkPartitionId>.txt[.gz]` through
-    * the first-wins [[ShardSink]] commit. One shuffle on pid; the pid sort
-    * makes each pid's lines one contiguous run, so one file per pid and
-    * reduce task. Lines travel as their raw bytes, never decoded. Returns
-    * records written.
+  /** The spread writer: each task writes the rows annotated with `pid`, in
+    * input order, to `roots(pid % N)/pid=<pid>/part-<sparkPartitionId>.txt[.gz]`
+    * through the first-wins [[ShardSink]] commit. No shuffle: the task holds
+    * one open file per pid it meets, and the xor-fold has at most 256
+    * values (HashUtil.xorFold), so it never evicts one. Lines travel as
+    * their raw bytes, never decoded. Returns the records and bytes written
+    * per pid.
     */
   private[graft] def writeSpread(withPid: DataFrame, roots: IndexedSeq[String],
-                                 nPartitions: Int, gzipOutput: Boolean): Long = {
+                                 gzipOutput: Boolean): Map[Int, PidWritten] = {
     val spark = withPid.sparkSession
     import spark.implicits._
     val ext = if (gzipOutput) ".txt.gz" else ".txt"
     val rows = withPid
       .filter(col("pid").isNotNull)
-      .select(col("pid").cast("int").as("pid"), col("value"))
-      .repartition(nPartitions, col("pid"))
-      .sortWithinPartitions("pid")
-      .select(col("pid"), concat(col("value"), lit("\n")).cast("binary"))
+      .select(col("pid").cast("int"), concat(col("value"), lit("\n")).cast("binary"))
       .as[(Int, Array[Byte])]
-    ShardSink.write(rows, gzipOutput)(_._1)(
+    ShardSink.write(rows, gzipOutput, maxOpen = 256)(_._1)(
       dest = pid =>
         s"${roots(pid % roots.length)}/pid=$pid/part-${org.apache.spark.TaskContext.getPartitionId()}$ext",
       bytes = _._2)
-      // per-file counts are a few longs a task; collect().sum (unlike
-      // reduce) survives an empty input, whose plan can have zero partitions
-      .map(_.records).collect().sum
+      .map(s => Map(s.key -> PidWritten(s.records, s.bytes)))
+      // one action for the per-pid counts; fold's zero (unlike reduce)
+      // survives an empty input, whose plan can have zero partitions
+      .fold(Map.empty[Int, PidWritten])(merge)
   }
+
+  private def merge(a: Map[Int, PidWritten], b: Map[Int, PidWritten]): Map[Int, PidWritten] =
+    b.foldLeft(a) { case (m, (pid, w)) => m.updated(pid, m.get(pid).fold(w)(_ + w)) }
 
   /** A5's PartitionValueSamples: one witness value of the extracted column
     * per partition id (deterministic: min). The reference computes a

@@ -12,8 +12,14 @@ import org.apache.spark.sql.graft.Shims
   * (reference: PartitionedContentSink streams each partition's records
   * straight into one blob, Transforms/PartitionedContentSink.cs:54-66).
   *
-  * Rows arrive with each file's rows adjacent (the caller's exchange and
-  * sort); a key change commits one file and opens the next. The commit:
+  * A task keeps one open file per key, at most `maxOpen` of them; a new
+  * key past that commits the file opened first. PrePartition scatters each
+  * scan task's rows over every pid it meets (the reference's per-partition
+  * buffers, Transforms/PartitioningTextTransform.cs:39-76) and never
+  * evicts; Split and the WARC/WET writers feed each file's rows adjacent
+  * (their exchange and sort) with `maxOpen = 1`. A key that comes back
+  * after its file was committed fails the task: a second file for the same
+  * destination would lose the commit race or replace the first. The commit:
   *   - each file is written to an attempt-unique `_tmp_<taskAttemptId>_`
   *     name beside its destination, so concurrent attempts (speculation,
   *     stage retry) never interleave writes into one file;
@@ -24,12 +30,12 @@ import org.apache.spark.sql.graft.Shims
   *   - a committed file is never deleted: a delete-then-rename discipline
   *     would let a zombie attempt delete another attempt's committed file
   *     and die before restoring it.
-  * Attempts over the same shuffled partition write the same rows to the
-  * same destinations (byte-identical where the caller's sort is total), so
-  * whichever attempt commits first, each row lands exactly once.
-  * Job-level overwrite is the caller's directory clear before the job.
-  * A task that fails deletes the tmp it has open and rethrows, and every
-  * task adds its file bytes and records to Spark's output metrics.
+  * Attempts over the same input partition write the same rows to the same
+  * destinations (byte-identical where the caller's row order is
+  * deterministic), so whichever attempt commits first, each row lands
+  * exactly once. Job-level overwrite is the caller's directory clear before
+  * the job. A task that fails deletes every tmp it has open and rethrows,
+  * and every task adds its file bytes and records to Spark's output metrics.
   */
 object ShardSink {
 
@@ -37,18 +43,26 @@ object ShardSink {
     * payload bytes (lead included, before compression) written to it. */
   final case class Shard[K](key: K, dest: String, records: Long, bytes: Long)
 
-  /** Write `rows` as one file per run of equal `key`s at `dest(key)`:
-    * `lead(key, conf)` (none by default) opens each file, then every row's
-    * `bytes` follow,
-    * gzip compressed when `gzip`. The session's Hadoop conf
-    * (`spark.hadoop.*` credentials and fs impls for remote roots) is
-    * broadcast once per job; `conf` is its executor-side copy. Lazy: the
-    * returned RDD's action runs the writes.
+  /** One file a task has open. */
+  private final class OpenFile[K](val key: K, val fs: FileSystem, val tmp: Path,
+                                  val dst: Path, val raw: FSDataOutputStream) {
+    var out: java.io.OutputStream = raw
+    var records = 0L
+    var bytes = 0L
+  }
+
+  /** Write `rows` as one file per `key` at `dest(key)`, holding at most
+    * `maxOpen` files open per task: `lead(key, conf)` (none by default)
+    * opens each file, then every row's `bytes` follow, gzip compressed when
+    * `gzip`. The session's Hadoop conf (`spark.hadoop.*` credentials and fs
+    * impls for remote roots) is broadcast once per job; `conf` is its
+    * executor-side copy. Lazy: the returned RDD's action runs the writes.
     */
-  def write[T, K](rows: Dataset[T], gzip: Boolean)(key: T => K)(
+  def write[T, K](rows: Dataset[T], gzip: Boolean, maxOpen: Int)(key: T => K)(
       dest: K => String, bytes: T => Array[Byte],
       lead: (K, Configuration) => Array[Byte] = (_: K, _: Configuration) => Array.emptyByteArray)
       : RDD[Shard[K]] = {
+    require(maxOpen > 0, s"maxOpen must be positive, got $maxOpen")
     val sc = rows.sparkSession.sparkContext
     val confB = sc.broadcast(new Shims.SerializableHadoopConf(sc.hadoopConfiguration))
     rows.rdd.mapPartitions { iter =>
@@ -64,58 +78,66 @@ object ShardSink {
       if (ctx != null) ctx.addTaskCompletionListener[Unit] { c =>
         Shims.addOutputMetrics(c, fileBytes, fileRecords)
       }
-      var cur: Option[K] = None
-      var fs: FileSystem = null
-      var tmp: Path = null
-      var dst: Path = null
-      var raw: FSDataOutputStream = null
-      var out: java.io.OutputStream = null
-      var nRecords = 0L
-      var nBytes = 0L
-      def commit(): Unit = if (out != null) {
-        out.close()
-        fileBytes += raw.getPos
-        fileRecords += nRecords
-        if (!fs.rename(tmp, dst)) {
+      // insertion order: the head is the file opened first
+      val open = scala.collection.mutable.LinkedHashMap.empty[K, OpenFile[K]]
+      val committed = scala.collection.mutable.HashSet.empty[K]
+      def commit(f: OpenFile[K]): Unit = {
+        f.out.close()
+        fileBytes += f.raw.getPos
+        fileRecords += f.records
+        if (!f.fs.rename(f.tmp, f.dst)) {
           // lost the commit race (dest exists): drop our tmp; any other
           // failure is a real error — surface it
-          if (fs.exists(dst)) fs.delete(tmp, false)
-          else throw new java.io.IOException(s"commit failed: $tmp -> $dst")
+          if (f.fs.exists(f.dst)) f.fs.delete(f.tmp, false)
+          else throw new java.io.IOException(s"commit failed: ${f.tmp} -> ${f.dst}")
         }
-        done += Shard(cur.get, dst.toString, nRecords, nBytes)
-        out = null
+        open.remove(f.key)
+        committed += f.key
+        done += Shard(f.key, f.dst.toString, f.records, f.bytes)
       }
-      def open(k: K): Unit = {
-        cur = Some(k)
-        dst = new Path(dest(k))
-        tmp = new Path(dst.getParent, s"_tmp_${attempt}_${dst.getName}")
-        fs = dst.getFileSystem(conf)
-        raw = fs.create(tmp, true)
-        out = raw // a throwing gzip header still gets its tmp deleted
-        out = new java.io.BufferedOutputStream(
-          if (gzip) new java.util.zip.GZIPOutputStream(raw) else raw, 1 << 16)
+      def openFile(k: K): OpenFile[K] = {
+        if (committed.contains(k))
+          throw new IllegalStateException(
+            s"key $k came back after its file was committed: at most $maxOpen " +
+              "keys may be open at once, and each key's rows must arrive before " +
+              "its file is evicted")
+        if (open.size >= maxOpen) commit(open.head._2)
+        val dst = new Path(dest(k))
+        val fs = dst.getFileSystem(conf)
+        val tmp = new Path(dst.getParent, s"_tmp_${attempt}_${dst.getName}")
+        // registered before the gzip header, so a throwing one still gets
+        // its tmp deleted
+        val f = new OpenFile(k, fs, tmp, dst, fs.create(tmp, true))
+        open(k) = f
+        f.out = new java.io.BufferedOutputStream(
+          if (gzip) new java.util.zip.GZIPOutputStream(f.raw) else f.raw, 1 << 16)
         val l = lead(k, conf)
-        out.write(l)
-        nRecords = 0L
-        nBytes = l.length
+        f.out.write(l)
+        f.bytes = l.length
+        f
       }
+      // the previous row's file: adjacent rows of one key (Split, WARC/WET)
+      // skip the table lookup. Eviction happens only in openFile, whose
+      // result replaces it, so it is always open.
+      var last: OpenFile[K] = null
       try {
         iter.foreach { row =>
           val k = key(row)
-          if (out == null || !cur.contains(k)) { commit(); open(k) }
+          val f = if (last != null && last.key == k) last else open.getOrElse(k, openFile(k))
+          last = f
           val b = bytes(row)
-          out.write(b)
-          nRecords += 1
-          nBytes += b.length
+          f.out.write(b)
+          f.records += 1
+          f.bytes += b.length
         }
-        commit()
+        while (open.nonEmpty) commit(open.head._2)
       } catch {
         case t: Throwable =>
           // best effort: the failed attempt leaves no tmp behind; a
           // committed file is never touched
-          if (out != null) {
-            try out.close() catch { case _: Throwable => }
-            try fs.delete(tmp, false) catch { case _: Throwable => }
+          open.values.foreach { f =>
+            try f.out.close() catch { case _: Throwable => }
+            try f.fs.delete(f.tmp, false) catch { case _: Throwable => }
           }
           throw t
       }

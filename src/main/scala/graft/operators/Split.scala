@@ -100,7 +100,7 @@ object Split {
       .sortWithinPartitions("file", "shard", "offset")
       .select(col("file"), col("shard"), concat(col("value"), lit("\n")).cast("binary"))
       .as[(String, Int, Array[Byte])]
-    val written = ShardSink.write(rows, cfg.gzipOutput)(r => (r._1, r._2))(
+    val written = ShardSink.write(rows, cfg.gzipOutput, maxOpen = 1)(r => (r._1, r._2))(
       dest = { case (file, shard) =>
         val base = new org.apache.hadoop.fs.Path(file).getName
           .stripSuffix(".gz").stripSuffix(".txt")

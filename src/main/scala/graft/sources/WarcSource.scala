@@ -1430,7 +1430,7 @@ object WarcSource {
       // ordering makes shard bytes deterministic (r18 ADVICE)
       .sortWithinPartitions(col("shard"), col("skey"), col("rec"))
       .as[(Long, Long, Array[Byte])]
-    graft.operators.ShardSink.write(sorted, gzip = false)(_._1)(
+    graft.operators.ShardSink.write(sorted, gzip = false, maxOpen = 1)(_._1)(
       dest = shard => f"$outDir/part-$shard%05d$ext",
       bytes = _._3,
       lead = (shard, _) => lead(shard))

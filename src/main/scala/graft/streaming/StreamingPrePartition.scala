@@ -77,7 +77,7 @@ object StreamingPrePartition {
     val already = fs.exists(new org.apache.hadoop.fs.Path(markerPath, "_SUCCESS"))
     if (!already) {
       PrePartition.overwrite(PrePartition.withPartitionId(batch, cfg),
-        roots.map(r => s"$r/data/batch=$batchId"), cfg, gzipOutput = false)
+        roots.map(r => s"$r/data/batch=$batchId"), gzipOutput = false)
       // commit marker AFTER the data write: replay-safe ordering
       s.range(1).select(
         lit(batchId).as("batch_id"),

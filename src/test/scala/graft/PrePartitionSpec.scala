@@ -2,10 +2,12 @@ package graft
 
 import graft.functions.HashUtil
 import graft.operators.{PartitionConfig, PrePartition}
-import graft.sources.LogDataGenerator
+import graft.sources.{LogDataGenerator, Readers}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
 
 /** End-to-end PrePartition slice (SURVEY.md §7.3 M1): generate → serialize →
   * pre-partition → validate cardinality invariants + partition correctness.
@@ -60,6 +62,63 @@ class PrePartitionSpec extends GraftSparkSpec {
     val diff = spark.read.text(landing).except(out).count() +
       out.except(spark.read.text(landing)).count()
     assert(diff == 0)
+  }
+
+  // several files, split into several scan tasks each: each task writes its
+  // own rows to one file per pid, with no exchange
+  private lazy val splitLanding = {
+    val dir = s"$tmp/split-landing"
+    LogDataGenerator.toCsvLines(LogDataGenerator.generate(spark, n, seed = 11))
+      .coalesce(3).write.mode("overwrite").text(dir)
+    s"$dir/*.txt"
+  }
+  private val splitCfg = PartitionConfig(columnIndex = 3, maxPartitionCount = 8, seed = 17)
+
+  private def withSmallSplits[A](body: => A): A = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "65536")
+    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Relative path -> bytes of every data file under `root`. */
+  private def dataFiles(root: String): Map[String, Seq[Byte]] = {
+    val base = java.nio.file.Paths.get(root)
+    Files.walk(base).iterator().asScala.filter(Files.isRegularFile(_))
+      .filterNot { p => val f = p.getFileName.toString; f.startsWith(".") || f == "_SUCCESS" }
+      .map(p => base.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+  }
+
+  test("prepartition runs exchange-free: one stage, no shuffle write") {
+    assert(splitLanding.nonEmpty) // the input is written outside the group
+    val (result, run) = inJobGroup(
+      withSmallSplits(PrePartition.run(spark, splitLanding, s"$tmp/exchange-free", splitCfg)))
+    result.get
+    assert(run.jobs == 1 && run.stages == 1, s"$run")
+    assert(run.taskEnds.filter(_.taskMetrics != null)
+      .map(_.taskMetrics.shuffleWriteMetrics.bytesWritten).sum == 0)
+  }
+
+  test("each pid file holds its scan split's lines in input order; reruns are byte-identical") {
+    val (a, b) = (s"$tmp/order-a", s"$tmp/order-b")
+    val expected = withSmallSplits {
+      PrePartition.run(spark, splitLanding, a, splitCfg)
+      PrePartition.run(spark, splitLanding, b, splitCfg)
+      // the same scan, its rows tagged with their split: the reference
+      // copies each record into its partition's buffer in stream order
+      PrePartition.withPartitionId(Readers.textLines(spark, splitLanding), splitCfg)
+        .select("pid", "value").rdd
+        .mapPartitionsWithIndex((split, it) => it.map(r => (split, r.getInt(0), r.getString(1))))
+        .collect().toSeq
+    }
+    val splits = expected.map(_._1).distinct
+    assert(splits.size > 3, s"want several splits per file, got ${splits.size}")
+    val want = expected.groupBy { case (split, pid, _) => s"pid=$pid/part-$split.txt" }
+      .map { case (f, rows) => f -> rows.map(_._3 + "\n").mkString.getBytes("UTF-8").toSeq }
+    val got = dataFiles(a)
+    assert(got.keySet == want.keySet)
+    got.foreach { case (f, bytes) => assert(bytes == want(f), s"$f differs") }
+    assert(dataFiles(b) == got)
   }
 
   test("partition samples: one witness value per pid, consistent with the hash") {

@@ -2,16 +2,14 @@ package graft
 
 import java.net.URI
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{PartitionConfig, PrePartition, Split}
+import graft.operators.{PartitionConfig, PrePartition, ShardSink, Split}
 import graft.sources.{LogDataGenerator, WarcSource}
 import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Local filesystem under the `failfs:` scheme whose `_tmp*` output
   * streams throw once they pass `FailingFs.LimitBytes`: a task that dies
@@ -46,7 +44,7 @@ class FailingFs extends RawLocalFileSystem {
 
 object FailingFs { val LimitBytes = 4096L }
 
-/** The shared exactly-once file sink seen from its three callers:
+/** The shared exactly-once file sink, directly and seen from its three callers:
   * PrePartition (through the spread writer), Split and the WET writer.
   */
 class ShardSinkSpec extends GraftSparkSpec {
@@ -82,12 +80,9 @@ class ShardSinkSpec extends GraftSparkSpec {
     else Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
       .map(_.toFile).filter(_.isFile).toSeq
 
-  private def awaitNoRunningTasks(): Unit = {
-    val tracker = spark.sparkContext.statusTracker
-    val deadline = System.currentTimeMillis() + 60000
-    while (tracker.getExecutorInfos.map(_.numRunningTasks()).sum > 0 &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-  }
+  private def causedBy(e: Throwable, message: String): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(message))
 
   sinks.foreach { case (name, write) =>
     test(s"a task that fails mid-shard leaves no tmp file: $name") {
@@ -95,12 +90,11 @@ class ShardSinkSpec extends GraftSparkSpec {
       hconf.set("fs.failfs.impl", classOf[FailingFs].getName)
       hconf.setBoolean("fs.failfs.impl.disable.cache", true)
       val root = s"$tmp/fail-$name"
-      val e = intercept[Exception](write(s"failfs://$root"))
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => String.valueOf(t.getMessage).contains("injected write failure")))
-      // the job fails at the first task failure; the rest are killed
-      // and clean up as they stop
-      awaitNoRunningTasks()
+      assert(landing.nonEmpty) // the input is written outside the failing group
+      // the job fails at the first task failure; the rest are killed and
+      // clean up as they stop, before inJobGroup returns
+      val (result, _) = inJobGroup(write(s"failfs://$root"))
+      assert(result.failed.toOption.exists(causedBy(_, "injected write failure")))
       val leftover = filesUnder(root).map(_.getName).filter(_.startsWith("_tmp"))
       assert(leftover.isEmpty, s"orphan tmp files: ${leftover.mkString(", ")}")
     }
@@ -108,40 +102,44 @@ class ShardSinkSpec extends GraftSparkSpec {
 
   sinks.foreach { case (name, write) =>
     test(s"the sink's file bytes reach Spark's output metrics: $name") {
-      val sc = spark.sparkContext
-      val group = s"shardsink-metrics-$name"
-      val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      val (ended, bytes) = (new AtomicLong, new AtomicLong)
-      val listener = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-            j.stageIds.foreach(stages.add)
-            jobs.add(j.jobId)
-          }
-        override def onJobEnd(j: SparkListenerJobEnd): Unit =
-          if (jobs.contains(j.jobId)) ended.incrementAndGet()
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (stages.contains(t.stageId) && t.taskMetrics != null)
-            bytes.addAndGet(t.taskMetrics.outputMetrics.bytesWritten)
-      }
       val root = s"$tmp/metrics-$name"
       assert(landing.nonEmpty) // the input is written outside the group
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, name)
-        try write(root) finally sc.clearJobGroup()
-        // task ends precede their job's end on the listener bus
-        val deadline = System.currentTimeMillis() + 30000
-        while (ended.get < jobs.size && System.currentTimeMillis() < deadline)
-          Thread.sleep(20)
-      } finally sc.removeSparkListener(listener)
+      val (result, run) = inJobGroup(write(root))
+      result.get
+      val bytes = run.taskEnds.filter(_.taskMetrics != null)
+        .map(_.taskMetrics.outputMetrics.bytesWritten).sum
       // every file written, the Split manifest's parquet segments included;
       // not the local file system's .crc sidecars or the _SUCCESS markers
       val onDisk = filesUnder(root)
         .filterNot(f => f.getName.startsWith(".") || f.getName == "_SUCCESS")
       assert(onDisk.nonEmpty)
-      assert(bytes.get == onDisk.map(_.length).sum)
+      assert(bytes == onDisk.map(_.length).sum)
     }
+  }
+
+  test("a key that comes back after its file was committed fails the task") {
+    import spark.implicits._
+    // one task; each key's file is committed when it is the oldest open
+    // file and a new key arrives
+    def rootOf(keys: Seq[Int], maxOpen: Int) = s"$tmp/reappear-${keys.mkString}-$maxOpen"
+    def write(keys: Seq[Int], maxOpen: Int): String = {
+      val root = rootOf(keys, maxOpen)
+      ShardSink.write(keys.zipWithIndex.toDS().coalesce(1), gzip = false, maxOpen)(_._1)(
+        dest = k => s"$root/k$k.txt", bytes = r => s"${r._2}\n".getBytes("UTF-8"))
+        .collect()
+      root
+    }
+    def contents(root: String): Map[String, String] =
+      filesUnder(root).filterNot(_.getName.startsWith("."))
+        .map(f => f.getName -> new String(Files.readAllBytes(f.toPath), "UTF-8")).toMap
+    Seq((Seq(0, 1, 0), 1), (Seq(0, 1, 2, 0), 2)).foreach { case (keys, maxOpen) =>
+      val (result, _) = inJobGroup(write(keys, maxOpen))
+      assert(result.failed.toOption.exists(causedBy(_, "came back after its file was committed")),
+        s"keys $keys maxOpen $maxOpen")
+      assert(!contents(rootOf(keys, maxOpen)).keys.exists(_.startsWith("_tmp")))
+    }
+    // with room for every key, rows keep their order within each file
+    assert(contents(write(Seq(0, 1, 2, 0), 3)) ==
+      Map("k0.txt" -> "0\n3\n", "k1.txt" -> "1\n", "k2.txt" -> "2\n"))
   }
 }
