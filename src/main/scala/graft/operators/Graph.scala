@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph scoring over an edge list — the link-analysis family
@@ -24,34 +24,132 @@ import org.apache.spark.sql.functions._
   * the per-round cost is two exchanges over rank-sized rows, never a
   * rebuild of the graph. Degrees and node ids stay distributed; the only
   * driver-side scalar is the node COUNT (the teleport constant).
+  *
+  * One superstep mechanism serves every operator: `cached` owns the
+  * persist/unpersist lifecycle (released in a `finally`, error paths
+  * included), `edgeList` and `withNodes` are the shared prologue (the
+  * distinct long edge list; the sized, cached node set), `fixedRounds`
+  * runs a fixed round count and `untilFixpoint` runs rounds until a
+  * fixpoint or a cap. The operators keep only their round bodies, so
+  * where each round exchanges is decided in one place per operator.
+  *
+  * Sized cached layouts (`Layout.sizedParts`, r21, guide §2.2 "fewer,
+  * larger partitions" made operator-local): a frame an iterative operator
+  * caches is rescanned every round, and at small scale the per-round cost
+  * is dominated by per-task fixed overhead — every cached-frame scan and
+  * every localCheckpoint stage ran `spark.sql.shuffle.partitions` tasks
+  * regardless of size (a 20 k-row edge cache in 32 partitions of ~600
+  * rows — measured x58_hits: 608 tasks / 51 s of task-binary
+  * deserialization for ~1 s of work; a paired same-JVM A/B with 8 shuffle
+  * partitions ran the family at 0.57×). Deriving the count from the
+  * optimizer's size estimate, n = clamp(ceil(sizeInBytes / 4 MB), 1,
+  * shuffle.partitions), is the scale-safe form of that observation: at
+  * cluster scale the estimate exceeds the cap and n is the session's
+  * shuffle parallelism, with no added exchange anywhere (call sites give
+  * an existing repartition an explicit count or `coalesce`). 4 MB is far
+  * below the 128 MB scan heuristic because these frames are rescanned
+  * every round; production values belong in the session's
+  * shuffle.partitions, which the count NEVER exceeds.
   */
 object Graph {
 
-  /** Size-derived partition count for a frame an iterative operator is
-    * about to CACHE and rescan every round (r21, guide §2.2 "fewer,
-    * larger partitions" made operator-local). The per-round cost of the
-    * iterative family is dominated at small scale by per-task fixed
-    * overhead: every cached-frame scan and every localCheckpoint stage
-    * ran `spark.sql.shuffle.partitions` tasks regardless of size (a
-    * 20 k-row edge cache in 32 partitions of ~600 rows — measured
-    * x58_hits: 608 tasks / 51 s of task-binary deserialization for
-    * ~1 s of work; a paired same-JVM A/B with 8 shuffle partitions ran
-    * the family at 0.57×). Deriving the count from the optimizer's
-    * size estimate is the scale-safe form of that observation:
-    *
-    *   n = clamp(ceil(sizeInBytes / bytesPerTask), 1, shuffle.partitions)
-    *
-    * — at cluster scale the estimate exceeds the cap and n equals the
-    * session's configured shuffle parallelism, i.e. exactly today's
-    * layout, with no added exchange anywhere (call sites either give an
-    * existing repartition an explicit count or `coalesce`, never a new
-    * shuffle). `bytesPerTask` is deliberately small (4 MB default,
-    * SPARK_GRAFT_ROUND_BYTES_PER_TASK to override): these frames are
-    * rescanned every round, so the break-even task size is far below
-    * the 128 MB scan heuristic; production values belong in the
-    * session's shuffle.partitions, which this NEVER exceeds.
+  /** Persists `frame`, runs `body`, and unpersists it in a `finally`.
+    * CacheManager holds persisted frames until an explicit unpersist (GC
+    * never reclaims them), so an operator that returned — or threw —
+    * with a frame still cached would leak it into a long-lived session;
+    * bodies therefore return materialized frames, never a plan that
+    * still reads a released cache. A frame derived from a cached one is
+    * cached in a nested call, so its cache is built over its source's.
     */
-  private def sizedParts(df: DataFrame): Int = Layout.sizedParts(df)
+  private def cached[A](frame: DataFrame)(body: => A): A = {
+    frame.persist()
+    try body finally frame.unpersist()
+  }
+
+  /** The distinct `(src: long, dst: long)` edge list. */
+  private def edgeList(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst")).distinct()
+
+  /** The rank prologue's node set: the sized, cached set of the
+    * endpoints of the (already cached) edge frame `g`, passed to `body`.
+    * Every iteration rescans it, so its partition count IS the per-round
+    * task count.
+    */
+  private def withNodes[A](g: DataFrame)(body: DataFrame => A): A = {
+    val nodes = Layout.sizedCoalesce(g.select(col("src").as("node"))
+      .union(g.select(col("dst").as("node"))).distinct())
+    cached(nodes)(body(nodes))
+  }
+
+  /** `rounds` applications of `step` to `init`. The state materializes
+    * (localCheckpoint) after every `every`-th round but the last, and
+    * once at the end, so the caller may release its caches on return.
+    */
+  private def fixedRounds(init: DataFrame, rounds: Int, every: Int = 1)(
+      step: DataFrame => DataFrame): DataFrame = {
+    var s = init
+    for (i <- 1 to rounds) {
+      s = step(s)
+      if (i % every == 0 && i < rounds) s = s.localCheckpoint()
+    }
+    s.localCheckpoint()
+  }
+
+  /** Rounds 1, 2, … of `step` until one reports a fixpoint (its second
+    * result is false) or `cap` rounds ran. The state keeps whatever the
+    * stopping round returned.
+    */
+  private def untilFixpoint[S](init: S, cap: Int)(
+      step: (S, Int) => (S, Boolean)): S = {
+    var s = init
+    var r = 0
+    var more = true
+    while (more && r < cap) {
+      r += 1
+      val (next, go) = step(s, r)
+      s = next
+      more = go
+    }
+    s
+  }
+
+  /** Delta min-propagation over `(node, v)`: each round `improve` derives,
+    * from the last round's improvements (the frontier) and the standing
+    * best values, the rows that beat their standing value; they are
+    * min-merged into the standing frame, and an empty improvement is the
+    * fixpoint. Only the frontier joins the edges, so a round costs
+    * O(frontier out-edges), not O(E); both frames materialize per round
+    * (the early-exit count reads a materialized frame).
+    */
+  private def minFixpoint(start: DataFrame, v: String, cap: Int)(
+      improve: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    untilFixpoint((start, start), cap) { case ((best, frontier), _) =>
+      val better = improve(frontier, best).localCheckpoint()
+      if (better.isEmpty) ((best, frontier), false)
+      else ((best.unionAll(better).groupBy("node").agg(min(col(v)).as(v))
+        .localCheckpoint(), better), true)
+    }._1
+
+  /** Edges with their src's out-degree `d`, in the sized cached layout. */
+  private def degreeGraph(edges: DataFrame): DataFrame = {
+    val e = edgeList(edges)
+    Layout.sizedCoalesce(e.join(e.groupBy("src").agg(count(lit(1)).as("d")),
+      "src"))
+  }
+
+  /** Rank mass into each dst: `s = Σ contrib` over its in-edges, where
+    * `contrib` reads the edge row and its src's rank `r`.
+    */
+  private def inflow(g: DataFrame, rank: DataFrame,
+                     contrib: String): DataFrame =
+    g.join(rank, g("src") === rank("node"))
+      .select(col("dst"), expr(contrib).as("c"))
+      .groupBy("dst").agg(sum(col("c")).as("s"))
+
+  /** The damped share of the inflow `s`: `(pct · s) div 100`. */
+  private def damped(dampingPct: Int): Column =
+    expr(s"($dampingPct * coalesce(s, 0L)) div 100")
 
   /** Damped PageRank over a directed edge list `(src: long, dst: long)`.
     * Nodes with no out-edges contribute no mass (the standard
@@ -77,77 +175,51 @@ object Graph {
       checkpointInterval: Int = 1,
       tolUnits: Long = 0L,
       redistributeDangling: Boolean = false): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
     // graph-with-degrees cached ONCE (persist, not eager checkpoint:
     // the InMemoryRelation advertises accurate stats, so AQE broadcasts
     // the node-sized rank frame into every iteration's edge join)
-    // sized cached layout (sizedParts): every iteration rescans this
-    // frame, so its partition count IS the per-round task count;
-    // coalesce adds no exchange at any scale
-    val gPlan = e.join(deg, "src")
-    val g = gPlan.coalesce(sizedParts(gPlan)).persist()
-    val nodesPlan = g.select(col("src").as("node"))
-      .union(g.select(col("dst").as("node")))
-      .distinct()
-    val nodes = nodesPlan.coalesce(sizedParts(nodesPlan)).persist()
-    val n = nodes.count() // bounded driver scalar; materializes both caches
-    require(n > 0, "pagerank: empty graph")
-    val unit = scale / n
-    val teleport = ((100L - dampingPct) * unit) / 100L
-    // convergence / dangling options (both OFF by default — the gate
-    // query's bit-exact unrolled-oracle path is the default path):
-    //  - tolUnits > 0: stop once the L1 rank delta (in units) falls to or
-    //    below tolUnits — what a real web-graph ranking run wants instead
-    //    of guessing an iteration count. Costs one node-sized join + agg
-    //    (a driver scalar) per iteration, so it forces per-round
-    //    materialization.
-    //  - redistributeDangling: spread dangling-node mass (nodes with no
-    //    out-edges) uniformly each round, restoring mass conservation
-    //    without the bidirect-your-edges workaround. One anti-join agg
-    //    (driver scalar) per iteration.
-    var rank = nodes.withColumn("r", lit(unit))
-    var converged = false
-    for (i <- 1 to iters if !converged) {
-      val danglingAdd: Long =
-        if (!redistributeDangling) 0L
-        else {
-          val dm = rank.join(g.select(col("src")).distinct(),
-              rank("node") === col("src"), "left_anti")
-            .agg(coalesce(sum(col("r")), lit(0L))).head.getLong(0)
-          (dampingPct.toLong * dm) / (100L * n)
-        }
-      val in = g.join(rank, g("src") === rank("node"))
-        .select(col("dst"), expr("r div d").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("s"))
-      val next = nodes.join(in, nodes("node") === in("dst"), "left")
-        .select(col("node"),
-          (lit(teleport + danglingAdd) +
-            expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("r"))
-      if (tolUnits > 0L) {
-        val nextM = next.localCheckpoint()
-        val delta = nextM
+    val g = degreeGraph(edges)
+    cached(g)(withNodes(g) { nodes =>
+      val n = nodes.count() // bounded driver scalar; materializes both caches
+      require(n > 0, "pagerank: empty graph")
+      val unit = scale / n
+      val teleport = ((100L - dampingPct) * unit) / 100L
+      // convergence / dangling options (both OFF by default — the gate
+      // query's bit-exact unrolled-oracle path is the default path):
+      //  - tolUnits > 0: stop once the L1 rank delta (in units) falls to or
+      //    below tolUnits — what a real web-graph ranking run wants instead
+      //    of guessing an iteration count. Costs one node-sized join + agg
+      //    (a driver scalar) per iteration, so it forces per-round
+      //    materialization.
+      //  - redistributeDangling: spread dangling-node mass (nodes with no
+      //    out-edges) uniformly each round, restoring mass conservation
+      //    without the bidirect-your-edges workaround. One anti-join agg
+      //    (driver scalar) per iteration.
+      def round(rank: DataFrame): DataFrame = {
+        val danglingAdd: Long =
+          if (!redistributeDangling) 0L
+          else {
+            val dm = rank.join(g.select(col("src")).distinct(),
+                rank("node") === col("src"), "left_anti")
+              .agg(coalesce(sum(col("r")), lit(0L))).head.getLong(0)
+            (dampingPct.toLong * dm) / (100L * n)
+          }
+        val in = inflow(g, rank, "r div d")
+        nodes.join(in, nodes("node") === in("dst"), "left")
+          .select(col("node"),
+            (lit(teleport + danglingAdd) + damped(dampingPct)).as("r"))
+      }
+      val init = nodes.withColumn("r", lit(unit))
+      if (tolUnits <= 0L) fixedRounds(init, iters, checkpointInterval)(round)
+      else untilFixpoint(init, iters) { (rank, _) =>
+        val next = round(rank).localCheckpoint()
+        val delta = next
           .join(rank.select(col("node"), col("r").as("r0")), "node")
           .agg(coalesce(sum(abs(col("r") - col("r0"))), lit(0L)))
           .head.getLong(0)
-        rank = nextM
-        if (delta <= tolUnits) converged = true
-      } else {
-        rank = next
-        if (i % checkpointInterval == 0 && i < iters)
-          rank = rank.localCheckpoint()
-      }
-    }
-    // eager-materialize the node-sized result, then RELEASE the helper
-    // caches: CacheManager holds persisted frames until an explicit
-    // unpersist (GC never reclaims them), so returning a plan that
-    // references them would leak two cached frames per call into any
-    // long-lived session
-    val out = rank.localCheckpoint()
-    g.unpersist()
-    nodes.unpersist()
-    out
+        (next, delta > tolUnits)
+      }.localCheckpoint()
+    })
   }
 
   /** WEIGHTED damped PageRank over `(src, dst, w)` — the host-graph form
@@ -182,33 +254,19 @@ object Graph {
         when(col("w0") > 0, col("w0")).otherwise(raise_error(
           lit("pagerankWeighted: non-positive edge weight"))).as("w"))
     val wsum = e.groupBy("src").agg(sum(col("w")).as("sw"))
-    val gPlan = e.join(wsum, "src")
-    val g = gPlan.coalesce(sizedParts(gPlan)).persist()
-    val nodesPlan = g.select(col("src").as("node"))
-      .union(g.select(col("dst").as("node")))
-      .distinct()
-    val nodes = nodesPlan.coalesce(sizedParts(nodesPlan)).persist()
-    val n = nodes.count() // bounded driver scalar; materializes both caches
-    require(n > 0, "pagerankWeighted: empty graph")
-    val unit = scale / n
-    val teleport = ((100L - dampingPct) * unit) / 100L
-    var rank = nodes.withColumn("r", lit(unit))
-    for (i <- 1 to iters) {
-      val in = g.join(rank, g("src") === rank("node"))
-        .select(col("dst"),
-          expr("(r div sw) * w + ((r % sw) * w) div sw").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("s"))
-      rank = nodes.join(in, nodes("node") === in("dst"), "left")
-        .select(col("node"),
-          (lit(teleport) +
-            expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("r"))
-      if (i % checkpointInterval == 0 && i < iters)
-        rank = rank.localCheckpoint()
-    }
-    val out = rank.localCheckpoint()
-    g.unpersist()
-    nodes.unpersist()
-    out
+    val g = Layout.sizedCoalesce(e.join(wsum, "src"))
+    cached(g)(withNodes(g) { nodes =>
+      val n = nodes.count() // bounded driver scalar; materializes both caches
+      require(n > 0, "pagerankWeighted: empty graph")
+      val unit = scale / n
+      val teleport = ((100L - dampingPct) * unit) / 100L
+      fixedRounds(nodes.withColumn("r", lit(unit)), iters,
+          checkpointInterval) { rank =>
+        val in = inflow(g, rank, "(r div sw) * w + ((r % sw) * w) div sw")
+        nodes.join(in, nodes("node") === in("dst"), "left")
+          .select(col("node"), (lit(teleport) + damped(dampingPct)).as("r"))
+      }
+    })
   }
 
   /** Personalized (seeded) PageRank: identical integer-unit iteration to
@@ -227,46 +285,30 @@ object Graph {
       scale: Long = 1000000000000L,
       dampingPct: Int = 85,
       checkpointInterval: Int = 1): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
-    // sized cached layout (sizedParts): every iteration rescans this
-    // frame, so its partition count IS the per-round task count;
-    // coalesce adds no exchange at any scale
-    val gPlan = e.join(deg, "src")
-    val g = gPlan.coalesce(sizedParts(gPlan)).persist()
-    val nodesPlan = g.select(col("src").as("node"))
-      .union(g.select(col("dst").as("node")))
-      .distinct()
-    val nodes = nodesPlan.coalesce(sizedParts(nodesPlan)).persist()
-    val sd = seeds.select(col("seed").cast("long").as("node")).distinct()
-      .join(nodes, Seq("node"), "left_semi")
-      .withColumn("is_seed", lit(1))
-      .persist()
-    val nSeeds = sd.count() // bounded driver scalar; materializes the cache
-    require(nSeeds > 0, "personalizedPagerank: no seed is present in the graph")
-    val unit = scale / nSeeds
-    val teleport = ((100L - dampingPct) * unit) / 100L
-    var rank = nodes.join(sd, Seq("node"), "left")
-      .select(col("node"),
-        when(col("is_seed") === 1, lit(unit)).otherwise(lit(0L)).as("r"))
-    for (i <- 1 to iters) {
-      val in = g.join(rank, g("src") === rank("node"))
-        .select(col("dst"), expr("r div d").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("s"))
-      rank = nodes.join(sd, Seq("node"), "left")
-        .join(in, col("node") === in("dst"), "left")
-        .select(col("node"),
-          (when(col("is_seed") === 1, lit(teleport)).otherwise(lit(0L)) +
-            expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("r"))
-      if (i % checkpointInterval == 0 && i < iters)
-        rank = rank.localCheckpoint()
-    }
-    val out = rank.localCheckpoint()
-    g.unpersist()
-    nodes.unpersist()
-    sd.unpersist()
-    out
+    val g = degreeGraph(edges)
+    cached(g)(withNodes(g) { nodes =>
+      val sd = seeds.select(col("seed").cast("long").as("node")).distinct()
+        .join(nodes, Seq("node"), "left_semi")
+        .withColumn("is_seed", lit(1))
+      cached(sd) {
+        val nSeeds = sd.count() // bounded driver scalar; materializes the cache
+        require(nSeeds > 0,
+          "personalizedPagerank: no seed is present in the graph")
+        val unit = scale / nSeeds
+        val teleport = ((100L - dampingPct) * unit) / 100L
+        val init = nodes.join(sd, Seq("node"), "left")
+          .select(col("node"),
+            when(col("is_seed") === 1, lit(unit)).otherwise(lit(0L)).as("r"))
+        fixedRounds(init, iters, checkpointInterval) { rank =>
+          val in = inflow(g, rank, "r div d")
+          nodes.join(sd, Seq("node"), "left")
+            .join(in, col("node") === in("dst"), "left")
+            .select(col("node"),
+              (when(col("is_seed") === 1, lit(teleport)).otherwise(lit(0L)) +
+                damped(dampingPct)).as("r"))
+        }
+      }
+    })
   }
 
   /** Synchronous label propagation (community/label spreading) over a
@@ -296,67 +338,37 @@ object Graph {
     // cache the edge list PRE-PARTITIONED on the per-round join key:
     // distinct() leaves it hash-partitioned on (src,dst), which every
     // round's dst-key join would re-exchange — 100 M rows per iteration.
-    // One upfront dst exchange makes the cached layout reusable, so per
-    // round only the node-sized label frame shuffles (the
-    // connectedComponents discipline).
-    val ePlan = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    // sized dst-hash layout (sizedParts): the SAME single upfront
-    // exchange as before, now with an explicit size-derived count —
-    // per-round joins still reuse the cached partitioning
-    val e = ePlan.repartition(sizedParts(ePlan), col("dst")).persist()
-    val nodesPlan = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-    val nodes = nodesPlan.coalesce(sizedParts(nodesPlan)).persist()
-    var labels = nodes.join(
-      seeds.select(col("node").cast("long").as("sn"),
-        col("label").cast("string").as("label")),
-      nodes("node") === col("sn"), "left")
-      .select(col("node"), col("label"))
-    // A/B toggle (r22 measurement; default = shared-exchange round):
-    // spark.graft.lpaSharedExchange=false restores the r21 three-exchange
-    // round so the two shapes can be paired in one JVM (tools/AbProf)
-    val shared = edges.sparkSession.conf
-      .get("spark.graft.lpaSharedExchange", "true").toBoolean
-    val ckInterval = edges.sparkSession.conf
-      .get("spark.graft.lpaCheckpointInterval", checkpointInterval.toString)
-      .toInt
-    for (i <- 1 to iters) {
-      // ONE exchange per round (r22, guide §2.4 share-the-exchange): the
-      // neighbor-label rows hash-partition on the node key n BEFORE the
-      // (n, label) count — HashPartitioning(n) satisfies the agg's
-      // (n, label) clustering (subset rule), the majority argmax reuses
-      // the same n layout, and the label merge join consumes maj already
-      // partitioned on the join key. The previous shape exchanged three
-      // times per round: once for the (n, label) count, once for the
-      // per-n argmax, once more into the merge join.
-      val cand =
-        if (shared)
-          e.join(labels, e("dst") === labels("node"))
-            .filter(col("label").isNotNull)
-            .select(e("src").as("n"), col("label"))
-            .repartition(col("n"))
-            .groupBy(col("n"), col("label"))
-            .agg(count(lit(1)).as("c"))
-        else
-          e.join(labels, e("dst") === labels("node"))
-            .filter(col("label").isNotNull)
-            .groupBy(e("src").as("n"), col("label"))
-            .agg(count(lit(1)).as("c"))
-      val maj = cand.groupBy(col("n"))
-        .agg(min_by(col("label"),
-          struct((-col("c")).as("negc"), col("label"))).as("mlabel"))
-      labels = labels.join(maj, labels("node") === maj("n"), "left")
-        .select(col("node"), coalesce(col("mlabel"), col("label")).as("label"))
-      if (i % ckInterval == 0 && i < iters)
-        labels = labels.localCheckpoint()
-    }
-    // same cache-release discipline as pagerank
-    val out = labels.localCheckpoint()
-    e.unpersist()
-    nodes.unpersist()
-    out
+    // One upfront dst exchange (with a sized count) makes the cached
+    // layout reusable, so per round only the node-sized label frame
+    // shuffles (the connectedComponents discipline).
+    val ePlan = edgeList(edges)
+    val e = ePlan.repartition(Layout.sizedParts(ePlan), col("dst"))
+    cached(e)(withNodes(e) { nodes =>
+      val init = nodes.join(
+        seeds.select(col("node").cast("long").as("sn"),
+          col("label").cast("string").as("label")),
+        nodes("node") === col("sn"), "left")
+        .select(col("node"), col("label"))
+      fixedRounds(init, iters, checkpointInterval) { labels =>
+        // ONE exchange per round (r22, guide §2.4 share-the-exchange): the
+        // neighbor-label rows hash-partition on the node key n BEFORE the
+        // (n, label) count — HashPartitioning(n) satisfies the agg's
+        // (n, label) clustering (subset rule), the majority argmax reuses
+        // the same n layout, and the label merge join consumes maj already
+        // partitioned on the join key.
+        val maj = e.join(labels, e("dst") === labels("node"))
+          .filter(col("label").isNotNull)
+          .select(e("src").as("n"), col("label"))
+          .repartition(col("n"))
+          .groupBy(col("n"), col("label"))
+          .agg(count(lit(1)).as("c"))
+          .groupBy(col("n"))
+          .agg(min_by(col("label"),
+            struct((-col("c")).as("negc"), col("label"))).as("mlabel"))
+        labels.join(maj, labels("node") === maj("n"), "left")
+          .select(col("node"), coalesce(col("mlabel"), col("label")).as("label"))
+      }
+    })
   }
 
   /** Synchronous Louvain phase-1: community-move rounds over an
@@ -394,10 +406,6 @@ object Graph {
         least(col("src"), col("dst")).cast("long").as("a"),
         greatest(col("src"), col("dst")).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    val ePlan = und.select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst")),
-        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
     // dst-hash layout at SESSION parallelism — deliberately NOT
     // sizedParts (r22, verdict item 1): louvain's per-round work (the
     // e⋈comm join, the (i,c) aggregation, the 4-way scoring join) is
@@ -407,31 +415,28 @@ object Graph {
     // (bench_r21_mid 9.87 s), 8-core ratio 0.20. The frames that DO keep
     // sized layouts (pagerank/hits/walks/mis/…) are rescan-cheap: their
     // per-round compute rides the node-sized shuffles, not this cache.
-    val e = ePlan.repartition(col("dst")).persist()
-    val deg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("k")).persist()  // node-sized
-    val m2 = deg.agg(sum("k")).head().getLong(0) // = 2m
-    // A/B toggle (r22): =false restores the r21 count+union+max round
-    val shared = edges.sparkSession.conf
-      .get("spark.graft.louvainSharedExchange", "true").toBoolean
-    var comm = deg.select(col("node"), col("node").as("community"))
-    for (r <- 1 to rounds) {
-      val commDeg = comm.join(deg, "node")
-        .groupBy(col("community").as("c")).agg(sum("k").as("ctot"))
-      // k(i,c): i's edge weight into each neighbor community, plus a
-      // zero-WEIGHT row for i's CURRENT community so "stay" is always a
-      // candidate — sum(w0) over {1-weighted neighbor rows, 0-weighted
-      // stay row} equals the old max(count, 0) merge exactly.
-      // ONE sized exchange builds the candidate frame (r22, guide §2.4):
-      // raw rows hash-partition on the community key c before the agg —
-      // HashPartitioning(c) satisfies the (i, c) clustering (subset
-      // rule), and the commDeg attach joins on c in the SAME layout.
-      // The previous shape exchanged the counted frame on (i, c), the
-      // unioned frame on (i, c) again, and cand a third time into the
-      // c-keyed join.
-      val cand =
-        if (shared)
-          e.join(comm.select(col("node").as("dn"),
+    val e = und.select(explode(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .repartition(col("dst"))
+    cached(e) {
+      val deg = e.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("k"))  // node-sized
+      cached(deg) {
+        val m2 = deg.agg(sum("k")).head().getLong(0) // = 2m
+        fixedRounds(deg.select(col("node"), col("node").as("community")),
+            rounds) { comm =>
+          val commDeg = comm.join(deg, "node")
+            .groupBy(col("community").as("c")).agg(sum("k").as("ctot"))
+          // k(i,c): i's edge weight into each neighbor community, plus a
+          // zero-WEIGHT row for i's CURRENT community so "stay" is always
+          // a candidate. ONE exchange builds the candidate frame (r22,
+          // guide §2.4): raw rows hash-partition on the community key c
+          // before the agg — HashPartitioning(c) satisfies the (i, c)
+          // clustering (subset rule), and the commDeg attach joins on c
+          // in the SAME layout.
+          val cand = e.join(comm.select(col("node").as("dn"),
               col("community").as("c")), e("dst") === col("dn"))
             .select(e("src").as("i"), col("c"), lit(1L).as("w0"))
             .unionByName(
@@ -439,33 +444,21 @@ object Graph {
                 lit(0L).as("w0")))
             .repartition(col("c"))
             .groupBy("i", "c").agg(sum("w0").as("w"))
-        else {
-          val nbrW = e.join(comm.select(col("node").as("dn"),
-              col("community").as("c")), e("dst") === col("dn"))
-            .groupBy(e("src").as("i"), col("c"))
-            .agg(count(lit(1)).as("w"))
-          nbrW.unionByName(
-              comm.select(col("node").as("i"), col("community").as("c"),
-                lit(0L).as("w")))
-            .groupBy("i", "c").agg(max("w").as("w"))
+          val scored = cand
+            .join(commDeg, "c")
+            .join(deg.select(col("node").as("i"), col("k")), "i")
+            .join(comm.select(col("node").as("i"),
+              col("community").as("curr")), "i")
+            .withColumn("score",
+              lit(m2) * col("w") - col("k") *
+                (col("ctot") - when(col("c") === col("curr"), col("k"))
+                  .otherwise(lit(0L))))
+          scored.groupBy(col("i").as("node"))
+            .agg(min_by(col("c"), struct((-col("score")).as("neg"), col("c")))
+              .as("community"))
         }
-      val scored = cand
-        .join(commDeg, "c")
-        .join(deg.select(col("node").as("i"), col("k")), "i")
-        .join(comm.select(col("node").as("i"),
-          col("community").as("curr")), "i")
-        .withColumn("score",
-          lit(m2) * col("w") - col("k") *
-            (col("ctot") - when(col("c") === col("curr"), col("k"))
-              .otherwise(lit(0L))))
-      comm = scored.groupBy(col("i").as("node"))
-        .agg(min_by(col("c"), struct((-col("score")).as("neg"), col("c")))
-          .as("community"))
-      if (r < rounds) comm = comm.localCheckpoint()
+      }
     }
-    val out = comm.localCheckpoint()
-    e.unpersist(); deg.unpersist()
-    out
   }
 
   /** Exact per-node triangle counts over an undirected edge list
@@ -502,27 +495,26 @@ object Graph {
     // so the wedge stage can order tips by the SAME total order
     val lowFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oPlan = und
+    val o = Layout.sizedCoalesce(und
       .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
       .select(
         when(lowFirst, col("a")).otherwise(col("b")).as("u"),
         when(lowFirst, col("b")).otherwise(col("a")).as("v"),
-        when(lowFirst, col("db")).otherwise(col("da")).as("dv"))
-    val o = oPlan.coalesce(sizedParts(oPlan)).persist()
-    // one canonical wedge per triangle: tips ordered by (deg, id)
-    val w = o.as("e1").join(o.as("e2"), col("e1.u") === col("e2.u"))
-      .filter(col("e1.dv") < col("e2.dv") ||
-        (col("e1.dv") === col("e2.dv") && col("e1.v") < col("e2.v")))
-      .select(col("e1.u").as("c0"), col("e1.v").as("c1"), col("e2.v").as("c2"))
-    val tri = w.join(o.select(col("u").as("c1"), col("v").as("c2")),
-      Seq("c1", "c2"), "left_semi")
-    val counts = tri
-      .select(explode(array(col("c0"), col("c1"), col("c2"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_tri"))
-      .localCheckpoint() // materialize, then release the oriented cache
-    o.unpersist()
-    counts
+        when(lowFirst, col("db")).otherwise(col("da")).as("dv")))
+    cached(o) {
+      // one canonical wedge per triangle: tips ordered by (deg, id)
+      val w = o.as("e1").join(o.as("e2"), col("e1.u") === col("e2.u"))
+        .filter(col("e1.dv") < col("e2.dv") ||
+          (col("e1.dv") === col("e2.dv") && col("e1.v") < col("e2.v")))
+        .select(col("e1.u").as("c0"), col("e1.v").as("c1"),
+          col("e2.v").as("c2"))
+      val tri = w.join(o.select(col("u").as("c1"), col("v").as("c2")),
+        Seq("c1", "c2"), "left_semi")
+      tri.select(explode(array(col("c0"), col("c1"), col("c2"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("n_tri"))
+        .localCheckpoint()
+    }
   }
 
   /** Deterministic `steps`-step walks from `seeds` over a directed edge
@@ -548,30 +540,29 @@ object Graph {
   def deterministicWalks(edges: DataFrame, seeds: DataFrame,
                          steps: Int): DataFrame = {
     // cached across the step loop (each step's eager checkpoint would
-    // otherwise rebuild the distinct edge list); released before return
-    // — every acc arm is checkpointed, so nothing references it after
-    val ePlan = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    val e = ePlan.coalesce(sizedParts(ePlan)).persist()
-    var walk = seeds.select(col("seed").cast("long").as("seed"))
-      .distinct().withColumn("cur", col("seed"))
-      .localCheckpoint()
-    var acc = walk.select(col("seed"), lit(0).as("step"),
-      col("cur").as("node"))
-    for (k <- 1 to steps) {
-      val pick = walk.join(e, walk("cur") === e("src"), "left")
-        .withColumn("hk",
-          md5(concat_ws(">", col("seed"), lit(k), col("dst"))))
-        .groupBy(col("seed"))
-        .agg(min_by(col("dst"), struct(col("hk"), col("dst"))).as("nxt"),
-          min(col("cur")).as("cur0")) // cur is constant per seed
-        .select(col("seed"), coalesce(col("nxt"), col("cur0")).as("cur"))
-      walk = pick.localCheckpoint()
-      acc = acc.unionAll(walk.select(col("seed"), lit(k).as("step"),
-        col("cur").as("node")))
+    // otherwise rebuild the distinct edge list); every acc arm is
+    // checkpointed, so nothing references it after release
+    val e = Layout.sizedCoalesce(edgeList(edges))
+    cached(e) {
+      var walk = seeds.select(col("seed").cast("long").as("seed"))
+        .distinct().withColumn("cur", col("seed"))
+        .localCheckpoint()
+      var acc = walk.select(col("seed"), lit(0).as("step"),
+        col("cur").as("node"))
+      for (k <- 1 to steps) {
+        walk = walk.join(e, walk("cur") === e("src"), "left")
+          .withColumn("hk",
+            md5(concat_ws(">", col("seed"), lit(k), col("dst"))))
+          .groupBy(col("seed"))
+          .agg(min_by(col("dst"), struct(col("hk"), col("dst"))).as("nxt"),
+            min(col("cur")).as("cur0")) // cur is constant per seed
+          .select(col("seed"), coalesce(col("nxt"), col("cur0")).as("cur"))
+          .localCheckpoint()
+        acc = acc.unionAll(walk.select(col("seed"), lit(k).as("step"),
+          col("cur").as("node")))
+      }
+      acc
     }
-    e.unpersist()
-    acc
   }
 
   /** k-core decomposition: iteratively peel nodes of degree < k from a
@@ -592,30 +583,22 @@ object Graph {
     * handful of rounds, `maxRounds` is a runaway guard.
     */
   def kcore(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
-    var e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct().localCheckpoint()
-    var prevKept = -1L
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
+    val (core, _) = untilFixpoint((edgeList(edges).localCheckpoint(), -1L),
+        maxRounds) { case ((e, prevKept), _) =>
       val keep = e.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("src").as("n"))
         .localCheckpoint()
       val kept = keep.count()
-      if (kept == prevKept) done = true
-      else {
-        prevKept = kept
-        // dst semi first, src semi LAST: the surviving edge frame
-        // checkpoints partitioned on src, so the next round's degree agg
-        // (groupBy src) reuses the layout instead of re-exchanging the
-        // edge-sized frame — one fewer big exchange per peeling round
-        e = e.join(keep.select(col("n").as("dst")), Seq("dst"), "left_semi")
-          .join(keep.select(col("n").as("src")), Seq("src"), "left_semi")
-          .localCheckpoint()
-        rounds += 1
-      }
+      if (kept == prevKept) ((e, prevKept), false)
+      // dst semi first, src semi LAST: the surviving edge frame
+      // checkpoints partitioned on src, so the next round's degree agg
+      // (groupBy src) reuses the layout instead of re-exchanging the
+      // edge-sized frame — one fewer big exchange per peeling round
+      else ((e.join(keep.select(col("n").as("dst")), Seq("dst"), "left_semi")
+        .join(keep.select(col("n").as("src")), Seq("src"), "left_semi")
+        .localCheckpoint(), kept), true)
     }
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
+    core.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
   }
 
   /** HITS hub/authority scoring over a DIRECTED edge list `(src, dst)` —
@@ -641,7 +624,6 @@ object Graph {
       iters: Int,
       scale: Long = 1000000000L,
       checkpointInterval: Int = 1): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
     // HITS alternates join keys (src for the authority half-step, dst
     // for the hub half-step), so ONE cached layout always leaves one of
     // the two per-iteration edge joins re-exchanging the edge-sized
@@ -652,56 +634,49 @@ object Graph {
     // because the removed per-step exchange also removes its in-flight
     // shuffle buffers; the node-sized score frames are the only
     // per-step exchanges left.
-    val ePlan = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    val eParts = sizedParts(ePlan) // one size for both cached layouts
-    val eSrc = ePlan.repartition(eParts, col("src")).persist()
-    val eDst = eSrc.repartition(eParts, col("dst")).persist()
-    val nodesPlan = eSrc.select(col("src").as("node"))
-      .union(eSrc.select(col("dst").as("node")))
-      .distinct()
-    val nodes = nodesPlan.coalesce(sizedParts(nodesPlan)).persist()
-    def renorm(rawIn: DataFrame, vcol: String, out: String): DataFrame = {
-      // materialize the half-step aggregate: renorm reads it TWICE (the
-      // 1-row total and the join). Left lazy in an unrolled DAG, each of
-      // the two branches recomputes the whole chain below it — 2^depth
-      // recomputation (measured: 14.4 s for 2 unrolled iterations on the
-      // x58 gate vs ~2 s materialized). The frame is node-sized.
-      val raw = rawIn.localCheckpoint()
-      val tot = raw.agg(sum(col(vcol)).as("t"))
-      nodes.join(raw, Seq("node"), "left")
-        .crossJoin(broadcast(tot))
-        .select(col("node"),
-          coalesce(
-            expr(s"(CAST($vcol AS DECIMAL(38,0)) * $scale) div t"),
-            lit(0L)).as(out))
-    }
-    var h = nodes.withColumn("h", lit(1000000L))
-    var a = nodes.withColumn("a", lit(0L))
-    for (i <- 1 to iters) {
-      a = renorm(
-        eSrc.join(h, eSrc("src") === h("node"))
-          .groupBy(eSrc("dst").as("node")).agg(sum(col("h")).as("ar")),
-        "ar", "a")
-      h = renorm(
-        eDst.join(a.filter(col("a") =!= 0L), eDst("dst") === a("node"))
-          .groupBy(eDst("src").as("node")).agg(sum(col("a")).as("hr")),
-        "hr", "h")
-      if (i % checkpointInterval == 0 && i < iters) {
-        a = a.localCheckpoint(); h = h.localCheckpoint()
+    val ePlan = edgeList(edges)
+    val eParts = Layout.sizedParts(ePlan) // one size for both cached layouts
+    val eSrc = ePlan.repartition(eParts, col("src"))
+    val eDst = eSrc.repartition(eParts, col("dst"))
+    cached(eSrc)(cached(eDst)(withNodes(eSrc) { nodes =>
+      def renorm(rawIn: DataFrame, vcol: String, out: String): DataFrame = {
+        // materialize the half-step aggregate: renorm reads it TWICE (the
+        // 1-row total and the join). Left lazy in an unrolled DAG, each of
+        // the two branches recomputes the whole chain below it — 2^depth
+        // recomputation (measured: 14.4 s for 2 unrolled iterations on the
+        // x58 gate vs ~2 s materialized). The frame is node-sized.
+        val raw = rawIn.localCheckpoint()
+        val tot = raw.agg(sum(col(vcol)).as("t"))
+        nodes.join(raw, Seq("node"), "left")
+          .crossJoin(broadcast(tot))
+          .select(col("node"),
+            coalesce(
+              expr(s"(CAST($vcol AS DECIMAL(38,0)) * $scale) div t"),
+              lit(0L)).as(out))
       }
-    }
-    val out = nodes
-      .join(a, Seq("node"), "left")
-      .join(h, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("a"), lit(0L)).as("auth_units"),
-        coalesce(col("h"), lit(0L)).as("hub_units"))
-      .localCheckpoint()
-    eSrc.unpersist()
-    eDst.unpersist()
-    nodes.unpersist()
-    out
+      var h = nodes.withColumn("h", lit(1000000L))
+      var a = nodes.withColumn("a", lit(0L))
+      for (i <- 1 to iters) {
+        a = renorm(
+          eSrc.join(h, eSrc("src") === h("node"))
+            .groupBy(eSrc("dst").as("node")).agg(sum(col("h")).as("ar")),
+          "ar", "a")
+        h = renorm(
+          eDst.join(a.filter(col("a") =!= 0L), eDst("dst") === a("node"))
+            .groupBy(eDst("src").as("node")).agg(sum(col("a")).as("hr")),
+          "hr", "h")
+        if (i % checkpointInterval == 0 && i < iters) {
+          a = a.localCheckpoint(); h = h.localCheckpoint()
+        }
+      }
+      nodes
+        .join(a, Seq("node"), "left")
+        .join(h, Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("a"), lit(0L)).as("auth_units"),
+          coalesce(col("h"), lit(0L)).as("hub_units"))
+        .localCheckpoint()
+    }))
   }
 
   /** Multi-source BFS hop labeling over a directed edge list: every node
@@ -720,30 +695,10 @@ object Graph {
     * frontier empties (bounded driver scalar, one count of an
     * already-materialized frame).
     */
-  def bfs(edges: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame = {
-    val ePlan = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    val e = ePlan.coalesce(sizedParts(ePlan)).persist()
-    var frontier = sources.select(col("source").cast("long").as("node"))
-      .distinct().localCheckpoint()
-    var dist = frontier.withColumn("d", lit(0))
-    var k = 1
-    var empty = false
-    while (k <= maxDepth && !empty) {
-      val nxt = frontier.join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node")).distinct()
-        .join(dist.select("node"), Seq("node"), "left_anti")
-        .localCheckpoint()
-      if (nxt.isEmpty) empty = true
-      else {
-        dist = dist.unionAll(nxt.withColumn("d", lit(k)))
-        frontier = nxt
-        k += 1
-      }
-    }
-    e.unpersist()
-    dist
-  }
+  def bfs(edges: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame =
+    frontierBfs(edges,
+      sources.select(col("source").cast("long").as("node")).distinct(),
+      maxDepth)
 
   /** Per-source BFS distances for a source panel: like `bfs` but the
     * frontier key is `(source, node)`, so each source's expansion stays
@@ -755,30 +710,32 @@ object Graph {
     * closeness/betweenness estimators run (pivot sampling).
     */
   def bfsPerSource(edges: DataFrame, sources: DataFrame,
-                   maxDepth: Int): DataFrame = {
-    val ePlan = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    val e = ePlan.coalesce(sizedParts(ePlan)).persist()
-    var frontier = sources.select(col("source").cast("long").as("source"))
-      .distinct().withColumn("node", col("source")).localCheckpoint()
-    var dist = frontier.withColumn("d", lit(0))
-    var k = 1
-    var empty = false
-    while (k <= maxDepth && !empty) {
-      val nxt = frontier.join(e, frontier("node") === e("src"))
-        .select(frontier("source"), e("dst").as("node")).distinct()
-        .join(dist.select("source", "node"), Seq("source", "node"),
-          "left_anti")
-        .localCheckpoint()
-      if (nxt.isEmpty) empty = true
-      else {
-        dist = dist.unionAll(nxt.withColumn("d", lit(k)))
-        frontier = nxt
-        k += 1
-      }
+                   maxDepth: Int): DataFrame =
+    frontierBfs(edges,
+      sources.select(col("source").cast("long").as("source"))
+        .distinct().withColumn("node", col("source")),
+      maxDepth)
+
+  /** The bfs delta iteration over a start frame keyed by its columns
+    * (`node` last): `(keys…, d)` with d the first-discovery level.
+    */
+  private def frontierBfs(edges: DataFrame, start: DataFrame,
+                          maxDepth: Int): DataFrame = {
+    val keys = start.columns.toSeq
+    val e = Layout.sizedCoalesce(edgeList(edges))
+    cached(e) {
+      val first = start.localCheckpoint()
+      untilFixpoint((first, first.withColumn("d", lit(0))), maxDepth) {
+        case ((frontier, dist), k) =>
+          val nxt = frontier.join(e, frontier("node") === e("src"))
+            .select(keys.init.map(frontier(_)) :+ e("dst").as("node"): _*)
+            .distinct()
+            .join(dist.select(keys.map(col): _*), keys, "left_anti")
+            .localCheckpoint()
+          if (nxt.isEmpty) ((frontier, dist), false)
+          else ((nxt, dist.unionAll(nxt.withColumn("d", lit(k)))), true)
+      }._2
     }
-    e.unpersist()
-    dist
   }
 
   /** k-bounded closeness + harmonic centrality for a source panel —
@@ -823,58 +780,57 @@ object Graph {
     */
   def betweennessTruncated(edges: DataFrame, sources: DataFrame,
                            maxDepth: Int = 3): DataFrame = {
-    val ePlan = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    val e = ePlan.coalesce(sizedParts(ePlan)).persist()
-    // forward: levels(k) = (source, node, sigma) at distance exactly k
-    val levels = scala.collection.mutable.ArrayBuffer(
-      sources.select(col("source").cast("long").as("source"))
-        .distinct()
-        .select(col("source"), col("source").as("node"),
-          lit(1L).as("sigma"))
-        .localCheckpoint())
-    var settled = levels(0).select("source", "node")
-    for (_ <- 1 to maxDepth) {
-      val prev = levels.last
-      val nxt = prev.join(e, prev("node") === e("src"))
-        .groupBy(prev("source"), e("dst").as("node"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .join(settled, Seq("source", "node"), "left_anti")
-        .localCheckpoint()
-      levels += nxt
-      settled = settled.unionAll(nxt.select("source", "node"))
-        .localCheckpoint()
+    val e = Layout.sizedCoalesce(edgeList(edges))
+    cached(e) {
+      // forward: levels(k) = (source, node, sigma) at distance exactly k
+      val levels = scala.collection.mutable.ArrayBuffer(
+        sources.select(col("source").cast("long").as("source"))
+          .distinct()
+          .select(col("source"), col("source").as("node"),
+            lit(1L).as("sigma"))
+          .localCheckpoint())
+      var settled = levels(0).select("source", "node")
+      for (_ <- 1 to maxDepth) {
+        val prev = levels.last
+        val nxt = prev.join(e, prev("node") === e("src"))
+          .groupBy(prev("source"), e("dst").as("node"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .join(settled, Seq("source", "node"), "left_anti")
+          .localCheckpoint()
+        levels += nxt
+        settled = settled.unionAll(nxt.select("source", "node"))
+          .localCheckpoint()
+      }
+      // backward: deltaNext carries (source, node, sigma, delta) of level
+      // k+1; the deepest level's deltas are 0 by truncation and are NOT
+      // accumulated (a node reached only at maxDepth has no flow-through
+      // evidence — same exclusion in the oracle)
+      var deltaNext = levels(maxDepth).withColumn("delta", lit(0L))
+      var acc = List.empty[DataFrame]
+      for (k <- (maxDepth - 1) to 1 by -1) {
+        val lk = levels(k)
+        val succ = deltaNext.select(col("source").as("s2"),
+          col("node").as("w"), col("sigma").as("sigma_w"),
+          col("delta").as("delta_w"))
+        val dk = lk.join(e, lk("node") === e("src"))
+          .join(succ, lk("source") === col("s2") && e("dst") === col("w"))
+          .select(lk("source"), lk("node"),
+            expr("sigma * (1000000 + delta_w) div sigma_w").as("term"))
+          .groupBy("source", "node").agg(sum(col("term")).as("delta"))
+        // level-k nodes with no level-(k+1) successors contribute delta 0
+        deltaNext = lk.join(dk, Seq("source", "node"), "left")
+          .withColumn("delta", coalesce(col("delta"), lit(0L)))
+          .localCheckpoint()
+        acc ::= deltaNext.select("node", "delta")
+      }
+      // maxDepth < 2 leaves no level with flow-through evidence: the
+      // correct result is an empty frame, not an empty.reduce crash
+      if (acc.isEmpty)
+        levels(0).select(col("node"), lit(0L).as("bc_micro")).limit(0)
+      else
+        acc.reduce(_.unionAll(_))
+          .groupBy("node").agg(sum(col("delta")).as("bc_micro"))
     }
-    // backward: deltaNext carries (source, node, sigma, delta) of level
-    // k+1; the deepest level's deltas are 0 by truncation and are NOT
-    // accumulated (a node reached only at maxDepth has no flow-through
-    // evidence — same exclusion in the oracle)
-    var deltaNext = levels(maxDepth).withColumn("delta", lit(0L))
-    var acc = List.empty[DataFrame]
-    for (k <- (maxDepth - 1) to 1 by -1) {
-      val lk = levels(k)
-      val succ = deltaNext.select(col("source").as("s2"),
-        col("node").as("w"), col("sigma").as("sigma_w"),
-        col("delta").as("delta_w"))
-      val dk = lk.join(e, lk("node") === e("src"))
-        .join(succ, lk("source") === col("s2") && e("dst") === col("w"))
-        .select(lk("source"), lk("node"),
-          expr("sigma * (1000000 + delta_w) div sigma_w").as("term"))
-        .groupBy("source", "node").agg(sum(col("term")).as("delta"))
-      // level-k nodes with no level-(k+1) successors contribute delta 0
-      deltaNext = lk.join(dk, Seq("source", "node"), "left")
-        .withColumn("delta", coalesce(col("delta"), lit(0L)))
-        .localCheckpoint()
-      acc ::= deltaNext.select("node", "delta")
-    }
-    e.unpersist()
-    // maxDepth < 2 leaves no level with flow-through evidence: the
-    // correct result is an empty frame, not an empty.reduce crash
-    if (acc.isEmpty)
-      levels(0).select(col("node"), lit(0L).as("bc_micro")).limit(0)
-    else
-      acc.reduce(_.unionAll(_))
-        .groupBy("node").agg(sum(col("delta")).as("bc_micro"))
   }
 
   /** Luby's maximal-independent-set with DETERMINISTIC per-round md5
@@ -898,21 +854,17 @@ object Graph {
     * CARRIED into the next round as the edge input (active sets only
     * shrink, so an edge both of whose endpoints are active at round r+1
     * was active-active at r) — later rounds scan the geometrically
-    * shrinking frame instead of re-scanning the full cached edge list.
-    * Round 1 is deliberately NOT materialized: its active set is every
-    * node, so its "shrunk" frame IS the whole graph — the r12 100 M-edge
+    * shrinking frame instead of re-scanning the full cached edge list
+    * (SCALE.md records the full-rescan counterfactual). Round 1 is
+    * deliberately NOT materialized: its active set is every node, so its
+    * "shrunk" frame IS the whole graph — the r12 100 M-edge
     * counterfactual measured that checkpointing it costs 1.3× the whole
     * run and blows the heap (827.8 s vs 627.0 s rescan, same box) while
     * the lazy double-compute of a cached frame is nearly free. Each
     * carried frame replaces (unpersists) the previous one — one
-    * active-subgraph-sized cache lives at a time. `shrinkActive = false`
-    * keeps the full-rescan arm for the SCALE.md measurement.
+    * active-subgraph-sized cache lives at a time.
     */
-  def maximalIndependentSet(edges: DataFrame, rounds: Int): DataFrame =
-    maximalIndependentSet(edges, rounds, shrinkActive = true)
-
-  def maximalIndependentSet(edges: DataFrame, rounds: Int,
-                            shrinkActive: Boolean): DataFrame = {
+  def maximalIndependentSet(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     // defensively bidirect: the local-max rule reads neighbors from the
     // src side only, so a directed-only edge u->v would let BOTH
@@ -921,59 +873,54 @@ object Graph {
     // through the distinct unchanged
     val raw = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    val ePlan = raw.unionAll(raw.select(col("dst").as("src"),
-      col("src").as("dst"))).distinct()
-    val e = ePlan.coalesce(sizedParts(ePlan)).persist()
-    var status = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node")))
-      .distinct().withColumn("status", lit(0))
-      .localCheckpoint()
-    var eCur = e
-    var carried: Option[DataFrame] = None
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      r += 1
-      val active = status.filter(col("status") === 0).select("node")
+    val e = Layout.sizedCoalesce(raw.unionAll(raw.select(col("dst").as("src"),
+      col("src").as("dst"))).distinct())
+    cached(e) {
+      val status0 = e.select(col("src").as("node"))
+        .unionAll(e.select(col("dst").as("node")))
+        .distinct().withColumn("status", lit(0))
         .localCheckpoint()
-      // early exit at the fixpoint: remaining rounds would be exact
-      // no-ops (no active node changes status), so capped callers and
-      // the 3-round gate see identical results either way; the count is
-      // of an already-materialized frame (the bounded-scalar discipline)
-      if (active.isEmpty) done = true
-      else {
-        val prio = active.withColumn("p",
-          conv(substring(md5(concat(lit(r.toString), lit(":"),
-            col("node").cast("string"))), 1, 12), 16, 10).cast("long"))
-        // active edges only: both endpoints still undecided. dst join
-        // FIRST, src join LAST (r22): at scale these are shuffle joins,
-        // and the LAST join's key sets the frame's partitioning — src —
-        // which both downstream consumers (the neighbor-max agg on src,
-        // the removal join on src) then reuse exchange-free. Locally AQE
-        // broadcasts the node-sized prio sides either way.
-        val aeLazy = eCur.join(prio.select(col("node").as("dst"),
-              col("p").as("p_dst")), "dst")
-          .join(prio.select(col("node").as("src"),
-            col("p").as("p_src")), "src")
-        // round 1's active set is every node — "shrinking" it yields the
-        // whole graph, so materializing is pure cost; from round 2 the
-        // frame is genuinely small and is cached for its three consumers
-        // (neighbor max, removal join, next round's edge input)
-        val carry = shrinkActive && r >= 2
-        val ae = if (carry) aeLazy.persist() else aeLazy
-        status = misStatus(ae, status, prio)
-        if (carry) {
-          // the new status is checkpointed, so the previous cache has no
-          // remaining consumer — exactly one carried frame stays resident
-          carried.foreach(_.unpersist())
-          carried = Some(ae)
-          eCur = ae.select("src", "dst")
+      var carried: Option[DataFrame] = None
+      try untilFixpoint((status0, e), rounds) { case ((status, eCur), r) =>
+        val active = status.filter(col("status") === 0).select("node")
+          .localCheckpoint()
+        // early exit at the fixpoint: remaining rounds would be exact
+        // no-ops (no active node changes status), so capped callers and
+        // the 3-round gate see identical results either way; the count
+        // is of an already-materialized frame (the bounded-scalar
+        // discipline)
+        if (active.isEmpty) ((status, eCur), false)
+        else {
+          val prio = active.withColumn("p",
+            conv(substring(md5(concat(lit(r.toString), lit(":"),
+              col("node").cast("string"))), 1, 12), 16, 10).cast("long"))
+          // active edges only: both endpoints still undecided. dst join
+          // FIRST, src join LAST (r22): at scale these are shuffle joins,
+          // and the LAST join's key sets the frame's partitioning — src —
+          // which both downstream consumers (the neighbor-max agg on src,
+          // the removal join on src) then reuse exchange-free. Locally AQE
+          // broadcasts the node-sized prio sides either way.
+          val ae = eCur.join(prio.select(col("node").as("dst"),
+                col("p").as("p_dst")), "dst")
+            .join(prio.select(col("node").as("src"),
+              col("p").as("p_src")), "src")
+          // round 1's active set is every node — "shrinking" it yields the
+          // whole graph, so materializing is pure cost; from round 2 the
+          // frame is genuinely small and is cached for its three consumers
+          // (neighbor max, removal join, next round's edge input)
+          if (r == 1) ((misStatus(ae, status, prio), eCur), true)
+          else {
+            val next = misStatus(ae.persist(), status, prio)
+            // the new status is checkpointed, so the previous cache has no
+            // remaining consumer — exactly one carried frame stays resident
+            carried.foreach(_.unpersist())
+            carried = Some(ae)
+            ((next, ae.select("src", "dst")), true)
+          }
         }
-      }
+      }._1
+      finally carried.foreach(_.unpersist())
     }
-    carried.foreach(_.unpersist())
-    e.unpersist()
-    status
   }
 
   private def misStatus(ae: DataFrame, status: DataFrame,
@@ -1022,16 +969,13 @@ object Graph {
     // least/greatest pairs, so a (v > u) input row would silently match
     // nothing and peel with support 0 — make the u < v contract true by
     // construction instead (self-loops close no triangle; dropped)
-    var cur = canonEdges.select(
+    val start = canonEdges.select(
         least(col("u"), col("v")).cast("long").as("u"),
         greatest(col("u"), col("v")).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .distinct().localCheckpoint()
-    var support: DataFrame = null
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      r += 1
+    val (survivors, support) = untilFixpoint((start, null: DataFrame),
+        rounds) { case ((cur, _), _) =>
       // degree-ordered orientation over the CURRENT survivor set (degrees
       // change as edges peel, so re-derived per round): x -> y with
       // (deg, id) of x below y; one canonical wedge per triangle
@@ -1040,46 +984,45 @@ object Graph {
         .groupBy("n").agg(count(lit(1)).as("d"))
       val lowFirst = col("du") < col("dv") ||
         (col("du") === col("dv") && col("u") < col("v"))
-      val oPlan = cur
+      val o = Layout.sizedCoalesce(cur
         .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
         .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
         .select(
           when(lowFirst, col("u")).otherwise(col("v")).as("x"),
           when(lowFirst, col("v")).otherwise(col("u")).as("y"),
-          when(lowFirst, col("dv")).otherwise(col("du")).as("dy"))
-      val o = oPlan.coalesce(sizedParts(oPlan)).persist()
-      val w = o.as("e1").join(o.as("e2"), col("e1.x") === col("e2.x"))
-        .filter(col("e1.dy") < col("e2.dy") ||
-          (col("e1.dy") === col("e2.dy") && col("e1.y") < col("e2.y")))
-        .select(col("e1.x").as("c0"), col("e1.y").as("c1"),
-          col("e2.y").as("c2"))
-      val tri = w.join(o.select(col("x").as("c1"), col("y").as("c2")),
-        Seq("c1", "c2"), "left_semi")
-      // each triangle credits its THREE canonical (u < v) edges
-      val triSupport = tri.select(explode(array(
-          struct(least(col("c0"), col("c1")).as("u"),
-            greatest(col("c0"), col("c1")).as("v")),
-          struct(least(col("c0"), col("c2")).as("u"),
-            greatest(col("c0"), col("c2")).as("v")),
-          struct(least(col("c1"), col("c2")).as("u"),
-            greatest(col("c1"), col("c2")).as("v")))).as("t"))
-        .select(col("t.u").as("u"), col("t.v").as("v"))
-        .groupBy("u", "v").agg(count(lit(1)).as("tri"))
-      // triangle-free edges never appear in the enumeration, so left-join
-      // them back with support 0 — otherwise k <= 2 (threshold 0) would
-      // wrongly drop edges that close no triangle instead of keeping all
-      support = cur.join(triSupport, Seq("u", "v"), "left")
-        .select(col("u"), col("v"),
-          coalesce(col("tri"), lit(0L)).as("support"))
-        .localCheckpoint()
-      o.unpersist()
+          when(lowFirst, col("dv")).otherwise(col("du")).as("dy")))
+      val support = cached(o) {
+        val w = o.as("e1").join(o.as("e2"), col("e1.x") === col("e2.x"))
+          .filter(col("e1.dy") < col("e2.dy") ||
+            (col("e1.dy") === col("e2.dy") && col("e1.y") < col("e2.y")))
+          .select(col("e1.x").as("c0"), col("e1.y").as("c1"),
+            col("e2.y").as("c2"))
+        val tri = w.join(o.select(col("x").as("c1"), col("y").as("c2")),
+          Seq("c1", "c2"), "left_semi")
+        // each triangle credits its THREE canonical (u < v) edges
+        val triSupport = tri.select(explode(array(
+            struct(least(col("c0"), col("c1")).as("u"),
+              greatest(col("c0"), col("c1")).as("v")),
+            struct(least(col("c0"), col("c2")).as("u"),
+              greatest(col("c0"), col("c2")).as("v")),
+            struct(least(col("c1"), col("c2")).as("u"),
+              greatest(col("c1"), col("c2")).as("v")))).as("t"))
+          .select(col("t.u").as("u"), col("t.v").as("v"))
+          .groupBy("u", "v").agg(count(lit(1)).as("tri"))
+        // triangle-free edges never appear in the enumeration, so
+        // left-join them back with support 0 — otherwise k <= 2
+        // (threshold 0) would wrongly drop edges that close no triangle
+        cur.join(triSupport, Seq("u", "v"), "left")
+          .select(col("u"), col("v"),
+            coalesce(col("tri"), lit(0L)).as("support"))
+          .localCheckpoint()
+      }
       val next = support.filter(col("support") >= k - 2)
         .select("u", "v").localCheckpoint()
       // fixpoint: nothing peeled this round — further rounds are no-ops
-      if (next.count() == cur.count()) done = true
-      cur = next
+      ((next, support), next.count() != cur.count())
     }
-    cur.join(support, Seq("u", "v"))
+    survivors.join(support, Seq("u", "v"))
   }
 
   /** Flatten a forest to `(node, root, depth)` by pointer doubling over
@@ -1110,21 +1053,18 @@ object Graph {
     rootsAndDepth(parents, rounds)
   }
 
-  def rootsAndDepth(parents: DataFrame, rounds: Int): DataFrame = {
-    var f = parents.select(
+  def rootsAndDepth(parents: DataFrame, rounds: Int): DataFrame =
+    fixedRounds(parents.select(
       col("node").cast("long").as("node"),
       coalesce(col("parent").cast("long"), col("node")).as("anc"),
-      when(col("parent").isNull, lit(0L)).otherwise(lit(1L)).as("depth"))
-    for (i <- 1 to rounds) {
+      when(col("parent").isNull, lit(0L)).otherwise(lit(1L)).as("depth")),
+      rounds) { f =>
       val b = f.select(col("node").as("b_node"), col("anc").as("b_anc"),
         col("depth").as("b_depth"))
-      f = f.join(b, f("anc") === b("b_node"))
+      f.join(b, f("anc") === b("b_node"))
         .select(col("node"), col("b_anc").as("anc"),
           (col("depth") + col("b_depth")).as("depth"))
-      if (i < rounds) f = f.localCheckpoint()
-    }
-    f.select(col("node"), col("anc").as("root"), col("depth"))
-  }
+    }.select(col("node"), col("anc").as("root"), col("depth"))
 
   /** Connected components over an UNDIRECTED graph (callers pass a
     * bidirected edge list, as with labelPropagate): every node is
@@ -1145,22 +1085,13 @@ object Graph {
     * 100 TB shape: the edge list materializes ONCE; each round is one
     * edges⋈labels join on the src key + one dst-key min-agg + a
     * node-keyed min against the previous labels, all node/edge-sized
-    * with `localCheckpoint` capping lineage. The early-exit signal is
-    * one count of an already-materialized changed-rows frame (bounded
-    * driver scalar, same discipline as kcore/bfs).
+    * with `localCheckpoint` capping lineage (`minFixpoint`). The label
+    * frame's update is a union-min SHUFFLE, so it materializes every
+    * round: deferring it re-runs the shuffle for every consumer
+    * (measured on the sf0.1 gate graph: every 5 rounds ran 4.4 s vs
+    * 3.8 s every round).
     */
-  /** `checkpointInterval` (the x47 knob): how many rounds the label
-    * frame's union-min chain may grow before materializing. The changed
-    * frontier ALWAYS materializes (the early-exit test consumes it);
-    * only the standing label frame batches. NOTE: unlike x47 — where
-    * batching wins on small graphs because the deferred work is narrow —
-    * this frame's update is a union-min SHUFFLE, so deferring just
-    * re-runs shuffles for every consumer (measured on the sf0.1 gate
-    * graph: interval=5 ran 4.4 s vs 3.8 s at interval=1). Keep 1 unless
-    * a future variant makes the update narrow.
-    */
-  def connectedComponents(edges: DataFrame, maxRounds: Int = 64,
-                          checkpointInterval: Int = 1): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
     // pre-partition the edge list on the src key ONCE: every round's
     // frontier join reuses this layout from the cache, so only the
     // (shrinking) frontier side exchanges per round. Session parallelism,
@@ -1168,39 +1099,23 @@ object Graph {
     // join runs IN this layout, and the r21 size-derived count (~1-2
     // partitions at sf0.1) showed the louvain serialization signature —
     // driver 4.47→6.19 s (0.72×) on a faster box, scaling ratio 0.53.
-    val ePlan = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    val e = ePlan.repartition(col("src")).persist()
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("comp", col("node")).localCheckpoint()
-    // delta iteration (the bfs/shortestPaths discipline): an improvement
-    // can only originate from a node whose OWN label improved last round,
-    // so each round joins just the changed frontier against the edges —
-    // per-round cost O(frontier out-edges), not O(E). Measured at 100 M
-    // directed / 200 M propagation edges (tools/GraphScale100, local[32]):
-    // the full-relabel form (every round rejoins every edge) ran 428 s;
-    // this delta form's frontier collapses geometrically after round 1.
-    var frontier = labels
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      val nbr = e.join(frontier, e("src") === frontier("node"))
-        .groupBy(e("dst").as("node")).agg(min(col("comp")).as("nc"))
-      val improved = nbr.join(labels, Seq("node"))
-        .filter(col("nc") < col("comp"))
-        .select(col("node"), col("nc").as("comp"))
-        .localCheckpoint()
-      if (improved.isEmpty) done = true
-      else {
-        labels = labels.unionAll(improved)
-          .groupBy("node").agg(min(col("comp")).as("comp"))
-        rounds += 1
-        if (rounds % checkpointInterval == 0) labels = labels.localCheckpoint()
-        frontier = improved
+    val e = edgeList(edges).repartition(col("src"))
+    cached(e) {
+      // delta iteration: an improvement can only originate from a node
+      // whose OWN label improved last round. Measured at 100 M directed
+      // / 200 M propagation edges (tools/GraphScale100, local[32]): the
+      // full-relabel form (every round rejoins every edge) ran 428 s;
+      // this delta form's frontier collapses geometrically after round 1.
+      minFixpoint(e.select(col("src").as("node")).distinct()
+        .withColumn("comp", col("node")).localCheckpoint(), "comp",
+        maxRounds) { (frontier, labels) =>
+        e.join(frontier, e("src") === frontier("node"))
+          .groupBy(e("dst").as("node")).agg(min(col("comp")).as("nc"))
+          .join(labels, Seq("node"))
+          .filter(col("nc") < col("comp"))
+          .select(col("node"), col("nc").as("comp"))
       }
     }
-    e.unpersist()
-    labels
   }
 
   /** Multi-source shortest paths over a weighted directed edge list
@@ -1223,40 +1138,25 @@ object Graph {
   def shortestPaths(
       edges: DataFrame,
       sources: DataFrame,
-      maxRounds: Int = 64,
-      checkpointInterval: Int = 1): DataFrame = {
+      maxRounds: Int = 64): DataFrame = {
     // src-key layout cached once; per-round frontier joins reuse it
     // (only the frontier side exchanges — see connectedComponents)
     val ePlan = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-    val e = ePlan.repartition(sizedParts(ePlan), col("src")).persist()
-    require(e.filter(col("w") < 0).isEmpty,
-      "shortestPaths requires non-negative weights")
-    var dist = sources.select(col("source").cast("long").as("node"))
-      .distinct().withColumn("dist", lit(0L)).localCheckpoint()
-    var frontier = dist
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      val cand = frontier.join(e, frontier("node") === e("src"))
-        .groupBy(e("dst").as("node"))
-        .agg(min(frontier("dist") + e("w")).as("cand"))
-      val improved = cand.join(dist, Seq("node"), "left_outer")
-        .filter(col("dist").isNull || col("cand") < col("dist"))
-        .select(col("node"), col("cand").as("dist"))
-        .localCheckpoint()
-      if (improved.isEmpty) done = true
-      else {
-        dist = dist.unionAll(improved)
-          .groupBy("node").agg(min(col("dist")).as("dist"))
-        rounds += 1
-        // x47 knob, same contract as connectedComponents: the frontier
-        // always materializes, the standing dist frame batches
-        if (rounds % checkpointInterval == 0) dist = dist.localCheckpoint()
-        frontier = improved
+    val e = ePlan.repartition(Layout.sizedParts(ePlan), col("src"))
+    cached(e) {
+      require(e.filter(col("w") < 0).isEmpty,
+        "shortestPaths requires non-negative weights")
+      minFixpoint(sources.select(col("source").cast("long").as("node"))
+        .distinct().withColumn("dist", lit(0L)).localCheckpoint(), "dist",
+        maxRounds) { (frontier, dist) =>
+        frontier.join(e, frontier("node") === e("src"))
+          .groupBy(e("dst").as("node"))
+          .agg(min(frontier("dist") + e("w")).as("cand"))
+          .join(dist, Seq("node"), "left_outer")
+          .filter(col("dist").isNull || col("cand") < col("dist"))
+          .select(col("node"), col("cand").as("dist"))
       }
     }
-    e.unpersist()
-    dist
   }
 }

@@ -19,20 +19,17 @@ object Layout {
 
   /** Size-derived partition count for a frame that is about to be cached
     * or checkpointed and then RESCANNED (per round / per sweep cell):
-    * n = clamp(ceil(sizeInBytes / bytesPerTask), 1, shuffle.partitions).
+    * n = clamp(ceil(sizeInBytes / 4 MB), 1, shuffle.partitions).
     * At cluster scale the estimate exceeds the cap and the layout is
     * unchanged; only provably-small frames shrink, so per-scan task
     * count stops being the session parallelism for 50 KB frames (r21 —
-    * see Graph.sizedParts's measurements; this is the shared impl).
-    * SPARK_GRAFT_ROUND_BYTES_PER_TASK overrides the 4 MB default.
+    * the measurements are in Graph's header). 4 MB is the measured r21
+    * break-even for rescanned frames, far below the 128 MB scan
+    * heuristic because every round pays the per-task overhead again.
     */
   private[graft] def sizedParts(df: DataFrame): Int = {
     val cap = df.sparkSession.sessionState.conf.numShufflePartitions
-    // runtime conf first (A/B-able per session), env as the deploy-level
-    // default, 4 MB the measured r21 break-even for rescanned frames
-    val bytesPerTask = df.sparkSession.conf
-      .get("spark.graft.roundBytesPerTask", sys.env
-        .getOrElse("SPARK_GRAFT_ROUND_BYTES_PER_TASK", "4194304")).toLong
+    val bytesPerTask = 4L << 20
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val n = (est + bytesPerTask - 1) / bytesPerTask
     if (n >= cap) cap else math.max(1, n.toInt)

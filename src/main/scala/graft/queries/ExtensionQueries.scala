@@ -146,7 +146,7 @@ object ExtensionQueries {
     // SimHash candidates -> exact-Jaccard verification (the candidate→verify
     // discipline; precision exact, sketch tunes only completeness). 8 bands
     // of 8 bits guarantee recall for Hamming <= 7 (pigeonhole); the
-    // fixture's jaccard>=0.5 pairs all sit at Hamming <= 5 (X2Probe), so
+    // fixture's jaccard>=0.5 pairs all sit at Hamming <= 5 (measured r3), so
     // recall is total with margin. The bucket cap (64, family default)
     // drops only hot boilerplate-signature bands — near-dup pairs share
     // >= 3 of 8 bands incl. cold ones (verified: 25/25 at caps 32..128;
@@ -1119,7 +1119,7 @@ object ExtensionQueries {
           .distinct()
         // bidirect via a 2-element array explode: ONE pass over cp (the
         // swapped-unionAll form recomputes the orders⋈lineitem+distinct
-        // pipeline once per branch — measured 2x slower, tools/BidirectProbe)
+        // pipeline once per branch — measured 2x slower in r10)
         val edges = cp.select(explode(array(
             struct(col("c").as("src"), col("p").as("dst")),
             struct(col("p").as("src"), col("c").as("dst")))).as("e"))
@@ -1627,7 +1627,7 @@ object ExtensionQueries {
           .distinct()
         // bidirect via a 2-element array explode: ONE pass over cp (the
         // swapped-unionAll form recomputes the orders⋈lineitem+distinct
-        // pipeline once per branch — measured 2x slower, tools/BidirectProbe)
+        // pipeline once per branch — measured 2x slower in r10)
         val edges = cp.select(explode(array(
             struct(col("c").as("src"), col("p").as("dst")),
             struct(col("p").as("src"), col("c").as("dst")))).as("e"))
@@ -2092,10 +2092,10 @@ object ExtensionQueries {
     "x69_connected_components" -> QueryDef(
       (s, dir) => {
         val edges = coPurchaseEdges(s, dir)
-        // checkpointInterval stays 1 even on this small graph: unlike
-        // x47's narrow rank update, the standing label frame's update is
-        // a union-min SHUFFLE, so deferring materialization re-runs
-        // shuffles instead of shedding jobs (measured: interval=5 ran
+        // the label frame materializes every round even on this small
+        // graph: unlike x47's narrow rank update, its update is a
+        // union-min SHUFFLE, so deferring materialization re-runs
+        // shuffles instead of shedding jobs (measured: every 5 rounds ran
         // 4.4 s vs 3.8 s at sf0.1)
         Graph.connectedComponents(edges).orderBy("node")
       },

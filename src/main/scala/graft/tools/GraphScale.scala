@@ -274,22 +274,14 @@ object GraphScale100 {
         .agg(count(lit(1)), max(col("bc_micro"))).head()
     }
     // r11: Luby MIS — the claim under test is the geometric shrink of
-    // the ACTIVE subgraph. Two arms (r12): the shipped default CARRIES
-    // the materialized active-active edge frame into the next round, so
-    // round r+1 scans the shrunk frame; the counterfactual re-scans the
-    // full cached edge list every round (the r11 shape).
+    // the ACTIVE subgraph: from round 2 the materialized active-active
+    // edge frame is CARRIED into the next round, so round r+1 scans the
+    // shrunk frame (the r12 full-rescan counterfactual is in SCALE.md)
     run("mis") {
       val e = edges()
       val st = Graph.maximalIndependentSet(
         e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))),
         rounds = 12)
-      st.groupBy("status").agg(count(lit(1))).collect()
-    }
-    run("mis_rescan") {
-      val e = edges()
-      val st = Graph.maximalIndependentSet(
-        e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))),
-        rounds = 12, shrinkActive = false)
       st.groupBy("status").agg(count(lit(1))).collect()
     }
     // r12: the x82 double sweep — two multi-hop BFS passes over the

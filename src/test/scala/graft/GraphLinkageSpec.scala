@@ -206,11 +206,34 @@ class GraphLinkageSpec extends GraftSparkSpec {
     // slowdown across a 480-query bench before the fix)
     spark.sharedState.cacheManager.clearCache()
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 1L)).toDF("src", "dst")
+    val one = Seq(1L)
     Graph.pagerank(e, iters = 2).collect()
+    Graph.pagerankWeighted(e.withColumn("w", lit(2L)), iters = 2).collect()
+    Graph.personalizedPagerank(e, one.toDF("seed"), iters = 2).collect()
     Graph.labelPropagate(e,
       Seq((1L, "a")).toDF("node", "label"), iters = 2).collect()
+    Graph.louvainSync(e, rounds = 2).collect()
     Graph.triangles(e).collect()
-    Graph.deterministicWalks(e, Seq(1L).toDF("seed"), steps = 2).collect()
+    Graph.deterministicWalks(e, one.toDF("seed"), steps = 2).collect()
+    Graph.kcore(e, k = 1).collect()
+    Graph.hits(e, iters = 2).collect()
+    Graph.bfs(e, one.toDF("source"), maxDepth = 2).collect()
+    Graph.harmonicCentrality(e, one.toDF("source"), maxDepth = 2).collect()
+    Graph.betweennessTruncated(e, one.toDF("source"), maxDepth = 2).collect()
+    Graph.maximalIndependentSet(e, rounds = 3).collect()
+    Graph.ktruss(Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("u", "v"),
+      k = 3, rounds = 2).collect()
+    Graph.connectedComponents(e).collect()
+    Graph.shortestPaths(e.withColumn("w", lit(1L)), one.toDF("source"))
+      .collect()
+    // error paths release what they persisted before the throw
+    intercept[IllegalArgumentException](
+      Graph.pagerank(Seq.empty[(Long, Long)].toDF("src", "dst"), iters = 2))
+    intercept[IllegalArgumentException](
+      Graph.personalizedPagerank(e, Seq(99L).toDF("seed"), iters = 2))
+    intercept[IllegalArgumentException](
+      Graph.shortestPaths(Seq((1L, 2L, -1L)).toDF("src", "dst", "w"),
+        one.toDF("source")))
     assert(spark.sharedState.cacheManager.isEmpty,
       "graph operator left frames in the CacheManager")
   }
@@ -303,36 +326,22 @@ class GraphLinkageSpec extends GraftSparkSpec {
     assert(got.find(_._2 == 5L).get._3 == 0.0)
   }
 
-  test("label-prop and louvain round shapes: shared-exchange equals the " +
-      "r21 three-exchange form bit-for-bit (r22 A/B toggles)") {
+  test("label-prop and louvain match in-memory references") {
     // random-ish small graph with hubs, isolated chains and ties — the
     // shapes the argmax tie-breaks and the stay-row merge must survive
     val rnd = new scala.util.Random(13)
     val pairs = (0 until 160).map { _ =>
       (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)
     }.filter { case (a, b) => a != b }
-    val edges = (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
-    val seeds = Seq((3L, "a"), (17L, "b"), (29L, "c"), (5L, "b"))
-      .toDF("node", "label")
-    def collectLpa(): Map[Long, String] = {
-      val out = Graph.labelPropagate(edges, seeds, iters = 3)
-        .as[(Long, String)].collect()
-      // null labels surface as null Strings; key set must match too
-      out.map { case (n, l) => n -> l }.toMap
-    }
-    def collectLouvain(): Map[Long, Long] =
-      Graph.louvainSync(pairs.toDF("src", "dst"), rounds = 3)
-        .as[(Long, Long)].collect().toMap
-    val lpaNew = collectLpa()
-    val louvNew = collectLouvain()
-    spark.conf.set("spark.graft.lpaSharedExchange", "false")
-    spark.conf.set("spark.graft.louvainSharedExchange", "false")
-    try {
-      assert(collectLpa() === lpaNew)
-      assert(collectLouvain() === louvNew)
-    } finally {
-      spark.conf.unset("spark.graft.lpaSharedExchange")
-      spark.conf.unset("spark.graft.louvainSharedExchange")
-    }
+    val bidir = pairs ++ pairs.map(_.swap)
+    val seeds = Map(3L -> "a", 17L -> "b", 29L -> "c", 5L -> "b")
+    val lpa = Graph.labelPropagate(bidir.toDF("src", "dst"),
+        seeds.toSeq.toDF("node", "label"), iters = 3)
+      .as[(Long, String)].collect().toMap
+    assert(lpa === GraphReference.labelPropagate(bidir, seeds, iters = 3))
+    val louvain = Graph.louvainSync(pairs.toDF("src", "dst"), rounds = 3)
+      .as[(Long, Long)].collect().toMap
+    assert(louvain === GraphReference.louvain(
+      pairs.map(e => (e._1 min e._2, e._1 max e._2)), rounds = 3))
   }
 }

@@ -3,9 +3,13 @@ package graft
 import graft.operators.Graph
 import scala.collection.mutable
 
-/** Randomized cross-checks of the round-11 graph operators against
-  * independent in-memory reference implementations: union-find for
-  * connected components, multi-source Dijkstra for shortest paths.
+import org.apache.spark.sql.DataFrame
+
+/** Randomized cross-checks of the graph operators against independent
+  * in-memory reference implementations: union-find for connected
+  * components, multi-source Dijkstra for shortest paths, and the
+  * integer-unit loops of [[GraphReference]] for the rank, peeling and
+  * community operators.
   * Seeded graphs (not ScalaCheck-driven) keep Spark job counts bounded
   * while still walking a different topology per seed.
   */
@@ -205,36 +209,65 @@ class GraphRandomizedSpec extends GraftSparkSpec {
       .map(e => (e._1 min e._2, e._1 max e._2)).distinct
     val rounds = 1 + rnd.nextInt(3)
 
-    // independent reference: same comparator, plain maps and loops
-    val adj = mutable.Map[Long, List[Long]]().withDefaultValue(Nil)
-    und.foreach { case (a, b) =>
-      adj(a) = b :: adj(a); adj(b) = a :: adj(b)
-    }
-    val nodes = adj.keys.toSeq.sorted
-    val deg = nodes.map(v => v -> adj(v).size.toLong).toMap
-    val m2 = deg.values.sum
-    var comm = nodes.map(v => v -> v).toMap
-    (1 to rounds).foreach { _ =>
-      // .keys is a Set — mapping deg over it directly would DEDUPLICATE
-      // equal degrees before summing (a 4+4 community would total 4)
-      val ctot = comm.groupBy(_._2).map { case (c, ms) =>
-        c -> ms.keys.iterator.map(deg).sum }
-      val next = nodes.map { i =>
-        val w = mutable.Map[Long, Long]().withDefaultValue(0L)
-        adj(i).foreach(nb => w(comm(nb)) += 1L)
-        if (!w.contains(comm(i))) w(comm(i)) = 0L
-        val best = w.keys.map { c =>
-          val tot = ctot(c) - (if (c == comm(i)) deg(i) else 0L)
-          (m2 * w(c) - deg(i) * tot, c)
-        }.minBy { case (s, c) => (-s, c) }
-        i -> best._2
-      }.toMap
-      comm = next
-    }
+    val comm = GraphReference.louvain(und, rounds)
 
     val got = Graph.louvainSync(und.toDF("src", "dst"), rounds)
       .as[(Long, Long)].collect().toMap
     assert(got === comm, s"rounds=$rounds n=$n m=${und.size}")
+  }
+
+  /** A seeded random directed graph, self-loops dropped, no duplicates. */
+  private def randomEdges(seed: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed * 7 + 11)
+    val n = 25 + rnd.nextInt(30)
+    val m = 50 + rnd.nextInt(90)
+    Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      .filter(e => e._1 != e._2).distinct
+  }
+
+  private def ranks(df: DataFrame): Map[Long, Long] =
+    df.as[(Long, Long)].collect().toMap
+
+  for (seed <- seeds) test(
+    s"pagerank matches the in-memory integer-unit reference (seed=$seed)") {
+    val edges = randomEdges(seed)
+    // both materialization cadences: per round and unrolled
+    val interval = if (seed % 2 == 0) 1 else 5
+    val got = ranks(Graph.pagerank(edges.toDF("src", "dst"), iters = 4,
+      checkpointInterval = interval))
+    assert(got === GraphReference.pagerank(edges, iters = 4))
+  }
+
+  for (seed <- seeds) test(
+    s"personalizedPagerank matches the in-memory reference (seed=$seed)") {
+    val edges = randomEdges(seed)
+    // one seed outside the graph: ignored, mass splits over the rest
+    val sd = Seq(edges.head._1, edges.last._2, 1000L)
+    val got = ranks(Graph.personalizedPagerank(edges.toDF("src", "dst"),
+      sd.toDF("seed"), iters = 3))
+    assert(got === GraphReference.personalizedPagerank(edges, sd, iters = 3))
+  }
+
+  for (seed <- seeds) test(
+    s"hits matches the in-memory renormalizing reference (seed=$seed)") {
+    val edges = randomEdges(seed)
+    val interval = if (seed % 2 == 0) 1 else 5
+    val got = Graph.hits(edges.toDF("src", "dst"), iters = 3,
+        checkpointInterval = interval)
+      .as[(Long, Long, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(got === GraphReference.hits(edges, iters = 3))
+  }
+
+  for (seed <- seeds) test(
+    s"kcore matches in-memory peeling (seed=$seed)") {
+    val edges = randomEdges(seed)
+    val bidir = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+    val k = 3
+    val got = ranks(Graph.kcore(bidir.toDF("src", "dst"), k))
+    val want = GraphReference.kcore(bidir, k)
+    assert(want.nonEmpty, "degenerate seed: the core peeled to nothing")
+    assert(got === want)
   }
 
   test("louvainSync: two cliques with one bridge collapse to two communities") {
