@@ -2,17 +2,26 @@ package graft
 
 import graft.operators.{PartitionConfig, PrePartition}
 import graft.sources.LogDataGenerator
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType, LongType, StringType,
+  StructField, StructType}
 
 /** Console entry point — the Spark-native analogue of the reference's
   * `KustoPreForgeConsole.Program.Main`
   * (reference: code/KustoPreForgeConsole/Program.cs:26-49).
   *
-  * Subcommands:
-  *   generate <outDir> <nRows> [seed]                 — write headerless CSV landing data
-  *   prepartition <inGlob> <outDir> <colIdx> <n> <seed> [gzip]
-  *                                                    — run the PrePartition pipeline
-  *   validate <stagingDir>                            — print B7-style cardinality invariants
+  * Every subcommand is one row of [[GraftCli.commands]]: its name, its
+  * required and optional positionals, its literal flag words and its body.
+  * The usage text is rendered from that table, and arguments are checked
+  * against it before any session starts; running with no arguments prints
+  * every command. The reference's own pipeline is
+  *   generate <outDir> <nRows> [seed]           — headerless CSV landing data
+  *   prepartition <inGlob> <roots> <colIdx> <maxPartitions> <seed> [gzip]
+  *   validate <stagingDir>                      — B7-style cardinality invariants
+  *   split, stream, notify-publish, stream-notify, stream-notify-split
+  * and the rest drive the corpus, index, graph, archive and media operators.
   */
 object GraftCli {
   /** Per-tenant scheduler pool for this process, set by the leading
@@ -58,115 +67,253 @@ object GraftCli {
     val (pool, argList) = parsePoolFlag(rawArgs.toList)
     schedulerPool = pool
     pool.foreach(p => println(s"[graft] scheduler pool: $p (FAIR)"))
-    dispatch(argList)
+    parse(argList) match {
+      case Right((c, a)) => run(c, a)
+      case Left(err) =>
+        System.err.println(s"$err\n$usage")
+        sys.exit(2)
+    }
   }
 
-  private def dispatch(args: List[String]): Unit = args match {
-    case "generate" :: outDir :: n :: rest =>
+  /** One subcommand. Its first arguments are the `required` positionals,
+    * in order. Each argument after them is a flag word when `flags` lists
+    * it (a flag ending in `=<value>` matches by its `key=` prefix) and
+    * otherwise the next `optional` positional; anything more is a usage
+    * error. With `repeated`, the last required positional takes every
+    * remaining argument instead. A `Left` body runs without a session.
+    */
+  private[graft] final case class Command(
+      name: String, required: Seq[String], optional: Seq[String],
+      flags: Seq[String], repeated: Boolean)(
+      val body: Either[Args => Unit, (SparkSession, Args) => Unit]) {
+    def isFlag(arg: String): Boolean = flags.exists(f => f.indexOf('=') match {
+      case -1 => arg == f
+      case i => arg.startsWith(f.take(i + 1))
+    })
+    def usage: String = (name +: (required.map(r => s"<$r>") ++
+      (if (repeated) Seq(s"[${required.last} ...]") else Nil) ++
+      (optional ++ flags).map(o => s"[$o]"))).mkString(" ")
+  }
+
+  /** A parsed command line; positionals are looked up by their declared
+    * name, so a name the command does not declare throws. */
+  private[graft] final class Args(c: Command, positionals: Seq[String],
+                                  flagArgs: Seq[String]) {
+    private def index(name: String): Int = (c.required ++ c.optional).indexOf(name) match {
+      case -1 => throw new IllegalArgumentException(s"${c.name} declares no argument $name")
+      case i => i
+    }
+    def apply(name: String): String = positionals(index(name))
+    def opt(name: String): Option[String] = positionals.lift(index(name))
+    def int(name: String, default: Int): Int = opt(name).fold(default)(_.toInt)
+    def long(name: String, default: Long): Long = opt(name).fold(default)(_.toLong)
+    def double(name: String, default: Double): Double = opt(name).fold(default)(_.toDouble)
+    /** Every value of the repeated last positional. */
+    def repeated: Seq[String] = positionals.drop(c.required.length - 1)
+    def has(flag: String): Boolean = {
+      require(c.flags.contains(flag), s"${c.name} declares no flag $flag")
+      flagArgs.contains(flag)
+    }
+    /** The value of a `key=<value>` flag. */
+    def value(key: String): Option[String] = {
+      require(c.flags.exists(_.startsWith(s"$key=")), s"${c.name} declares no flag $key=")
+      flagArgs.collectFirst { case f if f.startsWith(s"$key=") => f.stripPrefix(s"$key=") }
+    }
+  }
+
+  private def job(name: String, required: Seq[String], optional: Seq[String] = Nil,
+                  flags: Seq[String] = Nil, repeated: Boolean = false)(
+                  body: (SparkSession, Args) => Unit): Command =
+    Command(name, required, optional, flags, repeated)(Right(body))
+
+  private def local(name: String, required: Seq[String], repeated: Boolean = false)(
+                    body: Args => Unit): Command =
+    Command(name, required, Nil, Nil, repeated)(Left(body))
+
+  /** Checks `args` (command name first) against the table. */
+  private[graft] def parse(args: List[String]): Either[String, (Command, Args)] = args match {
+    case Nil => Left("no command given")
+    case name :: rest => commands.find(_.name == name) match {
+      case None => Left(s"unknown command: $name")
+      case Some(c) =>
+        val (flagArgs, positionals) =
+          if (c.repeated) (Nil, rest)
+          else {
+            val (fixed, tail) = rest.splitAt(c.required.length)
+            val (fl, opt) = tail.partition(c.isFlag)
+            (fl, fixed ++ opt)
+          }
+        if (positionals.length < c.required.length)
+          Left(s"$name: missing <${c.required(positionals.length)}>")
+        else if (!c.repeated && positionals.length > c.required.length + c.optional.length)
+          Left(s"$name: unexpected argument(s): " +
+            positionals.drop(c.required.length + c.optional.length).mkString(" "))
+        else Right((c, new Args(c, positionals, flagArgs)))
+    }
+  }
+
+  private[graft] def usage: String =
+    ("Usage: [--pool=<tenant>] <command> ...   (FAIR scheduler pool for shared sessions)" +:
+      commands.map("  " + _.usage)).mkString("\n")
+
+  /** Runs one parsed command, in the one session this process opens. */
+  private def run(c: Command, a: Args): Unit = c.body match {
+    case Left(body) => body(a)
+    case Right(body) =>
       val spark = session()
-      val seed = rest.headOption.map(_.toLong).getOrElse(42L)
-      LogDataGenerator.toCsvLines(LogDataGenerator.generate(spark, n.toLong, seed))
+      try body(spark, a) finally spark.stop()
+  }
+
+  /** Serves a streaming query for `runSec` seconds, or until it ends
+    * when `runSec` is 0. */
+  private def serve(q: StreamingQuery, runSec: Int): Unit =
+    if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
+    else q.awaitTermination()
+
+  private def partitionConfig(a: Args): PartitionConfig =
+    PartitionConfig(a("colIdx").toInt, a("maxPartitions").toInt, a("seed").toInt)
+
+  /** The `(doc_id, text)` schema of a parquet document landing stream. */
+  private val DocStream = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
+  /** A command that writes each `(id, bytes)` row `synthesize` makes from
+    * a documents parquet to `<outDir>/d<id>.<ext>`, `evenExt` for even ids
+    * and `oddExt` for odd ones. */
+  private def fixtures(name: String, evenExt: String, oddExt: String)(
+      synthesize: (SparkSession, DataFrame) => DataFrame): Command =
+    job(name, Seq("docsParquet", "outDir")) { (spark, a) =>
+      val outDir = a("outDir")
+      new java.io.File(outDir).mkdirs()
+      synthesize(spark, spark.read.parquet(a("docsParquet"))).foreachPartition { it: Iterator[Row] =>
+        it.foreach { r =>
+          val id = r.getLong(0)
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(outDir, s"d$id.${if (id % 2 == 0) evenExt else oddExt}"),
+            r.getAs[Array[Byte]](1))
+        }
+      }
+      println(s"[graft] $name: ${a("docsParquet")} -> $outDir")
+    }
+
+  /** A server command over archives landing in `landingDir`, run for
+    * `runSec` seconds (`defaultRunSec` when not given; 0 = forever). */
+  private def archiveServer(name: String, defaultRunSec: Int)(
+      start: (SparkSession, String, String, String) => StreamingQuery): Command =
+    job(name, Seq("landingDir", "outDir", "checkpointDir"), Seq("runSec")) { (spark, a) =>
+      val q = start(spark, a("landingDir"), a("outDir"), a("checkpointDir"))
+      println(s"[graft] ${name.stripPrefix("stream-")} server on ${a("landingDir")} -> ${a("outDir")}")
+      serve(q, a.int("runSec", defaultRunSec))
+    }
+
+  /** The `q_embedding` of row `vecId` of the command's embeddings parquet. */
+  private def queryVector(spark: SparkSession, a: Args): DataFrame =
+    spark.read.parquet(a("embeddingsParquet"))
+      .filter(col("vec_id") === a("vecId").toLong)
+      .select(col("embedding").as("q_embedding"))
+
+  /** A command that writes the frame it reads from its `in` argument to
+    * `<outDir>` as parquet. */
+  private def convert(name: String, in: String)(
+      frame: (SparkSession, String) => DataFrame): Command =
+    job(name, Seq(in, "outDir")) { (spark, a) =>
+      frame(spark, a(in)).write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] $name: ${a(in)} -> ${a("outDir")}")
+    }
+
+  private[graft] val commands: Seq[Command] = Seq(
+    job("generate", Seq("outDir", "nRows"), Seq("seed")) { (spark, a) =>
+      val outDir = a("outDir")
+      LogDataGenerator.toCsvLines(
+          LogDataGenerator.generate(spark, a("nRows").toLong, a.long("seed", 42L)))
         .write.mode("overwrite").text(outDir)
       println(s"[graft] wrote ${spark.read.text(outDir).count()} lines to $outDir")
-      spark.stop()
+    },
 
     // comma-separated roots spread the output (reference round-robins the
     // staging containers, Transforms/PartitionedContentSink.cs:54-66):
     // pid -> roots(pid % N)/pid=<pid>/; one root is the plain staging write
-    case "prepartition" :: inGlob :: roots :: colIdx :: n :: seed :: rest
-        if rest == Nil || rest == List("gzip") =>
-      val spark = session()
-      val written = PrePartition.runSpread(spark, inGlob, roots.split(',').toIndexedSeq,
-        PartitionConfig(colIdx.toInt, n.toInt, seed.toInt),
-        gzipOutput = rest.nonEmpty)
+    job("prepartition", Seq("inGlob", "roots", "colIdx", "maxPartitions", "seed"),
+        flags = Seq("gzip")) { (spark, a) =>
+      val written = PrePartition.runSpread(spark, a("inGlob"),
+        a("roots").split(',').toIndexedSeq, partitionConfig(a),
+        gzipOutput = a.has("gzip"))
       // records and bytes per partition, as the reference's perf counters
       written.toSeq.sortBy(_._1).foreach { case (pid, w) =>
         println(s"[graft] pid=$pid records=${w.records} bytes=${w.bytes}")
       }
-      println(s"[graft] prepartitioned $inGlob -> $roots (col=$colIdx n=$n seed=$seed)" +
-        s" records=${written.values.map(_.records).sum}")
-      spark.stop()
+      println(s"[graft] prepartitioned ${a("inGlob")} -> ${a("roots")} (col=${a("colIdx")} " +
+        s"n=${a("maxPartitions")} seed=${a("seed")}) records=${written.values.map(_.records).sum}")
+    },
 
-    case "split" :: inGlob :: outDir :: maxBytes :: rest =>
-      val spark = session()
+    job("split", Seq("inGlob", "outDir", "maxBytesPerShard"),
+        flags = Seq("header", "gzip")) { (spark, a) =>
       val cfg = operators.Split.SplitConfig(
-        maxBytesPerShard = maxBytes.toLong,
-        hasHeader = rest.contains("header"),
-        gzipOutput = rest.contains("gzip"))
-      val manifest = operators.Split.run(spark, inGlob, outDir, cfg)
+        maxBytesPerShard = a("maxBytesPerShard").toLong,
+        hasHeader = a.has("header"),
+        gzipOutput = a.has("gzip"))
+      val manifest = operators.Split.run(spark, a("inGlob"), a("outDir"), cfg)
       operators.Split.shardCount(manifest).show(false)
-      spark.stop()
+    },
 
-    case "validate" :: stagingDir :: Nil =>
-      val spark = session()
-      PrePartition.invariants(PrePartition.validationFrame(spark, stagingDir))
+    job("validate", Seq("stagingDir")) { (spark, a) =>
+      PrePartition.invariants(PrePartition.validationFrame(spark, a("stagingDir")))
         .show(false)
-      spark.stop()
+    },
 
     // the event-driven server mode (reference: ServiceBusServer) — watch a
     // landing dir, flush partitioned output every triggerSec seconds;
     // optional runSec bounds the server lifetime (0 = run forever).
-    case "stream" :: landing :: staging :: checkpoint :: colIdx :: n :: seed :: rest =>
-      val spark = session()
-      val triggerSec = rest.headOption.map(_.toInt).getOrElse(60)
-      val runSec = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
+    job("stream", Seq("landingDir", "stagingDir", "checkpointDir", "colIdx",
+        "maxPartitions", "seed"), Seq("triggerSec", "runSec")) { (spark, a) =>
+      val triggerSec = a.int("triggerSec", 60)
       val q = streaming.StreamingPrePartition.start(
-        spark, landing, staging, checkpoint,
-        PartitionConfig(colIdx.toInt, n.toInt, seed.toInt),
-        trigger = org.apache.spark.sql.streaming.Trigger
-          .ProcessingTime(s"$triggerSec seconds"))
-      println(s"[graft] streaming $landing -> $staging (trigger ${triggerSec}s)")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
+        spark, a("landingDir"), a("stagingDir"), a("checkpointDir"),
+        partitionConfig(a), trigger = Trigger.ProcessingTime(s"$triggerSec seconds"))
+      println(s"[graft] streaming ${a("landingDir")} -> ${a("stagingDir")} (trigger ${triggerSec}s)")
+      serve(q, a.int("runSec", 0))
+    },
 
     // landing agent: publish blob paths to a notification queue (the
     // reference's Event Grid blob-created event -> Service Bus message)
-    case "notify-publish" :: queueDir :: paths if paths.nonEmpty =>
-      val spark = session()
-      val seq = streaming.NotifyQueue.publish(spark, queueDir, paths)
-      println(s"[graft] published ${paths.length} path(s) to $queueDir as seq $seq")
-      spark.stop()
+    job("notify-publish", Seq("queueDir", "blobPath"), repeated = true) { (spark, a) =>
+      val seq = streaming.NotifyQueue.publish(spark, a("queueDir"), a.repeated)
+      println(s"[graft] published ${a.repeated.length} path(s) to ${a("queueDir")} as seq $seq")
+    },
 
     // object-store-safe publish (S3-class stores whose rename overwrites):
     // a uniquely-named spool entry; the consuming stream must run with
     // claimMode=spool so its driver sequences the spool
-    case "notify-publish-spool" :: queueDir :: paths if paths.nonEmpty =>
-      val spark = session()
-      val name = streaming.NotifyQueue.publishSpool(spark, queueDir, paths)
-      println(s"[graft] spooled ${paths.length} path(s) to $queueDir as $name")
-      spark.stop()
+    job("notify-publish-spool", Seq("queueDir", "blobPath"), repeated = true) { (spark, a) =>
+      val name = streaming.NotifyQueue.publishSpool(spark, a("queueDir"), a.repeated)
+      println(s"[graft] spooled ${a.repeated.length} path(s) to ${a("queueDir")} as $name")
+    },
 
     // event-driven server on the notification queue: per-trigger source
     // cost is O(new notifications), not O(landing-dir history)
-    case "stream-notify" :: queueDir :: staging :: checkpoint :: colIdx :: n :: seed :: rest =>
-      val spark = session()
-      val triggerSec = rest.headOption.map(_.toInt).getOrElse(60)
-      val runSec = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
-      val claimMode = rest.drop(2).headOption.getOrElse("rename")
+    job("stream-notify", Seq("queueDir", "stagingDir", "checkpointDir", "colIdx",
+        "maxPartitions", "seed"), Seq("triggerSec", "runSec", "claimMode")) { (spark, a) =>
+      val triggerSec = a.int("triggerSec", 60)
       val q = streaming.StreamingPrePartition.startNotified(
-        spark, queueDir, staging, checkpoint,
-        PartitionConfig(colIdx.toInt, n.toInt, seed.toInt),
-        trigger = org.apache.spark.sql.streaming.Trigger
-          .ProcessingTime(s"$triggerSec seconds"),
-        claimMode = claimMode)
-      println(s"[graft] streaming notify queue $queueDir -> $staging (trigger ${triggerSec}s)")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
+        spark, a("queueDir"), a("stagingDir"), a("checkpointDir"),
+        partitionConfig(a), trigger = Trigger.ProcessingTime(s"$triggerSec seconds"),
+        claimMode = a.opt("claimMode").getOrElse("rename"))
+      println(s"[graft] streaming notify queue ${a("queueDir")} -> ${a("stagingDir")} (trigger ${triggerSec}s)")
+      serve(q, a.int("runSec", 0))
+    },
 
     // the flagship LLM-corpus pipeline over a documents parquet
     // (doc_id, text, lang, ...): quality filter -> MinHash near-dup
     // removal -> per-language sequence packing; writes packed spans +
     // prints per-stream packing stats (the x15 composition, operable)
-    case "corpus-prep" :: inParquet :: outDir :: rest =>
-      val spark = session()
-      val minTokens = rest.headOption.map(_.toInt).getOrElse(25)
-      val threshold = rest.drop(1).headOption.map(_.toDouble).getOrElse(0.5)
-      val capacity = rest.drop(2).headOption.map(_.toInt).getOrElse(512)
+    job("corpus-prep", Seq("documentsParquet", "outDir"),
+        Seq("minTokens", "jaccardThreshold", "capacity")) { (spark, a) =>
+      val (inParquet, outDir) = (a("documentsParquet"), a("outDir"))
+      val minTokens = a.int("minTokens", 25)
+      val threshold = a.double("jaccardThreshold", 0.5)
+      val capacity = a.int("capacity", 512)
       val docs = spark.read.parquet(inParquet)
-      val q = docs.filter(operators.Pack.tokenCount(
-        org.apache.spark.sql.functions.col("text")) >= minTokens)
+      val q = docs.filter(operators.Pack.tokenCount(col("text")) >= minTokens)
       val surv = operators.Dedup.dedupSurvivors(q, "doc_id",
         operators.Dedup.minHashLsh(q, "doc_id", "text", threshold = threshold))
       val spans = operators.Pack.packedSpans(
@@ -176,7 +323,7 @@ object GraftCli {
         spark.read.parquet(s"$outDir/packed_spans"), "lang", capacity).show(false)
       println(s"[graft] corpus-prep $inParquet -> $outDir " +
         s"(minTokens=$minTokens threshold=$threshold capacity=$capacity)")
-      spark.stop()
+    },
 
     // the FULL training-run preparation in one command — what a user
     // actually runs before a pretraining job: quality gate → MinHash
@@ -185,562 +332,472 @@ object GraftCli {
     // → context-window packing of train → manifest with per-stage and
     // per-source counts. Every stage is one of the gated operators; the
     // composition itself is spec-pinned (Round11OpsSpec invariants).
-    case "prepare-run" :: docsParquet :: benchParquet :: outDir :: rest =>
-      val spark = session()
-      val minTokens = rest.headOption.map(_.toInt).getOrElse(25)
-      val threshold = rest.drop(1).headOption.map(_.toDouble).getOrElse(0.5)
-      val capacity = rest.drop(2).headOption.map(_.toInt).getOrElse(512)
-      val valPct = rest.drop(3).headOption.map(_.toInt).getOrElse(5)
-      val semTau = rest.drop(4).headOption.map(_.toDouble)
-        .getOrElse(Double.NaN)
+    job("prepare-run", Seq("documentsParquet", "benchParquet", "outDir"),
+        Seq("minTokens", "jaccardThreshold", "capacity", "valPct", "semanticTau")) { (spark, a) =>
       operators.PrepareRun.run(spark,
-          spark.read.parquet(docsParquet),
-          spark.read.parquet(benchParquet),
-          outDir, minTokens, threshold, capacity, valPct, semTau)
+          spark.read.parquet(a("documentsParquet")),
+          spark.read.parquet(a("benchParquet")),
+          a("outDir"), a.int("minTokens", 25), a.double("jaccardThreshold", 0.5),
+          a.int("capacity", 512), a.int("valPct", 5), a.double("semanticTau", Double.NaN))
         .foreach { case (st, c) => println(s"[graft] prepare-run $st: $c") }
-      spark.stop()
+    },
 
-    case "prepare-run-wave" :: waveParquet :: outDir :: waveIdStr :: Nil =>
-      val spark = session()
+    job("prepare-run-wave", Seq("waveParquet", "outDir", "waveId")) { (spark, a) =>
       operators.PrepareRun.runWave(spark,
-          spark.read.parquet(waveParquet), outDir, waveIdStr.toInt)
+          spark.read.parquet(a("waveParquet")), a("outDir"), a("waveId").toInt)
         .foreach { case (st, c) =>
-          println(s"[graft] prepare-run wave $waveIdStr $st: $c") }
-      spark.stop()
+          println(s"[graft] prepare-run wave ${a("waveId")} $st: $c") }
+    },
 
     // fold committed wave=N dirs into a fresh wave=0 base per table
     // (the small-file maintenance pass, under the marker protocol)
-    case "prepare-run-compact" :: outDir :: rest =>
-      val spark = session()
-      val target = rest.headOption.map(_.toLong)
-        .getOrElse(128L * 1024 * 1024)
-      operators.PrepareRun.compactRun(spark, outDir, target)
-        .foreach { case (t, (b, a)) =>
-          println(s"[graft] prepare-run-compact $t: $b -> $a files") }
-      spark.stop()
+    job("prepare-run-compact", Seq("outDir"), Seq("targetBytes")) { (spark, a) =>
+      operators.PrepareRun.compactRun(spark, a("outDir"),
+          a.long("targetBytes", 128L * 1024 * 1024))
+        .foreach { case (t, (b, af)) =>
+          println(s"[graft] prepare-run-compact $t: $b -> $af files") }
+    },
 
     // per-ingest-wave delta dedup: report near-dups of the new batch
     // against the standing corpus (cross pairs only)
-    case "dedup-delta" :: corpusParquet :: batchParquet :: outDir :: rest =>
-      val spark = session()
-      val threshold = rest.headOption.map(_.toDouble).getOrElse(0.5)
+    job("dedup-delta", Seq("corpusParquet", "batchParquet", "outDir"),
+        Seq("jaccardThreshold")) { (spark, a) =>
+      val threshold = a.double("jaccardThreshold", 0.5)
+      val outDir = a("outDir")
       val pairs = operators.Dedup.incrementalNearDup(
-        spark.read.parquet(corpusParquet), spark.read.parquet(batchParquet),
+        spark.read.parquet(a("corpusParquet")), spark.read.parquet(a("batchParquet")),
         "doc_id", "text", threshold = threshold)
       pairs.write.mode("overwrite").parquet(s"$outDir/delta_pairs")
       val n = spark.read.parquet(s"$outDir/delta_pairs").count()
-      println(s"[graft] dedup-delta $batchParquet vs $corpusParquet: " +
+      println(s"[graft] dedup-delta ${a("batchParquet")} vs ${a("corpusParquet")}: " +
         s"$n cross near-dup pairs (threshold=$threshold) -> $outDir/delta_pairs")
-      spark.stop()
+    },
 
     // benchmark decontamination: drop training docs sharing an n-gram
     // with the benchmark set; `bloom` routes through the broadcast-bloom
     // prefilter (identical result, corpus-scale shuffle volume)
-    case "decontaminate" :: trainParquet :: benchParquet :: outDir :: rest =>
-      val spark = session()
-      val n = rest.filter(_.forall(_.isDigit)).headOption.map(_.toInt).getOrElse(8)
-      val train = spark.read.parquet(trainParquet)
-      val bench = spark.read.parquet(benchParquet)
+    job("decontaminate", Seq("trainParquet", "benchParquet", "outDir"),
+        Seq("nGram"), Seq("bloom")) { (spark, a) =>
+      val n = a.int("nGram", 8)
+      val train = spark.read.parquet(a("trainParquet"))
+      val bench = spark.read.parquet(a("benchParquet"))
       val clean =
-        if (rest.contains("bloom"))
+        if (a.has("bloom"))
           operators.Contamination.decontaminateBloom(train, bench, "doc_id", "text", n)
         else operators.Contamination.decontaminate(train, bench, "doc_id", "text", n)
-      clean.write.mode("overwrite").parquet(s"$outDir/clean")
-      println(s"[graft] decontaminate: ${spark.read.parquet(s"$outDir/clean").count()} " +
-        s"of ${train.count()} docs survive (n=$n, bloom=${rest.contains("bloom")})")
-      spark.stop()
+      clean.write.mode("overwrite").parquet(s"${a("outDir")}/clean")
+      println(s"[graft] decontaminate: ${spark.read.parquet(s"${a("outDir")}/clean").count()} " +
+        s"of ${train.count()} docs survive (n=$n, bloom=${a.has("bloom")})")
+    },
 
     // Z-order layout write: cluster a parquet table on the Morton
     // interleave of two (numeric, pre-bucketed to 16 bits) columns so
     // row-group min/max stats prune scans on BOTH dimensions
-    case "zorder-write" :: inParquet :: outDir :: colA :: colB :: rest =>
-      val spark = session()
-      import org.apache.spark.sql.functions.col
+    job("zorder-write", Seq("inParquet", "outDir", "colA", "colB"),
+        Seq("partitions")) { (spark, a) =>
       // driver testdata stores ns timestamps; read them as longs rather
       // than refuse the file (same accommodation as QueryDef.t)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val parts = rest.headOption.map(_.toInt).getOrElse(0)
-      operators.Layout.zorderBy(spark.read.parquet(inParquet),
-          col(colA), col(colB), parts)
+      operators.Layout.zorderBy(spark.read.parquet(a("inParquet")),
+          col(a("colA")), col(a("colB")), a.int("partitions", 0))
         .drop("zkey")
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] zorder-write $inParquet -> $outDir (dims $colA, $colB)")
-      spark.stop()
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] zorder-write ${a("inParquet")} -> ${a("outDir")} " +
+        s"(dims ${a("colA")}, ${a("colB")})")
+    },
 
     // link-analysis over an (src, dst) parquet edge list: damped
     // PageRank ranks written as (node, r) integer rank units
-    case "graph-pagerank" :: edgesParquet :: outDir :: rest =>
-      val spark = session()
+    job("graph-pagerank", Seq("edgesParquet", "outDir"), Seq("iters", "tolUnits"),
+        Seq("dangling")) { (spark, a) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val iters = rest.headOption.map(_.toInt).getOrElse(10)
-      val tol = rest.lift(1).map(_.toLong).getOrElse(0L)
-      val dangling = rest.lift(2).contains("dangling")
-      operators.Graph.pagerank(spark.read.parquet(edgesParquet), iters,
+      val iters = a.int("iters", 10)
+      val tol = a.long("tolUnits", 0L)
+      val dangling = a.has("dangling")
+      operators.Graph.pagerank(spark.read.parquet(a("edgesParquet")), iters,
           tolUnits = tol, redistributeDangling = dangling)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] graph-pagerank $edgesParquet -> $outDir " +
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] graph-pagerank ${a("edgesParquet")} -> ${a("outDir")} " +
         s"($iters iters max, tol=$tol, dangling=$dangling)")
-      spark.stop()
+    },
 
     // seeded relevance: personalized PageRank from a (seed) parquet
-    case "graph-ppr" :: edgesParquet :: seedsParquet :: outDir :: rest =>
-      val spark = session()
+    job("graph-ppr", Seq("edgesParquet", "seedsParquet", "outDir"), Seq("iters")) { (spark, a) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val iters = rest.headOption.map(_.toInt).getOrElse(10)
+      val iters = a.int("iters", 10)
       operators.Graph.personalizedPagerank(
-          spark.read.parquet(edgesParquet),
-          spark.read.parquet(seedsParquet), iters)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] graph-ppr $edgesParquet seeds=$seedsParquet -> $outDir ($iters iters)")
-      spark.stop()
+          spark.read.parquet(a("edgesParquet")),
+          spark.read.parquet(a("seedsParquet")), iters)
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] graph-ppr ${a("edgesParquet")} seeds=${a("seedsParquet")} -> ${a("outDir")} ($iters iters)")
+    },
 
     // dense-core extraction: peel nodes of degree < k to the fixpoint
-    case "graph-kcore" :: edgesParquet :: outDir :: rest =>
-      val spark = session()
+    job("graph-kcore", Seq("edgesParquet", "outDir"), Seq("k")) { (spark, a) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val k = rest.headOption.map(_.toInt).getOrElse(4)
-      operators.Graph.kcore(spark.read.parquet(edgesParquet), k)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] graph-kcore $edgesParquet -> $outDir (k=$k)")
-      spark.stop()
+      val k = a.int("k", 4)
+      operators.Graph.kcore(spark.read.parquet(a("edgesParquet")), k)
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] graph-kcore ${a("edgesParquet")} -> ${a("outDir")} (k=$k)")
+    },
 
     // HITS hub/authority scoring over a directed (src, dst) edge list
-    case "graph-hits" :: edgesParquet :: outDir :: rest =>
-      val spark = session()
+    job("graph-hits", Seq("edgesParquet", "outDir"), Seq("iters")) { (spark, a) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val iters = rest.headOption.map(_.toInt).getOrElse(10)
-      operators.Graph.hits(spark.read.parquet(edgesParquet), iters)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] graph-hits $edgesParquet -> $outDir ($iters iters)")
-      spark.stop()
+      val iters = a.int("iters", 10)
+      operators.Graph.hits(spark.read.parquet(a("edgesParquet")), iters)
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] graph-hits ${a("edgesParquet")} -> ${a("outDir")} ($iters iters)")
+    },
 
     // seed expansion: BFS hop labels within maxDepth of a (source) parquet
-    case "graph-bfs" :: edgesParquet :: seedsParquet :: outDir :: rest =>
-      val spark = session()
+    job("graph-bfs", Seq("edgesParquet", "seedsParquet", "outDir"), Seq("maxDepth")) { (spark, a) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val depth = rest.headOption.map(_.toInt).getOrElse(3)
-      operators.Graph.bfs(spark.read.parquet(edgesParquet),
-          spark.read.parquet(seedsParquet), depth)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] graph-bfs $edgesParquet seeds=$seedsParquet -> $outDir (depth<=$depth)")
-      spark.stop()
+      val depth = a.int("maxDepth", 3)
+      operators.Graph.bfs(spark.read.parquet(a("edgesParquet")),
+          spark.read.parquet(a("seedsParquet")), depth)
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] graph-bfs ${a("edgesParquet")} seeds=${a("seedsParquet")} -> ${a("outDir")} (depth<=$depth)")
+    },
 
     // connected components over a (src, dst) edge list (bidirected
     // internally: CLI callers hand an undirected relation)
-    case "graph-components" :: edgesParquet :: outDir :: rest =>
-      val spark = session()
+    job("graph-components", Seq("edgesParquet", "outDir"), Seq("maxRounds")) { (spark, a) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val maxRounds = rest.headOption.map(_.toInt).getOrElse(64)
-      import org.apache.spark.sql.functions.{array, col, explode, struct}
-      val e = spark.read.parquet(edgesParquet)
+      import org.apache.spark.sql.functions.{array, explode, struct}
+      val e = spark.read.parquet(a("edgesParquet"))
       val bidirected = e.select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
         .select("e.src", "e.dst")
-      operators.Graph.connectedComponents(bidirected, maxRounds)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] graph-components $edgesParquet -> $outDir")
-      spark.stop()
+      operators.Graph.connectedComponents(bidirected, a.int("maxRounds", 64))
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] graph-components ${a("edgesParquet")} -> ${a("outDir")}")
+    },
 
     // multi-source weighted shortest paths over (src, dst, w)
-    case "graph-sssp" :: edgesParquet :: seedsParquet :: outDir :: rest =>
-      val spark = session()
+    job("graph-sssp", Seq("edgesParquet", "seedsParquet", "outDir"), Seq("maxRounds")) { (spark, a) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val maxRounds = rest.headOption.map(_.toInt).getOrElse(64)
-      operators.Graph.shortestPaths(spark.read.parquet(edgesParquet),
-          spark.read.parquet(seedsParquet), maxRounds)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] graph-sssp $edgesParquet seeds=$seedsParquet -> $outDir (rounds<=$maxRounds)")
-      spark.stop()
+      val maxRounds = a.int("maxRounds", 64)
+      operators.Graph.shortestPaths(spark.read.parquet(a("edgesParquet")),
+          spark.read.parquet(a("seedsParquet")), maxRounds)
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] graph-sssp ${a("edgesParquet")} seeds=${a("seedsParquet")} -> ${a("outDir")} (rounds<=$maxRounds)")
+    },
 
     // manifest maintenance: dedupe + rewrite segments, optional retention
-    case "manifest-compact" :: shardDir :: rest =>
-      val spark = session()
-      val retainDays = rest.headOption.map(_.toLong)
+    job("manifest-compact", Seq("shardDir"), Seq("retainDays")) { (spark, a) =>
+      val retainDays = a.opt("retainDays").map(_.toLong)
       val retainMs = retainDays.map(_ * 86400L * 1000L).getOrElse(Long.MaxValue)
-      val (before, after) = operators.Split.compactManifest(spark, shardDir, retainMs)
-      println(s"[graft] manifest-compact $shardDir: $before -> $after segments" +
+      val (before, after) = operators.Split.compactManifest(spark, a("shardDir"), retainMs)
+      println(s"[graft] manifest-compact ${a("shardDir")}: $before -> $after segments" +
         retainDays.map(d => s" (retained last $d days)").getOrElse(""))
-      spark.stop()
+    },
 
     // per-node triangle counts over an undirected (src, dst) edge list
-    case "graph-triangles" :: edgesParquet :: outDir :: Nil =>
-      val spark = session()
+    job("graph-triangles", Seq("edgesParquet", "outDir")) { (spark, a) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      operators.Graph.triangles(spark.read.parquet(edgesParquet))
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] graph-triangles $edgesParquet -> $outDir")
-      spark.stop()
+      operators.Graph.triangles(spark.read.parquet(a("edgesParquet")))
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] graph-triangles ${a("edgesParquet")} -> ${a("outDir")}")
+    },
 
     // flatten a (node, parent) forest to (node, root, depth)
-    case "graph-ancestors" :: parentsParquet :: outDir :: rest =>
-      val spark = session()
+    job("graph-ancestors", Seq("parentsParquet", "outDir"), Seq("rounds")) { (spark, a) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val parents = spark.read.parquet(parentsParquet)
+      val parents = spark.read.parquet(a("parentsParquet"))
       // explicit rounds override; default derives ceil(log2(n)) from the data
-      val flat = rest.headOption.map(_.toInt)
+      val flat = a.opt("rounds").map(_.toInt)
         .map(operators.Graph.rootsAndDepth(parents, _))
         .getOrElse(operators.Graph.rootsAndDepth(parents))
-      flat.write.mode("overwrite").parquet(outDir)
-      println(s"[graft] graph-ancestors $parentsParquet -> $outDir" +
-        rest.headOption.map(r => s" ($r rounds)").getOrElse(" (derived rounds)"))
-      spark.stop()
+      flat.write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] graph-ancestors ${a("parentsParquet")} -> ${a("outDir")}" +
+        a.opt("rounds").map(r => s" ($r rounds)").getOrElse(" (derived rounds)"))
+    },
 
     // small-files maintenance: rewrite a parquet dir to ~targetMB files,
     // optionally range-sorted so footer min/max pruning survives
-    case "compact" :: inDir :: outDir :: rest =>
-      val spark = session()
+    job("compact", Seq("inDir", "outDir"), Seq("targetMB", "sortCol1,sortCol2,...")) { (spark, a) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val targetMb = rest.headOption.map(_.toLong).getOrElse(128L)
-      val sortCols = rest.drop(1).headOption
-        .map(_.split(",").toSeq).getOrElse(Nil)
-      val n = operators.Layout.compact(spark, inDir, outDir,
+      val targetMb = a.long("targetMB", 128L)
+      val sortCols = a.opt("sortCol1,sortCol2,...").map(_.split(",").toSeq).getOrElse(Nil)
+      val n = operators.Layout.compact(spark, a("inDir"), a("outDir"),
         targetMb * 1024 * 1024, sortCols)
-      println(s"[graft] compact $inDir -> $outDir ($n files, " +
+      println(s"[graft] compact ${a("inDir")} -> ${a("outDir")} ($n files, " +
         s"target ${targetMb}MB${if (sortCols.nonEmpty) s", sorted by ${sortCols.mkString(",")}" else ""})")
-      spark.stop()
+    },
 
     // build the standing dedup index once (offline): (id, shingles,
     // MinHash signature) parquet every delta-dedup server loads at startup
-    case "dedup-index-build" :: docsParquet :: indexDir :: Nil =>
-      val spark = session()
+    job("dedup-index-build", Seq("docsParquet", "indexDir")) { (spark, a) =>
       operators.Dedup.writeIndex(
-        spark.read.parquet(docsParquet), "doc_id", "text", indexDir)
-      println(s"[graft] dedup index: $docsParquet -> $indexDir " +
-        s"(${spark.read.parquet(indexDir).count()} docs)")
-      spark.stop()
+        spark.read.parquet(a("docsParquet")), "doc_id", "text", a("indexDir"))
+      println(s"[graft] dedup index: ${a("docsParquet")} -> ${a("indexDir")} " +
+        s"(${spark.read.parquet(a("indexDir")).count()} docs)")
+    },
 
-    // build a persisted IVF ANN index: inverted lists as list_id-
-    // partitioned parquet + a centroids side table
     // append an embedding wave to a persisted IVF index (frozen centroids)
-    case "ann-index-append" :: embParquet :: indexDir :: Nil =>
-      val spark = session()
+    job("ann-index-append", Seq("embeddingsParquet", "indexDir")) { (spark, a) =>
       val drift = operators.Similarity.appendIvfIndex(
-        spark.read.parquet(embParquet), indexDir)
-      println(s"[graft] ivf append: $embParquet -> $indexDir")
+        spark.read.parquet(a("embeddingsParquet")), a("indexDir"))
+      println(s"[graft] ivf append: ${a("embeddingsParquet")} -> ${a("indexDir")}")
       drift.foreach { d =>
         println(s"[graft] drift: n=${d.nBatch} kl_micro=${d.klMicro} " +
           s"retrain=${d.retrain}")
       }
-      spark.stop()
+    },
 
-    case "prepare-run-sync-ann" :: outDir :: indexDir :: rest =>
-      // incremental ANN-index sync against the run's committed waves
-      // (builds on first call; appends only new waves; x84-gated retrain)
-      val spark = session()
-      val nlist = rest.headOption.map(_.toInt).getOrElse(16)
-      val trainIters = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
+    // incremental ANN-index sync against the run's committed waves
+    // (builds on first call; appends only new waves; x84-gated retrain)
+    job("prepare-run-sync-ann", Seq("outDir", "indexDir"), Seq("nlist", "trainIters")) { (spark, a) =>
       val m = operators.PrepareRun.syncAnnIndex(
-        spark, outDir, indexDir, nlist, trainIters)
-      println(s"[graft] ann sync: $outDir -> $indexDir " +
+        spark, a("outDir"), a("indexDir"), a.int("nlist", 16), a.int("trainIters", 0))
+      println(s"[graft] ann sync: ${a("outDir")} -> ${a("indexDir")} " +
         m.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" "))
-      spark.stop()
+    },
 
-    case "ann-index-build" :: embParquet :: indexDir :: rest =>
-      val spark = session()
-      val nlist = rest.headOption.map(_.toInt).getOrElse(16)
+    // build a persisted IVF ANN index: inverted lists as list_id-
+    // partitioned parquet + a centroids side table
+    job("ann-index-build", Seq("embeddingsParquet", "indexDir"), Seq("nlist", "trainIters")) { (spark, a) =>
+      val nlist = a.int("nlist", 16)
       // trainIters > 0 runs Lloyd refinement before the layout write —
       // the x68 gate measures what that buys (panel recall 13/40 -> 22/40
       // at one round on the bench fixture)
-      val trainIters = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
+      val trainIters = a.int("trainIters", 0)
       operators.Similarity.writeIvfIndex(
-        spark.read.parquet(embParquet), indexDir, nlist, trainIters)
-      println(s"[graft] ivf index: $embParquet -> $indexDir " +
+        spark.read.parquet(a("embeddingsParquet")), a("indexDir"), nlist, trainIters)
+      println(s"[graft] ivf index: ${a("embeddingsParquet")} -> ${a("indexDir")} " +
         s"(nlist=$nlist trainIters=$trainIters)")
-      spark.stop()
+    },
 
     // binary (sign-bit) index: 16-byte-row codes table for the Hamming
     // prefilter scan, full vectors read only for the rerank survivors
-    case "ann-binary-build" :: embParquet :: indexDir :: Nil =>
-      val spark = session()
+    job("ann-binary-build", Seq("embeddingsParquet", "indexDir")) { (spark, a) =>
       operators.Similarity.writeBinaryIndex(
-        spark.read.parquet(embParquet), indexDir)
-      println(s"[graft] binary index: $embParquet -> $indexDir")
-      spark.stop()
+        spark.read.parquet(a("embeddingsParquet")), a("indexDir"))
+      println(s"[graft] binary index: ${a("embeddingsParquet")} -> ${a("indexDir")}")
+    },
 
-    case "ann-binary-append" :: embParquet :: indexDir :: Nil =>
-      val spark = session()
+    job("ann-binary-append", Seq("embeddingsParquet", "indexDir")) { (spark, a) =>
       operators.Similarity.appendBinaryIndex(
-        spark.read.parquet(embParquet), indexDir)
-      println(s"[graft] binary append: $embParquet -> $indexDir")
-      spark.stop()
+        spark.read.parquet(a("embeddingsParquet")), a("indexDir"))
+      println(s"[graft] binary append: ${a("embeddingsParquet")} -> ${a("indexDir")}")
+    },
 
-    case "ann-compact" :: indexDir :: rest =>
-      val spark = session()
-      val targetBytes = rest.headOption.map(_.toLong)
-        .getOrElse(128L * 1024 * 1024)
+    job("ann-compact", Seq("indexDir"), Seq("targetBytes")) { (spark, a) =>
       val report = operators.Similarity.compactIndex(
-        spark, indexDir, targetBytes)
+        spark, a("indexDir"), a.long("targetBytes", 128L * 1024 * 1024))
       report.foreach { case (tbl, (before, after)) =>
         println(s"[graft] ann-compact $tbl: $before -> $after files")
       }
       if (report.isEmpty)
-        println(s"[graft] ann-compact: no index tables under $indexDir")
-      spark.stop()
+        println(s"[graft] ann-compact: no index tables under ${a("indexDir")}")
+    },
 
-    case "ann-binary-query" :: indexDir :: embParquet :: qidStr :: rest =>
-      val spark = session()
-      import org.apache.spark.sql.functions.col
-      val k = rest.headOption.map(_.toInt).getOrElse(5)
-      val prefilter = rest.drop(1).headOption.map(_.toInt).getOrElse(40)
-      val q = spark.read.parquet(embParquet)
-        .filter(col("vec_id") === qidStr.toLong)
-        .select(col("embedding").as("q_embedding"))
+    job("ann-binary-query", Seq("indexDir", "embeddingsParquet", "vecId"),
+        Seq("k", "prefilter")) { (spark, a) =>
+      val k = a.int("k", 5)
       operators.Similarity
-        .binaryIndexTopK(spark, indexDir, q, k, prefilter)
+        .binaryIndexTopK(spark, a("indexDir"), queryVector(spark, a), k, a.int("prefilter", 40))
         .show(k, false)
-      spark.stop()
+    },
 
     // IVF+PQ index: lists carry 8-byte PQ codes next to the vectors, so
     // the query's ADC shortlist scan column-prunes to ~8 B/vector
-    case "ann-index-build-pq" :: embParquet :: indexDir :: rest =>
-      val spark = session()
-      val nlist = rest.headOption.map(_.toInt).getOrElse(8)
-      val nSub = rest.drop(1).headOption.map(_.toInt).getOrElse(8)
-      val trainIters = rest.drop(2).headOption.map(_.toInt).getOrElse(0)
+    job("ann-index-build-pq", Seq("embeddingsParquet", "indexDir"),
+        Seq("nlist", "nSub", "trainIters")) { (spark, a) =>
+      val nlist = a.int("nlist", 8)
+      val nSub = a.int("nSub", 8)
+      val trainIters = a.int("trainIters", 0)
       operators.Similarity.writeIvfPqIndex(
-        spark.read.parquet(embParquet), indexDir, nlist, nSub,
+        spark.read.parquet(a("embeddingsParquet")), a("indexDir"), nlist, nSub,
         trainIters = trainIters)
-      println(s"[graft] ivf+pq index: $embParquet -> $indexDir " +
+      println(s"[graft] ivf+pq index: ${a("embeddingsParquet")} -> ${a("indexDir")} " +
         s"(nlist=$nlist nSub=$nSub trainIters=$trainIters)")
-      spark.stop()
+    },
 
-    case "ann-index-append-pq" :: embParquet :: indexDir :: Nil =>
-      // wave append under BOTH frozen quantizers (coarse centroids and
-      // PQ codebook); prints the x84 drift report
-      val spark = session()
+    // wave append under BOTH frozen quantizers (coarse centroids and
+    // PQ codebook); prints the x84 drift report
+    job("ann-index-append-pq", Seq("embeddingsParquet", "indexDir")) { (spark, a) =>
       val rep = operators.Similarity.appendIvfPqIndex(
-        spark.read.parquet(embParquet), indexDir)
-      println(s"[graft] ivf+pq append: $embParquet -> $indexDir " +
+        spark.read.parquet(a("embeddingsParquet")), a("indexDir"))
+      println(s"[graft] ivf+pq append: ${a("embeddingsParquet")} -> ${a("indexDir")} " +
         rep.map(r => s"(n=${r.nBatch} kl_micro=${r.klMicro} " +
           s"retrain=${r.retrain})").getOrElse("(no build_dist)"))
-      spark.stop()
+    },
 
-    case "ann-query-pq" :: indexDir :: embParquet :: vecId :: k :: rest =>
-      val spark = session()
-      import org.apache.spark.sql.functions.col
-      val nprobe = rest.headOption.map(_.toInt).getOrElse(4)
-      val query = spark.read.parquet(embParquet)
-        .filter(col("vec_id") === vecId.toLong)
-        .select(col("embedding").as("q_embedding"))
-      operators.Similarity.ivfPqIndexTopK(spark, indexDir, query, k.toInt, nprobe)
+    job("ann-query-pq", Seq("indexDir", "embeddingsParquet", "vecId", "k"),
+        Seq("nprobe")) { (spark, a) =>
+      operators.Similarity.ivfPqIndexTopK(spark, a("indexDir"), queryVector(spark, a),
+          a("k").toInt, a.int("nprobe", 4))
         .show(false)
-      spark.stop()
+    },
 
     // top-k query against a persisted IVF index; the query vector is
     // fetched by id from an embeddings parquet
-    case "ann-query" :: indexDir :: embParquet :: vecId :: k :: rest =>
-      val spark = session()
-      import org.apache.spark.sql.functions.col
-      val nprobe = rest.headOption.map(_.toInt).getOrElse(4)
-      val query = spark.read.parquet(embParquet)
-        .filter(col("vec_id") === vecId.toLong)
-        .select(col("embedding").as("q_embedding"))
-      operators.Similarity.ivfIndexTopK(spark, indexDir, query, k.toInt, nprobe)
+    job("ann-query", Seq("indexDir", "embeddingsParquet", "vecId", "k"),
+        Seq("nprobe")) { (spark, a) =>
+      operators.Similarity.ivfIndexTopK(spark, a("indexDir"), queryVector(spark, a),
+          a("k").toInt, a.int("nprobe", 4))
         .show(false)
-      spark.stop()
+    },
+
+    // continuous latest-per-key materialized view over a parquet landing
+    // stream (schema inferred from the first landed file)
+    job("stream-upsert", Seq("landingDir", "tableDir", "checkpointDir", "keyCol", "tsCol"),
+        Seq("nBuckets", "runSec")) { (spark, a) =>
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val landingDir = a("landingDir")
+      val nBuckets = a.int("nBuckets", 64)
+      val schema = spark.read.parquet(landingDir).schema
+      val stream = spark.readStream.schema(schema).parquet(landingDir)
+      val q = streaming.StreamingAnalytics.upsertLatest(
+        stream, a("keyCol"), a("tsCol"), a("tableDir"), a("checkpointDir"), nBuckets)
+      println(s"[graft] upsert server on $landingDir -> ${a("tableDir")} " +
+        s"(key=${a("keyCol")} ts=${a("tsCol")} buckets=$nBuckets)")
+      serve(q, a.int("runSec", 0))
+    },
+
+    // exactly-once corpus append: landing docs dedup exactly (content
+    // hash) against the persisted corpus table, novel rows append
+    job("stream-append-unique", Seq("landingDir", "corpusTableDir", "checkpointDir"),
+        Seq("nBuckets", "runSec")) { (spark, a) =>
+      val nBuckets = a.int("nBuckets", 64)
+      val stream = spark.readStream.schema(DocStream).parquet(a("landingDir"))
+      val q = streaming.StreamingAnalytics.appendUnique(
+        stream, "text", "doc_id", a("corpusTableDir"), a("checkpointDir"), nBuckets)
+      println(s"[graft] append-unique server on ${a("landingDir")} -> " +
+        s"${a("corpusTableDir")} (buckets=$nBuckets)")
+      serve(q, a.int("runSec", 0))
+    },
+
+    // streaming quality gate: docs landing as parquet route to pass /
+    // quarantine per-batch dirs (idempotent overwrite on replay)
+    job("stream-quality-route", Seq("landingDir", "passDir", "quarantineDir", "checkpointDir"),
+        Seq("minWords", "runSec")) { (spark, a) =>
+      val minWords = a.int("minWords", 5)
+      val stream = spark.readStream.schema(DocStream).parquet(a("landingDir"))
+      val q = streaming.StreamingAnalytics.qualityRoute(
+        stream, a("passDir"), a("quarantineDir"), a("checkpointDir"), minWords = minWords)
+      println(s"[graft] quality-route server on ${a("landingDir")} -> " +
+        s"${a("passDir")} | ${a("quarantineDir")} (minWords=$minWords)")
+      serve(q, a.int("runSec", 0))
+    },
 
     // streaming delta dedup server: flag near-dups of each landing
     // micro-batch against the standing corpus. The corpus argument is
     // either raw documents parquet (sketched at startup) or a
     // `dedup-index-build` output (detected by its `sig` column — loaded,
     // never re-sketched).
-    // continuous latest-per-key materialized view over a parquet landing
-    // stream (schema inferred from the first landed file)
-    case "stream-upsert" :: landingDir :: tableDir :: checkpoint :: keyCol :: tsCol :: rest =>
-      val spark = session()
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val nBuckets = rest.headOption.map(_.toInt).getOrElse(64)
-      val runSec = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
-      val schema = spark.read.parquet(landingDir).schema
-      val stream = spark.readStream.schema(schema).parquet(landingDir)
-      val q = streaming.StreamingAnalytics.upsertLatest(
-        stream, keyCol, tsCol, tableDir, checkpoint, nBuckets)
-      println(s"[graft] upsert server on $landingDir -> $tableDir " +
-        s"(key=$keyCol ts=$tsCol buckets=$nBuckets)")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-
-    // exactly-once corpus append: landing docs dedup exactly (content
-    // hash) against the persisted corpus table, novel rows append
-    case "stream-append-unique" :: landingDir :: tableDir :: checkpoint :: rest =>
-      val spark = session()
-      val nBuckets = rest.headOption.map(_.toInt).getOrElse(64)
-      val runSec = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val stream = spark.readStream.schema(docSchema).parquet(landingDir)
-      val q = streaming.StreamingAnalytics.appendUnique(
-        stream, "text", "doc_id", tableDir, checkpoint, nBuckets)
-      println(s"[graft] append-unique server on $landingDir -> $tableDir " +
-        s"(buckets=$nBuckets)")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
-
-    // streaming quality gate: docs landing as parquet route to pass /
-    // quarantine per-batch dirs (idempotent overwrite on replay)
-    case "stream-quality-route" :: landingDir :: passDir :: quarDir :: checkpoint :: rest =>
-      val spark = session()
-      val minWords = rest.headOption.map(_.toInt).getOrElse(5)
-      val runSec = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val stream = spark.readStream.schema(docSchema).parquet(landingDir)
-      val q = streaming.StreamingAnalytics.qualityRoute(
-        stream, passDir, quarDir, checkpoint, minWords = minWords)
-      println(s"[graft] quality-route server on $landingDir -> " +
-        s"$passDir | $quarDir (minWords=$minWords)")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
-
-    case "stream-dedup-delta" :: corpusParquet :: landingDir :: outDir :: checkpoint :: rest =>
-      val spark = session()
-      val threshold = rest.headOption.map(_.toDouble).getOrElse(0.5)
-      val runSec = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
-      val corpus = spark.read.parquet(corpusParquet)
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
+    job("stream-dedup-delta", Seq("corpusParquetOrIndex", "landingDir", "outDir", "checkpointDir"),
+        Seq("threshold", "runSec")) { (spark, a) =>
+      val threshold = a.double("threshold", 0.5)
+      val corpus = spark.read.parquet(a("corpusParquetOrIndex"))
       val isIndex = corpus.columns.contains("sig")
       val stream = spark.readStream
-        .schema(if (isIndex) docSchema else corpus.schema)
-        .parquet(landingDir)
+        .schema(if (isIndex) DocStream else corpus.schema)
+        .parquet(a("landingDir"))
       val q =
         if (isIndex) streaming.StreamingAnalytics.nearDupIngestIndexed(
-          stream, corpus, "doc_id", "text", outDir, checkpoint, threshold)
+          stream, corpus, "doc_id", "text", a("outDir"), a("checkpointDir"), threshold)
         else streaming.StreamingAnalytics.nearDupIngest(
-          stream, corpus, "doc_id", "text", outDir, checkpoint, threshold)
-      println(s"[graft] delta-dedup server on $landingDir vs $corpusParquet " +
-        s"(index=$isIndex) -> $outDir")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
+          stream, corpus, "doc_id", "text", a("outDir"), a("checkpointDir"), threshold)
+      println(s"[graft] delta-dedup server on ${a("landingDir")} vs " +
+        s"${a("corpusParquetOrIndex")} (index=$isIndex) -> ${a("outDir")}")
+      serve(q, a.int("runSec", 0))
+    },
 
     // streaming semantic-dedup tripwire: flag landing embeddings that
     // are semantic dups of the committed corpus (PrepareRun's persisted
     // clustering state) — flags only; runWave is what extends the corpus
-    case "stream-semantic-dedup" :: prepDir :: landingDir :: outDir ::
-        checkpoint :: rest =>
-      val spark = session()
+    job("stream-semantic-dedup", Seq("prepRunDir", "landingDir", "outDir", "checkpointDir"),
+        Seq("tau", "runSec")) { (spark, a) =>
+      val prepDir = a("prepRunDir")
       // tau defaults to the COMMITTED run's knob (params-from-markers:
       // a tripwire silently flagging at a different threshold than the
       // corpus was built with would under/over-flag vs runWave)
-      val tau = rest.headOption.map(_.toDouble)
+      val tau = a.opt("tau").map(_.toDouble)
         .orElse(operators.PrepareRun.semanticTauOf(spark, prepDir))
         .getOrElse(0.4)
-      val runSec = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
       val cents = spark.read.parquet(s"$prepDir/semantic_centroids")
         .orderBy("cluster").select("centroid").collect()
         .map(_.getSeq[Float](0).toArray)
       val reps = spark.read.parquet(s"$prepDir/semantic_reps")
-      val embSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType))))
-      val stream = spark.readStream.schema(embSchema).parquet(landingDir)
+      val embSchema = StructType(Seq(StructField("doc_id", LongType),
+        StructField("embedding", ArrayType(FloatType))))
+      val stream = spark.readStream.schema(embSchema).parquet(a("landingDir"))
       val q = streaming.StreamingAnalytics.semanticDedupIngest(
-        stream, cents, reps, "doc_id", outDir, checkpoint, tau = tau)
-      println(s"[graft] semantic-dedup server on $landingDir vs $prepDir " +
-        s"(k=${cents.length}, tau=$tau) -> $outDir")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
+        stream, cents, reps, "doc_id", a("outDir"), a("checkpointDir"), tau = tau)
+      println(s"[graft] semantic-dedup server on ${a("landingDir")} vs $prepDir " +
+        s"(k=${cents.length}, tau=$tau) -> ${a("outDir")}")
+      serve(q, a.int("runSec", 0))
+    },
 
     // streaming per-source distinct-cardinality monitor: 256 bytes of
     // HLL register state per source (StreamingAnalytics.streamingDistinct,
     // the d48 register semantics), estimates appended per micro-batch —
     // the "is this feed suddenly all duplicates" tripwire
-    case "stream-distinct" :: landingDir :: outDir :: checkpoint :: rest =>
-      val spark = session()
+    job("stream-distinct", Seq("landingDir", "outDir", "checkpointDir"), Seq("runSec")) { (spark, a) =>
       import spark.implicits._
-      val runSec = rest.headOption.map(_.toInt).getOrElse(0)
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val toks = spark.readStream.schema(docSchema).parquet(landingDir)
-        .select(org.apache.spark.sql.functions.col("source"),
-          org.apache.spark.sql.functions.explode(
-            org.apache.spark.sql.functions.split(
-              org.apache.spark.sql.functions.trim(
-                org.apache.spark.sql.functions.col("text")), "\\s+"))
-            .as("token"))
+      import org.apache.spark.sql.functions.{explode, split, trim}
+      val srcSchema = StructType(Seq(
+        StructField("source", StringType), StructField("text", StringType)))
+      val toks = spark.readStream.schema(srcSchema).parquet(a("landingDir"))
+        .select(col("source"), explode(split(trim(col("text")), "\\s+")).as("token"))
         .as[streaming.StreamingAnalytics.SrcTok]
       val q = streaming.StreamingAnalytics.streamingDistinct(toks)
         .writeStream
-        .format("parquet").option("path", outDir)
-        .option("checkpointLocation", checkpoint)
+        .format("parquet").option("path", a("outDir"))
+        .option("checkpointLocation", a("checkpointDir"))
         .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
+        .trigger(Trigger.ProcessingTime("1 second"))
         .start()
-      println(s"[graft] stream-distinct server on $landingDir -> $outDir")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
+      println(s"[graft] stream-distinct server on ${a("landingDir")} -> ${a("outDir")}")
+      serve(q, a.int("runSec", 0))
+    },
 
     // event-driven Split server (the reference's EtlAction=Split on queue
     // events): split each notified blob into size-bounded shards
-    case "stream-notify-split" :: queueDir :: outDir :: checkpoint :: maxBytes :: rest =>
-      val spark = session()
-      val flags = rest.filter(r => r == "header" || r == "gzip")
-      val nums = rest.filterNot(flags.contains)
-      val triggerSec = nums.headOption.map(_.toInt).getOrElse(60)
-      val runSec = nums.drop(1).headOption.map(_.toInt).getOrElse(0)
+    job("stream-notify-split", Seq("queueDir", "outDir", "checkpointDir", "maxBytesPerShard"),
+        Seq("triggerSec", "runSec"), Seq("header", "gzip")) { (spark, a) =>
+      val triggerSec = a.int("triggerSec", 60)
       val q = streaming.StreamingPrePartition.startNotifiedSplit(
-        spark, queueDir, outDir, checkpoint,
+        spark, a("queueDir"), a("outDir"), a("checkpointDir"),
         operators.Split.SplitConfig(
-          maxBytesPerShard = maxBytes.toLong,
-          hasHeader = flags.contains("header"),
-          gzipOutput = flags.contains("gzip")),
-        trigger = org.apache.spark.sql.streaming.Trigger
-          .ProcessingTime(s"$triggerSec seconds"))
-      println(s"[graft] split server on $queueDir -> $outDir (trigger ${triggerSec}s)")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
+          maxBytesPerShard = a("maxBytesPerShard").toLong,
+          hasHeader = a.has("header"),
+          gzipOutput = a.has("gzip")),
+        trigger = Trigger.ProcessingTime(s"$triggerSec seconds"))
+      println(s"[graft] split server on ${a("queueDir")} -> ${a("outDir")} (trigger ${triggerSec}s)")
+      serve(q, a.int("runSec", 0))
+    },
 
     // streaming as-of enrichment server: join each landing micro-batch
     // of (key, at, ...) events against a static reference table through
     // the native as-of operator; schema for the stream comes from a
     // sample parquet in the landing dir
-    case "stream-asof" :: refParquet :: landingDir :: outDir :: checkpoint :: key :: time :: valueCols :: rest =>
-      val spark = session()
-      val runSec = rest.headOption.map(_.toInt).getOrElse(0)
-      val direction = rest.drop(1).headOption.getOrElse("backward")
-      val tolerance = rest.drop(2).headOption.map(_.toLong).getOrElse(-1L)
-      val reference = spark.read.parquet(refParquet)
+    job("stream-asof", Seq("refParquet", "landingDir", "outDir", "checkpointDir", "keyCol",
+        "timeCol", "valueCols,"), Seq("runSec", "direction", "toleranceUnits")) { (spark, a) =>
+      val landingDir = a("landingDir")
+      val reference = spark.read.parquet(a("refParquet"))
       val stream = spark.readStream
         .schema(spark.read.parquet(landingDir).schema)
         .parquet(landingDir)
       val q = streaming.StreamingAnalytics.asofEnrich(
-        stream, reference, key, time, valueCols.split(",").toSeq,
-        outDir, checkpoint, direction, tolerance)
-      println(s"[graft] asof-enrich server on $landingDir vs $refParquet -> $outDir")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
+        stream, reference, a("keyCol"), a("timeCol"), a("valueCols,").split(",").toSeq,
+        a("outDir"), a("checkpointDir"), a.opt("direction").getOrElse("backward"),
+        a.long("toleranceUnits", -1L))
+      println(s"[graft] asof-enrich server on $landingDir vs ${a("refParquet")} -> ${a("outDir")}")
+      serve(q, a.int("runSec", 0))
+    },
 
     // exact heavy hitters over a text column via the Misra-Gries
     // sketch-then-recount pipeline (shuffles k counters per partition,
     // never the token stream)
-    case "heavy-hitters" :: docsParquet :: rest =>
-      val spark = session()
+    job("heavy-hitters", Seq("docsParquet"), Seq("k")) { (spark, a) =>
       import org.apache.spark.sql.functions._
-      val k = rest.headOption.map(_.toInt).getOrElse(256)
-      val toks = spark.read.parquet(docsParquet)
+      val k = a.int("k", 256)
+      val toks = spark.read.parquet(a("docsParquet"))
         .select(explode(split(trim(col("text")), "\\s+")).as("token"))
       val Array(row) = toks.agg(count(lit(1)).as("n"),
         functions.AggFunctions.misraGries(col("token"), k).as("c")).collect()
@@ -750,15 +807,14 @@ object GraftCli {
         .filter(col("cnt") * (k + 1) > n)
         .orderBy(col("cnt").desc, col("token"))
         .show(50, false)
-      spark.stop()
+    },
 
     // train k-means centroids and write (vec_id, cluster) assignments
-    case "kmeans" :: embParquet :: outDir :: rest =>
-      val spark = session()
+    job("kmeans", Seq("embeddingsParquet", "outDir"), Seq("k", "iters")) { (spark, a) =>
       import org.apache.spark.sql.functions._
-      val k = rest.headOption.map(_.toInt).getOrElse(16)
-      val iters = rest.drop(1).headOption.map(_.toInt).getOrElse(3)
-      val e = spark.read.parquet(embParquet)
+      val k = a.int("k", 16)
+      val iters = a.int("iters", 3)
+      val e = spark.read.parquet(a("embeddingsParquet"))
       val cents = operators.Similarity.kmeansCentroids(e, k, iters)
       val sims = array(cents.map(c =>
         functions.VectorFunctions.vecCosine(col("embedding"),
@@ -766,15 +822,14 @@ object GraftCli {
       e.withColumn("cluster",
           array_position(sims, array_max(sims)).cast("long") - 1)
         .select("vec_id", "cluster")
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] kmeans k=$k iters=$iters: $embParquet -> $outDir")
-      spark.stop()
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] kmeans k=$k iters=$iters: ${a("embeddingsParquet")} -> ${a("outDir")}")
+    },
 
     // one-pass column profile of any parquet table (string-typed view)
-    case "profile" :: inParquet :: Nil =>
-      val spark = session()
+    job("profile", Seq("inParquet")) { (spark, a) =>
       import org.apache.spark.sql.functions._
-      val df = spark.read.parquet(inParquet)
+      val df = spark.read.parquet(a("inParquet"))
       val pairs = df.columns
         .map(c => s"'$c', CAST(`$c` AS STRING)").mkString(", ")
       df.select(expr(
@@ -786,32 +841,27 @@ object GraftCli {
           min(col("value")).as("min_val"), max(col("value")).as("max_val"))
         .orderBy("col_name")
         .show(100, false)
-      spark.stop()
+    },
 
-    // cut documents into overlapping token-window chunks (RAG prep)
     // JSONL training-data export (one JSON object per line, optional
-    // gzip + byte-bounded shards)
-    case "export-jsonl" :: inParquet :: outDir :: rest =>
-      val spark = session()
+    // gzip + byte-bounded shards); `export-jsonl in out gzip` needs no limit
+    job("export-jsonl", Seq("inParquet", "outDir"), Seq("limitMB"), Seq("gzip")) { (spark, a) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tokens are positional-agnostic: a numeric token is the MB limit,
-      // a literal "gzip" enables compression — so `export-jsonl in out gzip`
-      // works without a limit (the documented usage)
-      val limitMb = rest.find(t => t.nonEmpty && t.forall(_.isDigit)).map(_.toLong)
-      val gz = rest.contains("gzip")
-      operators.Export.toJsonl(spark.read.parquet(inParquet), outDir,
+      val limitMb = a.opt("limitMB").map(_.toLong)
+      val gz = a.has("gzip")
+      operators.Export.toJsonl(spark.read.parquet(a("inParquet")), a("outDir"),
         compressed = gz, sizeLimitBytes = limitMb.map(_ * 1024 * 1024))
-      println(s"[graft] export-jsonl $inParquet -> $outDir" +
+      println(s"[graft] export-jsonl ${a("inParquet")} -> ${a("outDir")}" +
         limitMb.map(m => s" (limit ${m}MB)").getOrElse("") +
         (if (gz) " gzip" else ""))
-      spark.stop()
+    },
 
-    case "chunk" :: docsParquet :: outDir :: rest =>
-      val spark = session()
+    // cut documents into overlapping token-window chunks (RAG prep)
+    job("chunk", Seq("docsParquet", "outDir"), Seq("size", "stride")) { (spark, a) =>
       import org.apache.spark.sql.functions._
-      val sz = rest.headOption.map(_.toInt).getOrElse(64)
-      val stride = rest.drop(1).headOption.map(_.toInt).getOrElse(sz / 2)
-      spark.read.parquet(docsParquet)
+      val sz = a.int("size", 64)
+      val stride = a.int("stride", sz / 2)
+      spark.read.parquet(a("docsParquet"))
         .withColumn("t", split(trim(col("text")), "\\s+"))
         .withColumn("n_chunks",
           ceil(size(col("t")) / lit(stride.toDouble)).cast("int"))
@@ -821,99 +871,79 @@ object GraftCli {
         .filter(length(col("col")) > 0)
         .select(col("doc_id"), col("pos").as("chunk_id"),
           col("col").as("chunk_text"))
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] chunks size=$sz stride=$stride: $docsParquet -> $outDir")
-      spark.stop()
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] chunks size=$sz stride=$stride: ${a("docsParquet")} -> ${a("outDir")}")
+    },
 
-    case "avro-scan" :: glob :: outDir :: Nil =>
-      val spark = session()
-      graft.sources.AvroContainer.avroRows(spark, glob)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] avro-scan: $glob -> $outDir")
-      spark.stop()
+    convert("avro-scan", "glob.avro")(graft.sources.AvroContainer.avroRows),
 
-    case "cdx-scan" :: glob :: outDir :: Nil =>
-      // parse CDXJ crawl-index shards (plain or .gz) into a manifest
-      val spark = session()
-      graft.sources.CdxSource.cdxFiles(spark, glob)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] cdx-scan: $glob -> $outDir")
-      spark.stop()
+    // parse CDXJ crawl-index shards (plain or .gz) into a manifest
+    convert("cdx-scan", "glob.cdx[.gz]")(graft.sources.CdxSource.cdxFiles(_, _)),
 
-    case "cdx-fetch" :: cdxGlob :: warcDir :: outDir :: Nil =>
-      // selective refetch: decode ONLY the records the index points at —
-      // one seek + one gzip member per row, archives never walked
-      val spark = session()
-      graft.sources.CdxSource.fetchByIndex(spark, warcDir,
-          graft.sources.CdxSource.cdxFiles(spark, cdxGlob))
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] cdx-fetch: $cdxGlob over $warcDir -> $outDir")
-      spark.stop()
+    // selective refetch: decode ONLY the records the index points at —
+    // one seek + one gzip member per row, archives never walked
+    job("cdx-fetch", Seq("cdxGlob", "warcDir", "outDir")) { (spark, a) =>
+      graft.sources.CdxSource.fetchByIndex(spark, a("warcDir"),
+          graft.sources.CdxSource.cdxFiles(spark, a("cdxGlob")))
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] cdx-fetch: ${a("cdxGlob")} over ${a("warcDir")} -> ${a("outDir")}")
+    },
 
-    case "warc-index" :: glob :: outDir :: rest =>
-      // GENERATE the CDX index of .warc(.gz) archives: one streaming
-      // task per archive (measured member/record boundaries), then ONE
-      // exchange sorting pointer-sized rows into the globally
-      // SURT-ordered shard form that cdx-scan / cdx-fetch consume.
-      // `relative-to=<dir>` keeps wave-qualified paths for nested
-      // layouts (the streaming export's wave=N dirs repeat basenames)
-      val spark = session()
+    // GENERATE the CDX index of .warc(.gz) archives: one streaming
+    // task per archive (measured member/record boundaries), then ONE
+    // exchange sorting pointer-sized rows into the globally
+    // SURT-ordered shard form that cdx-scan / cdx-fetch consume.
+    // `relative-to=<dir>` keeps wave-qualified paths for nested
+    // layouts (the streaming export's wave=N dirs repeat basenames)
+    job("warc-index", Seq("glob.warc[.gz]", "outDir"),
+        flags = Seq("relative-to=<dir>")) { (spark, a) =>
       import spark.implicits._
-      val relTo = rest.collectFirst {
-        case a if a.startsWith("relative-to=") =>
-          a.stripPrefix("relative-to=")
-      }.orNull
+      val glob = a("glob.warc[.gz]")
       // persist: the sorted write AND the damage count read one parsed
       // pass instead of re-walking every archive (r18 review); the
       // cached rows are pointer-sized, never archive bytes
       val rows = graft.sources.CdxSource.warcIndexFiles(spark, glob,
-          relativeTo = relTo)
+          relativeTo = a.value("relative-to").orNull)
         .persist()
-      rows.filter(org.apache.spark.sql.functions.col("surt").isNotNull)
+      rows.filter(col("surt").isNotNull)
         .orderBy("surt", "timestamp")
         .as[(String, String, String, String, Int, String, Long, Long, String)]
         .map { case (s1, ts, u, m, st, d, l, o, f) =>
           graft.sources.CdxSource.renderLine(
             graft.sources.CdxSource.CdxEntry(s1, ts, u, m, st, d, l, o, f))
         }
-        .write.mode("overwrite").text(outDir)
-      val bad = rows.filter(
-        org.apache.spark.sql.functions.col("surt").isNull).count()
+        .write.mode("overwrite").text(a("outDir"))
+      val bad = rows.filter(col("surt").isNull).count()
       rows.unpersist()
-      println(s"[graft] warc-index: $glob -> $outDir" +
+      println(s"[graft] warc-index: $glob -> ${a("outDir")}" +
         (if (bad > 0) s" ($bad damaged archives poisoned)" else ""))
-      spark.stop()
+    },
 
-    case "cdx-cluster" :: cdxGlob :: outDir :: rest =>
-      // zipnum build: sorted .cdx shards -> <name>.zn gzip blocks +
-      // <name>.idx cluster indexes (one task per shard, O(block) memory)
-      val spark = session()
-      val bs = rest.headOption.map(_.toInt).getOrElse(3000)
+    // zipnum build: sorted .cdx shards -> <name>.zn gzip blocks +
+    // <name>.idx cluster indexes (one task per shard, O(block) memory)
+    job("cdx-cluster", Seq("sortedCdxGlob", "outDir"), Seq("blockSize")) { (spark, a) =>
       val n = graft.sources.CdxSource.writeZipnumFiles(
-        spark, cdxGlob, outDir, bs)
-      println(s"[graft] cdx-cluster: $cdxGlob -> $outDir ($n shards)")
-      spark.stop()
+        spark, a("sortedCdxGlob"), a("outDir"), a.int("blockSize", 3000))
+      println(s"[graft] cdx-cluster: ${a("sortedCdxGlob")} -> ${a("outDir")} ($n shards)")
+    },
 
-    case "cdx-lookup" :: clusterDir :: url :: Nil =>
-      // point lookup: binary-search the cluster indexes, inflate ONE
-      // block per candidate shard, print the matching entries
-      val spark = session()
-      val hits = graft.sources.CdxSource.zipnumLookupDir(
-        spark, clusterDir, url)
-      if (hits.isEmpty) println(s"[graft] cdx-lookup: no captures of $url")
+    // point lookup: binary-search the cluster indexes, inflate ONE
+    // block per candidate shard, print the matching entries
+    job("cdx-lookup", Seq("clusterDir", "url")) { (spark, a) =>
+      val hits = graft.sources.CdxSource.zipnumLookupDir(spark, a("clusterDir"), a("url"))
+      if (hits.isEmpty) println(s"[graft] cdx-lookup: no captures of ${a("url")}")
       else hits.sortBy(_.timestamp).foreach { e =>
         println(s"[graft] ${e.timestamp} ${e.url} ${e.status} " +
           s"${e.filename}@${e.offset}+${e.length}")
       }
-      spark.stop()
+    },
 
-    case "resolve-revisits" :: warcGlob :: warcDir :: outDir :: Nil =>
-      // cross-archive dedup bridge: revisit records join the GENERATED
-      // index on payload digest, originals fetch by pointer — pages
-      // recovered without refetching the live site
-      val spark = session()
-      import org.apache.spark.sql.functions.col
-      val out = graft.sources.CdxSource.resolveRevisits(spark, warcDir,
+    // cross-archive dedup bridge: revisit records join the GENERATED
+    // index on payload digest, originals fetch by pointer — pages
+    // recovered without refetching the live site
+    job("resolve-revisits", Seq("glob.warc[.gz]", "warcDir", "outDir")) { (spark, a) =>
+      val (warcGlob, outDir) = (a("glob.warc[.gz]"), a("outDir"))
+      val out = graft.sources.CdxSource.resolveRevisits(spark, a("warcDir"),
         graft.sources.WarcSource.warcRevisits(spark, warcGlob),
         graft.sources.CdxSource.warcIndexFiles(spark, warcGlob))
       out.write.mode("overwrite").parquet(outDir)
@@ -921,52 +951,30 @@ object GraftCli {
         .filter(col("resolved_from").isNull).count()
       println(s"[graft] resolve-revisits: $warcGlob -> $outDir" +
         (if (unresolved > 0) s" ($unresolved unresolved)" else ""))
-      spark.stop()
+    },
 
-    case "wat-demo" :: docsParquet :: outDir :: Nil =>
-      // materialize Common-Crawl-shaped .warc.wat[.gz] metadata fixtures
-      val spark = session()
+    // materialize Common-Crawl-shaped .warc.wat[.gz] metadata fixtures
+    fixtures("wat-demo", "warc.wat.gz", "warc.wat")(graft.sources.WatSource.synthesizeWat),
+
+    // metadata envelopes (uri/title/links/status) per capture
+    convert("wat-scan", "glob.wat[.gz]")(graft.sources.WatSource.watFiles(_, _)),
+
+    // index-driven corpus build: admit from the INDEX (status 200,
+    // text/html), fetch one member per admitted row, land in the
+    // documents-table shape — archives are never scanned
+    job("corpus-from-cdx", Seq("cdxGlob", "warcDir", "outDir")) { (spark, a) =>
+      graft.sources.CdxSource.corpusFromCdx(spark, a("warcDir"),
+          graft.sources.CdxSource.cdxFiles(spark, a("cdxGlob")))
+        .write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] corpus-from-cdx: ${a("cdxGlob")} over ${a("warcDir")} -> ${a("outDir")}")
+    },
+
+    // materialize .warc[.gz] fixtures WITH their measured CDX index
+    job("cdx-demo", Seq("docsParquet", "outDir")) { (spark, a) =>
+      val outDir = a("outDir")
       new java.io.File(outDir).mkdirs()
-      graft.sources.WatSource.synthesizeWat(
-          spark, spark.read.parquet(docsParquet))
-        .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-          it.foreach { r =>
-            val id = r.getLong(0)
-            val ext = if (id % 2 == 0) "warc.wat.gz" else "warc.wat"
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(outDir, s"d$id.$ext"),
-              r.getAs[Array[Byte]](1))
-          }
-        }
-      println(s"[graft] wat-demo: $docsParquet -> $outDir")
-      spark.stop()
-
-    case "wat-scan" :: glob :: outDir :: Nil =>
-      // metadata envelopes (uri/title/links/status) per capture
-      val spark = session()
-      graft.sources.WatSource.watFiles(spark, glob)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] wat-scan: $glob -> $outDir")
-      spark.stop()
-
-    case "corpus-from-cdx" :: cdxGlob :: warcDir :: outDir :: Nil =>
-      // index-driven corpus build: admit from the INDEX (status 200,
-      // text/html), fetch one member per admitted row, land in the
-      // documents-table shape — archives are never scanned
-      val spark = session()
-      graft.sources.CdxSource.corpusFromCdx(spark, warcDir,
-          graft.sources.CdxSource.cdxFiles(spark, cdxGlob))
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] corpus-from-cdx: $cdxGlob over $warcDir -> $outDir")
-      spark.stop()
-
-    case "cdx-demo" :: docsParquet :: outDir :: Nil =>
-      // materialize .warc[.gz] fixtures WITH their measured CDX index
-      val spark = session()
-      new java.io.File(outDir).mkdirs()
-      spark.read.parquet(docsParquet)
-        .select(org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("text"))
+      spark.read.parquet(a("docsParquet"))
+        .select(col("doc_id"), col("text"))
         .collect().foreach { r =>
           val id = r.getLong(0); val text = r.getString(1)
           val ext = if (id % 2 == 0) "warc.gz" else "warc"
@@ -977,18 +985,19 @@ object GraftCli {
             java.nio.file.Paths.get(outDir, s"d$id.cdx"),
             graft.sources.CdxSource.cdxOf(id, text).getBytes("UTF-8"))
         }
-      println(s"[graft] cdx-demo: $docsParquet -> $outDir")
-      spark.stop()
+      println(s"[graft] cdx-demo: ${a("docsParquet")} -> $outDir")
+    },
 
     // crawl -> corpus bridge: extracted 200-status pages become rows in
     // the documents-table shape (doc_id, text, lang, source, n_chars),
     // so corpus-prep / prepare-run consume a crawl unchanged. Stable ids
     // from the URI hash; identical re-fetches collapse here, NEAR-dups
     // are downstream dedup's job.
-    case "corpus-from-warc" :: glob :: outDir :: rest =>
-      val spark = session()
-      val lenient = !rest.contains("strict")
-      val mainContent = rest.contains("main") // x106 link-density extractor
+    job("corpus-from-warc", Seq("glob.warc[.gz]", "docsOutDir"),
+        flags = Seq("strict", "main")) { (spark, a) =>
+      val (glob, outDir) = (a("glob.warc[.gz]"), a("docsOutDir"))
+      val lenient = !a.has("strict")
+      val mainContent = a.has("main") // x106 link-density extractor
       // ONE archive walk serves both the corpus write and the degrade
       // report (r18 review: an uncached second warcFiles pass re-decoded
       // the whole glob just to count reasons); strict mode has no second
@@ -1003,7 +1012,7 @@ object GraftCli {
       // real-crawl population) are REPORTED per reason, never silent
       if (lenient) {
         val byReason = pages
-          .filter(org.apache.spark.sql.functions.col("degraded").isNotNull)
+          .filter(col("degraded").isNotNull)
           .groupBy("degraded").count()
           .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}")
         if (byReason.nonEmpty)
@@ -1013,123 +1022,90 @@ object GraftCli {
       pages.unpersist()
       println(s"[graft] corpus-from-warc: $glob -> $outDir" +
         (if (mainContent) " (main-content)" else ""))
-      spark.stop()
+    },
 
-    case "corpus-from-warc-resolved" :: glob :: warcDir :: outDir :: rest =>
-      // corpus bridge over DEDUP-WRITTEN archives: full responses PLUS
-      // revisit records reconstituted to their original's text (the
-      // x125 pieces composed) — a digest-deduped crawl reads as if
-      // every capture were stored full
-      val spark = session()
-      val lenient = !rest.contains("strict")
-      val docs = graft.sources.WarcSource.crawlDocsResolved(
-        spark, warcDir, glob, lenient)
-      docs.write.mode("overwrite").parquet(outDir)
+    // corpus bridge over DEDUP-WRITTEN archives: full responses PLUS
+    // revisit records reconstituted to their original's text (the
+    // x125 pieces composed) — a digest-deduped crawl reads as if
+    // every capture were stored full
+    job("corpus-from-warc-resolved", Seq("glob.warc[.gz]", "warcDir", "docsOutDir"),
+        flags = Seq("strict")) { (spark, a) =>
+      val (glob, outDir) = (a("glob.warc[.gz]"), a("docsOutDir"))
+      graft.sources.WarcSource.crawlDocsResolved(spark, a("warcDir"), glob, !a.has("strict"))
+        .write.mode("overwrite").parquet(outDir)
       val n = spark.read.parquet(outDir).count()
       println(s"[graft] corpus-from-warc-resolved: $glob -> $outDir ($n docs)")
-      spark.stop()
+    },
 
-    case "wet-demo" :: docsParquet :: outDir :: Nil =>
-      // materialize Common-Crawl-shaped .warc.wet[.gz] fixtures
-      val spark = session()
-      new java.io.File(outDir).mkdirs()
-      graft.sources.WarcSource.synthesizeWet(
-          spark, spark.read.parquet(docsParquet))
-        .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-          it.foreach { r =>
-            val id = r.getLong(0)
-            val ext = if (id % 2 == 0) "warc.wet.gz" else "warc.wet"
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(outDir, s"d$id.$ext"),
-              r.getAs[Array[Byte]](1))
-          }
-        }
-      println(s"[graft] wet-demo: $docsParquet -> $outDir")
-      spark.stop()
+    // materialize Common-Crawl-shaped .warc.wet[.gz] fixtures
+    fixtures("wet-demo", "warc.wet.gz", "warc.wet")(graft.sources.WarcSource.synthesizeWet),
 
-    case "wet-write" :: docsParquet :: outDir :: rest =>
-      // the EXPORT side of the WET surface: corpus -> sharded
-      // .warc.wet.gz archives (warcinfo lead + conversion record per
-      // doc, gzip member-per-record), the interchange format every
-      // Common-Crawl consumer ingests; re-ingest with corpus-from-wet
-      val spark = session()
-      val nShards = rest.headOption.map(_.toInt).getOrElse(8)
-      val gzip = !rest.contains("plain")
+    // the EXPORT side of the WET surface: corpus -> sharded
+    // .warc.wet.gz archives (warcinfo lead + conversion record per
+    // doc, gzip member-per-record), the interchange format every
+    // Common-Crawl consumer ingests; re-ingest with corpus-from-wet
+    job("wet-write", Seq("docsParquet", "outDir"), Seq("nShards"), Seq("plain")) { (spark, a) =>
+      val nShards = a.int("nShards", 8)
+      val gzip = !a.has("plain")
       val n = graft.sources.WarcSource.writeWet(
-        spark.read.parquet(docsParquet), outDir, nShards, gzip)
-      println(s"[graft] wet-write: $docsParquet -> $outDir " +
+        spark.read.parquet(a("docsParquet")), a("outDir"), nShards, gzip)
+      println(s"[graft] wet-write: ${a("docsParquet")} -> ${a("outDir")} " +
         s"($n docs, $nShards shards, gzip=$gzip)")
-      spark.stop()
+    },
 
-    case "stream-wet-write" :: landingDir :: outDir :: checkpoint :: rest =>
-      // continuous archive export: parquet docs land, each micro-batch
-      // exports as its own wave of WET shards (idempotent on replay —
-      // deterministic bytes + first-wins rename)
-      val spark = session()
-      val nShards = rest.headOption.map(_.toInt).getOrElse(4)
-      val runSec = rest.drop(1).headOption.map(_.toInt).getOrElse(0)
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val stream = spark.readStream.schema(docSchema).parquet(landingDir)
+    // continuous archive export: parquet docs land, each micro-batch
+    // exports as its own wave of WET shards (idempotent on replay —
+    // deterministic bytes + first-wins rename)
+    job("stream-wet-write", Seq("landingDir", "outDir", "checkpointDir"),
+        Seq("nShards", "runSec")) { (spark, a) =>
+      val docSchema = StructType(Seq(StructField("doc_id", LongType),
+        StructField("source", StringType), StructField("text", StringType)))
+      val stream = spark.readStream.schema(docSchema).parquet(a("landingDir"))
       val q = streaming.StreamingAnalytics.wetExportIngest(
-        stream, outDir, checkpoint, nShards)
-      println(s"[graft] wet-export server on $landingDir -> $outDir")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
+        stream, a("outDir"), a("checkpointDir"), a.int("nShards", 4))
+      println(s"[graft] wet-export server on ${a("landingDir")} -> ${a("outDir")}")
+      serve(q, a.int("runSec", 0))
+    },
 
-    case "stream-warc-write" :: landingDir :: outDir :: checkpoint :: rest =>
-      // continuous response-record export: page rows land, each
-      // micro-batch becomes its own wave of .warc.gz archives.
-      // `dedup`: cross-wave digest dedup through the persisted
-      // digest-index — repeats become revisit records
-      val spark = session()
-      val nums = rest.filter(_.forall(_.isDigit))
-      val nShards = nums.headOption.map(_.toInt).getOrElse(4)
-      val runSec = nums.drop(1).headOption.map(_.toInt).getOrElse(0)
-      val pageSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("uri",
-          org.apache.spark.sql.types.StringType),
+    // continuous response-record export: page rows land, each
+    // micro-batch becomes its own wave of .warc.gz archives.
+    // `dedup`: cross-wave digest dedup through the persisted
+    // digest-index — repeats become revisit records
+    job("stream-warc-write", Seq("landingDir", "outDir", "checkpointDir"),
+        Seq("nShards", "runSec"), Seq("dedup")) { (spark, a) =>
+      val nShards = a.int("nShards", 4)
+      val pageSchema = StructType(Seq(
+        StructField("uri", StringType),
         // LONG, not INT: schema-declared parquet streaming reads are
         // strict about physical integer width, and foreign producers
         // (pandas included) default to int64 — writeWarc casts down
-        org.apache.spark.sql.types.StructField("status",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("content_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("body",
-          org.apache.spark.sql.types.BinaryType)))
-      val stream = spark.readStream.schema(pageSchema).parquet(landingDir)
+        StructField("status", LongType),
+        StructField("content_type", StringType),
+        StructField("body", BinaryType)))
+      val stream = spark.readStream.schema(pageSchema).parquet(a("landingDir"))
       val q =
-        if (rest.contains("dedup"))
+        if (a.has("dedup"))
           streaming.StreamingAnalytics.warcExportDedupIngest(
-            stream, outDir, checkpoint, nShards)
+            stream, a("outDir"), a("checkpointDir"), nShards)
         else streaming.StreamingAnalytics.warcExportIngest(
-          stream, outDir, checkpoint, nShards)
-      println(s"[graft] warc-export server on $landingDir -> $outDir" +
-        (if (rest.contains("dedup")) " (dedup)" else ""))
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
+          stream, a("outDir"), a("checkpointDir"), nShards)
+      println(s"[graft] warc-export server on ${a("landingDir")} -> ${a("outDir")}" +
+        (if (a.has("dedup")) " (dedup)" else ""))
+      serve(q, a.int("runSec", 0))
+    },
 
-    case "warc-write" :: pagesParquet :: outDir :: rest =>
-      // response-record archive export: pages (uri, status,
-      // content_type, body) -> sharded .warc.gz with real SHA-1 payload
-      // digests — archives warc-index can index and cdx-fetch can
-      // point-fetch. `from-docs` adapts a documents table (uri from
-      // source/doc_id, status 200, text/plain body) for corpus export.
-      val spark = session()
-      val nShards = rest.filter(_.forall(_.isDigit)).headOption
-        .map(_.toInt).getOrElse(8)
-      val gzip = !rest.contains("plain")
-      val in = spark.read.parquet(pagesParquet)
+    // response-record archive export: pages (uri, status,
+    // content_type, body) -> sharded .warc.gz with real SHA-1 payload
+    // digests — archives warc-index can index and cdx-fetch can
+    // point-fetch. `from-docs` adapts a documents table (uri from
+    // source/doc_id, status 200, text/plain body) for corpus export.
+    job("warc-write", Seq("pagesParquet", "outDir"), Seq("nShards"),
+        Seq("plain", "from-docs", "dedup", "requests")) { (spark, a) =>
+      val nShards = a.int("nShards", 8)
+      val gzip = !a.has("plain")
+      val in = spark.read.parquet(a("pagesParquet"))
       val pages =
-        if (!rest.contains("from-docs")) in
+        if (!a.has("from-docs")) in
         else in.selectExpr(
           "concat('http://', source, '/graft/', doc_id) AS uri",
           "200 AS status",
@@ -1139,179 +1115,86 @@ object GraftCli {
       // writes the full response, repeats write revisit records
       // (resolve-revisits reconstitutes them). `requests`: interleave
       // request records paired by WARC-Concurrent-To.
-      val n = graft.sources.WarcSource.writeWarc(pages, outDir, nShards,
-        gzip, dedupDigests = rest.contains("dedup"),
-        requests = rest.contains("requests"))
-      println(s"[graft] warc-write: $pagesParquet -> $outDir " +
+      val n = graft.sources.WarcSource.writeWarc(pages, a("outDir"), nShards,
+        gzip, dedupDigests = a.has("dedup"), requests = a.has("requests"))
+      println(s"[graft] warc-write: ${a("pagesParquet")} -> ${a("outDir")} " +
         s"($n pages, $nShards shards, gzip=$gzip" +
-        (if (rest.contains("dedup")) ", dedup" else "") +
-        (if (rest.contains("requests")) ", requests" else "") + ")")
-      spark.stop()
+        (if (a.has("dedup")) ", dedup" else "") +
+        (if (a.has("requests")) ", requests" else "") + ")")
+    },
 
-    case "corpus-from-wet" :: glob :: outDir :: rest =>
-      // WET conversion records -> documents-table shape (text already
-      // extracted upstream; no HTML stage)
-      val spark = session()
-      val lenient = !rest.contains("strict")
-      graft.sources.WarcSource.wetDocs(spark, glob, lenient)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] corpus-from-wet: $glob -> $outDir")
-      spark.stop()
+    // WET conversion records -> documents-table shape (text already
+    // extracted upstream; no HTML stage)
+    job("corpus-from-wet", Seq("glob.wet*", "outParquet"), flags = Seq("strict")) { (spark, a) =>
+      graft.sources.WarcSource.wetDocs(spark, a("glob.wet*"), !a.has("strict"))
+        .write.mode("overwrite").parquet(a("outParquet"))
+      println(s"[graft] corpus-from-wet: ${a("glob.wet*")} -> ${a("outParquet")}")
+    },
 
-    case "stream-cdx-fetch" :: cdxLanding :: warcDir :: outDir :: checkpoint :: rest =>
-      // continuous selective refetch: cdx shards land, their pointers
-      // fetch one member each out of warcDir, exactly-once per shard
-      val spark = session()
-      val runSec = rest.headOption.map(_.toInt).getOrElse(0)
+    // continuous selective refetch: cdx shards land, their pointers
+    // fetch one member each out of warcDir, exactly-once per shard
+    job("stream-cdx-fetch", Seq("cdxLandingDir", "warcDir", "outDir", "checkpointDir"),
+        Seq("runSec")) { (spark, a) =>
       val q = streaming.StreamingAnalytics.cdxFetchIngest(
-        spark, cdxLanding, warcDir, outDir, checkpoint)
-      println(s"[graft] cdx-fetch server on $cdxLanding over $warcDir -> $outDir")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
+        spark, a("cdxLandingDir"), a("warcDir"), a("outDir"), a("checkpointDir"))
+      println(s"[graft] cdx-fetch server on ${a("cdxLandingDir")} over ${a("warcDir")} -> ${a("outDir")}")
+      serve(q, a.int("runSec", 0))
+    },
 
-    case "stream-warc-extract" :: landingDir :: outDir :: checkpoint :: rest =>
-      val spark = session()
-      val runSec = rest.headOption.map(_.toInt).getOrElse(0)
-      val q = streaming.StreamingAnalytics.warcIngest(
-        spark, landingDir, outDir, checkpoint)
-      println(s"[graft] warc-extract server on $landingDir -> $outDir")
-      if (runSec > 0) { q.awaitTermination(runSec * 1000L); q.stop() }
-      else q.awaitTermination()
-      spark.stop()
+    archiveServer("stream-warc-extract", 0)(streaming.StreamingAnalytics.warcIngest(_, _, _, _)),
 
-    case "mkv-scan" :: glob :: outDir :: Nil =>
-      val spark = session()
-      graft.sources.MkvSource.mkvFiles(spark, glob)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] mkv-scan: $glob -> $outDir")
-      spark.stop()
+    convert("mkv-scan", "glob.mkv|.webm")(graft.sources.MkvSource.mkvFiles),
 
-    case "tar-scan" :: glob :: outDir :: Nil =>
-      val spark = session()
-      graft.sources.TarSource.tarFiles(spark, glob)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] tar-scan: $glob -> $outDir")
-      spark.stop()
+    convert("tar-scan", "glob.tar[.gz]")(graft.sources.TarSource.tarFiles),
 
-    case "zip-demo" :: docsParquet :: outDir :: Nil =>
-      // materialize .zip fixtures (mixed stored/deflate, some commented)
-      val spark = session()
-      new java.io.File(outDir).mkdirs()
-      sources.ZipSource.synthesizeZip(spark, spark.read.parquet(docsParquet))
-        .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-          it.foreach { r =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(outDir, s"d${r.getLong(0)}.zip"),
-              r.getAs[Array[Byte]](1))
-          }
-        }
-      println(s"[graft] zip-demo: $docsParquet -> $outDir")
-      spark.stop()
+    // materialize .zip fixtures (mixed stored/deflate, some commented)
+    fixtures("zip-demo", "zip", "zip")(sources.ZipSource.synthesizeZip),
 
-    case "zip-scan" :: glob :: outDir :: Nil =>
-      // central-directory manifest of every archive under the glob,
-      // each entry decoded + CRC-verified
-      val spark = session()
-      sources.ZipSource.zipFiles(spark, glob)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] zip-scan: $glob -> $outDir")
-      spark.stop()
+    // central-directory manifest of every archive under the glob,
+    // each entry decoded + CRC-verified
+    convert("zip-scan", "glob.zip")(sources.ZipSource.zipFiles),
 
-    case "stream-zip-scan" :: landingDir :: outDir :: ckpt :: rest =>
-      // continuous ZIP-shard ingestion server (completes the trio next
-      // to stream-warc-extract and stream-tar-scan)
-      val spark = session()
-      val lifetime = rest.headOption.map(_.toInt).getOrElse(15)
-      val q = streaming.StreamingAnalytics.zipIngest(
-        spark, landingDir, outDir, ckpt)
-      println(s"[graft] zip-scan server on $landingDir -> $outDir")
-      q.awaitTermination(lifetime * 1000L)
-      q.stop()
-      spark.stop()
+    // continuous ZIP-shard ingestion server (completes the trio next
+    // to stream-warc-extract and stream-tar-scan)
+    archiveServer("stream-zip-scan", 15)(streaming.StreamingAnalytics.zipIngest(_, _, _, _)),
 
-    case "stream-tar-scan" :: landingDir :: outDir :: ckpt :: rest =>
-      // continuous WebDataset-shard ingestion server (tar sibling of
-      // stream-warc-extract); lifetimeSec bounds the demo run
-      val spark = session()
-      val lifetime = rest.headOption.map(_.toInt).getOrElse(15)
-      val q = streaming.StreamingAnalytics.tarIngest(
-        spark, landingDir, outDir, ckpt)
-      println(s"[graft] tar-scan server on $landingDir -> $outDir")
-      q.awaitTermination(lifetime * 1000L)
-      q.stop()
-      spark.stop()
+    // continuous WebDataset-shard ingestion server (tar sibling of
+    // stream-warc-extract); runSec bounds the demo run
+    archiveServer("stream-tar-scan", 15)(streaming.StreamingAnalytics.tarIngest(_, _, _, _)),
 
-    case "stream-wat-scan" :: landingDir :: outDir :: ckpt :: rest =>
-      // continuous WAT-metadata ingestion server (the wat sibling of
-      // stream-warc-extract); lifetimeSec bounds the demo run
-      val spark = session()
-      val lifetime = rest.headOption.map(_.toInt).getOrElse(15)
-      val q = streaming.StreamingAnalytics.watIngest(
-        spark, landingDir, outDir, ckpt)
-      println(s"[graft] wat-scan server on $landingDir -> $outDir")
-      q.awaitTermination(lifetime * 1000L)
-      q.stop()
-      spark.stop()
+    // continuous WAT-metadata ingestion server (the wat sibling of
+    // stream-warc-extract); runSec bounds the demo run
+    archiveServer("stream-wat-scan", 15)(streaming.StreamingAnalytics.watIngest(_, _, _, _)),
 
-    case "mkv-meta" :: mediaParquet :: outDir :: Nil =>
-      val spark = session()
-      graft.sources.MkvSource.mkvTable(spark, spark.read.parquet(mediaParquet))
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] mkv-meta: $mediaParquet -> $outDir")
-      spark.stop()
+    convert("mkv-meta", "mediaParquet") { (spark, in) =>
+      graft.sources.MkvSource.mkvTable(spark, spark.read.parquet(in))
+    },
 
-    case "mkv-meta-demo" :: docsParquet :: outDir :: Nil =>
-      val spark = session()
-      val media = graft.sources.MkvSource.synthesizeMkv(
-        spark, spark.read.parquet(docsParquet))
-      graft.sources.MkvSource.mkvTable(spark, media)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] mkv-meta-demo: $docsParquet -> $outDir")
-      spark.stop()
+    convert("mkv-meta-demo", "docsParquet") { (spark, in) =>
+      graft.sources.MkvSource.mkvTable(spark,
+        graft.sources.MkvSource.synthesizeMkv(spark, spark.read.parquet(in)))
+    },
 
-    case "mp3-meta-demo" :: docsParquet :: outDir :: rest =>
-      // MP3 frame walk over the deterministic fixture corpus: `frames`
-      // (default) writes the per-frame segment table, `summary` the
-      // per-file totals + VBR header claims
-      val spark = session()
+    // MP3 frame walk over the deterministic fixture corpus: `frames`
+    // (default) writes the per-frame segment table, `summary` the
+    // per-file totals + VBR header claims
+    job("mp3-meta-demo", Seq("docsParquet", "outDir"), flags = Seq("frames", "summary")) { (spark, a) =>
       val media = graft.sources.Mp3Source.synthesizeMp3(
-        spark, spark.read.parquet(docsParquet))
+        spark, spark.read.parquet(a("docsParquet")))
       val out =
-        if (rest.contains("summary"))
-          graft.sources.Mp3Source.mp3Meta(spark, media)
+        if (a.has("summary")) graft.sources.Mp3Source.mp3Meta(spark, media)
         else graft.sources.Mp3Source.mp3Frames(spark, media)
-      out.write.mode("overwrite").parquet(outDir)
-      println(s"[graft] mp3-meta-demo: $docsParquet -> $outDir" +
-        (if (rest.contains("summary")) " (summary)" else " (frames)"))
-      spark.stop()
+      out.write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] mp3-meta-demo: ${a("docsParquet")} -> ${a("outDir")}" +
+        (if (a.has("summary")) " (summary)" else " (frames)"))
+    },
 
-    case "warc-demo" :: docsParquet :: outDir :: Nil =>
-      val spark = session()
-      new java.io.File(outDir).mkdirs()
-      graft.sources.WarcSource.synthesizeWarc(
-          spark, spark.read.parquet(docsParquet))
-        .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-          it.foreach { r =>
-            val id = r.getLong(0)
-            val ext = if (id % 2 == 0) "warc.gz" else "warc"
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(outDir, s"d$id.$ext"),
-              r.getAs[Array[Byte]](1))
-          }
-        }
-      println(s"[graft] warc-demo: $docsParquet -> $outDir")
-      spark.stop()
+    fixtures("warc-demo", "warc.gz", "warc")(graft.sources.WarcSource.synthesizeWarc),
 
-    case "warc-extract" :: glob :: outDir :: Nil =>
-      val spark = session()
-      graft.sources.WarcSource.warcFiles(spark, glob)
-        .write.mode("overwrite").parquet(outDir)
-      println(s"[graft] warc-extract: $glob -> $outDir")
-      spark.stop()
+    convert("warc-extract", "glob.warc[.gz]")(graft.sources.WarcSource.warcFiles(_, _)),
 
-    case "orc-footer" :: paths if paths.nonEmpty =>
-      paths.foreach { p =>
+    local("orc-footer", Seq("file.orc"), repeated = true) { a =>
+      a.repeated.foreach { p =>
         val t = graft.sources.OrcFooter.readTail(p)
         println(s"$p: codec=${t.compression} rows=${t.nRows} " +
           s"types=${t.typeKinds.size} stripes=${t.stripes.size} " +
@@ -1324,13 +1207,14 @@ object GraftCli {
           println(f"  $c%-24s values=${st.values}%-9d$ints")
         }
       }
+    },
 
-    case "parquet-prune" :: file :: column :: lo :: hi :: Nil =>
+    local("parquet-prune", Seq("file.parquet", "intColumn", "lo", "hi")) { a =>
       val plan = graft.sources.ParquetFooter.pruneRowGroups(
-        file, column, lo.toLong, hi.toLong)
+        a("file.parquet"), a("intColumn"), a("lo").toLong, a("hi").toLong)
       plan.foreach { p =>
         val st = (p.mn, p.mx) match {
-          case (Some(a), Some(b)) => s"[$a,$b]"
+          case (Some(lo), Some(hi)) => s"[$lo,$hi]"
           case _ => "[no stats]"
         }
         println(f"rg${p.rgIdx}%-4d rows=${p.numRows}%-8d off=${p.startOffset}%-10d " +
@@ -1340,15 +1224,12 @@ object GraftCli {
       println(s"[graft] ${kept.size}/${plan.size} row groups survive: " +
         s"${kept.map(_.totalCompressed).sum} of " +
         s"${plan.map(_.totalCompressed).sum} compressed bytes")
+    },
 
-    // media metadata sweep: parse image containers (PNG chunk walk /
-    // JPEG marker walk, no pixel decode) out of a binary column. The
-    // input is any parquet with (doc_id, content) — for a quick drive,
-    // `image-meta-demo` synthesizes the fixture corpus first.
     // scan-planner's view of a parquet file: footer-only read (tail KBs,
     // never data pages) via our own thrift-compact decoder
-    case "parquet-footer" :: paths if paths.nonEmpty =>
-      paths.foreach { p =>
+    local("parquet-footer", Seq("file.parquet"), repeated = true) { a =>
+      a.repeated.foreach { p =>
         val f = graft.sources.ParquetFooter.readFooter(p)
         println(s"$p: rows=${f.numRows} rowGroups=${f.rowGroups.size} " +
           s"createdBy='${f.createdBy}'")
@@ -1356,7 +1237,7 @@ object GraftCli {
           println(f"  rg$i: rows=${rg.numRows} bytes=${rg.totalByteSize}")
           rg.columns.foreach { c =>
             val stats = (c.minI64, c.maxI64) match {
-              case (Some(a), Some(b)) => s" min=$a max=$b"
+              case (Some(mn), Some(mx)) => s" min=$mn max=$mx"
               case _ => ""
             }
             println(f"    ${c.pathInSchema.mkString(".")}%-28s " +
@@ -1367,11 +1248,15 @@ object GraftCli {
           }
         }
       }
+    },
 
-    case "image-meta" :: mediaParquet :: outDir :: rest =>
-      val spark = session()
-      val fmt = rest.headOption.getOrElse("png")
-      val media = spark.read.parquet(mediaParquet)
+    // media metadata sweep: parse image containers (PNG chunk walk /
+    // JPEG marker walk, no pixel decode) out of a binary column. The
+    // input is any parquet with (doc_id, content) — for a quick drive,
+    // `image-meta-demo` synthesizes the fixture corpus first.
+    job("image-meta", Seq("mediaParquet", "outDir"), Seq("format")) { (spark, a) =>
+      val fmt = a.opt("format").getOrElse("png")
+      val media = spark.read.parquet(a("mediaParquet"))
       val out = fmt match {
         case "png" => graft.operators.ImageCodecs.pngMetaTable(spark, media)
         case "jpeg" => graft.operators.ImageCodecs.jpegMetaTable(spark, media)
@@ -1382,14 +1267,13 @@ object GraftCli {
           graft.sources.WebpSource.webpPixelTable(spark, media)
         case other => sys.error(s"image-meta: unknown format $other")
       }
-      out.write.mode("overwrite").parquet(outDir)
-      println(s"[graft] image-meta ($fmt): $mediaParquet -> $outDir")
-      spark.stop()
+      out.write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] image-meta ($fmt): ${a("mediaParquet")} -> ${a("outDir")}")
+    },
 
-    case "image-meta-demo" :: docsParquet :: outDir :: rest =>
-      val spark = session()
-      val fmt = rest.headOption.getOrElse("png")
-      val docs = spark.read.parquet(docsParquet)
+    job("image-meta-demo", Seq("docsParquet", "outDir"), Seq("format")) { (spark, a) =>
+      val fmt = a.opt("format").getOrElse("png")
+      val docs = spark.read.parquet(a("docsParquet"))
       val media = fmt match {
         case "png" => graft.operators.ImageCodecs.synthesizePng(spark, docs)
         case "jpeg" => graft.operators.ImageCodecs.synthesizeJpeg(spark, docs)
@@ -1399,97 +1283,8 @@ object GraftCli {
           graft.sources.WebpSource.synthesizeWebp(spark, docs)
         case other => sys.error(s"image-meta-demo: unknown format $other")
       }
-      media.write.mode("overwrite").parquet(outDir)
-      println(s"[graft] image-meta-demo ($fmt): ${docs.count()} docs -> $outDir")
-      spark.stop()
-
-    case other =>
-      System.err.println(
-        s"""Unknown arguments: ${other.mkString(" ")}
-           |Usage: [--pool=<tenant>] <command> ...   (FAIR scheduler pool for shared sessions)
-           |  generate <outDir> <nRows> [seed]
-           |  prepartition <inGlob> <root[,root...]> <colIdx> <maxPartitions> <seed> [gzip]
-           |  split <inGlob> <outDir> <maxBytesPerShard> [header] [gzip]
-           |  validate <stagingDir>
-           |  stream <landingDir> <stagingDir> <checkpointDir> <colIdx> <maxPartitions> <seed> [triggerSec] [runSec]
-           |  notify-publish <queueDir> <blobPath> [blobPath ...]
-           |  notify-publish-spool <queueDir> <blobPath> [blobPath ...]   (object-store-safe; consumer needs claimMode=spool)
-           |  stream-notify <queueDir> <stagingDir> <checkpointDir> <colIdx> <maxPartitions> <seed> [triggerSec] [runSec] [rename|spool]
-           |  stream-notify-split <queueDir> <outDir> <checkpointDir> <maxBytesPerShard> [header] [gzip] [triggerSec] [runSec]
-           |  corpus-prep <documentsParquet> <outDir> [minTokens] [jaccardThreshold] [capacity]
-           |  prepare-run <documentsParquet> <benchParquet> <outDir> [minTokens] [jaccardThreshold] [capacity] [valPct] [semanticTau]
-           |  prepare-run-wave <waveParquet> <outDir> <waveId>
-           |  prepare-run-compact <outDir> [targetBytes]
-           |  dedup-delta <corpusParquet> <batchParquet> <outDir> [jaccardThreshold]
-           |  decontaminate <trainParquet> <benchParquet> <outDir> [nGram] [bloom]
-           |  zorder-write <inParquet> <outDir> <colA> <colB> [partitions]
-           |  compact <inDir> <outDir> [targetMB] [sortCol1,sortCol2,...]
-           |  export-jsonl <inParquet> <outDir> [limitMB] [gzip]
-           |  graph-pagerank <edgesParquet> <outDir> [iters] [tolUnits] [dangling]
-           |  graph-triangles <edgesParquet> <outDir>
-           |  graph-ancestors <parentsParquet> <outDir> [rounds]
-           |  graph-ppr <edgesParquet> <seedsParquet> <outDir> [iters]
-           |  graph-kcore <edgesParquet> <outDir> [k]
-           |  graph-hits <edgesParquet> <outDir> [iters]
-           |  graph-bfs <edgesParquet> <seedsParquet> <outDir> [maxDepth]
-           |  graph-components <edgesParquet> <outDir> [maxRounds]
-           |  graph-sssp <edgesParquet(src,dst,w)> <seedsParquet> <outDir> [maxRounds]
-           |  stream-tar-scan <landingDir> <outDir> <ckptDir> [lifetimeSec]
-           |  stream-zip-scan <landingDir> <outDir> <ckptDir> [lifetimeSec]
-           |  wet-demo <docsParquet> <outDir>
-           |  corpus-from-wet '<glob.wet*>' <outParquet> [strict]
-           |  zip-demo <docsParquet> <outDir>
-           |  zip-scan '<glob.zip>' <outDir>
-           |  manifest-compact <shardDir> [retainDays]
-           |  dedup-index-build <docsParquet> <indexDir>
-           |  ann-index-build <embeddingsParquet> <indexDir> [nlist] [trainIters]
-           |  ann-index-append <embeddingsParquet> <indexDir>
-           |  ann-query <indexDir> <embeddingsParquet> <vecId> <k> [nprobe]
-           |  ann-index-build-pq <embeddingsParquet> <indexDir> [nlist] [nSub] [trainIters]
-           |  ann-index-append-pq <embeddingsParquet> <indexDir>
-           |  ann-query-pq <indexDir> <embeddingsParquet> <vecId> <k> [nprobe]
-           |  prepare-run-sync-ann <outDir> <indexDir> [nlist] [trainIters]
-           |  ann-binary-build <embeddingsParquet> <indexDir>
-           |  ann-binary-append <embeddingsParquet> <indexDir>
-           |  ann-binary-query <indexDir> <embeddingsParquet> <vecId> <k> [prefilter]
-           |  ann-compact <indexDir> [targetBytes]
-           |  stream-upsert <landingDir> <tableDir> <checkpointDir> <keyCol> <tsCol> [nBuckets] [runSec]
-           |  stream-dedup-delta <corpusParquetOrIndex> <landingDir> <outDir> <checkpointDir> [threshold] [runSec]
-           |  stream-semantic-dedup <prepRunDir> <landingDir> <outDir> <checkpointDir> [tau] [runSec]
-           |  stream-quality-route <landingDir> <passDir> <quarantineDir> <checkpointDir> [minWords] [runSec]
-           |  stream-append-unique <landingDir> <corpusTableDir> <checkpointDir> [nBuckets] [runSec]
-           |  stream-asof <refParquet> <landingDir> <outDir> <checkpointDir> <keyCol> <timeCol> <valueCols,> [runSec] [backward|forward] [toleranceUnits]
-           |  heavy-hitters <docsParquet> [k]
-           |  kmeans <embeddingsParquet> <outDir> [k] [iters]
-           |  profile <inParquet>
-           |  chunk <docsParquet> <outDir> [size] [stride]
-           |  image-meta <mediaParquet(doc_id,content)> <outDir> [png|jpeg|gif|tiff|webp|webp-pixels]
-           |  image-meta-demo <docsParquet> <outDir> [png|jpeg|gif|tiff|webp|webp-pixels]
-           |  mp3-meta-demo <docsParquet> <outDir> [frames|summary]
-           |  parquet-footer <file.parquet> [file.parquet ...]
-           |  orc-footer <file.orc> [file.orc ...]
-           |  parquet-prune <file.parquet> <intColumn> <lo> <hi>
-           |  avro-scan <glob.avro> <outDir>
-           |  cdx-demo <docs.parquet> <outDir>
-           |  cdx-scan <glob.cdx[.gz]> <outDir>
-           |  cdx-fetch <cdxGlob> <warcDir> <outDir>
-           |  warc-index <glob.warc[.gz]> <outDir>
-           |  cdx-cluster <sortedCdxGlob> <outDir> [blockSize]
-           |  cdx-lookup <clusterDir> <url>
-           |  resolve-revisits <glob.warc[.gz]> <warcDir> <outDir>
-           |  corpus-from-cdx <cdxGlob> <warcDir> <outDir>
-           |  stream-cdx-fetch <cdxLandingDir> <warcDir> <outDir> <ckpt> [runSec]
-           |  wat-demo <docs.parquet> <outDir>
-           |  wat-scan <glob.wat[.gz]> <outDir>
-           |  stream-wat-scan <landingDir> <outDir> <ckpt> [runSec]
-           |  mkv-scan <glob.mkv|.webm> <outDir>
-           |  tar-scan <glob.tar[.gz]> <outDir>
-           |  mkv-meta <mediaParquet(doc_id,content)> <outDir>
-           |  mkv-meta-demo <docsParquet> <outDir>
-           |  warc-demo <docsParquet> <outDir>
-           |  warc-extract <glob.warc[.gz]> <outDir>
-           |  corpus-from-warc <glob.warc[.gz]> <docsOutDir> [strict] [main]
-           |  stream-warc-extract <landingDir> <outDir> <checkpointDir> [runSec]""".stripMargin)
-      sys.exit(2)
-  }
+      media.write.mode("overwrite").parquet(a("outDir"))
+      println(s"[graft] image-meta-demo ($fmt): ${docs.count()} docs -> ${a("outDir")}")
+    }
+  )
 }

@@ -1118,12 +1118,12 @@ object Brotli {
     */
   private val SlotBits = 4
   private val SlotMask = (1 << SlotBits) - 1
+  /** Probe depth per bucket: every slot of it. */
+  private val MaxProbes = 1 << SlotBits
 
   private def lzParse(data: Array[Byte], from: Int, until: Int,
                       window: Int, ring0: Array[Int], ringIdx0: Int,
                       slots: Array[Int], counts: Array[Int]): Seq[LzCmd] = {
-    val MaxProbes = sys.props.getOrElse("graft.brotli.probes", (1 << SlotBits).toString).toInt // A/B knob
-    val shortStep = sys.props.getOrElse("graft.brotli.shortstep", "1").toInt // A/B knob
     // table sizes are caller-sized to the input (a fixed 16 MiB table
     // allocated-and-filled per call crushed small-entity encodes — the
     // WARC fixture arm's exact shape); derive the hash shift from the
@@ -1311,7 +1311,7 @@ object Brotli {
           // index the interior: every position for short matches (chain
           // quality), sparsely for long ones (a 100 KB repeat would
           // otherwise build thousands-deep identical-hash chains)
-          val step = if (mlen > 512) 8 else if (mlen > 64) 2 else shortStep
+          val step = if (mlen > 512) 8 else if (mlen > 64) 2 else 1
           var j = i + 1
           val end = math.min(i + mlen, until - 4)
           while (j < end) { insertPos(j); j += step }

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.operators.{PartitionConfig, PrePartition}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** M4 — the event-driven mode (reference: ServiceBusServer.cs + the 1-min
@@ -20,10 +19,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *                                 work already committed, so replays of a
   *                                 failed batch are idempotent
   *
-  * Scale notes: each micro-batch is the batch PrePartition plan (one hash
-  * exchange); `maxFilesPerTrigger` bounds batch size = the reference's
-  * bounded-buffer backpressure. Checkpoint + manifest give exactly-once
-  * *output* on top of at-least-once replay.
+  * Scale notes: each micro-batch is the batch PrePartition write (no
+  * exchange: each scan task writes its own rows); `maxFilesPerTrigger`
+  * bounds batch size = the reference's bounded-buffer backpressure.
+  * Checkpoint + manifest give exactly-once *output* on top of
+  * at-least-once replay.
   */
 object StreamingPrePartition {
 
@@ -63,26 +63,21 @@ object StreamingPrePartition {
   def processBatch(batch: DataFrame, batchId: Long, roots: Seq[String],
                    controlDir: String, cfg: PartitionConfig): Unit = {
     val s = batch.sparkSession
-    // Per-batch marker DIRECTORY probed with one fs.exists — O(1) per
+    // Per-batch marker file probed with one fs.exists — O(1) per
     // trigger regardless of history (the r1 design re-read the full
     // manifest parquet every micro-batch and appended a 1-row file per
     // batch: O(batches) listing per trigger, unbounded small files).
-    // The tree still reads as one partitioned parquet table:
-    //   spark.read.parquet(s"$controlDir/_batch_manifest")
-    val markerPath = new org.apache.hadoop.fs.Path(
-      s"$controlDir/_batch_manifest/batch=$batchId")
-    val fs = markerPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // _SUCCESS appears only at job commit, so a crash mid-marker-write
-    // leaves the batch unmarked and the replay re-runs it (overwrite).
-    val already = fs.exists(new org.apache.hadoop.fs.Path(markerPath, "_SUCCESS"))
-    if (!already) {
+    // The marker is an empty file created by the driver, so the batch's
+    // data write is its only Spark job.
+    val marker = new org.apache.hadoop.fs.Path(
+      s"$controlDir/_batch_manifest/batch=$batchId/_SUCCESS")
+    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(marker)) {
       PrePartition.overwrite(PrePartition.withPartitionId(batch, cfg),
         roots.map(r => s"$r/data/batch=$batchId"), gzipOutput = false)
-      // commit marker AFTER the data write: replay-safe ordering
-      s.range(1).select(
-        lit(batchId).as("batch_id"),
-        current_timestamp().as("committed_at"))
-        .write.mode(SaveMode.Overwrite).parquet(markerPath.toString)
+      // commit marker AFTER the data write: replay-safe ordering (a crash
+      // before it leaves the batch unmarked, and the replay re-runs it)
+      fs.create(marker, true).close()
     }
   }
 

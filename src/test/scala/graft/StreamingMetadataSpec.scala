@@ -105,7 +105,11 @@ class StreamingMetadataSpec extends GraftSparkSpec {
     val batch = LogDataGenerator.toCsvLines(
       LogDataGenerator.generate(spark, 200, seed = 7))
 
-    StreamingPrePartition.processBatch(batch, batchId = 42L, Seq(staging), staging, cfg)
+    val (first, run) = inJobGroup(
+      StreamingPrePartition.processBatch(batch, batchId = 42L, Seq(staging), staging, cfg))
+    first.get
+    // the data write is the batch's one job: the marker is a driver-side file
+    assert(run.jobs == 1)
     assert(spark.read.text(s"$staging/data").count() == 200)
     // the replay: same batchId arrives again (at-least-once delivery)
     StreamingPrePartition.processBatch(batch, batchId = 42L, Seq(staging), staging, cfg)
