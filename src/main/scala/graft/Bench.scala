@@ -254,6 +254,9 @@ object Bench {
     }
     def entry(k: String, v: Double) = "\"" + k + "\":" + f"$v%.3f"
     val total = results.map(_._2).filter(_ >= 0).sum
+    // a query whose every run threw has median -1 and is left out of
+    // `total`: count and name it, so failures cannot pass as speed
+    val failed = results.collect { case (k, v) if v < 0 => k }
 
     // Full per-query map: persisted to a file (all 150+ entries). The
     // PRINTED line must survive the driver's stdout-tail capture (last
@@ -288,8 +291,9 @@ object Bench {
       }
     val provJson =
       s""""calib_ref":{"spark_par":$refSparkPar,"provenance":"${jstr(refProv)}","baseline":"${jstr(baselinePath)}"}"""
+    val failedJson = failed.map(n => "\"" + jstr(n) + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":${f"$total%.3f"},"value_calib_norm":${f"${calibNorm(total)}%.3f"},"unit":"sec","n_queries":${results.size},"calib":$calibJson,$provJson,"queries":$fullQs,"spread":$spread,"calib_q":$calibQ,"rerun":$rerunJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"value_calib_norm":${f"${calibNorm(total)}%.3f"},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"calib":$calibJson,$provJson,"queries":$fullQs,"spread":$spread,"calib_q":$calibQ,"rerun":$rerunJson,"sf":"$sfDir"}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), fullLine + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
@@ -305,7 +309,7 @@ object Bench {
       else omitted += 1
     }
     val line =
-      s"""{"metric":"total","value":${f"$total%.3f"},"value_calib_norm":${f"${calibNorm(total)}%.3f"},"unit":"sec","n_queries":${results.size},"calib":$calibJson,"n_rerun":${rerun.size},"queries":${kept.mkString("{", ",", "}")},"queries_omitted":$omitted,"full":"$outFile","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"value_calib_norm":${f"${calibNorm(total)}%.3f"},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"calib":$calibJson,"n_rerun":${rerun.size},"queries":${kept.mkString("{", ",", "}")},"queries_omitted":$omitted,"full":"$outFile","sf":"$sfDir"}"""
     println(line)
     spark.stop()
   }

@@ -326,4 +326,23 @@ private[graft] object StreamUtil {
         el
       }
     }
+
+  /** The per-file decode shape every archive arm shares, batch and
+    * streaming: `path` opens at first use ([[deferred]]), `decode`
+    * streams its rows, and the stream closes on exhaustion or error
+    * ([[closeOnExhaust]]). Under `lenient` any error, the open included,
+    * ends the file with ONE `poison` row ([[poisonOnError]]); strict
+    * rethrows.
+    */
+  def fileRows[T](path: String, conf: org.apache.hadoop.conf.Configuration,
+                  lenient: Boolean, poison: => T,
+                  decode: org.apache.hadoop.fs.FSDataInputStream => Iterator[T])
+      : Iterator[T] = {
+    val base = deferred {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val in = p.getFileSystem(conf).open(p)
+      closeOnExhaust(in, decode(in))
+    }
+    if (lenient) poisonOnError(base, poison) else base
+  }
 }

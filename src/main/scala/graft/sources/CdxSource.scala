@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 
 /** CDX(J) crawl-index handling — the THIRD Common Crawl artifact next
   * to WARC (x100) and WET (x117): each crawl ships `cdx-*.gz` shards
@@ -457,8 +458,9 @@ object CdxSource {
           fs.makeQualified(p0).toUri.getPath).normalize().toString
         if (p.endsWith("/")) p else p + "/"
       }
-    spark.sparkContext.binaryFiles(glob)
-      .flatMap { case (path, pds) =>
+    val conf = new Shims.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    spark.sparkContext.binaryFiles(glob).keys
+      .flatMap { path =>
         val fname =
           if (baseUri == null) path.substring(path.lastIndexOf('/') + 1)
           else {
@@ -467,17 +469,12 @@ object CdxSource {
               s"warc-index: '$p' is outside base '$baseUri'")
             p.substring(baseUri.length)
           }
-        val base = StreamUtil.deferred {
-          val in = pds.open()
-          StreamUtil.closeOnExhaust(in,
+        StreamUtil.fileRows(path, conf.value, lenient,
+          (null, null, null, null, -1, null, -1L, -1L, fname), in =>
             generateCdx(in, fname, lenientHttp = lenient).map { e =>
               (e.surtKey, e.timestamp, e.url, e.mime, e.status, e.digest,
                 e.length, e.offset, e.filename)
             })
-        }
-        if (!lenient) base
-        else StreamUtil.poisonOnError(base,
-          (null, null, null, null, -1, null, -1L, -1L, fname))
       }
       .toDF("surt", "timestamp", "url", "mime", "status", "digest",
         "length", "offset", "filename")
@@ -654,8 +651,7 @@ object CdxSource {
     */
   def writeZipnumFiles(spark: SparkSession, glob: String, outDir: String,
                        blockSize: Int = 3000): Long = {
-    val conf = new graft.streaming.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = new Shims.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val out = outDir
     spark.sparkContext.binaryFiles(glob)
       .map { case (path, pds) =>
@@ -824,36 +820,91 @@ object CdxSource {
   def cdxFiles(spark: SparkSession, glob: String,
                lenient: Boolean = true): DataFrame = {
     import spark.implicits._
-    spark.sparkContext.binaryFiles(glob)
-      .flatMap { case (path, pds) =>
-        val base = StreamUtil.deferred {
-          val in = pds.open()
-          val stream: java.io.InputStream =
-            if (path.endsWith(".gz")) new Gzip.GunzipStream(new ByteFeed(in))
-            else in
-          val reader = new java.io.BufferedReader(
-            new java.io.InputStreamReader(stream, "UTF-8"))
-          StreamUtil.closeOnExhaust(in,
-            Iterator.continually(reader.readLine()).takeWhile(_ != null)
-              .filter(_.nonEmpty)
-              .map { ln =>
-                try {
-                  val e = parseCdxLine(ln)
-                  (path, e.surtKey, e.timestamp, e.url, e.mime, e.status,
-                    e.digest, e.length, e.offset, e.filename)
-                } catch {
-                  case e: RuntimeException if lenient =>
-                    (path, null, null, ln, null, -1, null, -1L, -1L, null)
-                }
-              })
-        }
-        if (!lenient) base
-        else StreamUtil.poisonOnError(base,
-          (path, null, null, null, null, -1, null, -1L, -1L, null))
+    val conf = new Shims.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    spark.sparkContext.binaryFiles(glob).keys
+      .flatMap { path =>
+        StreamUtil.fileRows(path, conf.value, lenient,
+          (path, null, null, null, null, -1, null, -1L, -1L, null), in =>
+            shardLines(path, in).map { ln =>
+              try {
+                val e = parseCdxLine(ln)
+                (path, e.surtKey, e.timestamp, e.url, e.mime, e.status,
+                  e.digest, e.length, e.offset, e.filename)
+              } catch {
+                case e: RuntimeException if lenient =>
+                  (path, null, null, ln, null, -1, null, -1L, -1L, null)
+              }
+            })
       }
       .toDF("file", "surt", "timestamp", "url", "mime", "status",
         "digest", "length", "offset", "filename")
   }
+
+  /** The non-empty lines of one `.cdx` shard stream, gunzipped when the
+    * name ends in `.gz`.
+    */
+  private def shardLines(path: String, in: java.io.InputStream): Iterator[String] = {
+    val stream =
+      if (path.endsWith(".gz")) new Gzip.GunzipStream(new ByteFeed(in)) else in
+    val reader = new java.io.BufferedReader(new java.io.InputStreamReader(stream, "UTF-8"))
+    Iterator.continually(reader.readLine()).takeWhile(_ != null).filter(_.nonEmpty)
+  }
+
+  /** INDEX-DRIVEN fetch of one landed `.cdx(.gz)` shard, the decoder
+    * behind `StreamingAnalytics.cdxFetchIngest`: each line's (filename,
+    * offset, length) pointer fetches ONE record out of `warcDir`, rows
+    * (file, uri, status, text, degraded). Archive handles live in a
+    * small bounded cache (shards are SURT-sorted, so pointers interleave
+    * across archives — unlike [[fetchTagged]]'s filename sort). Under
+    * `lenient` a malformed line or failed fetch degrades to one poison
+    * row (uri NULL, status -1, the shard path as `file`), a malformed
+    * page to a NULL text with its uri kept, and shard-level damage
+    * (gzip CRC on the index itself) to one poison row for the file.
+    */
+  private[graft] def fetchRows(path: String, warcDir: String,
+                               conf: org.apache.hadoop.conf.Configuration,
+                               lenient: Boolean)
+      : Iterator[(String, String, Int, String, String)] =
+    StreamUtil.fileRows(path, conf, lenient, (path, null, -1, null, "damage:container"), { in =>
+      // bounded archive-handle cache, oldest-evicted: SURT order
+      // interleaves archives, but neighboring lines still cluster
+      val handles = scala.collection.mutable.LinkedHashMap[String,
+        (org.apache.hadoop.fs.FSDataInputStream, Long)]()
+      def closeQuietly(h: org.apache.hadoop.fs.FSDataInputStream): Unit =
+        try h.close() catch { case _: java.io.IOException => () }
+      def archive(fname: String): (org.apache.hadoop.fs.FSDataInputStream, Long) =
+        handles.getOrElseUpdate(fname, {
+          if (handles.size >= 8) {
+            val (k, (h, _)) = handles.head
+            closeQuietly(h); handles.remove(k)
+          }
+          val ap = new org.apache.hadoop.fs.Path(warcDir, fname)
+          val afs = ap.getFileSystem(conf)
+          (afs.open(ap), afs.getFileStatus(ap).getLen)
+        })
+      val rows = shardLines(path, in).map { ln =>
+        try {
+          val e = parseCdxLine(ln)
+          val (h, size) = archive(e.filename)
+          val r = fetchRecord(new ZipSource.StreamSeekable(h, size),
+            e.offset, e.length, lenientHttp = lenient)
+          // fetched rows carry the ARCHIVE filename (the fetchByIndex
+          // shape — per-archive accounting needs it); poison rows carry
+          // the index shard path, the only provenance a bad line has
+          WarcSource.extractRow(e.filename, r, lenient)
+        } catch {
+          // NonFatal, not just RuntimeException: a missing or unreadable
+          // ARCHIVE surfaces as IOException from fs.open/readFully, and
+          // it must poison THIS line — letting it escape to the
+          // file-level guard would silently drop every remaining line of
+          // the shard while the checkpoint marks it done
+          case scala.util.control.NonFatal(_) if lenient =>
+            (path, null, -1, null, "damage:index")
+        }
+      }
+      StreamUtil.closeOnExhaust(
+        () => handles.valuesIterator.foreach(v => closeQuietly(v._1)), rows)
+    })
 
   /** Random-access fetch arm: for each (filename, offset, length) row
     * of a parsed index, open the archive and decode just that record —
@@ -884,8 +935,7 @@ object CdxSource {
   private[graft] def fetchTagged(spark: SparkSession, warcDir: String,
                                  rows0: DataFrame): DataFrame = {
     import spark.implicits._
-    val conf = new graft.streaming.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = new Shims.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val dir = warcDir
     rows0.toDF("fname", "off", "len", "tag")
       .filter(col("fname").isNotNull && col("off") >= 0 && col("len") > 0)

@@ -296,14 +296,12 @@ object Mp3Source {
     out.toByteArray
   }
 
-  private case class AudioDoc(doc_id: Long, content: Array[Byte])
-
   def synthesizeMp3(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     docs.select(col("doc_id")).as[Long]
       .repartition(spark.sparkContext.defaultParallelism)
-      .map(id => AudioDoc(id, mp3Of(id)))
-      .toDF()
+      .map(id => (id, mp3Of(id)))
+      .toDF("doc_id", "content")
   }
 
   /** Per-frame table over a (doc_id, bytes) frame — x133's gate: the

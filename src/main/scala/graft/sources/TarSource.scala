@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 
 /** POSIX tar (ustar) walker + WebDataset sample grouping — the shard
   * format large multimodal training pipelines feed from: a shard is a
@@ -293,17 +294,24 @@ object TarSource {
     */
   def tarFiles(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
-    spark.sparkContext.binaryFiles(glob)
-      .flatMap { case (path, pds) =>
-        // stream PortableDataStream.open() entry-at-a-time — O(largest
-        // entry) per task, never pds.toArray() (r15 verdict)
-        val in = pds.open()
-        StreamUtil.closeOnExhaust(in,
-          shardEntryIter(in).filter(_.typeflag == '0')
-            .map(e => (path, e.name, e.name.takeWhile(_ != '.'), e.size)))
-      }
+    val conf = new Shims.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    spark.sparkContext.binaryFiles(glob).keys
+      .flatMap(tarRows(_, conf.value, lenient = false))
       .toDF("shard", "name", "sample_key", "bytes")
   }
+
+  /** One shard's member rows (shard, name, sample_key, bytes), shared by
+    * [[tarFiles]] and `StreamingAnalytics.tarIngest`: entry-at-a-time,
+    * O(largest entry), never the whole file. Under `lenient` a damaged
+    * shard yields its entries up to the damage, then ONE poison row
+    * (null name, bytes -1).
+    */
+  private[graft] def tarRows(path: String, conf: org.apache.hadoop.conf.Configuration,
+                             lenient: Boolean)
+      : Iterator[(String, String, String, Long)] =
+    StreamUtil.fileRows(path, conf, lenient, (path, null, null, -1L), in =>
+      shardEntryIter(in).filter(_.typeflag == '0')
+        .map(e => (path, e.name, e.name.takeWhile(_ != '.'), e.size)))
 
   /** x104 gate: WebDataset sample grouping + per-extension facts. */
   def webdatasetTable(spark: SparkSession, media: DataFrame): DataFrame = {

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 
 /** WAT metadata archives — the FOURTH and final Common Crawl artifact
   * (WARC x100 fetches, WET x117 text, CDX x119 index): each crawl
@@ -445,7 +446,7 @@ object WatSource {
     media.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
       .flatMap { case (_, bytes) =>
         WarcSource.parseWarc(bytes).records
-          // body != null like the sibling arms (watRowsIter): a metadata
+          // body != null like the sibling arms (watRows): a metadata
           // record with a non-JSON content type has no decoded body, and
           // a crawler counts junk, it never dies on it (r18 review)
           .filter(r => r.warcType == "metadata" && r.body != null)
@@ -483,20 +484,16 @@ object WatSource {
       .toDF("doc_id", "j", "m", "target", "nofollow")
   }
 
-  /** File-path arm: metadata envelopes of `.wat(.gz)` files under a
-    * glob — one task per file, record-at-a-time (the WARC/WET
-    * streaming discipline), lenient poison row (uri NULL) on damage.
+  /** One archive's envelope-fact rows (file, uri, title, n_links,
+    * status), shared by [[watFiles]] and `StreamingAnalytics.watIngest`.
+    * Record-at-a-time on the streaming WARC walk; under `lenient` a bad
+    * envelope degrades per record (uri kept, facts -1) and container
+    * damage ends the file with ONE uri-NULL poison row.
     */
-  /** The per-archive envelope-fact iterator shared by the batch
-    * ([[watFiles]]) and streaming (`StreamingAnalytics.watIngest`)
-    * arms — one derivation, the warcIngest/responseRows discipline.
-    * Record-at-a-time on the streaming WARC walk; a bad envelope
-    * degrades per record under lenient (uri kept, facts -1).
-    */
-  private[graft] def watRowsIter(path: String, in: java.io.InputStream,
-                                 lenient: Boolean)
+  private[graft] def watRows(path: String, conf: org.apache.hadoop.conf.Configuration,
+                             lenient: Boolean)
       : Iterator[(String, String, String, Int, Int)] =
-    StreamUtil.closeOnExhaust(in,
+    StreamUtil.fileRows(path, conf, lenient, (path, null, null, -1, -1), in =>
       new WarcSource.WarcIterator(in, lenientHttp = lenient)
         .filter(r => r.warcType == "metadata" && r.body != null)
         .map { r =>
@@ -510,17 +507,15 @@ object WatSource {
           (path, f.uri, f.title, f.nLinks, f.status)
         })
 
+  /** File-path arm: metadata envelopes of `.wat(.gz)` files under a
+    * glob — one task per file, rows from [[watRows]].
+    */
   def watFiles(spark: SparkSession, glob: String,
                lenient: Boolean = true): DataFrame = {
     import spark.implicits._
-    spark.sparkContext.binaryFiles(glob)
-      .flatMap { case (path, pds) =>
-        val base = StreamUtil.deferred {
-          watRowsIter(path, pds.open(), lenient)
-        }
-        if (!lenient) base
-        else StreamUtil.poisonOnError(base, (path, null, null, -1, -1))
-      }
+    val conf = new Shims.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    spark.sparkContext.binaryFiles(glob).keys
+      .flatMap(watRows(_, conf.value, lenient))
       .toDF("file", "uri", "title", "n_links", "status")
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 
 /** ZIP archive walker — the third shard container next to tar
   * (WebDataset) and WARC: dataset distribution still leans on zip
@@ -28,9 +29,8 @@ import org.apache.spark.sql.functions._
   * 100 TB shape: one task per archive; the central directory is
   * O(entries) metadata and each entry's bytes decode one at a time —
   * O(largest entry) per task, like the tar walker. Reading the directory
-  * needs a SEEK to the tail, which `binaryFiles`' `PortableDataStream`
-  * provides (its `open()` is an `FSDataInputStream`) — no whole-file
-  * buffering anywhere.
+  * needs a SEEK to the tail, which the Hadoop `FSDataInputStream` the
+  * task opens provides — no whole-file buffering anywhere.
   */
 object ZipSource {
 
@@ -444,33 +444,33 @@ object ZipSource {
   def zipFiles(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
     // ship the job's REAL Hadoop conf (spark.hadoop.* credentials,
-    // endpoints) for the executor-side file stat — a default-constructed
-    // Configuration breaks on exactly the object-store deployments this
-    // arm targets (r16 review)
-    val conf = new graft.streaming.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    spark.sparkContext.binaryFiles(glob)
-      .flatMap { case (path, pds) =>
-        val raw = pds.open()
-        // directory read happens INSIDE closeOnExhaust's by-name guard:
-        // a no-EOCD/encrypted/zip64 reject must close the stream
-        StreamUtil.closeOnExhaust(raw, {
-          val fsIn = raw match {
-            case f: org.apache.hadoop.fs.FSDataInputStream => f
-            case _ => sys.error("zip: binaryFiles stream is not seekable")
-          }
-          // PortableDataStream carries no length; stat the file for the
-          // tail seek (one namenode round-trip per archive)
-          val p = new org.apache.hadoop.fs.Path(pds.getPath())
-          val len = p.getFileSystem(conf.value).getFileStatus(p).getLen
-          val in = new StreamSeekable(fsIn, len)
-          val dir = readDirectory(in)
-          dir.entries.iterator.map { e =>
-            val n = entryBytes(in, e).length.toLong // decode = CRC check
-            (path, e.name, e.method, e.usize, n == e.usize)
-          }
-        })
-      }
+    // endpoints) for the executor-side open and stat — a
+    // default-constructed Configuration breaks on exactly the
+    // object-store deployments this arm targets
+    val conf = new Shims.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    spark.sparkContext.binaryFiles(glob).keys
+      .flatMap(zipRows(_, conf.value, lenient = false))
       .toDF("file", "name", "method", "usize", "crc_ok")
   }
+
+  /** One archive's entry rows (file, name, method, usize, crc_ok), shared
+    * by [[zipFiles]] and `StreamingAnalytics.zipIngest`. The directory
+    * read runs inside the stream guard, so a no-EOCD/encrypted/zip64
+    * reject closes the stream; under `lenient` a damaged archive yields
+    * ONE poison row (null name, usize -1).
+    */
+  private[graft] def zipRows(path: String, conf: org.apache.hadoop.conf.Configuration,
+                             lenient: Boolean)
+      : Iterator[(String, String, Int, Long, Boolean)] =
+    StreamUtil.fileRows(path, conf, lenient, (path, null, -1, -1L, false), { fsIn =>
+      // stat at open time for the tail seek: the length is the task-time
+      // one, not the (possibly stale) listing-time value of a
+      // still-growing copy-in
+      val p = new org.apache.hadoop.fs.Path(path)
+      val in = new StreamSeekable(fsIn, p.getFileSystem(conf).getFileStatus(p).getLen)
+      readDirectory(in).entries.iterator.map { e =>
+        val n = entryBytes(in, e).length.toLong // decode = CRC check
+        (path, e.name, e.method, e.usize, n == e.usize)
+      }
+    })
 }

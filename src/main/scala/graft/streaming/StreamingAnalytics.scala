@@ -81,13 +81,9 @@ object StreamingAnalytics {
                    tableDir: String, checkpointDir: String,
                    nBuckets: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendUniqueBatch(batch, textCol, idCol, tableDir, nBuckets)
-        ()
-      }
-      .start()
+    StreamServer.eachBatch(docs, checkpointDir) { (batch, _) =>
+      appendUniqueBatch(batch, textCol, idCol, tableDir, nBuckets)
+    }
 
   /** One exact-dedup append step (the `foreachBatch` body, callable
     * directly for batch backfills). Returns the number of novel rows
@@ -158,21 +154,16 @@ object StreamingAnalytics {
   def nearDupIngestIndexed(docs: DataFrame, corpusIdx: DataFrame,
                            idCol: String, textCol: String, outDir: String,
                            checkpointDir: String, threshold: Double = 0.5)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Dedup
-          .incrementalNearDupIndexed(corpusIdx, batch, idCol, textCol,
-            threshold = threshold)
-          // `wave=`, not `batch_id=`: the result already carries a
-          // batch_id data column; a same-named partition dir would
-          // collide at read time
-          .write.mode("overwrite").parquet(s"$outDir/wave=$batchId")
-        ()
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StreamServer.eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      graft.operators.Dedup
+        .incrementalNearDupIndexed(corpusIdx, batch, idCol, textCol,
+          threshold = threshold)
+        // `wave=`, not `batch_id=`: the result already carries a
+        // batch_id data column; a same-named partition dir would
+        // collide at read time
+        .write.mode("overwrite").parquet(s"$outDir/wave=$batchId")
+    }
 
   /** STREAMING WET EXPORT — the archive-producing end of a continuous
     * pipeline: each micro-batch of landing documents (doc_id, source,
@@ -191,14 +182,9 @@ object StreamingAnalytics {
                       checkpointDir: String, nShards: Int = 4,
                       gzip: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sources.WarcSource.writeWet(
-          batch.toDF(), s"$outDir/wave=$batchId", nShards, gzip)
-        ()
-      }
-      .start()
+    StreamServer.eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      graft.sources.WarcSource.writeWet(batch, s"$outDir/wave=$batchId", nShards, gzip)
+    }
 
   /** [[wetExportIngest]]'s response-record sibling: micro-batches of
     * page rows (uri, status, content_type, body) export as waves of
@@ -210,14 +196,9 @@ object StreamingAnalytics {
                        checkpointDir: String, nShards: Int = 4,
                        gzip: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    pages.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sources.WarcSource.writeWarc(
-          batch.toDF(), s"$outDir/wave=$batchId", nShards, gzip)
-        ()
-      }
-      .start()
+    StreamServer.eachBatch(pages, checkpointDir) { (batch, batchId) =>
+      graft.sources.WarcSource.writeWarc(batch, s"$outDir/wave=$batchId", nShards, gzip)
+    }
 
   /** CC-shaped CONTINUOUS export — [[warcExportIngest]] with digest
     * dedup carried ACROSS micro-batches through a persisted index
@@ -244,61 +225,57 @@ object StreamingAnalytics {
                             gzip: Boolean = true,
                             date: String = "2026-01-01T00:00:00Z")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    pages.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val idxDir = s"$outDir/digest-index"
-        val prior =
-          try spark.read.option("basePath", idxDir).parquet(idxDir)
-            .filter(col("wave") < batchId)
-            .select(col("digest"), col("orig").as("prior_orig"))
-          catch {
-            // first batch: no index yet (the listing error surfaces as
-            // either, depending on the path layer)
-            case _: org.apache.spark.sql.AnalysisException |
-                 _: java.io.FileNotFoundException =>
-              Seq.empty[(String, String)].toDF("digest", "prior_orig")
-          }
-        val withDigest = batch.toDF()
-          .select(col("uri").cast("string"), col("status").cast("int"),
-            col("content_type").cast("string"), col("body"))
-          .as[(String, Int, String, Array[Byte])]
-          .map { case (uri, status, ct, body) =>
-            (uri, status, ct, body,
-              graft.sources.WarcSource.payloadDigestOf(
-                if (body == null) Array.emptyByteArray else body))
-          }
-          .toDF("uri", "status", "content_type", "body", "digest")
-          .persist()
-        val newWinners = withDigest
-          .join(prior, Seq("digest"), "left_anti")
-          .groupBy("digest").agg(min(col("uri")).as("orig"))
-          .persist()
-        try {
-          val decided = withDigest
-            .join(prior, Seq("digest"), "left")
-            .join(newWinners, Seq("digest"), "left")
-            .withColumn("orig", coalesce(col("prior_orig"), col("orig")))
-          graft.sources.WarcSource.writeWarcDecided(
-            decided.select("uri", "status", "content_type", "body", "orig",
-              "digest"),
-            s"$outDir/wave=$batchId", nShards, gzip, date)
-          // the index append happens AFTER the archives land: a crash
-          // between the two replays with the same prior state either way
-          newWinners.write.mode("overwrite")
-            .parquet(s"$idxDir/wave=$batchId")
-        } finally {
-          // both caches release on failure too — a restarted stream on
-          // the same session must not accumulate pinned blocks per
-          // failed attempt (r19 review)
-          newWinners.unpersist()
-          withDigest.unpersist()
+    StreamServer.eachBatch(pages, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val idxDir = s"$outDir/digest-index"
+      val prior =
+        try spark.read.option("basePath", idxDir).parquet(idxDir)
+          .filter(col("wave") < batchId)
+          .select(col("digest"), col("orig").as("prior_orig"))
+        catch {
+          // first batch: no index yet (the listing error surfaces as
+          // either, depending on the path layer)
+          case _: org.apache.spark.sql.AnalysisException |
+               _: java.io.FileNotFoundException =>
+            Seq.empty[(String, String)].toDF("digest", "prior_orig")
         }
-        ()
+      val withDigest = batch
+        .select(col("uri").cast("string"), col("status").cast("int"),
+          col("content_type").cast("string"), col("body"))
+        .as[(String, Int, String, Array[Byte])]
+        .map { case (uri, status, ct, body) =>
+          (uri, status, ct, body,
+            graft.sources.WarcSource.payloadDigestOf(
+              if (body == null) Array.emptyByteArray else body))
+        }
+        .toDF("uri", "status", "content_type", "body", "digest")
+        .persist()
+      val newWinners = withDigest
+        .join(prior, Seq("digest"), "left_anti")
+        .groupBy("digest").agg(min(col("uri")).as("orig"))
+        .persist()
+      try {
+        val decided = withDigest
+          .join(prior, Seq("digest"), "left")
+          .join(newWinners, Seq("digest"), "left")
+          .withColumn("orig", coalesce(col("prior_orig"), col("orig")))
+        graft.sources.WarcSource.writeWarcDecided(
+          decided.select("uri", "status", "content_type", "body", "orig",
+            "digest"),
+          s"$outDir/wave=$batchId", nShards, gzip, date)
+        // the index append happens AFTER the archives land: a crash
+        // between the two replays with the same prior state either way
+        newWinners.write.mode("overwrite")
+          .parquet(s"$idxDir/wave=$batchId")
+      } finally {
+        // both caches release on failure too — a restarted stream on
+        // the same session must not accumulate pinned blocks per
+        // failed attempt
+        newWinners.unpersist()
+        withDigest.unpersist()
       }
-      .start()
+    }
 
   /** SEMANTIC (embedding) dedup at ingest against a committed corpus's
     * persisted clustering state (PrepareRun's `semantic_centroids` +
@@ -328,16 +305,12 @@ object StreamingAnalytics {
     // nearDupIngestIndexed discipline): the reps side is cached once
     val prepped = reps
       .select("cluster", "rep_rank", "vec_id", "embedding").persist()
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Similarity.semanticDedupWave(
-            batch.select(col(idCol).as("vec_id"), col("embedding")),
-            cents, prepped, repCap = repCap, tau = tau)._1
-          .write.mode("overwrite").parquet(s"$outDir/wave=$batchId")
-        ()
-      }
-      .start()
+    StreamServer.eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      graft.operators.Similarity.semanticDedupWave(
+          batch.select(col(idCol).as("vec_id"), col("embedding")),
+          cents, prepped, repCap = repCap, tau = tau)._1
+        .write.mode("overwrite").parquet(s"$outDir/wave=$batchId")
+    }
   }
 
   /** Streaming AS-OF enrichment: each micro-batch of events is joined —
@@ -366,15 +339,11 @@ object StreamingAnalytics {
       .repartition(col(key))
       .sortWithinPartitions(col(key), col(time))
       .persist()
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.plans.AsofJoin
-          .joinAsof(batch, prepped, key, time, valueCols, direction, tolerance)
-          .write.mode("overwrite").parquet(s"$outDir/wave=$batchId")
-        ()
-      }
-      .start()
+    StreamServer.eachBatch(events, checkpointDir) { (batch, batchId) =>
+      graft.plans.AsofJoin
+        .joinAsof(batch, prepped, key, time, valueCols, direction, tolerance)
+        .write.mode("overwrite").parquet(s"$outDir/wave=$batchId")
+    }
   }
 
   /** Stream-stream join with a time-range condition — view→click
@@ -491,13 +460,9 @@ object StreamingAnalytics {
                    tableDir: String, checkpointDir: String,
                    nBuckets: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, keyCol, tsCol, tableDir, nBuckets)
-      }
-      .start()
+    StreamServer.eachBatch(stream, checkpointDir, mode = OutputMode.Update) { (batch, _) =>
+      upsertBatch(batch, keyCol, tsCol, tableDir, nBuckets)
+    }
 
   /** One upsert merge step (the `foreachBatch` body, callable directly
     * for batch backfills and tested in isolation).
@@ -575,14 +540,9 @@ object StreamingAnalytics {
                    checkpointDir: String, minWords: Int = 5,
                    maxMeanWordLen: Double = 12.0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        routeBatch(batch, batchId, passDir, quarantineDir,
-          minWords, maxMeanWordLen)
-        ()
-      }
-      .start()
+    StreamServer.eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      routeBatch(batch, batchId, passDir, quarantineDir, minWords, maxMeanWordLen)
+    }
 
   /** One routing step (the `foreachBatch` body, callable directly for
     * batch backfills). Returns (nPassed, nQuarantined).
@@ -662,333 +622,94 @@ object StreamingAnalytics {
       }
   }
 
-  // binaryFile's schema is fixed by the format, but streaming file
-  // sources require it stated explicitly — shared by the three ingest
-  // servers (warc/tar/zip)
-  private val binaryFileSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("path",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("modificationTime",
-      org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("length",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("content",
-      org.apache.spark.sql.types.BinaryType)))
-
-  /** Continuous crawl ingestion: a landing directory of `.warc`/`.warc.gz`
-    * archives streams through the WARC walk + HTML extraction
-    * (sources/WarcSource) into an append-only parquet table of extracted
-    * pages. The `binaryFile` source gives exactly-once file-granular
-    * progress through the checkpoint; each micro-batch is the narrow
-    * map-only plan the batch arm (`warcFiles`) runs, so backpressure is
-    * just `maxFilesPerTrigger`. Output: (file, uri, status, text).
+  /** Continuous crawl ingestion: `.warc`/`.warc.gz` archives landing in
+    * `landingDir` stream through the batch arm's decoder
+    * ([[graft.sources.WarcSource.warcFiles]]: WARC walk + HTML
+    * extraction) into an append-only parquet table of extracted pages,
+    * exactly-once per file through the checkpoint. Lenient by default:
+    * a crawl server must outlive malformed pages (null text, row kept)
+    * AND poison archives (one uri-NULL/status -1 row for the file
+    * instead of a micro-batch that refails on every retry).
+    * Output: (file, uri, status, text, degraded).
     */
   def warcIngest(spark: org.apache.spark.sql.SparkSession,
                  landingDir: String, outDir: String,
                  checkpointDir: String, maxFilesPerTrigger: Int = 32,
                  lenient: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    // binaryFile's schema is fixed by the format, but streaming file
-    // sources require it stated explicitly
-    val stream = spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
-      .option("pathGlobFilter", "*.warc*")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(landingDir)
-    // lenient by default: a crawl server must outlive malformed pages
-    // (null text, row kept) AND poison archives (container damage yields
-    // ONE uri-NULL/status -1 row for the file instead of a micro-batch
-    // that refails on every retry, wedging the stream). ONE extraction
-    // policy, shared with the batch arm (responseRows).
-    // Only `path` is selected, so column pruning keeps binaryFile from
-    // materializing file bytes in the row; each task re-opens its file
-    // and streams it record-at-a-time — O(largest record), same as batch.
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    stream.select(col("path")).as[String]
-      .flatMap { path =>
-        // open at FIRST USE (deferred): a file deleted between listing
-        // and task must poison under lenient, not fail the micro-batch
-        val base = graft.sources.StreamUtil.deferred {
-          val p = new org.apache.hadoop.fs.Path(path)
-          val in = p.getFileSystem(conf.value).open(p)
-          graft.sources.WarcSource.responseRows(path, in, lenient,
-            mainContent = false)
-        }
-        if (!lenient) base
-        else graft.sources.StreamUtil.poisonOnError(base,
-          (path, null, -1, null, "damage:container")) // open failures;
-          // parse errors poison inside
-      }
-      .toDF("file", "uri", "status", "text", "degraded")
-      .writeStream
-      .format("parquet")
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StreamServer.ingestLanded(spark, landingDir, "*.warc*", maxFilesPerTrigger,
+        outDir, checkpointDir, "file", "uri", "status", "text", "degraded")(
+      graft.sources.WarcSource.responseRows(_, _, lenient, mainContent = false))
 
   /** Continuous WebDataset-shard ingestion — the tar sibling of
-    * [[warcIngest]]: a landing directory of `.tar`/`.tar.gz` shards
-    * streams through the entry walk (sources/TarSource) into an
-    * append-only parquet member manifest, exactly-once per file through
-    * the checkpoint. Same memory discipline as batch: only `path` is
-    * selected (binaryFile never ships content in a Row) and each task
-    * streams its shard entry-at-a-time — O(largest entry).
-    * Output: (shard, name, sample_key, bytes).
+    * [[warcIngest]]: landing `.tar`/`.tar.gz` shards stream through the
+    * batch arm's decoder ([[graft.sources.TarSource.tarFiles]]) into an
+    * append-only parquet member manifest; under `lenient` a damaged
+    * shard yields its entries up to the damage, then ONE poison row
+    * (null name, bytes -1). Output: (shard, name, sample_key, bytes).
     */
   def tarIngest(spark: org.apache.spark.sql.SparkSession,
                 landingDir: String, outDir: String,
                 checkpointDir: String, maxFilesPerTrigger: Int = 32,
                 lenient: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
-      .option("pathGlobFilter", "*.tar*")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(landingDir)
-      .select(col("path")).as[String]
-      .flatMap { path =>
-        // open deferred to first use — see warcIngest's listing-race note
-        val base = graft.sources.StreamUtil.deferred {
-          val p = new org.apache.hadoop.fs.Path(path)
-          val in = p.getFileSystem(conf.value).open(p)
-          graft.sources.StreamUtil.closeOnExhaust(in,
-            graft.sources.TarSource.shardEntryIter(in)
-              .filter(_.typeflag == '0')
-              .map(e => (path, e.name, e.name.takeWhile(_ != '.'), e.size)))
-        }
-        // lenient (default): a damaged shard yields its entries up to
-        // the damage, then ONE poison row (null name, bytes -1) — never
-        // a micro-batch that refails on every retry
-        if (!lenient) base
-        else graft.sources.StreamUtil.poisonOnError(base,
-          (path, null, null, -1L))
-      }
-      .toDF("shard", "name", "sample_key", "bytes")
-      .writeStream
-      .format("parquet")
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StreamServer.ingestLanded(spark, landingDir, "*.tar*", maxFilesPerTrigger,
+        outDir, checkpointDir, "shard", "name", "sample_key", "bytes")(
+      graft.sources.TarSource.tarRows(_, _, lenient))
 
-  /** Continuous ZIP-shard ingestion — completes the streaming trio
-    * (WARC [[warcIngest]], tar [[tarIngest]]): landing `.zip` archives
-    * stream into an append-only entry manifest, exactly-once per file.
-    * The directory read needs SEEKS, so the task opens (and stats) the
-    * path itself at first use — only `path` is ever selected from the
-    * binaryFile source. Decode + CRC verification per entry, O(largest
-    * entry) memory; under `lenient` a damaged archive degrades to one
-    * poison row (null name, usize -1) instead of wedging the stream.
+  /** Continuous ZIP-archive ingestion — the zip sibling of
+    * [[warcIngest]]: landing `.zip` archives stream through the batch
+    * arm's decoder ([[graft.sources.ZipSource.zipFiles]]: directory read
+    * by tail seek, every entry decoded and CRC-checked) into an
+    * append-only entry manifest; under `lenient` a damaged archive
+    * yields ONE poison row (null name, usize -1).
     * Output: (file, name, method, usize, crc_ok).
     */
   def zipIngest(spark: org.apache.spark.sql.SparkSession,
                 landingDir: String, outDir: String,
                 checkpointDir: String, maxFilesPerTrigger: Int = 32,
                 lenient: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
-      .option("pathGlobFilter", "*.zip")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(landingDir)
-      .select(col("path")).as[String]
-      .flatMap { path =>
-        // open AND stat at first use, inside the guard: a file deleted
-        // after listing poisons instead of wedging the stream, and the
-        // length is the task-time one, not the (possibly stale)
-        // listing-time value of a still-growing copy-in
-        val base = graft.sources.StreamUtil.deferred {
-          val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(conf.value)
-          val len = fs.getFileStatus(p).getLen
-          val fsIn = fs.open(p)
-          graft.sources.StreamUtil.closeOnExhaust(fsIn, {
-            val in = new graft.sources.ZipSource.StreamSeekable(fsIn, len)
-            graft.sources.ZipSource.readDirectory(in).entries.iterator.map { e =>
-              val n = graft.sources.ZipSource.entryBytes(in, e).length.toLong
-              (path, e.name, e.method, e.usize, n == e.usize)
-            }
-          })
-        }
-        if (!lenient) base
-        else graft.sources.StreamUtil.poisonOnError(base,
-          (path, null, -1, -1L, false))
-      }
-      .toDF("file", "name", "method", "usize", "crc_ok")
-      .writeStream
-      .format("parquet")
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StreamServer.ingestLanded(spark, landingDir, "*.zip", maxFilesPerTrigger,
+        outDir, checkpointDir, "file", "name", "method", "usize", "crc_ok")(
+      graft.sources.ZipSource.zipRows(_, _, lenient))
 
-  /** Continuous INDEX-DRIVEN fetch — the CDX sibling of [[warcIngest]]:
-    * `.cdx(.gz)` shards land, each line's (filename, offset, length)
-    * pointer fetches ONE gzip member out of `warcDir`, and the decoded
-    * rows append exactly-once through the checkpoint. This is the
-    * streaming shape of selective refetch: work is proportional to
-    * index lines landed, never to archive bytes. Per-task archive
-    * handles live in a small bounded cache (cdx shards are SURT-sorted,
-    * so pointers interleave across archives — unlike the batch arm's
-    * filename sort); under `lenient` a malformed line or failed fetch
-    * degrades to one countable poison row (uri NULL, status -1), a
-    * malformed page to a NULL text with its uri kept, and shard-level
-    * damage (gzip CRC on the index itself) to one poison row for the
-    * file — the micro-batch never wedges on retry. Output:
-    * (file, uri, status, text) where `file` is the fetched ARCHIVE for
-    * decoded rows (the fetchByIndex shape — per-archive accounting)
-    * and the index shard path for poison rows (a bad line's only
-    * provenance).
-    */
   /** Continuous WAT-metadata ingestion — the streaming arm of
-    * `watFiles` (same envelope walk, same lenient contract): landing
-    * `.wat(.gz)` archives stream into an append-only table of
-    * per-capture envelope facts, exactly-once per file through the
-    * binaryFile checkpoint. Bad envelopes degrade per record (uri
-    * kept, facts -1), container damage poisons the rest of the FILE as
-    * one uri-NULL row — the warcIngest discipline.
+    * [[graft.sources.WatSource.watFiles]], through the same decoder:
+    * landing `.wat(.gz)` archives stream into an append-only table of
+    * per-capture envelope facts. Bad envelopes degrade per record (uri
+    * kept, facts -1); container damage poisons the rest of the FILE as
+    * one uri-NULL row. Output: (file, uri, title, n_links, status).
     */
   def watIngest(spark: org.apache.spark.sql.SparkSession,
                 landingDir: String, outDir: String,
                 checkpointDir: String, maxFilesPerTrigger: Int = 32,
                 lenient: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
-      .option("pathGlobFilter", "*.wat*")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(landingDir)
-      .select(col("path")).as[String]
-      .flatMap { path =>
-        // open deferred to first use — see warcIngest's listing-race note
-        val base = graft.sources.StreamUtil.deferred {
-          val p = new org.apache.hadoop.fs.Path(path)
-          // watRowsIter wraps the stream in its own closeOnExhaust
-          graft.sources.WatSource.watRowsIter(path,
-            p.getFileSystem(conf.value).open(p), lenient)
-        }
-        if (!lenient) base
-        else graft.sources.StreamUtil.poisonOnError(base,
-          (path, null, null, -1, -1))
-      }
-      .toDF("file", "uri", "title", "n_links", "status")
-      .writeStream
-      .format("parquet")
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StreamServer.ingestLanded(spark, landingDir, "*.wat*", maxFilesPerTrigger,
+        outDir, checkpointDir, "file", "uri", "title", "n_links", "status")(
+      graft.sources.WatSource.watRows(_, _, lenient))
 
+  /** Continuous INDEX-DRIVEN fetch — the CDX sibling of [[warcIngest]]:
+    * `.cdx(.gz)` shards land, each line's (filename, offset, length)
+    * pointer fetches ONE record out of `warcDir`
+    * ([[graft.sources.CdxSource.fetchRows]]), and the decoded rows append
+    * exactly-once through the checkpoint. This is the streaming shape of
+    * selective refetch: work is proportional to index lines landed,
+    * never to archive bytes. Under `lenient` a bad line or failed fetch
+    * is one poison row (uri NULL, status -1) and the shard's other lines
+    * still fetch. Output: (file, uri, status, text, degraded) where
+    * `file` is the fetched ARCHIVE for decoded rows (the fetchByIndex
+    * shape — per-archive accounting) and the index shard path for
+    * poison rows (a bad line's only provenance).
+    */
   def cdxFetchIngest(spark: org.apache.spark.sql.SparkSession,
                      cdxLandingDir: String, warcDir: String,
                      outDir: String, checkpointDir: String,
                      maxFilesPerTrigger: Int = 32,
                      lenient: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val dir = warcDir
-    spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
-      .option("pathGlobFilter", "*.cdx*")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(cdxLandingDir)
-      .select(col("path")).as[String]
-      .flatMap { path =>
-        val base = graft.sources.StreamUtil.deferred {
-          val p = new org.apache.hadoop.fs.Path(path)
-          val in = p.getFileSystem(conf.value).open(p)
-          val stream: java.io.InputStream =
-            if (path.endsWith(".gz"))
-              new graft.sources.Gzip.GunzipStream(new graft.sources.ByteFeed(in))
-            else in
-          val reader = new java.io.BufferedReader(
-            new java.io.InputStreamReader(stream, "UTF-8"))
-          // bounded archive-handle cache, oldest-evicted: SURT order
-          // interleaves archives, but neighboring lines still cluster
-          val handles = scala.collection.mutable.LinkedHashMap[String,
-            (org.apache.hadoop.fs.FSDataInputStream, Long)]()
-          def closeQuietly(h: org.apache.hadoop.fs.FSDataInputStream): Unit =
-            try h.close() catch { case _: java.io.IOException => () }
-          def archive(fname: String)
-              : (org.apache.hadoop.fs.FSDataInputStream, Long) =
-            handles.getOrElseUpdate(fname, {
-              if (handles.size >= 8) {
-                val (k, (h, _)) = handles.head
-                closeQuietly(h); handles.remove(k)
-              }
-              val ap = new org.apache.hadoop.fs.Path(dir, fname)
-              val afs = ap.getFileSystem(conf.value)
-              (afs.open(ap), afs.getFileStatus(ap).getLen)
-            })
-          val rows = Iterator.continually(reader.readLine())
-            .takeWhile(_ != null)
-            .filter(_.nonEmpty)
-            .map { ln =>
-              try {
-                val e = graft.sources.CdxSource.parseCdxLine(ln)
-                val (h, size) = archive(e.filename)
-                val r = graft.sources.CdxSource.fetchRecord(
-                  new graft.sources.ZipSource.StreamSeekable(h, size),
-                  e.offset, e.length, lenientHttp = lenient)
-                // fetched rows carry the ARCHIVE filename (the
-                // fetchByIndex shape — per-archive accounting needs
-                // it); poison rows carry the index shard path, the
-                // only provenance a bad line has
-                graft.sources.WarcSource.extractRow(e.filename, r, lenient)
-              } catch {
-                // NonFatal, not just RuntimeException: a missing or
-                // unreadable ARCHIVE surfaces as IOException from
-                // fs.open/readFully, and it must poison THIS line —
-                // letting it escape to the file-level guard would
-                // silently drop every remaining line of the shard
-                // while the checkpoint marks it done (r17 review)
-                case scala.util.control.NonFatal(_) if lenient =>
-                  // bad line / bad pointer / bad archive
-                  (path, null, -1, null, "damage:index")
-              }
-            }
-          graft.sources.StreamUtil.closeOnExhaust(in,
-            graft.sources.StreamUtil.closeOnExhaust(
-              () => handles.valuesIterator.foreach(v => closeQuietly(v._1)),
-              rows))
-        }
-        if (!lenient) base
-        else graft.sources.StreamUtil.poisonOnError(base,
-          (path, null, -1, null, "damage:container"))
-      }
-      .toDF("file", "uri", "status", "text", "degraded")
-      .writeStream
-      .format("parquet")
-      .option("checkpointLocation", checkpointDir)
-      .option("path", outDir)
-      .start()
-  }
-}
-
-/** Hadoop `Configuration` is `Writable`, not `Serializable`; executors
-  * opening files by path (the streaming WARC arm) need the driver's conf
-  * shipped in the closure — this is the standard write()/readFields()
-  * Java-serialization bridge.
-  */
-private[graft] final class SerializableHadoopConf(
-    @transient var value: org.apache.hadoop.conf.Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new org.apache.hadoop.conf.Configuration(false)
-    value.readFields(in)
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StreamServer.ingestLanded(spark, cdxLandingDir, "*.cdx*", maxFilesPerTrigger,
+        outDir, checkpointDir, "file", "uri", "status", "text", "degraded")(
+      graft.sources.CdxSource.fetchRows(_, warcDir, _, lenient))
 }

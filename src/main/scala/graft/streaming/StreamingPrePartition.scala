@@ -14,15 +14,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   at-least-once + lock renewal → checkpointed source offsets (renewal
   *                                 is unnecessary: offsets only commit
   *                                 after the batch succeeds)
-  *   IngestIfNotExists tags     →  per-batch manifest keyed
-  *                                 (batch_id, pid); foreachBatch skips
-  *                                 work already committed, so replays of a
-  *                                 failed batch are idempotent
+  *   IngestIfNotExists tags     →  one `_SUCCESS` marker per batch
+  *                                 (`_batch_manifest/batch=<id>/`);
+  *                                 foreachBatch skips a marked batch, so
+  *                                 replays of a failed batch are idempotent
   *
   * Scale notes: each micro-batch is the batch PrePartition write (no
   * exchange: each scan task writes its own rows); `maxFilesPerTrigger`
   * bounds batch size = the reference's bounded-buffer backpressure.
-  * Checkpoint + manifest give exactly-once *output* on top of
+  * Checkpoint + batch marker give exactly-once *output* on top of
   * at-least-once replay.
   */
 object StreamingPrePartition {
@@ -35,21 +35,12 @@ object StreamingPrePartition {
     val lines = spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .text(landingDir)
-    eachBatch(lines, trigger, checkpointDir) { (batch, batchId) =>
+    StreamServer.eachBatch(lines, checkpointDir, trigger) { (batch, batchId) =>
       processBatch(batch, batchId, Seq(stagingDir), stagingDir, cfg)
     }
   }
 
-  /** The `foreachBatch` wiring every pipeline here shares. */
-  private def eachBatch(stream: DataFrame, trigger: Trigger, checkpointDir: String)
-                       (f: (DataFrame, Long) => Unit): StreamingQuery =
-    stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(f)
-      .start()
-
-  /** One micro-batch: partition + write, guarded by the batch manifest.
+  /** One micro-batch: partition + write, guarded by the batch marker.
     * Partition `pid` lands under `roots(pid % N)/data/batch=<id>/pid=<pid>/`
     * (reference: PartitionedContentSink.cs:54-66 round-robins flush blobs
     * over the staging containers; one root is the plain staging write);
@@ -101,7 +92,7 @@ object StreamingPrePartition {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .option("claimMode", claimMode)
       .load()
-    eachBatch(lines, trigger, checkpointDir) { (batch, batchId) =>
+    StreamServer.eachBatch(lines, checkpointDir, trigger) { (batch, batchId) =>
       processBatch(batch, batchId, Seq(stagingDir), stagingDir, cfg)
     }
   }
@@ -127,7 +118,7 @@ object StreamingPrePartition {
       .option("emit", "paths")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .load()
-    eachBatch(paths, trigger, checkpointDir) { (batch, _) =>
+    StreamServer.eachBatch(paths, checkpointDir, trigger) { (batch, _) =>
       val blobs = batch.collect().map(_.getString(0))
       // the Hadoop multi-path string is comma-separated: a comma INSIDE
       // a blob path would silently split into garbage paths — refuse

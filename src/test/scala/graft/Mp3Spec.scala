@@ -125,4 +125,17 @@ class Mp3Spec extends GraftSparkSpec {
     assert(m0.getAs[Long]("duration_ms") ===
       3L * (1152000000L / 44100) / 1000)
   }
+
+  test("mp3: the fixture frame compiles under whole-stage codegen") {
+    import spark.implicits._
+    val docs = (0L until 8L).toDF("doc_id")
+    // fallback=false makes a codegen compile failure throw instead of
+    // silently dropping to interpreted execution
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val got = Mp3Source.synthesizeMp3(spark, docs).as[(Long, Array[Byte])]
+        .collect().map { case (id, b) => id -> b.toSeq }.toMap
+      assert(got === (0L until 8L).map(id => id -> Mp3Source.mp3Of(id).toSeq).toMap)
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
 }

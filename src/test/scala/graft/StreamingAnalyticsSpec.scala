@@ -629,4 +629,28 @@ class StreamingAnalyticsSpec extends GraftSparkSpec {
       rm(root)
     }
   }
+
+  test("archive decoders: a vanished file is one poison row under lenient, a throw under strict") {
+    import graft.sources.{CdxSource, TarSource, WarcSource, WatSource, ZipSource}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = java.nio.file.Files.createTempDirectory("vanished").toFile
+    val gone = new java.io.File(dir, "gone").getAbsolutePath
+    // the per-file decoder each ingest server shares with its batch arm,
+    // as lenient => rows, with the poison row it owes `gone`
+    val families: Seq[(String, Boolean => Iterator[Product], Product)] = Seq(
+      ("warc", WarcSource.responseRows(gone, conf, _, mainContent = false),
+        (gone, null, -1, null, "damage:container")),
+      ("tar", TarSource.tarRows(gone, conf, _), (gone, null, null, -1L)),
+      ("zip", ZipSource.zipRows(gone, conf, _), (gone, null, -1, -1L, false)),
+      ("wat", WatSource.watRows(gone, conf, _), (gone, null, null, -1, -1)),
+      ("cdx fetch", CdxSource.fetchRows(gone, dir.getAbsolutePath, conf, _),
+        (gone, null, -1, null, "damage:container")))
+    try families.foreach { case (family, decode, poison) =>
+      assert(decode(true).toList === List(poison), family)
+      // the open is deferred: building the strict iterator succeeds,
+      // its first use throws
+      val strict = decode(false)
+      intercept[java.io.FileNotFoundException](strict.hasNext)
+    } finally dir.delete()
+  }
 }
