@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — runs every SparkEntry query against
@@ -24,15 +26,22 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
 
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // each query's first failure, "<class>: <message>"; fatal errors
+    // (out of memory, linkage) end the run instead of reading as a failure
+    val firstError = scala.collection.mutable.HashMap.empty[String, String]
+    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch {
+        case NonFatal(e) =>
+          firstError.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}")
+          return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 
     // warmup: run the flagship shape once to load classes + codegen paths
-    SparkEntry.queries.get("q1_agg").foreach(runOne)
+    SparkEntry.queries.get("q1_agg").foreach(runOne("q1_agg", _))
 
     // CALIBRATION KERNELS (r17 verdict item 8): two fixed, data-free
     // workloads whose cost depends only on the BOX, reported beside the
@@ -201,7 +210,7 @@ object Bench {
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Seq[Double]) = {
       System.gc() // once per query: plain-heap garbage from the prior query
-      def timed(): Double = { val r = runOne(fn); drainBlocks(); r }
+      def timed(): Double = { val r = runOne(name, fn); drainBlocks(); r }
       val ts = Seq(timed(), timed(), timed()).filter(_ >= 0).sorted
       // true median: for an even count (one transient failure -> 2 runs),
       // average the two middle elements — ts(size/2) would pick the MAX of
@@ -291,7 +300,9 @@ object Bench {
       }
     val provJson =
       s""""calib_ref":{"spark_par":$refSparkPar,"provenance":"${jstr(refProv)}","baseline":"${jstr(baselinePath)}"}"""
-    val failedJson = failed.map(n => "\"" + jstr(n) + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map { n =>
+      s"""{"query":"${jstr(n)}","error":"${jstr(firstError.getOrElse(n, ""))}"}"""
+    }.mkString("[", ",", "]")
     val fullLine =
       s"""{"metric":"total","value":${f"$total%.3f"},"value_calib_norm":${f"${calibNorm(total)}%.3f"},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"calib":$calibJson,$provJson,"queries":$fullQs,"spread":$spread,"calib_q":$calibQ,"rerun":$rerunJson,"sf":"$sfDir"}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")

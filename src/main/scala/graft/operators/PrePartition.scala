@@ -52,7 +52,12 @@ case class PartitionConfig(columnIndex: Int, maxPartitionCount: Int, seed: Int)
   * buffer each, plus a deflater when gzipped). A skewed column
   * (the reference inherits the same skew, SURVEY.md §7.4) makes one pid's
   * files larger, but no longer funnels that pid through one reduce task:
-  * every split writes its share of the hot pid in parallel.
+  * every split writes its share of the hot pid in parallel. Every file,
+  * directory and marker goes through [[ShardSink.fileSystem]], so a local
+  * run sets each mode in-process instead of starting a `chmod` process
+  * per file and directory (Hadoop without its native library): with
+  * 64 pids that was 98 process starts a run, whose waits at one core
+  * took longer than the rest of the task.
   */
 object PrePartition {
 
@@ -108,7 +113,7 @@ object PrePartition {
     val hconf = withPid.sparkSession.sparkContext.hadoopConfiguration
     val paths = roots.map(new org.apache.hadoop.fs.Path(_))
     paths.foreach { p =>
-      val fs = p.getFileSystem(hconf)
+      val fs = ShardSink.fileSystem(p, hconf)
       if (fs.exists(p))
         fs.listStatus(p).map(_.getPath)
           .filter(c => c.getName.startsWith("pid=") || c.getName == "_SUCCESS")
@@ -116,7 +121,7 @@ object PrePartition {
     }
     val written = writeSpread(withPid, roots.toIndexedSeq, gzipOutput)
     paths.foreach { p =>
-      p.getFileSystem(hconf).create(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), true).close()
+      ShardSink.fileSystem(p, hconf).create(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), true).close()
     }
     written
   }

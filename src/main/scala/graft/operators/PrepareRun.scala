@@ -219,7 +219,7 @@ object PrepareRun {
                           params: String, counts: Seq[(String, Long)]): Unit = {
     val p = new Path(s"$outDir/_stage_$stage")
     val tmp = new Path(s"$outDir/._stage_$stage.tmp")
-    val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fsys = ShardSink.fileSystem(p, spark.sparkContext.hadoopConfiguration)
     val out = fsys.create(tmp, true)
     try out.write((s"params=$params" +:
         counts.map { case (k, v) => s"$k=$v" })

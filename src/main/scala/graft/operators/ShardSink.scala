@@ -1,7 +1,10 @@
 package graft.operators
 
+import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermissions}
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
@@ -36,8 +39,35 @@ import org.apache.spark.sql.graft.Shims
   * exactly once. Job-level overwrite is the caller's directory clear before
   * the job. A task that fails deletes every tmp it has open and rethrows,
   * and every task adds its file bytes and records to Spark's output metrics.
+  *
+  * Local files open through [[fileSystem]], not `path.getFileSystem`:
+  * without the native Hadoop library, Hadoop's local file system sets the
+  * mode of every file, `.crc` side file and directory it creates by
+  * starting a `chmod` process: 98 starts for a 64-pid PrePartition run,
+  * whose waits at one core took longer than the rest of the task.
   */
 object ShardSink {
+
+  private var nioLocal: FileSystem = _
+
+  /** The file system to write `path` through: for a `file:` path (a
+    * scheme-less one under a local default FS included), one per-JVM
+    * [[NioLocalFileSystem]], initialized with the conf of its first use as
+    * Hadoop's cache would; any other scheme's own FS. The test is the
+    * resolved scheme, not the class: the cached `file:` FS may be a
+    * subclass such as Hive's ProxyLocalFileSystem.
+    */
+  def fileSystem(path: Path, conf: Configuration): FileSystem = {
+    val fs = path.getFileSystem(conf)
+    if (fs.getUri.getScheme != "file") fs
+    else synchronized {
+      if (nioLocal == null) {
+        nioLocal = new NioLocalFileSystem
+        nioLocal.initialize(java.net.URI.create("file:///"), conf)
+      }
+      nioLocal
+    }
+  }
 
   /** One committed file: its key, destination, and the records and
     * payload bytes (lead included, before compression) written to it. */
@@ -103,7 +133,7 @@ object ShardSink {
               "its file is evicted")
         if (open.size >= maxOpen) commit(open.head._2)
         val dst = new Path(dest(k))
-        val fs = dst.getFileSystem(conf)
+        val fs = fileSystem(dst, conf)
         val tmp = new Path(dst.getParent, s"_tmp_${attempt}_${dst.getName}")
         // registered before the gzip header, so a throwing one still gets
         // its tmp deleted
@@ -143,5 +173,35 @@ object ShardSink {
       }
       done.iterator
     }
+  }
+}
+
+/** Hadoop's checksummed local file system over [[NioRawLocalFileSystem]],
+  * with the HDFS rename contract the first-wins commit relies on: a rename
+  * onto an existing file returns false instead of replacing it. (Hadoop's
+  * own local rename replaces; the `file:` FS that Spark's Hive jars
+  * register, ProxyLocalFileSystem, refuses the same way.)
+  */
+private[graft] final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem) {
+  override def rename(src: Path, dst: Path): Boolean = {
+    val taken = try getFileStatus(dst).isFile
+      catch { case _: java.io.FileNotFoundException => false }
+    !taken && super.rename(src, dst)
+  }
+}
+
+/** Hadoop's raw local file system, setting permission bits through
+  * `java.nio` in-process where Hadoop without its native library forks
+  * `chmod`. The bits and when they are set are Hadoop's own; modes past
+  * `0777` (sticky, setuid) and file systems without POSIX attributes keep
+  * Hadoop's path.
+  */
+private[graft] final class NioRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val bits = permission.toShort
+    val view = java.nio.file.Files.getFileAttributeView(
+      pathToFile(p).toPath, classOf[PosixFileAttributeView])
+    if ((bits & ~0x1ff) != 0 || view == null) super.setPermission(p, permission)
+    else view.setPermissions(PosixFilePermissions.fromString(new FsPermission(bits).toString))
   }
 }

@@ -657,8 +657,8 @@ object CdxSource {
       .map { case (path, pds) =>
         val name = path.substring(path.lastIndexOf('/') + 1)
           .stripSuffix(".cdx")
-        val fs = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(conf.value)
+        val fs = graft.operators.ShardSink.fileSystem(
+          new org.apache.hadoop.fs.Path(out), conf.value)
         fs.mkdirs(new org.apache.hadoop.fs.Path(out))
         val zn = fs.create(
           new org.apache.hadoop.fs.Path(out, name + ".zn"), true)

@@ -4,6 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import graft.operators.ShardSink
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -103,7 +104,7 @@ object NotifyQueue {
                    dataPaths: Seq[String]): String = {
     val conf = spark.sparkContext.hadoopConfiguration
     val spool = new Path(new Path(queueDir), SpoolDir)
-    val fs = spool.getFileSystem(conf)
+    val fs = ShardSink.fileSystem(spool, conf)
     fs.mkdirs(spool)
     val name = s"u-${java.util.UUID.randomUUID()}"
     // tmp + rename-to-fresh-name: readers (the sequencer's list) never see
@@ -148,7 +149,7 @@ object NotifyQueue {
               dataPaths: Seq[String], seqHint: Long = 0L): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new Path(queueDir)
-    val fs = dir.getFileSystem(conf)
+    val fs = ShardSink.fileSystem(dir, conf)
     fs.mkdirs(dir)
     // A hint AHEAD of the queue tail would claim a number past a gap and
     // stall the consumer (its probe stops at the first missing seq

@@ -476,8 +476,8 @@ object StreamingAnalytics {
     // would leave stale versions of a key stranded in its old bucket —
     // duplicates the argmax merge never sees. Record the bucket count in
     // a marker file on first write and fail fast on mismatch.
-    val fsM = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fsM = graft.operators.ShardSink.fileSystem(
+      new org.apache.hadoop.fs.Path(tableDir), spark.sparkContext.hadoopConfiguration)
     // capture BEFORE creating the marker (which materializes tableDir)
     val tableHasData = fsM.exists(new org.apache.hadoop.fs.Path(tableDir)) &&
       fsM.listStatus(new org.apache.hadoop.fs.Path(tableDir))

@@ -62,7 +62,7 @@ object StreamingPrePartition {
     // data write is its only Spark job.
     val marker = new org.apache.hadoop.fs.Path(
       s"$controlDir/_batch_manifest/batch=$batchId/_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = graft.operators.ShardSink.fileSystem(marker, s.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) {
       PrePartition.overwrite(PrePartition.withPartitionId(batch, cfg),
         roots.map(r => s"$r/data/batch=$batchId"), gzipOutput = false)

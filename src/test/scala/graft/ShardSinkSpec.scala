@@ -1,13 +1,16 @@
 package graft
 
 import java.net.URI
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{PartitionConfig, PrePartition, ShardSink, Split}
+import graft.operators.{NioRawLocalFileSystem, PartitionConfig, PrePartition, ShardSink, Split}
 import graft.sources.{LogDataGenerator, WarcSource}
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -115,6 +118,58 @@ class ShardSinkSpec extends GraftSparkSpec {
       assert(onDisk.nonEmpty)
       assert(bytes == onDisk.map(_.length).sum)
     }
+  }
+
+  test("a local PrePartition run starts no process") {
+    // the real path: a forked command names the canonical one
+    val root = Paths.get(tmp).toRealPath().resolve("nofork").toString
+    assert(landing.nonEmpty) // the input is written before the recording
+    val recording = new Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    val dump = Files.createTempFile("graft-shardsink", ".jfr")
+    try {
+      PrePartition.runSpread(spark, landing, Seq(s"$root/a", s"$root/b"), PartitionConfig(3, 4, 17))
+      // the control: a process started in this JVM is recorded
+      new ProcessBuilder("true", s"$root/control").start().waitFor()
+      recording.stop()
+      recording.dump(dump)
+    } finally recording.close()
+    val commands = RecordingFile.readAllEvents(dump).asScala
+      .map(_.getString("command")).filter(_.contains(root))
+    assert(filesUnder(root).exists(_.getName.startsWith("part-")))
+    assert(commands == Seq(s"true $root/control"))
+  }
+
+  test("the resolver: local paths get the NIO-backed file system, with Hadoop's modes") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.failfs.impl", classOf[FailingFs].getName)
+    hconf.setBoolean("fs.failfs.impl.disable.cache", true)
+    val root = s"$tmp/modes"
+    val nio = ShardSink.fileSystem(new Path(root), hconf)
+    assert(nio.asInstanceOf[LocalFileSystem].getRawFileSystem.isInstanceOf[NioRawLocalFileSystem])
+    assert(ShardSink.fileSystem(new Path(s"file://$root"), hconf) eq nio)
+    assert(ShardSink.fileSystem(new Path(s"failfs://$root"), hconf).isInstanceOf[FailingFs])
+    // a file (its parent made on the way, and its .crc), a directory, and
+    // a mode set after the fact, under each file system
+    def modes(fs: FileSystem, sub: String): Seq[String] = {
+      fs.create(new Path(s"$root/$sub/made/f.txt"), true).close()
+      fs.mkdirs(new Path(s"$root/$sub/dir"))
+      fs.create(new Path(s"$root/$sub/g.txt"), true).close()
+      fs.setPermission(new Path(s"$root/$sub/g.txt"), new FsPermission(Integer.parseInt("640", 8).toShort))
+      Seq("made", "made/f.txt", "made/.f.txt.crc", "dir", "g.txt").map { p =>
+        p + " " + PosixFilePermissions.toString(Files.getPosixFilePermissions(Paths.get(s"$root/$sub/$p")))
+      }
+    }
+    assert(modes(nio, "nio") == modes(new Path(root).getFileSystem(hconf), "hadoop"))
+    // the first-wins commit's contract: a rename never replaces a file
+    val (first, second) = (new Path(s"$root/nio/first"), new Path(s"$root/nio/second"))
+    Seq(first, second).foreach { p =>
+      val out = nio.create(p, true)
+      try out.write(p.getName.getBytes("UTF-8")) finally out.close()
+    }
+    assert(!nio.rename(second, first))
+    assert(new String(Files.readAllBytes(Paths.get(first.toString)), "UTF-8") == "first")
   }
 
   test("a key that comes back after its file was committed fails the task") {
