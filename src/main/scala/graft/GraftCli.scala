@@ -196,6 +196,31 @@ object GraftCli {
       println(s"[graft] $name: ${a("docsParquet")} -> $outDir")
     }
 
+  /** A command that reads parquet with nanosecond timestamps, as the
+    * test data stores them: they load as longs rather than refuse the
+    * file (same accommodation as QueryDef.t). */
+  private def parquetJob(name: String, required: Seq[String], optional: Seq[String] = Nil,
+                         flags: Seq[String] = Nil)(
+                         body: (SparkSession, Args) => Unit): Command =
+    job(name, required, optional, flags) { (spark, a) =>
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      body(spark, a)
+    }
+
+  /** A graph command: reads its parquet `inputs`, overwrites `<outDir>`
+    * with the frame `op` returns and prints the inputs, the output and
+    * the note `op` returns with it. */
+  private def graphJob(name: String, inputs: Seq[String], optional: Seq[String] = Nil,
+                       flags: Seq[String] = Nil)(
+                       op: (Seq[DataFrame], Args) => (DataFrame, String)): Command =
+    parquetJob(name, inputs :+ "outDir", optional, flags) { (spark, a) =>
+      val (out, note) = op(inputs.map(i => spark.read.parquet(a(i))), a)
+      out.write.mode("overwrite").parquet(a("outDir"))
+      // the first input bare, later ones as `seeds=<path>`
+      val shown = a(inputs.head) +: inputs.tail.map(i => s"${i.stripSuffix("Parquet")}=${a(i)}")
+      println(s"[graft] $name ${shown.mkString(" ")} -> ${a("outDir")}$note")
+    }
+
   /** A server command over archives landing in `landingDir`, run for
     * `runSec` seconds (`defaultRunSec` when not given; 0 = forever). */
   private def archiveServer(name: String, defaultRunSec: Int)(
@@ -393,11 +418,8 @@ object GraftCli {
     // Z-order layout write: cluster a parquet table on the Morton
     // interleave of two (numeric, pre-bucketed to 16 bits) columns so
     // row-group min/max stats prune scans on BOTH dimensions
-    job("zorder-write", Seq("inParquet", "outDir", "colA", "colB"),
+    parquetJob("zorder-write", Seq("inParquet", "outDir", "colA", "colB"),
         Seq("partitions")) { (spark, a) =>
-      // driver testdata stores ns timestamps; read them as longs rather
-      // than refuse the file (same accommodation as QueryDef.t)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       operators.Layout.zorderBy(spark.read.parquet(a("inParquet")),
           col(a("colA")), col(a("colB")), a.int("partitions", 0))
         .drop("zkey")
@@ -408,81 +430,55 @@ object GraftCli {
 
     // link-analysis over an (src, dst) parquet edge list: damped
     // PageRank ranks written as (node, r) integer rank units
-    job("graph-pagerank", Seq("edgesParquet", "outDir"), Seq("iters", "tolUnits"),
-        Seq("dangling")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graphJob("graph-pagerank", Seq("edgesParquet"), Seq("iters", "tolUnits"),
+        Seq("dangling")) { (in, a) =>
       val iters = a.int("iters", 10)
       val tol = a.long("tolUnits", 0L)
       val dangling = a.has("dangling")
-      operators.Graph.pagerank(spark.read.parquet(a("edgesParquet")), iters,
-          tolUnits = tol, redistributeDangling = dangling)
-        .write.mode("overwrite").parquet(a("outDir"))
-      println(s"[graft] graph-pagerank ${a("edgesParquet")} -> ${a("outDir")} " +
-        s"($iters iters max, tol=$tol, dangling=$dangling)")
+      operators.Graph.pagerank(in(0), iters, tolUnits = tol,
+          redistributeDangling = dangling) ->
+        s" ($iters iters max, tol=$tol, dangling=$dangling)"
     },
 
     // seeded relevance: personalized PageRank from a (seed) parquet
-    job("graph-ppr", Seq("edgesParquet", "seedsParquet", "outDir"), Seq("iters")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graphJob("graph-ppr", Seq("edgesParquet", "seedsParquet"), Seq("iters")) { (in, a) =>
       val iters = a.int("iters", 10)
-      operators.Graph.personalizedPagerank(
-          spark.read.parquet(a("edgesParquet")),
-          spark.read.parquet(a("seedsParquet")), iters)
-        .write.mode("overwrite").parquet(a("outDir"))
-      println(s"[graft] graph-ppr ${a("edgesParquet")} seeds=${a("seedsParquet")} -> ${a("outDir")} ($iters iters)")
+      operators.Graph.personalizedPagerank(in(0), in(1), iters) -> s" ($iters iters)"
     },
 
     // dense-core extraction: peel nodes of degree < k to the fixpoint
-    job("graph-kcore", Seq("edgesParquet", "outDir"), Seq("k")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graphJob("graph-kcore", Seq("edgesParquet"), Seq("k")) { (in, a) =>
       val k = a.int("k", 4)
-      operators.Graph.kcore(spark.read.parquet(a("edgesParquet")), k)
-        .write.mode("overwrite").parquet(a("outDir"))
-      println(s"[graft] graph-kcore ${a("edgesParquet")} -> ${a("outDir")} (k=$k)")
+      operators.Graph.kcore(in(0), k) -> s" (k=$k)"
     },
 
     // HITS hub/authority scoring over a directed (src, dst) edge list
-    job("graph-hits", Seq("edgesParquet", "outDir"), Seq("iters")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graphJob("graph-hits", Seq("edgesParquet"), Seq("iters")) { (in, a) =>
       val iters = a.int("iters", 10)
-      operators.Graph.hits(spark.read.parquet(a("edgesParquet")), iters)
-        .write.mode("overwrite").parquet(a("outDir"))
-      println(s"[graft] graph-hits ${a("edgesParquet")} -> ${a("outDir")} ($iters iters)")
+      operators.Graph.hits(in(0), iters) -> s" ($iters iters)"
     },
 
     // seed expansion: BFS hop labels within maxDepth of a (source) parquet
-    job("graph-bfs", Seq("edgesParquet", "seedsParquet", "outDir"), Seq("maxDepth")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graphJob("graph-bfs", Seq("edgesParquet", "seedsParquet"), Seq("maxDepth")) { (in, a) =>
       val depth = a.int("maxDepth", 3)
-      operators.Graph.bfs(spark.read.parquet(a("edgesParquet")),
-          spark.read.parquet(a("seedsParquet")), depth)
-        .write.mode("overwrite").parquet(a("outDir"))
-      println(s"[graft] graph-bfs ${a("edgesParquet")} seeds=${a("seedsParquet")} -> ${a("outDir")} (depth<=$depth)")
+      operators.Graph.bfs(in(0), in(1), depth) -> s" (depth<=$depth)"
     },
 
     // connected components over a (src, dst) edge list (bidirected
     // internally: CLI callers hand an undirected relation)
-    job("graph-components", Seq("edgesParquet", "outDir"), Seq("maxRounds")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graphJob("graph-components", Seq("edgesParquet"), Seq("maxRounds")) { (in, a) =>
       import org.apache.spark.sql.functions.{array, explode, struct}
-      val e = spark.read.parquet(a("edgesParquet"))
-      val bidirected = e.select(explode(array(
+      val bidirected = in(0).select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
         .select("e.src", "e.dst")
-      operators.Graph.connectedComponents(bidirected, a.int("maxRounds", 64))
-        .write.mode("overwrite").parquet(a("outDir"))
-      println(s"[graft] graph-components ${a("edgesParquet")} -> ${a("outDir")}")
+      operators.Graph.connectedComponents(bidirected, a.int("maxRounds", 64)) -> ""
     },
 
     // multi-source weighted shortest paths over (src, dst, w)
-    job("graph-sssp", Seq("edgesParquet", "seedsParquet", "outDir"), Seq("maxRounds")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graphJob("graph-sssp", Seq("edgesParquet", "seedsParquet"), Seq("maxRounds")) { (in, a) =>
       val maxRounds = a.int("maxRounds", 64)
-      operators.Graph.shortestPaths(spark.read.parquet(a("edgesParquet")),
-          spark.read.parquet(a("seedsParquet")), maxRounds)
-        .write.mode("overwrite").parquet(a("outDir"))
-      println(s"[graft] graph-sssp ${a("edgesParquet")} seeds=${a("seedsParquet")} -> ${a("outDir")} (rounds<=$maxRounds)")
+      operators.Graph.shortestPaths(in(0), in(1), maxRounds) -> s" (rounds<=$maxRounds)"
     },
 
     // manifest maintenance: dedupe + rewrite segments, optional retention
@@ -495,30 +491,22 @@ object GraftCli {
     },
 
     // per-node triangle counts over an undirected (src, dst) edge list
-    job("graph-triangles", Seq("edgesParquet", "outDir")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      operators.Graph.triangles(spark.read.parquet(a("edgesParquet")))
-        .write.mode("overwrite").parquet(a("outDir"))
-      println(s"[graft] graph-triangles ${a("edgesParquet")} -> ${a("outDir")}")
+    graphJob("graph-triangles", Seq("edgesParquet")) { (in, _) =>
+      operators.Graph.triangles(in(0)) -> ""
     },
 
     // flatten a (node, parent) forest to (node, root, depth)
-    job("graph-ancestors", Seq("parentsParquet", "outDir"), Seq("rounds")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val parents = spark.read.parquet(a("parentsParquet"))
+    graphJob("graph-ancestors", Seq("parentsParquet"), Seq("rounds")) { (in, a) =>
       // explicit rounds override; default derives ceil(log2(n)) from the data
-      val flat = a.opt("rounds").map(_.toInt)
-        .map(operators.Graph.rootsAndDepth(parents, _))
-        .getOrElse(operators.Graph.rootsAndDepth(parents))
-      flat.write.mode("overwrite").parquet(a("outDir"))
-      println(s"[graft] graph-ancestors ${a("parentsParquet")} -> ${a("outDir")}" +
-        a.opt("rounds").map(r => s" ($r rounds)").getOrElse(" (derived rounds)"))
+      a.opt("rounds").map(_.toInt)
+        .map(operators.Graph.rootsAndDepth(in(0), _))
+        .getOrElse(operators.Graph.rootsAndDepth(in(0))) ->
+        a.opt("rounds").map(r => s" ($r rounds)").getOrElse(" (derived rounds)")
     },
 
     // small-files maintenance: rewrite a parquet dir to ~targetMB files,
     // optionally range-sorted so footer min/max pruning survives
-    job("compact", Seq("inDir", "outDir"), Seq("targetMB", "sortCol1,sortCol2,...")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    parquetJob("compact", Seq("inDir", "outDir"), Seq("targetMB", "sortCol1,sortCol2,...")) { (spark, a) =>
       val targetMb = a.long("targetMB", 128L)
       val sortCols = a.opt("sortCol1,sortCol2,...").map(_.split(",").toSeq).getOrElse(Nil)
       val n = operators.Layout.compact(spark, a("inDir"), a("outDir"),
@@ -644,9 +632,8 @@ object GraftCli {
 
     // continuous latest-per-key materialized view over a parquet landing
     // stream (schema inferred from the first landed file)
-    job("stream-upsert", Seq("landingDir", "tableDir", "checkpointDir", "keyCol", "tsCol"),
+    parquetJob("stream-upsert", Seq("landingDir", "tableDir", "checkpointDir", "keyCol", "tsCol"),
         Seq("nBuckets", "runSec")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val landingDir = a("landingDir")
       val nBuckets = a.int("nBuckets", 64)
       val schema = spark.read.parquet(landingDir).schema
@@ -845,8 +832,7 @@ object GraftCli {
 
     // JSONL training-data export (one JSON object per line, optional
     // gzip + byte-bounded shards); `export-jsonl in out gzip` needs no limit
-    job("export-jsonl", Seq("inParquet", "outDir"), Seq("limitMB"), Seq("gzip")) { (spark, a) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    parquetJob("export-jsonl", Seq("inParquet", "outDir"), Seq("limitMB"), Seq("gzip")) { (spark, a) =>
       val limitMb = a.opt("limitMB").map(_.toLong)
       val gz = a.has("gzip")
       operators.Export.toJsonl(spark.read.parquet(a("inParquet")), a("outDir"),

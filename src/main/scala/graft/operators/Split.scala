@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.StreamUtil
 import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -37,16 +38,21 @@ object Split {
       hasHeader: Boolean = false,
       gzipOutput: Boolean = false)
 
-  /** The first line of a text file (plain or .gz) — its header. */
-  private def headerOf(file: String, conf: org.apache.hadoop.conf.Configuration): String = {
+  /** The first line of a text file (plain or .gz) — its header — as raw
+    * bytes.
+    */
+  private def headerOf(file: String, conf: org.apache.hadoop.conf.Configuration): Array[Byte] = {
     val p = new org.apache.hadoop.fs.Path(file)
     val raw: java.io.InputStream = p.getFileSystem(conf).open(p)
     val in = if (file.endsWith(".gz")) new java.util.zip.GZIPInputStream(raw) else raw
-    val br = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-    try Option(br.readLine()).getOrElse("") finally br.close()
+    try StreamUtil.rawLines(in).nextOption().getOrElse(Array.emptyByteArray)
+    finally in.close()
   }
 
-  /** Lines with provenance: (file, offset, shard, value). */
+  /** Lines with provenance: (file, offset, shard, value). `value` holds
+    * each line's bytes verbatim (the binary-to-string cast does not decode),
+    * as `spark.read.text` does.
+    */
   def linesWithOffsets(spark: SparkSession, inputGlob: String,
                        maxBytesPerShard: Long): DataFrame = {
     import spark.implicits._
@@ -56,9 +62,10 @@ object Split {
       .mapPartitionsWithInputSplit { (split, iter) =>
         val file = split.asInstanceOf[org.apache.hadoop.mapreduce.lib.input.FileSplit]
           .getPath.toString
-        iter.map { case (off, text) => (file, off.get(), text.toString) }
+        iter.map { case (off, text) => (file, off.get(), text.copyBytes()) }
       }
     withFile.toDF("file", "offset", "value")
+      .withColumn("value", col("value").cast("string"))
       .withColumn("shard", (col("offset") / maxBytesPerShard).cast("int"))
   }
 
@@ -112,7 +119,7 @@ object Split {
       // keyed by file, so driver memory is independent of input-file
       // count (100 TB of small headered CSVs is O(#files) under a collect)
       lead = { case ((file, _), conf) =>
-        if (withHeader) (headerOf(file, conf) + "\n").getBytes("UTF-8")
+        if (withHeader) headerOf(file, conf) :+ '\n'.toByte
         else Array.emptyByteArray
       })
       .map(s => (s.key._1, s.key._2, s.dest, s.bytes,

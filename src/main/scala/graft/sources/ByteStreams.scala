@@ -285,6 +285,19 @@ private[graft] object StreamUtil {
       }
     }
 
+  /** The lines of a text stream as raw bytes, terminators dropped. Lines
+    * split on LF, CR or CRLF through Hadoop's `LineReader`, exactly where
+    * `spark.read.text` splits them, and are never decoded: a record is
+    * copied verbatim, whatever its encoding. One line is held at a time;
+    * `in` closes on exhaustion or on the first error.
+    */
+  def rawLines(in: java.io.InputStream): Iterator[Array[Byte]] = {
+    val reader = new org.apache.hadoop.util.LineReader(in)
+    val line = new org.apache.hadoop.io.Text()
+    closeOnExhaust(reader, Iterator.continually(reader.readLine(line))
+      .takeWhile(_ > 0).map(_ => line.copyBytes()))
+  }
+
   /** Defer a whole per-file pipeline (open, stat, parser construction)
     * to first use, so it runs INSIDE whatever guard wraps the iterator:
     * a file deleted between source listing and task execution must

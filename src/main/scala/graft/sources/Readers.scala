@@ -25,27 +25,20 @@ object Readers {
       .text(pathOrGlob)
   }
 
-  /** Lines of the FIRST zip entry of each archive matched by the glob. */
-  def zipFirstEntryLines(spark: SparkSession, glob: String): DataFrame = {
-    import spark.implicits._
-    spark.sparkContext.binaryFiles(glob)
-      .flatMap { case (path, pds) =>
-        val zin = new java.util.zip.ZipInputStream(pds.open())
-        try {
-          var entry = zin.getNextEntry
-          // skip directory entries; take the first real one
-          while (entry != null && entry.isDirectory) entry = zin.getNextEntry
-          if (entry == null) Iterator.empty
-          else {
-            val reader = new java.io.BufferedReader(
-              new java.io.InputStreamReader(zin, "UTF-8"))
-            Iterator.continually(reader.readLine()).takeWhile(_ != null)
-              .map(line => (path, line)).toVector.iterator
-          }
-        } finally zin.close()
-      }
-      .toDF("file", "value")
-  }
+  /** Lines of the FIRST zip entry of each archive matched by the glob,
+    * streamed with their bytes verbatim.
+    */
+  def zipFirstEntryLines(spark: SparkSession, glob: String): DataFrame =
+    verbatim(spark, spark.sparkContext.binaryFiles(glob).flatMap { case (path, pds) =>
+      val zin = new java.util.zip.ZipInputStream(pds.open())
+      StreamUtil.closeOnExhaust(zin, {
+        var entry = zin.getNextEntry
+        // skip directory entries; take the first real one
+        while (entry != null && entry.isDirectory) entry = zin.getNextEntry
+        if (entry == null) Iterator.empty
+        else StreamUtil.rawLines(zin).map(line => (path, line))
+      })
+    })
 
   /** Lines of zstd-compressed text blobs — the A4 gunzip transform's
     * modern-codec sibling (zstd is what current data lakes actually ship;
@@ -54,19 +47,23 @@ object Readers {
     * (GunzipContentTransform.cs streams one blob per task): one
     * ZstdInputStream per file, no splitting — zstd frames, like gzip
     * members, are not block-splittable without a seekable-format index.
+    * Streams line by line; the bytes stay verbatim.
     */
-  def zstdLines(spark: SparkSession, glob: String): DataFrame = {
+  def zstdLines(spark: SparkSession, glob: String): DataFrame =
+    verbatim(spark, spark.sparkContext.binaryFiles(glob).flatMap { case (path, pds) =>
+      StreamUtil.rawLines(new com.github.luben.zstd.ZstdInputStream(pds.open()))
+        .map(line => (path, line))
+    })
+
+  /** (file, raw line) pairs as `file`, `value STRING`. The binary-to-string
+    * cast wraps the bytes as they are, so `value` holds the input's bytes
+    * just as `spark.read.text` does.
+    */
+  private def verbatim(spark: SparkSession,
+                       lines: org.apache.spark.rdd.RDD[(String, Array[Byte])]): DataFrame = {
     import spark.implicits._
-    spark.sparkContext.binaryFiles(glob)
-      .flatMap { case (path, pds) =>
-        val zin = new com.github.luben.zstd.ZstdInputStream(pds.open())
-        val reader = new java.io.BufferedReader(
-          new java.io.InputStreamReader(zin, "UTF-8"))
-        try Iterator.continually(reader.readLine()).takeWhile(_ != null)
-          .map(line => (path, line)).toVector.iterator
-        finally reader.close()
-      }
-      .toDF("file", "value")
+    lines.toDF("file", "value")
+      .select($"file", $"value".cast("string").as("value"))
   }
 
   /** Write one zstd-compressed text blob (test/CLI fixture path). */

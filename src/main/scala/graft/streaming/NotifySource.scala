@@ -5,6 +5,7 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import graft.operators.ShardSink
+import graft.sources.StreamUtil
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -333,13 +334,14 @@ private[streaming] class NotifyReaderFactory(confC: Shims.SerializableHadoopConf
     new PartitionReader[InternalRow] {
       private val p = new Path(file)
       private val raw: java.io.InputStream = p.getFileSystem(confC.value).open(p)
-      private val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-        if (file.endsWith(".gz")) new java.util.zip.GZIPInputStream(raw) else raw,
-        "UTF-8"))
-      private var line: String = _
-      override def next(): Boolean = { line = in.readLine(); line != null }
+      private val in =
+        if (file.endsWith(".gz")) new java.util.zip.GZIPInputStream(raw) else raw
+      private val lines = StreamUtil.rawLines(in)
+      private var line: Array[Byte] = _
+      override def next(): Boolean = lines.hasNext && { line = lines.next(); true }
+      // the line's bytes verbatim, as `readStream.text` emits them
       override def get(): InternalRow =
-        new GenericInternalRow(Array[Any](UTF8String.fromString(line)))
+        new GenericInternalRow(Array[Any](UTF8String.fromBytes(line)))
       override def close(): Unit = in.close()
     }
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * (A B A B A B), so both arms sample the same contention weather;
   * reports per-arm medians and the pairwise ratio. Arms are `k=v`
   * lists separated by `--`:
-  *   runMain graft.tools.AbProf k1=v1,k2=v2 -- q1 q2 ...
+  *   Test/runMain graft.tools.AbProf k1=v1,k2=v2 -- q1 q2 ...
   * Arm A is the session default (no overrides); arm B applies the
   * given conf pairs before each B run and reverts after.
   */

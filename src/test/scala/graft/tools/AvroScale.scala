@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * is real and the bytes are a third-party producer's), then runs
   * `avroRows` over both concurrently under whatever -Xmx the caller
   * set:
-  *   java -Xmx1g -cp "target/scala-2.13/classes:<spark jars>"
+  *   java -Xmx1g -cp "target/scala-2.13/test-classes:target/scala-2.13/classes:<spark jars>"
   *     <add-opens flags> graft.tools.AvroScale
   * completing is the proof that the walk is O(largest block), not
   * O(file); a heap sampler reports the true peak.

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * crawl shape the ratio IS the argument: per-URL audits, revisit
   * resolution, and recrawl candidate pulls touch rows-fetched bytes,
   * not archive bytes. Run OUTSIDE sbt:
-  *   java -Xmx1g -cp "target/scala-2.13/classes:<spark jars>"
+  *   java -Xmx1g -cp "target/scala-2.13/test-classes:target/scala-2.13/classes:<spark jars>"
   *     <add-opens flags> graft.tools.CdxScale [records] [bodyKB] [every]
   */
 object CdxScale {

@@ -10,7 +10,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * the listener-observed job/stage/task counts, summed task run time,
   * GC time, and the scheduling gap (wall − Σtask/cores) — separating
   * "the kernel is slow" from "the harness launches 1500 tiny tasks".
-  * `runMain graft.tools.JobProf <query ...>`
+  * `Test/runMain graft.tools.JobProf <query ...>`
   */
 object JobProf {
   def main(args: Array[String]): Unit = {

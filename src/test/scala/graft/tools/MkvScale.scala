@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * 7.4 MB/file, the short-web-clip band). Measures the full walk
   * (mkvTable facts) and the per-frame flatten feeding x103's segment
   * window. Run OUTSIDE sbt:
-  *   java -cp "target/scala-2.13/classes:<spark jars>"
+  *   java -cp "target/scala-2.13/test-classes:target/scala-2.13/classes:<spark jars>"
   *     <add-opens flags> graft.tools.MkvScale 600 60 30 4
   */
 object MkvScale {
@@ -23,7 +23,7 @@ object MkvScale {
     * exactly the shape live-captured WebM has), LCG-filled frames so
     * the on-disk size is real, then walks both concurrently under
     * whatever -Xmx the caller set:
-    *   java -Xmx1g -cp "target/scala-2.13/classes:<spark jars>"
+    *   java -Xmx1g -cp "target/scala-2.13/test-classes:target/scala-2.13/classes:<spark jars>"
     *     <add-opens flags> graft.tools.MkvScale --single
     * completing is the proof; a heap sampler reports the true peak.
     */

@@ -1,7 +1,9 @@
+package graft.tools
+
 import org.apache.spark.sql.functions._
 
 /** Dev tool: plan inspection + steady-state timing for selected queries.
-  * `runMain Prof [queryName ...]` — prints formatted plans and 3 timed runs.
+  * `Test/runMain graft.tools.Prof [queryName ...]` — prints formatted plans and 3 timed runs.
   */
 object Prof {
   def main(args: Array[String]): Unit = {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * ~1 MB/page uncompressed, ~15 pages/member-group). Archives are written
   * once to parquet; each path is timed on the identical input with a noop
   * write. Run OUTSIDE sbt (no build lock):
-  *   java -cp "target/scala-2.13/classes:<spark jars>"
+  *   java -cp "target/scala-2.13/test-classes:target/scala-2.13/classes:<spark jars>"
   *     <add-opens flags> graft.tools.WarcScale 20000 12 24
   */
 object WarcScale {
@@ -26,7 +26,7 @@ object WarcScale {
     * all-records-ArrayBuffer path needed ~(file + decompressed + 2×
     * decompressed-as-UTF-16) ≈ 7–8 GB PER TASK at this shape; the
     * streaming walk needs one record (~8 MB) + feed windows, so e.g.
-    *   java -Xmx1g -cp "target/scala-2.13/classes:<spark jars>"
+    *   java -Xmx1g -cp "target/scala-2.13/test-classes:target/scala-2.13/classes:<spark jars>"
     *     <add-opens flags> graft.tools.WarcScale --single
     * completing is the proof. A heap sampler reports the true peak.
     */

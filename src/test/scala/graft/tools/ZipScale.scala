@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * barely shrinks them; the on-disk size is real), then runs `zipFiles`
   * — full decode + CRC verification of every entry — over both
   * concurrently under the caller's -Xmx. Run OUTSIDE sbt:
-  *   java -Xmx1g -cp "target/scala-2.13/classes:<spark jars>"
+  *   java -Xmx1g -cp "target/scala-2.13/test-classes:target/scala-2.13/classes:<spark jars>"
   *     <add-opens flags> graft.tools.ZipScale
   * Completing under a heap far below file-size × tasks is the proof; a
   * heap sampler reports the true peak.
