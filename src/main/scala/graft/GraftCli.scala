@@ -732,13 +732,8 @@ object GraftCli {
       val toks = spark.readStream.schema(srcSchema).parquet(a("landingDir"))
         .select(col("source"), explode(split(trim(col("text")), "\\s+")).as("token"))
         .as[streaming.StreamingAnalytics.SrcTok]
-      val q = streaming.StreamingAnalytics.streamingDistinct(toks)
-        .writeStream
-        .format("parquet").option("path", a("outDir"))
-        .option("checkpointLocation", a("checkpointDir"))
-        .outputMode("append")
-        .trigger(Trigger.ProcessingTime("1 second"))
-        .start()
+      val q = streaming.StreamServer.appendParquet(streaming.StreamingAnalytics.streamingDistinct(toks).toDF,
+        a("outDir"), a("checkpointDir"), Trigger.ProcessingTime("1 second"))
       println(s"[graft] stream-distinct server on ${a("landingDir")} -> ${a("outDir")}")
       serve(q, a.int("runSec", 0))
     },

@@ -188,6 +188,9 @@ private[graft] final class NioLocalFileSystem extends LocalFileSystem(new NioRaw
       catch { case _: java.io.FileNotFoundException => false }
     !taken && super.rename(src, dst)
   }
+
+  /** Hadoop's own local rename, which replaces an existing file and its `.crc`. */
+  def renameReplacing(src: Path, dst: Path): Boolean = super.rename(src, dst)
 }
 
 /** Hadoop's raw local file system, setting permission bits through

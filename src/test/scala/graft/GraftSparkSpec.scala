@@ -82,4 +82,25 @@ abstract class GraftSparkSpec extends AnyFunSuite {
       (result, GraftSparkSpec.GroupRun(jobs.size, stages.size, ends.asScala.toSeq))
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Runs `body`, then starts `true <root>/control`, under an in-process
+    * flight recording of `jdk.ProcessStart`, and returns the recorded
+    * commands that name `root` (the control's included: it shows the
+    * recording saw this JVM's starts). A forked command names a path by
+    * its canonical form, so `root` should be a real path.
+    */
+  def processStartsNaming(root: String)(body: => Unit): Seq[String] = {
+    val recording = new jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    val dump = java.nio.file.Files.createTempFile("graft-starts", ".jfr")
+    try {
+      body
+      new ProcessBuilder("true", s"$root/control").start().waitFor()
+      recording.stop()
+      recording.dump(dump)
+    } finally recording.close()
+    jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+      .map(_.getString("command")).filter(_.contains(root))
+  }
 }

@@ -8,8 +8,6 @@ import scala.jdk.CollectionConverters._
 
 import graft.operators.{NioRawLocalFileSystem, PartitionConfig, PrePartition, ShardSink, Split}
 import graft.sources.{LogDataGenerator, WarcSource}
-import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
@@ -124,19 +122,9 @@ class ShardSinkSpec extends GraftSparkSpec {
     // the real path: a forked command names the canonical one
     val root = Paths.get(tmp).toRealPath().resolve("nofork").toString
     assert(landing.nonEmpty) // the input is written before the recording
-    val recording = new Recording()
-    recording.enable("jdk.ProcessStart")
-    recording.start()
-    val dump = Files.createTempFile("graft-shardsink", ".jfr")
-    try {
+    val commands = processStartsNaming(root) {
       PrePartition.runSpread(spark, landing, Seq(s"$root/a", s"$root/b"), PartitionConfig(3, 4, 17))
-      // the control: a process started in this JVM is recorded
-      new ProcessBuilder("true", s"$root/control").start().waitFor()
-      recording.stop()
-      recording.dump(dump)
-    } finally recording.close()
-    val commands = RecordingFile.readAllEvents(dump).asScala
-      .map(_.getString("command")).filter(_.contains(root))
+    }
     assert(filesUnder(root).exists(_.getName.startsWith("part-")))
     assert(commands == Seq(s"true $root/control"))
   }
