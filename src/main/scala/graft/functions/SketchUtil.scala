@@ -68,8 +68,6 @@ object SketchUtil {
     out
   }
 
-  def hammingDistance(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
   /** Token count of `split(trim(text), "\s+", -1)` WITHOUT materializing
     * the token array: count = (maximal whitespace runs in the 0x20-trimmed
     * string) + 1 — a leading/trailing non-0x20 whitespace run yields an

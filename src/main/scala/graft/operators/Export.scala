@@ -113,14 +113,6 @@ object Export {
       .foreach(o => ops.remove(o.opId))
   }
 
-  /** Drop all terminal operations (explicit cleanup hook). */
-  def clearOperations(): Unit = {
-    import scala.jdk.CollectionConverters._
-    ops.values.asScala.toSeq
-      .filter(o => o.state == "Completed" || o.state == "Failed")
-      .foreach(o => ops.remove(o.opId))
-  }
-
   /** `.export async`: kicks the export off on a background thread and
     * returns its operation id immediately. Poll with `operations(spark)`
     * or `operationState(opId)` until Completed/Failed (the reference's

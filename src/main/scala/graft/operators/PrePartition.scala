@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.GraftFunctions
+import graft.functions.{CsvUtil, GraftFunctions, HashUtil}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,15 +19,16 @@ case class PartitionConfig(columnIndex: Int, maxPartitionCount: Int, seed: Int)
   *   ListBlobSource (A1)                      spark.read.text(glob) file listing
   *   DownloadBlobTransform (A3)               file-split tasks (maxPartitionBytes)
   *   GunzipContentTransform (A4)              codec-aware text read (.gz native)
-  *   CsvParseTransform (A5)                   csv_column_at(value, idx)   [codegen]
-  *   PartitioningHelper hash (A6)             xor_fold_hash(col, seed, n) [codegen]
+  *   CsvParseTransform (A5)                   CsvUtil.columnAt(line, idx) in the scatter loop
+  *   PartitioningHelper hash (A6)             HashUtil.xorFoldMod(field, seed, n), same loop
   *   PartitioningTextTransform (A7)           each scan task scatters its rows by pid
   *   PartitionedContentSink (A8)              ShardSink: one file per (task, pid), first-wins rename
   *
   * Records pass through byte-for-byte: we read lines as raw text and never
   * reserialize (the reference copies records verbatim,
   * Transforms/PartitioningTextTransform.cs:60-66). Column extraction for
-  * partitioning is an expression over the raw line.
+  * partitioning reads the raw line's bytes; [[withPartitionId]] is the
+  * same computation as Spark expressions, for queries over the pids.
   *
   * Record boundaries are every `\n` — identical to the reference's Split
   * mode (Text/TextLineParsingSink.cs). The reference's PrePartition scanner
@@ -43,8 +44,8 @@ case class PartitionConfig(columnIndex: Int, maxPartitionCount: Int, seed: Int)
   * (Transforms/PartitioningTextTransform.cs:39-76) — so the output is
   * input splits × pids present files of about split size / pids each, the
   * analogue of the reference's one blob per flush window × partition
-  * (Transforms/PartitionedContentSink.cs:54-66). Filter + projection run
-  * in the same task; the text scan splits at
+  * (Transforms/PartitionedContentSink.cs:54-66). Key extraction and hash
+  * run in the same task; the text scan splits at
   * `spark.sql.files.maxPartitionBytes` so a 1000-executor cluster reads
   * line-aligned splits in parallel (gzip inputs degrade to one task per file,
   * same as the reference's whole-blob download). The xor-fold hash has ≤256
@@ -53,11 +54,8 @@ case class PartitionConfig(columnIndex: Int, maxPartitionCount: Int, seed: Int)
   * (the reference inherits the same skew, SURVEY.md §7.4) makes one pid's
   * files larger, but no longer funnels that pid through one reduce task:
   * every split writes its share of the hot pid in parallel. Every file,
-  * directory and marker goes through [[ShardSink.fileSystem]], so a local
-  * run sets each mode in-process instead of starting a `chmod` process
-  * per file and directory (Hadoop without its native library): with
-  * 64 pids that was 98 process starts a run, whose waits at one core
-  * took longer than the rest of the task.
+  * directory and marker goes through [[ShardSink.fileSystem]]: a local run
+  * starts no `chmod` process.
   */
 object PrePartition {
 
@@ -95,7 +93,7 @@ object PrePartition {
                 gzipOutput: Boolean = false,
                 suffix: Option[String] = None): Map[Int, PidWritten] = {
     val lines = graft.sources.Readers.textLines(spark, inputGlob, suffix)
-    overwrite(withPartitionId(lines, cfg), roots, gzipOutput)
+    overwrite(lines, cfg, roots, gzipOutput)
   }
 
   /** Records and payload bytes (before compression) written for one pid. */
@@ -107,10 +105,10 @@ object PrePartition {
     * dirs, write, then mark each root with `_SUCCESS` (the file Spark's
     * committer leaves after a completed job). Returns what each pid got.
     */
-  private[graft] def overwrite(withPid: DataFrame, roots: Seq[String],
+  private[graft] def overwrite(lines: DataFrame, cfg: PartitionConfig, roots: Seq[String],
                                gzipOutput: Boolean): Map[Int, PidWritten] = {
     require(roots.nonEmpty, "need at least one root")
-    val hconf = withPid.sparkSession.sparkContext.hadoopConfiguration
+    val hconf = lines.sparkSession.sparkContext.hadoopConfiguration
     val paths = roots.map(new org.apache.hadoop.fs.Path(_))
     paths.foreach { p =>
       val fs = ShardSink.fileSystem(p, hconf)
@@ -119,35 +117,37 @@ object PrePartition {
           .filter(c => c.getName.startsWith("pid=") || c.getName == "_SUCCESS")
           .foreach(fs.delete(_, true))
     }
-    val written = writeSpread(withPid, roots.toIndexedSeq, gzipOutput)
+    val written = writeSpread(lines, cfg, roots.toIndexedSeq, gzipOutput)
     paths.foreach { p =>
       ShardSink.fileSystem(p, hconf).create(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), true).close()
     }
     written
   }
 
-  /** The spread writer: each task writes the rows annotated with `pid`, in
-    * input order, to `roots(pid % N)/pid=<pid>/part-<sparkPartitionId>.txt[.gz]`
-    * through the first-wins [[ShardSink]] commit. No shuffle: the task holds
-    * one open file per pid it meets, and the xor-fold has at most 256
-    * values (HashUtil.xorFold), so it never evicts one. Lines travel as
-    * their raw bytes, never decoded. Returns the records and bytes written
-    * per pid.
+  /** The spread writer: each scan task writes its `lines`, in input order,
+    * to `roots(pid % N)/pid=<pid>/part-<sparkPartitionId>.txt[.gz]` through
+    * the first-wins [[ShardSink]] commit. One pass per line, as the
+    * reference's loop (Transforms/PartitioningTextTransform.cs:39-76): the
+    * `CsvUtil`/`HashUtil` calls of [[withPartitionId]]'s generated code find
+    * the pid, a line without the key field is dropped, and the line's bytes
+    * go from the scan's row to the file, never decoded or copied.
     */
-  private[graft] def writeSpread(withPid: DataFrame, roots: IndexedSeq[String],
+  private[graft] def writeSpread(lines: DataFrame, cfg: PartitionConfig,
+                                 roots: IndexedSeq[String],
                                  gzipOutput: Boolean): Map[Int, PidWritten] = {
-    val spark = withPid.sparkSession
-    import spark.implicits._
     val ext = if (gzipOutput) ".txt.gz" else ".txt"
-    val rows = withPid
-      .filter(col("pid").isNotNull)
-      .select(col("pid").cast("int"), concat(col("value"), lit("\n")).cast("binary"))
-      .as[(Int, Array[Byte])]
-    ShardSink.write(rows, gzipOutput, maxOpen = 256)(_._1)(
+    val PartitionConfig(idx, n, seed) = cfg
+    ShardSink.write(lines.select("value").queryExecution.toRdd, gzipOutput, maxOpen = 256) { line =>
+      val field = CsvUtil.columnAt(line.getUTF8String(0), idx)
+      if (field == null) null else Int.box(HashUtil.xorFoldMod(field, seed, n))
+    }(
       dest = pid =>
         s"${roots(pid % roots.length)}/pid=$pid/part-${org.apache.spark.TaskContext.getPartitionId()}$ext",
-      bytes = _._2)
-      .map(s => Map(s.key -> PidWritten(s.records, s.bytes)))
+      emit = (line, out) => {
+        val value = line.getUTF8String(0)
+        value.writeTo(out); out.write('\n'); value.numBytes + 1L
+      })
+      .map(s => Map(s.key.intValue -> PidWritten(s.records, s.bytes)))
       // one action for the per-pid counts; fold's zero (unlike reduce)
       // survives an empty input, whose plan can have zero partitions
       .fold(Map.empty[Int, PidWritten])(merge)

@@ -1,13 +1,16 @@
 package graft.operators
 
+import java.lang.ref.WeakReference
 import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermissions}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.graft.Shims
 
 /** The one exactly-once file sink: PrePartition (batch and streaming),
@@ -41,10 +44,8 @@ import org.apache.spark.sql.graft.Shims
   * and every task adds its file bytes and records to Spark's output metrics.
   *
   * Local files open through [[fileSystem]], not `path.getFileSystem`:
-  * without the native Hadoop library, Hadoop's local file system sets the
-  * mode of every file, `.crc` side file and directory it creates by
-  * starting a `chmod` process: 98 starts for a 64-pid PrePartition run,
-  * whose waits at one core took longer than the rest of the task.
+  * without its native library, Hadoop's local file system starts a `chmod`
+  * process per file, `.crc` and directory it makes (98 a 64-pid run).
   */
 object ShardSink {
 
@@ -69,6 +70,30 @@ object ShardSink {
     }
   }
 
+  /** The last conf broadcast, with its context and the entries it copied. */
+  private final case class ConfBroadcast(sc: WeakReference[SparkContext],
+      entries: Map[String, String], b: Broadcast[Shims.SerializableHadoopConf])
+  private var confCache: ConfBroadcast = _
+
+  /** A broadcast copy of `sc`'s Hadoop conf (about a thousand keys, 11 ms
+    * to broadcast), reused by every write until an entry changes (a new
+    * `fs.<scheme>.impl`, a rotated credential) or [[Shims.drainBroadcasts]]
+    * drops it. A replaced one is left to Spark's ContextCleaner: a running
+    * job may still read it.
+    */
+  private[graft] def hadoopConf(sc: SparkContext): Broadcast[Shims.SerializableHadoopConf] =
+    synchronized {
+      def entries(c: Configuration) = c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+      val c = confCache
+      if (c == null || (c.sc.get ne sc) || !Shims.broadcastHeld(sc, c.b) ||
+          c.entries != entries(sc.hadoopConfiguration)) {
+        val copy = new Configuration(sc.hadoopConfiguration)
+        confCache = ConfBroadcast(new WeakReference(sc), entries(copy),
+          sc.broadcast(new Shims.SerializableHadoopConf(copy)))
+      }
+      confCache.b
+    }
+
   /** One committed file: its key, destination, and the records and
     * payload bytes (lead included, before compression) written to it. */
   final case class Shard[K](key: K, dest: String, records: Long, bytes: Long)
@@ -83,19 +108,18 @@ object ShardSink {
 
   /** Write `rows` as one file per `key` at `dest(key)`, holding at most
     * `maxOpen` files open per task: `lead(key, conf)` (none by default)
-    * opens each file, then every row's `bytes` follow, gzip compressed when
-    * `gzip`. The session's Hadoop conf (`spark.hadoop.*` credentials and fs
-    * impls for remote roots) is broadcast once per job; `conf` is its
-    * executor-side copy. Lazy: the returned RDD's action runs the writes.
+    * opens each file, then `emit(row, out)` writes each row's bytes and
+    * returns their count, gzip compressed when `gzip`. A row with a null
+    * key is dropped. `conf` is the executors' copy of the session's Hadoop
+    * conf ([[hadoopConf]]). Lazy: the returned RDD's action runs the writes.
     */
-  def write[T, K](rows: Dataset[T], gzip: Boolean, maxOpen: Int)(key: T => K)(
-      dest: K => String, bytes: T => Array[Byte],
+  def write[T, K](rows: RDD[T], gzip: Boolean, maxOpen: Int)(key: T => K)(
+      dest: K => String, emit: (T, java.io.OutputStream) => Long,
       lead: (K, Configuration) => Array[Byte] = (_: K, _: Configuration) => Array.emptyByteArray)
       : RDD[Shard[K]] = {
     require(maxOpen > 0, s"maxOpen must be positive, got $maxOpen")
-    val sc = rows.sparkSession.sparkContext
-    val confB = sc.broadcast(new Shims.SerializableHadoopConf(sc.hadoopConfiguration))
-    rows.rdd.mapPartitions { iter =>
+    val confB = hadoopConf(rows.sparkContext)
+    rows.mapPartitions { iter =>
       val conf = confB.value.value
       val ctx = TaskContext.get()
       val attempt = if (ctx == null) 0L else ctx.taskAttemptId()
@@ -153,12 +177,12 @@ object ShardSink {
       try {
         iter.foreach { row =>
           val k = key(row)
-          val f = if (last != null && last.key == k) last else open.getOrElse(k, openFile(k))
-          last = f
-          val b = bytes(row)
-          f.out.write(b)
-          f.records += 1
-          f.bytes += b.length
+          if (k != null) {
+            val f = if (last != null && last.key == k) last else open.getOrElse(k, openFile(k))
+            last = f
+            f.bytes += emit(row, f.out)
+            f.records += 1
+          }
         }
         while (open.nonEmpty) commit(open.head._2)
       } catch {

@@ -107,13 +107,13 @@ object Split {
       .sortWithinPartitions("file", "shard", "offset")
       .select(col("file"), col("shard"), concat(col("value"), lit("\n")).cast("binary"))
       .as[(String, Int, Array[Byte])]
-    val written = ShardSink.write(rows, cfg.gzipOutput, maxOpen = 1)(r => (r._1, r._2))(
+    val written = ShardSink.write(rows.rdd, cfg.gzipOutput, maxOpen = 1)(r => (r._1, r._2))(
       dest = { case (file, shard) =>
         val base = new org.apache.hadoop.fs.Path(file).getName
           .stripSuffix(".gz").stripSuffix(".txt")
         f"$outDir/$base-$shard%05d$ext"
       },
-      bytes = _._3,
+      emit = (r, out) => { out.write(r._3); r._3.length },
       // the header is the source file's first line, read IN THE WRITER
       // (one tiny open per shard ≈ one per 200 MB) — no driver-side map
       // keyed by file, so driver memory is independent of input-file

@@ -52,9 +52,4 @@ object PartitionPolicy {
     require(idx >= 0, s"policy column '$name' not in schema ${columns.mkString(",")}")
     PartitionConfig(idx, r.getAs[Int]("max_partition_count"), r.getAs[Int]("seed"))
   }
-
-  /** Convenience: read the column list from a registered catalog table. */
-  def resolveFromCatalog(spark: SparkSession, policyJson: String,
-                         table: String): PartitionConfig =
-    resolve(spark, policyJson, spark.table(table).schema.fieldNames.toSeq)
 }

@@ -1080,6 +1080,18 @@ object Brotli {
     bits
   }
 
+  /** Slots per hash bucket (a power of two). Buckets, not chains: the
+    * r19 head/prev linked walk cost one DEPENDENT random load per
+    * probe — measured 272M probe iterations for a 30 MB literal-heavy
+    * encode, ~60% of the whole wall time in cache misses. A bucket's
+    * candidates live in one contiguous run of ints (two cache lines),
+    * so probing 16 of them costs about as much as chasing two links.
+    */
+  private val SlotBits = 4
+  private val SlotMask = (1 << SlotBits) - 1
+  /** Probe depth per bucket: every slot of it. */
+  private val MaxProbes = 1 << SlotBits
+
   /** Hash-chain LZ over one chunk (quality-5 class, r19 — the r18 cut
     * was one-probe greedy): 4-byte hash heads + a per-position chain
     * probed up to `MaxProbes` deep (longest match wins, closer on
@@ -1098,29 +1110,6 @@ object Brotli {
     * the literals it replaces — `dlen >= 6` — and clearly beat any
     * window match — `dlen >= mlen + 2`.
     */
-  // parse-loop instrumentation, inert unless the prop is set. LongAdder,
-  // not plain vars: Spark task threads encode concurrently, and racy
-  // read-modify-writes would drop increments from the very counters
-  // the throughput investigation reads (r20 self-review).
-  private val Stats = sys.props.contains("graft.brotli.stats")
-  private val statBest = new java.util.concurrent.atomic.LongAdder
-  private val statProbes = new java.util.concurrent.atomic.LongAdder
-  private val statExtend = new java.util.concurrent.atomic.LongAdder
-  private[graft] def statLine(): String =
-    s"best=${statBest.sum} probes=${statProbes.sum} extend=${statExtend.sum}"
-
-  /** Slots per hash bucket (a power of two). Buckets, not chains: the
-    * r19 head/prev linked walk cost one DEPENDENT random load per
-    * probe — measured 272M probe iterations for a 30 MB literal-heavy
-    * encode, ~60% of the whole wall time in cache misses. A bucket's
-    * candidates live in one contiguous run of ints (two cache lines),
-    * so probing 16 of them costs about as much as chasing two links.
-    */
-  private val SlotBits = 4
-  private val SlotMask = (1 << SlotBits) - 1
-  /** Probe depth per bucket: every slot of it. */
-  private val MaxProbes = 1 << SlotBits
-
   private def lzParse(data: Array[Byte], from: Int, until: Int,
                       window: Int, ring0: Array[Int], ringIdx0: Int,
                       slots: Array[Int], counts: Array[Int]): Seq[LzCmd] = {
@@ -1158,7 +1147,6 @@ object Brotli {
     val ring = ring0.clone()
     var ringIdx = ringIdx0
     def extendAt(cand: Int, i: Int): Int = {
-      if (Stats) statExtend.increment()
       // Arrays.mismatch is an HotSpot intrinsic (wide SIMD compares) —
       // match extension is the encoder's single hottest loop, and the
       // byte-at-a-time walk was the r19 throughput ceiling. Overlap
@@ -1233,7 +1221,6 @@ object Brotli {
             }
           }
           k += 1
-          if (Stats) statProbes.increment()
         }
         if (expLen >= 4 && expLen > floor) {
           bestLen = expLen; bestDist = expDist
@@ -1245,7 +1232,6 @@ object Brotli {
     var lit = from
     var i = from
     while (i + 4 <= until) {
-      if (Stats) statBest.increment()
       val m = bestMatch(i)
       insertPos(i)
       var mlen = (m >>> 32).toInt

@@ -1417,9 +1417,9 @@ object WarcSource {
       // ordering makes shard bytes deterministic (r18 ADVICE)
       .sortWithinPartitions(col("shard"), col("skey"), col("rec"))
       .as[(Long, Long, Array[Byte])]
-    graft.operators.ShardSink.write(sorted, gzip = false, maxOpen = 1)(_._1)(
+    graft.operators.ShardSink.write(sorted.rdd, gzip = false, maxOpen = 1)(_._1)(
       dest = shard => f"$outDir/part-$shard%05d$ext",
-      bytes = _._3,
+      emit = (r, out) => { out.write(r._3); r._3.length },
       lead = (shard, _) => lead(shard))
       // per-file counts are a handful of longs; collect().sum
       // (unlike reduce) survives an empty input relation, whose

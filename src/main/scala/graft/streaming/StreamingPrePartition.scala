@@ -54,18 +54,15 @@ object StreamingPrePartition {
   def processBatch(batch: DataFrame, batchId: Long, roots: Seq[String],
                    controlDir: String, cfg: PartitionConfig): Unit = {
     val s = batch.sparkSession
-    // Per-batch marker file probed with one fs.exists — O(1) per
-    // trigger regardless of history (the r1 design re-read the full
-    // manifest parquet every micro-batch and appended a 1-row file per
-    // batch: O(batches) listing per trigger, unbounded small files).
-    // The marker is an empty file created by the driver, so the batch's
-    // data write is its only Spark job.
+    // one empty marker file per batch, probed with one fs.exists (O(1)
+    // per trigger whatever the history) and made by the driver, so the
+    // batch's data write is its only Spark job
     val marker = new org.apache.hadoop.fs.Path(
       s"$controlDir/_batch_manifest/batch=$batchId/_SUCCESS")
     val fs = graft.operators.ShardSink.fileSystem(marker, s.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) {
-      PrePartition.overwrite(PrePartition.withPartitionId(batch, cfg),
-        roots.map(r => s"$r/data/batch=$batchId"), gzipOutput = false)
+      PrePartition.overwrite(batch, cfg, roots.map(r => s"$r/data/batch=$batchId"),
+        gzipOutput = false)
       // commit marker AFTER the data write: replay-safe ordering (a crash
       // before it leaves the batch unmarked, and the replay re-runs it)
       fs.create(marker, true).close()

@@ -67,6 +67,14 @@ object Shims {
     bids.size
   }
 
+  /** Whether the driver still holds broadcast `b`'s value: false once
+    * [[drainBroadcasts]] (or any other removal of its blocks) ran, after
+    * which a task reading it would fail.
+    */
+  def broadcastHeld(sc: org.apache.spark.SparkContext,
+                    b: org.apache.spark.broadcast.Broadcast[_]): Boolean =
+    sc.env.blockManager.getStatus(org.apache.spark.storage.BroadcastBlockId(b.id)).isDefined
+
   /** Apply the functions registered on a SparkSessionExtensions to a
     * registry (`registerFunctions` is private[sql]) — lets tests exercise
     * the `spark.sql.extensions` injection path without tearing down the

@@ -121,6 +121,32 @@ class PrePartitionSpec extends GraftSparkSpec {
     assert(dataFiles(b) == got)
   }
 
+  test("the scatter writes each line's bytes verbatim: non-UTF-8, quoted key, short line") {
+    val dir = Files.createTempDirectory("graft-verbatim")
+    val bad = Array(0xff, 0xfe, 0x80).map(_.toByte)
+    val lines: Seq[Array[Byte]] = Seq(
+      "1,2026-01-01,Info,node-a,".getBytes("UTF-8") ++ bad ++ " text".getBytes("UTF-8"),
+      "2,2026-01-01,Warn,\"node,b\",quoted comma".getBytes("UTF-8"),
+      "3,too-short".getBytes("UTF-8")) ++
+      (4 until 40).map(i => s"$i,2026-01-02,Info,node-$i,plain".getBytes("UTF-8"))
+    Files.write(dir.resolve("in.csv"), lines.map(_ :+ '\n'.toByte).reduce(_ ++ _))
+    val out = s"$tmp/verbatim"
+    PrePartition.run(spark, dir.toString, out, splitCfg)
+    // the oracle: the declarative pid over the same scan, the line's raw bytes
+    val want = PrePartition.withPartitionId(Readers.textLines(spark, dir.toString), splitCfg)
+      .filter(col("pid").isNotNull).select(col("pid"), col("value").cast("binary")).rdd
+      .mapPartitionsWithIndex((split, it) => it.map(r => (split, r.getInt(0), r.getAs[Array[Byte]](1))))
+      .collect().toSeq
+      .groupBy { case (split, pid, _) => s"pid=$pid/part-$split.txt" }
+      .map { case (f, rows) => f -> rows.flatMap(_._3.toSeq :+ '\n'.toByte) }
+    val got = dataFiles(out)
+    assert(got.keySet == want.keySet)
+    got.foreach { case (f, bytes) => assert(bytes == want(f), s"$f differs") }
+    assert(want.values.map(_.count(_ == '\n'.toByte)).sum == lines.size - 1)
+    assert(got.values.flatten.toSeq.containsSlice(bad.toSeq))
+    assert(!got.values.exists(_.containsSlice("too-short".getBytes("UTF-8").toSeq)))
+  }
+
   test("partition samples: one witness value per pid, consistent with the hash") {
     import graft.functions.HashUtil
     import org.apache.spark.unsafe.types.UTF8String

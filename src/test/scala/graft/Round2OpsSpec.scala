@@ -146,14 +146,13 @@ class Round2OpsSpec extends GraftSparkSpec {
     val cfg = PartitionConfig(columnIndex = 3, maxPartitionCount = 4, seed = 17)
     val lines = LogDataGenerator.toCsvLines(
       LogDataGenerator.generate(spark, 200, seed = 5))
-    val withPid = graft.operators.PrePartition.withPartitionId(lines, cfg)
     val n1 = graft.operators.PrePartition
-      .writeSpread(withPid, bases, gzipOutput = false)
+      .writeSpread(lines, cfg, bases, gzipOutput = false)
     val files1 = bases.flatMap(b =>
       Option(new java.io.File(b).listFiles()).getOrElse(Array.empty)
         .flatMap(d => d.listFiles()).map(_.toString)).sorted
     val n2 = graft.operators.PrePartition
-      .writeSpread(withPid, bases, gzipOutput = false)
+      .writeSpread(lines, cfg, bases, gzipOutput = false)
     val files2 = bases.flatMap(b =>
       Option(new java.io.File(b).listFiles()).getOrElse(Array.empty)
         .flatMap(d => d.listFiles()).map(_.toString)).sorted

@@ -129,6 +129,40 @@ class ShardSinkSpec extends GraftSparkSpec {
     assert(commands == Seq(s"true $root/control"))
   }
 
+  test("a conf entry set after a write reaches the next write's executors") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    Seq("fs.failfs.impl", "fs.failfs.impl.disable.cache").foreach(hconf.unset)
+    // so the local write broadcasts a conf without the failfs keys
+    ShardSink.hadoopConf(spark.sparkContext).destroy()
+    val cfg = PartitionConfig(3, 4, 17)
+    assert(landing.nonEmpty) // the input is written outside the failing group
+    PrePartition.runSpread(spark, landing, Seq(s"$tmp/stale-local"), cfg)
+    hconf.set("fs.failfs.impl", classOf[FailingFs].getName)
+    hconf.setBoolean("fs.failfs.impl.disable.cache", true)
+    // a task reading the first write's conf would not know the scheme
+    val (result, _) = inJobGroup(PrePartition.runSpread(spark, landing, Seq(s"failfs://$tmp/stale"), cfg))
+    assert(result.failed.toOption.exists(causedBy(_, "injected write failure")), s"$result")
+  }
+
+  test("a PrePartition run on an unchanged conf broadcasts its scan's conf and task only") {
+    val sc = spark.sparkContext
+    def run() = PrePartition.runSpread(spark, landing, Seq(s"$tmp/broadcasts"), PartitionConfig(3, 4, 17))
+    run() // a conf changed by an earlier test gets its broadcast here
+    val before = sc.broadcast(0).id
+    run()
+    // the text scan's Hadoop conf and the one stage's task binary; the
+    // sink's conf broadcast is reused (one more before it was)
+    assert(sc.broadcast(0).id - before - 1 == 2)
+  }
+
+  test("a write after the conf broadcast's blocks were removed broadcasts it again") {
+    val sc = spark.sparkContext
+    val dropped = ShardSink.hadoopConf(sc)
+    dropped.destroy() // the blocking removal Shims.drainBroadcasts makes of every broadcast
+    PrePartition.runSpread(spark, landing, Seq(s"$tmp/redrawn"), PartitionConfig(3, 4, 17))
+    assert(ShardSink.hadoopConf(sc).id != dropped.id)
+  }
+
   test("the resolver: local paths get the NIO-backed file system, with Hadoop's modes") {
     val hconf = spark.sparkContext.hadoopConfiguration
     hconf.set("fs.failfs.impl", classOf[FailingFs].getName)
@@ -167,8 +201,10 @@ class ShardSinkSpec extends GraftSparkSpec {
     def rootOf(keys: Seq[Int], maxOpen: Int) = s"$tmp/reappear-${keys.mkString}-$maxOpen"
     def write(keys: Seq[Int], maxOpen: Int): String = {
       val root = rootOf(keys, maxOpen)
-      ShardSink.write(keys.zipWithIndex.toDS().coalesce(1), gzip = false, maxOpen)(_._1)(
-        dest = k => s"$root/k$k.txt", bytes = r => s"${r._2}\n".getBytes("UTF-8"))
+      ShardSink.write(keys.zipWithIndex.toDS().coalesce(1).rdd, gzip = false, maxOpen)(_._1)(
+        dest = k => s"$root/k$k.txt", emit = (r, out) => {
+          val b = s"${r._2}\n".getBytes("UTF-8"); out.write(b); b.length
+        })
         .collect()
       root
     }
